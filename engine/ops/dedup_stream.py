@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..registry import register, table
+from ..registry import register, shared_artifact, table
 from .dedup import (
     COMPACT_FILES,
     JACCARD_THRESHOLD,
@@ -33,19 +33,12 @@ from .dedup import (
     _tokens,
 )
 
-# Bump to invalidate every staged-feed cache (the keys also fold in
-# the corpus fingerprint, the APPLICATION id — sharing is strictly
-# within-invocation — the df schema, and the slicing predicates'
-# expression strings — this is the belt for transform-code changes
-# those can't see).
-FEED_CACHE_VERSION = 1
-
 
 def _feed_key(sf_dir, tag, table_file="documents.parquet"):
     """Cache key for a shareable staged feed: the sliced table's file
     listing (size, mtime) plus a rig-family tag (plain corpus vs the
     engineered re-upload/paraphrase/drift transforms vs the intake
-    schema) — the `_sa_artifact_dir` fingerprint discipline, so a
+    schema) — the `_sa_artifact_key` fingerprint discipline, so a
     changed corpus can never serve a stale feed."""
     import hashlib
     import os
@@ -77,16 +70,15 @@ def _stage_feed(df, base, src, conds, step=20, feed_key=None, heavy=False):
     (round-8 review: this block was forked verbatim four times).
 
     ``feed_key``: when given, the sliced files are built ONCE per
-    (application, corpus, rig family) into a keyed cache dir (atomic staging +
-    rename publish, the suffix-artifact protocol) and each rig COPIES
-    them into its own src — every stream op previously re-ran the
-    same N slice-write jobs per rig (round-9 verdict item 5). Copies,
+    (application, corpus, rig family) into a `registry.shared_artifact`
+    dir and each rig COPIES them into its own src — every stream op
+    previously re-ran the same N slice-write jobs per rig (round-9
+    verdict item 5). Copies,
     not hardlinks: a rig may rewrite its feed in place and must never
     mutate the shared cache. The published key additionally folds in
     the feed's CONTENT signature — the df schema and every slicing
-    predicate's expression string plus FEED_CACHE_VERSION — so a code
-    change to the batch arithmetic or columns can never serve a stale
-    cache (review finding, round 10). DELETE rigs must
+    predicate's expression string — so two rigs that slice the same
+    corpus differently never share a cache. DELETE rigs must
     NOT pass a feed_key at all: a takedown purges every arrival copy
     the application owns, and a shared cache outside the purge/audit
     perimeter would hold the deleted text — the rigs enforce this by
@@ -97,29 +89,12 @@ def _stage_feed(df, base, src, conds, step=20, feed_key=None, heavy=False):
     import os
     import shutil
     import time
-    import uuid
 
     last = conds[-1][0]
     if os.path.exists(f"{src}/batch_{last}.parquet"):
         return
     os.makedirs(src, exist_ok=True)
     now = time.time()
-    if feed_key is not None:
-        from ..registry import run_scope
-
-        sig = "|".join(
-            [
-                feed_key,
-                f"v{FEED_CACHE_VERSION}",
-                # application-scoped: rigs within one invocation share
-                # the staged slices, a fresh invocation re-stages from
-                # the parquet inputs (no cross-run artifact reuse)
-                run_scope(df.sparkSession),
-                df.schema.simpleString(),
-            ]
-            + [f"{b}:{cond}" for b, cond in conds]
-        )
-        feed_key = hashlib.md5(sig.encode()).hexdigest()[:16]
 
     def build(dst_dir, stage_root):
         # heavy=True: materialize the expensive feed transform ONCE,
@@ -130,23 +105,29 @@ def _stage_feed(df, base, src, conds, step=20, feed_key=None, heavy=False):
         # keeps the filter parallel and only the final exchange is one
         # task. For plain table feeds (heavy=False) the upstream is a
         # single-split scan — coalesce(1) costs nothing there and the
-        # checkpoint would be pure overhead (measured +26% on the
-        # delete rigs when applied unconditionally).
-        src_df = df.localCheckpoint(eager=True) if heavy else df
+        # cache would be pure overhead (measured +26% on the delete
+        # rigs when applied unconditionally). persist, not
+        # localCheckpoint: only a cache can be freed once the slices
+        # are written.
+        src_df = df.persist() if heavy else df
         one_file = (
             (lambda d: d.repartition(1)) if heavy else (lambda d: d.coalesce(1))
         )
-        for b, cond in conds:
-            stage = f"{stage_root}/b{b}"
-            one_file(src_df.filter(cond)).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            part = next(
-                f for f in os.listdir(stage) if f.startswith("part-")
-            )
-            os.replace(
-                os.path.join(stage, part), f"{dst_dir}/batch_{b}.parquet"
-            )
+        try:
+            for b, cond in conds:
+                stage = f"{stage_root}/b{b}"
+                one_file(src_df.filter(cond)).write.mode(
+                    "overwrite"
+                ).parquet(stage)
+                part = next(
+                    f for f in os.listdir(stage) if f.startswith("part-")
+                )
+                os.replace(
+                    os.path.join(stage, part), f"{dst_dir}/batch_{b}.parquet"
+                )
+        finally:
+            if heavy:
+                src_df.unpersist(blocking=True)
 
     if feed_key is None:
         build(src, f"{base}/stage")
@@ -155,24 +136,18 @@ def _stage_feed(df, base, src, conds, step=20, feed_key=None, heavy=False):
             os.utime(f"{src}/batch_{b}.parquet", (ts, ts))
         return
 
-    import tempfile
-
-    shared = os.path.join(
-        tempfile.gettempdir(), f"engine_feed_{feed_key}"
+    sig = "|".join(
+        [feed_key, df.schema.simpleString()]
+        + [f"{b}:{cond}" for b, cond in conds]
     )
-    if not os.path.exists(shared):
-        from ..registry import gc_other_scope_artifacts, write_scope_marker
 
-        gc_other_scope_artifacts(df.sparkSession, "engine_feed_")
-        tmp = f"{shared}.staging-{uuid.uuid4().hex[:8]}"
-        os.makedirs(tmp, exist_ok=True)
+    def build_shared(tmp):
         build(tmp, f"{tmp}/stage")
         shutil.rmtree(f"{tmp}/stage", ignore_errors=True)
-        write_scope_marker(df.sparkSession, tmp)
-        try:
-            os.rename(tmp, shared)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    shared = shared_artifact(
+        f"feed_{hashlib.md5(sig.encode()).hexdigest()[:16]}", build_shared
+    )
     for b, _cond in conds:
         dst = f"{src}/batch_{b}.parquet"
         shutil.copy(f"{shared}/batch_{b}.parquet", dst)

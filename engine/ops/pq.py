@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import register, table
+from ..registry import register, shared_artifact, table
 from .similarity import (
     DRIFT_TRIGGER_PCT,
     EMB_DIM,
@@ -50,13 +50,6 @@ PQ_K = 16  # centroids per subspace -> 4-bit codes, 8 bytes per vector
 PQ_CAND = 128  # ADC candidates re-ranked exactly per probe
 PQ_ITERS = 5  # Lloyd iterations per subspace codebook
 
-# Shared-build cache version — bump on ANY change to what the keyed
-# full-corpus/lifecycle builds write (the FEED_CACHE_VERSION
-# discipline; ADVICE r11: the key must not rely on a hand-edited
-# inline literal). History: v1 = plain codes; v2 = codes carry the
-# filterable label inline; v3 = version+EMB_DIM folded into the sig
-# and the lifecycle layouts joined the cache.
-BUILD_CACHE_VERSION = 3
 
 
 def _pq_cb_chain_sql(
@@ -323,84 +316,44 @@ def sim_search_ivfpq(spark, sf_dir):
 def _ivfpq_full_build_dir(spark, sf_dir):
     """Build the FULL-CORPUS composed-index artifacts (centroids,
     codebooks, cluster-carrying codes) ONCE per corpus fingerprint
-    into a keyed tempdir with atomic staging + rename publish — the
-    `_stage_feed` cache discipline applied to the build that
+    into a `registry.shared_artifact` dir — the `_stage_feed` cache
+    discipline applied to the build that
     sim_search_ivfpq, sim_index_ivfpq_persist, and
     sim_search_ivfpq_filtered each re-ran identically (round-10
-    verdict item 5). The key folds the corpus file listing plus every
-    constant the build depends on, so a changed corpus or a retuned
-    index can never serve stale artifacts. The LIFECYCLE and TAKEDOWN
+    verdict item 5). The key is the corpus file listing, so a changed
+    corpus can never serve stale artifacts. The LIFECYCLE and TAKEDOWN
     ops must not use this cache: their models are base-slice-trained
     (different artifacts), and delete rigs keep every content-derived
     artifact inside their own purge/audit perimeter."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from .dedup_stream import _feed_key
 
-    from ..registry import run_scope
-
-    sig = "|".join(
-        [
-            _feed_key(sf_dir, "ivfpq-build", "embeddings.parquet"),
-            f"v{BUILD_CACHE_VERSION}",
-            # application-scoped (no cross-run artifact reuse): the
-            # three non-lifecycle composed ops inside ONE invocation
-            # still fold onto one build; a fresh bench/verify run
-            # always rebuilds from the parquet inputs
-            run_scope(spark),
-            str(PQ_M),
-            str(PQ_K),
-            str(PQ_ITERS),
-            str(IVF_NLIST),
-            str(EMB_DIM),
-        ]
-    )
-    key = hashlib.md5(sig.encode()).hexdigest()[:16]
-    pub = os.path.join(tempfile.gettempdir(), f"engine_ivfpq_build_{key}")
-    if not os.path.exists(pub):
-        from ..registry import gc_other_scope_artifacts, write_scope_marker
-
-        gc_other_scope_artifacts(spark, "engine_ivfpq_build_")
-        tmp = f"{pub}.staging-{uuid.uuid4().hex[:8]}"
-        try:
-            em_full = table(spark, sf_dir, "embeddings")
-            em = em_full.select("vec_id", "embedding")
-            refined, lists = _ivf_build(spark, sf_dir)
-            books = _pq_train(_pq_sample(em))
-            refined.write.mode("overwrite").parquet(f"{tmp}/centroids")
-            _pq_books_to_df(spark, books).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{tmp}/codebooks")
-            # codes carry their list assignment AND the filterable
-            # metadata (label) inline — the way a production index
-            # entry stores filterable attributes beside the code, so a
-            # filtered search is a map-side predicate on the codes
-            # scan, never a query-time join back to the corpus
-            (
-                _pq_encode(spark, em, books)
-                .join(
-                    lists.select(F.col("c_id").alias("vec_id"), "cluster"),
-                    "vec_id",
-                )
-                .join(em_full.select("vec_id", "label"), "vec_id")
-                .write.mode("overwrite")
-                .parquet(f"{tmp}/codes")
+    def build(tmp):
+        em_full = table(spark, sf_dir, "embeddings")
+        em = em_full.select("vec_id", "embedding")
+        refined, lists = _ivf_build(spark, sf_dir)
+        books = _pq_train(_pq_sample(em))
+        refined.write.mode("overwrite").parquet(f"{tmp}/centroids")
+        _pq_books_to_df(spark, books).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/codebooks")
+        # codes carry their list assignment AND the filterable
+        # metadata (label) inline — the way a production index
+        # entry stores filterable attributes beside the code, so a
+        # filtered search is a map-side predicate on the codes
+        # scan, never a query-time join back to the corpus
+        (
+            _pq_encode(spark, em, books)
+            .join(
+                lists.select(F.col("c_id").alias("vec_id"), "cluster"),
+                "vec_id",
             )
-        except BaseException:
-            # a failed build must not leak its staging dir (ADVICE
-            # r11) — rmtree then re-raise; the publish never happened
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        write_scope_marker(spark, tmp)
-        try:
-            os.rename(tmp, pub)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return pub
+            .join(em_full.select("vec_id", "label"), "vec_id")
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/codes")
+        )
+
+    key = _feed_key(sf_dir, "ivfpq-build", "embeddings.parquet")
+    return shared_artifact(f"ivfpq_build_{key}", build)
 
 
 def _ivfpq_full_build(spark, sf_dir, with_label=False):
@@ -1218,70 +1171,24 @@ def _ivfpq_lifecycle_build_dir(spark, sf_dir, kind):
       60% train cut so the [60%, 80%) validation cohort stays
       out-of-sample — sim_index_ivfpq_recluster's STALE layout.
 
-    The key folds the corpus file listing, BUILD_CACHE_VERSION, every
-    index constant, and the drift-fixture constants, so a changed
-    corpus, retuned index, or re-shaped drift can never serve stale
-    artifacts; the build stages then publishes via one atomic rename
-    and rmtree's the staging dir on any failure."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+    The key folds the corpus file listing and ``kind``, so a changed
+    corpus can never serve stale artifacts; `registry.shared_artifact`
+    owns the publish."""
     from .dedup_stream import _feed_key
-    from .similarity import RECLUSTER_NORM, RECLUSTER_SUB_DIM
 
-    from ..registry import run_scope
-
-    sig = "|".join(
-        [
-            _feed_key(sf_dir, "ivfpq-lifecycle", "embeddings.parquet"),
-            f"v{BUILD_CACHE_VERSION}",
-            # application-scoped: within-run sharing only (see
-            # _ivfpq_full_build_dir)
-            run_scope(spark),
-            kind,
-            str(PQ_M),
-            str(PQ_K),
-            str(PQ_ITERS),
-            str(IVF_NLIST),
-            str(EMB_DIM),
-            str(RECLUSTER_SUB_DIM),
-            str(RECLUSTER_NORM),
-        ]
-    )
-    key = hashlib.md5(sig.encode()).hexdigest()[:16]
-    pub = os.path.join(tempfile.gettempdir(), f"engine_ivfpq_lc_{key}")
-    if not os.path.exists(pub):
-        from ..registry import gc_other_scope_artifacts, write_scope_marker
-
-        gc_other_scope_artifacts(spark, "engine_ivfpq_lc_")
-        tmp = f"{pub}.staging-{uuid.uuid4().hex[:8]}"
-        try:
-            em = table(spark, sf_dir, "embeddings").select(
-                "vec_id", "embedding"
+    def build(tmp):
+        em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        if kind == "recluster":
+            mx = em.agg(F.max("vec_id")).collect()[0][0]
+            train_cut, append_cut, _ = _ivf_cuts(mx)
+            _ivfpq_lifecycle_layout(
+                spark, _drifted_corpus(em, append_cut), tmp, cut=train_cut
             )
-            if kind == "recluster":
-                mx = em.agg(F.max("vec_id")).collect()[0][0]
-                train_cut, append_cut, _ = _ivf_cuts(mx)
-                _ivfpq_lifecycle_layout(
-                    spark,
-                    _drifted_corpus(em, append_cut),
-                    tmp,
-                    cut=train_cut,
-                )
-            else:
-                _ivfpq_lifecycle_layout(spark, em, tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        write_scope_marker(spark, tmp)
-        try:
-            os.rename(tmp, pub)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return pub
+        else:
+            _ivfpq_lifecycle_layout(spark, em, tmp)
+
+    key = _feed_key(sf_dir, f"ivfpq-lifecycle-{kind}", "embeddings.parquet")
+    return shared_artifact(f"ivfpq_lc_{key}", build)
 
 
 def _ivfpq_lifecycle_load(spark, pub):

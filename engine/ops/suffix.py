@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import register, table
+from ..registry import register, shared_artifact, table
 
 SPAN_K = 8  # span length in tokens — the "memorized boilerplate" unit
 
@@ -545,44 +545,13 @@ def _suffix_array_build(spark, sf_dir):
     return final, sfx
 
 
-# Bump when the artifact's SCHEMA or construction algorithm changes:
-# the version (and SA_K0) are folded into the artifact key, so a code
-# change can never silently serve a stale artifact built by older code
-# across sessions (round-8 ADVICE item 1).
-SA_ARTIFACT_VERSION = 3  # r13: fused dense-rank build, (_rank, doc_id, pos) schema
+def _sa_artifact_key(sf_dir):
+    """`registry.shared_artifact` key of a corpus's suffix array: the
+    documents table's file listing, so a changed corpus gets a fresh
+    build."""
+    from .dedup_stream import _feed_key
 
-
-def _sa_artifact_dir(spark, sf_dir):
-    """Stable on-disk location of the published suffix-array artifact
-    for a given corpus. Keyed by the documents table's file listing
-    (relpath, size, mtime) PLUS an algorithm token
-    (SA_ARTIFACT_VERSION, SA_K0) — a changed corpus OR a changed
-    construction gets a fresh key, so a stale artifact can never serve
-    a new corpus or new code. The key also folds the APPLICATION id
-    (`registry.run_scope`): consumers within one invocation share one
-    build, but a fresh bench/verify invocation always rebuilds from
-    the parquet inputs — never serves a previous run's artifact."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..registry import run_scope
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    parts = [f"v{SA_ARTIFACT_VERSION}:k0={SA_K0}", run_scope(spark)]
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                parts.append(
-                    f"{os.path.relpath(p, src)}:{st.st_size}:{st.st_mtime_ns}"
-                )
-    else:
-        st = os.stat(src)
-        parts.append(f"documents.parquet:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"engine_sa_gen_{key}")
+    return f"sa_gen_{_feed_key(sf_dir, 'suffix-array')}"
 
 
 def _suffix_array_artifact(spark, sf_dir):
@@ -593,38 +562,19 @@ def _suffix_array_artifact(spark, sf_dir):
     This applies the index-generation discipline the LSH/IVF indexes
     already follow: the first consumer builds via
     `_suffix_array_build` and PUBLISHES two parquet tables (array/ =
-    (_rank, doc_id, pos), anchors/ = (doc_id, pos, anchor)) under a
-    corpus-fingerprint key; every consumer — including the builder
-    itself — reads the published artifact, so the build happens
-    exactly once per corpus per host.
-
-    Publish protocol: write to a uuid-suffixed staging dir, then one
-    atomic os.rename into the keyed location — a reader never sees a
-    half-written artifact, and a concurrent builder that loses the
-    rename race discards its staging copy and reads the winner
-    (the same generation-publish shape as sim_index_recluster's
-    gen=1). Returns (array_df, anchors_df) as plain parquet scans —
-    consumers' plans show a FileScan of the artifact, which
+    (_rank, doc_id, pos), anchors/ = (doc_id, pos, anchor)) through
+    `registry.shared_artifact` under `_sa_artifact_key`; every
+    consumer — including the builder itself — reads the published
+    artifact, so the build happens exactly once per corpus per
+    application. Returns (array_df, anchors_df) as plain parquet
+    scans — consumers' plans show a FileScan of the artifact, which
     tests/test_plans.py asserts."""
-    import os
-    import shutil
-    import uuid
-
-    d = _sa_artifact_dir(spark, sf_dir)
-    if not os.path.exists(d):
-        from ..registry import gc_other_scope_artifacts, write_scope_marker
-
-        gc_other_scope_artifacts(spark, "engine_sa_gen_")
+    def build(tmp):
         final, sfx = _suffix_array_build(spark, sf_dir)
-        tmp = f"{d}.staging-{uuid.uuid4().hex[:8]}"
         final.write.mode("overwrite").parquet(f"{tmp}/array")
         sfx.write.mode("overwrite").parquet(f"{tmp}/anchors")
-        write_scope_marker(spark, tmp)
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            # a concurrent builder published first; theirs is complete
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    d = shared_artifact(_sa_artifact_key(sf_dir), build)
     return (
         spark.read.parquet(f"{d}/array"),
         spark.read.parquet(f"{d}/anchors"),

@@ -449,12 +449,13 @@ def win_time_weighted_avg(spark, sf_dir):
     oracle="""
         WITH nat AS (
           SELECT c.c_nationkey,
-                 sum(CAST(round(o.o_totalprice*100) AS BIGINT))/100.0 AS nation_rev
+                 sum(CAST(round(o.o_totalprice*100) AS BIGINT)) AS cents
           FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
           GROUP BY c.c_nationkey
         )
-        SELECT c_nationkey, nation_rev,
-               nation_rev / sum(nation_rev) OVER () AS pct_of_total
+        SELECT c_nationkey, cents / 100.0 AS nation_rev,
+               CAST(cents AS DOUBLE)
+                 / CAST(sum(cents) OVER () AS DOUBLE) AS pct_of_total
         FROM nat
         ORDER BY c_nationkey
     """,
@@ -464,24 +465,27 @@ def win_pct_of_total(spark, sf_dir):
     unpartitioned window ON THE POST-AGG RELATION (25 rows), never on
     the fact table — the aggregate shrinks first, so the single-
     partition window is trivially cheap at any scale. Both the nation
-    sums and the total are exact scaled-int sums; the final division
+    sums and the total are exact integer-cent sums; the final division
     is one IEEE op on identical operands in both engines."""
-    from ..dsl import dsum
-
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     nat = (
         o.join(c, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey")
-        .agg(dsum(F.col("o_totalprice"), 100).alias("nation_rev"))
+        .agg(
+            F.sum(F.round(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
+            .alias("cents")
+        )
     )
     w = Window.partitionBy()
-    return (
-        nat.withColumn(
-            "pct_of_total", F.col("nation_rev") / F.sum("nation_rev").over(w)
-        )
-        .orderBy("c_nationkey")
-    )
+    return nat.select(
+        "c_nationkey",
+        (F.col("cents") / F.lit(100.0)).alias("nation_rev"),
+        (
+            F.col("cents").cast("double")
+            / F.sum("cents").over(w).cast("double")
+        ).alias("pct_of_total"),
+    ).orderBy("c_nationkey")
 
 
 @register(

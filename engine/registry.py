@@ -47,60 +47,20 @@ def register(name: str, oracle: Optional[str] = None):
     return deco
 
 
-def run_scope(spark: SparkSession) -> str:
-    """Cache-key scope for keyed shared build artifacts (staged feeds,
-    index builds, suffix arrays): the Spark application id. Folding
-    this into every artifact key makes the sharing strictly
-    WITHIN-invocation — rigs inside one bench/verify run still fold
-    onto one build, but a fresh invocation always recomputes from the
-    parquet inputs (the optimization-round rule: no persisted
-    intermediates reused across runs)."""
-    return spark.sparkContext.applicationId
-
-
-def gc_other_scope_artifacts(spark: SparkSession, prefix: str) -> None:
-    """Tempdir hygiene for keyed shared artifacts (round-12 ADVICE /
-    verdict item 8): artifact keys fold the application id, so a dir
-    published by ANOTHER application can never be reused by this one —
-    it is dead weight that would otherwise accumulate across repeated
-    bench/verify invocations. At publish time, remove sibling dirs
-    under the same prefix whose ``.scope`` marker names a different
-    application (or is absent — pre-marker or crashed-staging
-    leftovers). Concurrent engine applications on one host were never
-    supported (scratch_dir already stomps fixed shared paths), so this
-    only ever deletes a finished run's leavings."""
-    import os
-    import shutil
-    import tempfile
-
-    scope = run_scope(spark)
-    tmp = tempfile.gettempdir()
-    try:
-        names = os.listdir(tmp)
-    except OSError:
-        return
-    for name in names:
-        if not name.startswith(prefix):
-            continue
-        d = os.path.join(tmp, name)
-        if not os.path.isdir(d):
-            continue
-        try:
-            with open(os.path.join(d, ".scope")) as f:
-                owner = f.read().strip()
-        except OSError:
-            owner = None
-        if owner != scope:
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def write_scope_marker(spark: SparkSession, d: str) -> None:
-    """Stamp a (staging) artifact dir with this application's scope so
-    `gc_other_scope_artifacts` can tell live dirs from dead ones."""
+def scratch_root() -> str:
+    """The engine's scratch root for this Spark application:
+    ``<SparkFiles root>/engine``. Spark creates the SparkFiles root
+    (``<spark.local.dir>/spark-<uuid>/userFiles-<uuid>``) fresh for
+    each SparkContext and deletes it on ``stop()`` or JVM shutdown, so
+    two applications never share a scratch path and nothing outlives
+    the application. Driver-side only."""
     import os
 
-    with open(os.path.join(d, ".scope"), "w") as f:
-        f.write(run_scope(spark))
+    from pyspark import SparkFiles
+
+    d = os.path.join(SparkFiles.getRootDirectory(), "engine")
+    os.makedirs(d, exist_ok=True)
+    return d
 
 
 def scratch_dir(name: str) -> str:
@@ -112,12 +72,41 @@ def scratch_dir(name: str) -> str:
     checkpoints and sink contents fresh per run."""
     import os
     import shutil
-    import tempfile
 
-    d = os.path.join(tempfile.gettempdir(), f"engine_scratch_{name}")
+    d = os.path.join(scratch_root(), name)
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     return d
+
+
+def shared_artifact(key: str, build: Callable[[str], None]) -> str:
+    """Build-once, read-many artifact dir ``scratch_root()/<key>``.
+
+    The first caller runs ``build(staging_dir)`` into a fresh
+    ``<key>.staging-<uuid>`` dir and publishes it with one atomic
+    rename, so a reader never sees a half-written artifact; a failed
+    build removes its staging dir and re-raises; a builder that loses
+    the rename race discards its copy and serves the winner's. Later
+    callers get the published path without building."""
+    import os
+    import shutil
+    import uuid
+
+    pub = os.path.join(scratch_root(), key)
+    if os.path.exists(pub):
+        return pub
+    tmp = f"{pub}.staging-{uuid.uuid4().hex[:8]}"
+    try:
+        os.makedirs(tmp)
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, pub)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return pub
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -782,11 +782,11 @@ def test_incremental_lsh_replay_idempotent(spark):
     )
     # the registered op leaves its scratch index behind (gen dirs are
     # the durable state); replay the last batch against gens 0..N-2
-    import tempfile, os
+    import os
 
-    base = os.path.join(
-        tempfile.gettempdir(), "engine_scratch_dedup_incremental_lsh"
-    )
+    from engine.registry import scratch_root
+
+    base = os.path.join(scratch_root(), "dedup_incremental_lsh")
     d = table(spark, T2_SF_DIR, "documents").select("doc_id", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
     last = N_INC_BATCHES - 1
@@ -1232,7 +1232,6 @@ def test_sa_takedown_purges_artifact_and_audit_catches_plants(spark):
     tombstoned doc. Planting a taken-down doc's row back into the
     published twin must make the completeness audit raise."""
     import os
-    import tempfile
 
     import pytest
 
@@ -1241,12 +1240,13 @@ def test_sa_takedown_purges_artifact_and_audit_catches_plants(spark):
         TD_RES,
         _audit_roots_no_tombstoned,
     )
+    from engine.registry import scratch_root
 
     out = engine.QUERIES["dedup_sa_takedown"](spark, T2_SF_DIR)
     spans = out.collect()
     assert spans, "purged artifact served no spans — fixture degenerate"
 
-    base = os.path.join(tempfile.gettempdir(), "engine_scratch_dedup_sa_takedown")
+    base = os.path.join(scratch_root(), "dedup_sa_takedown")
     assert os.path.exists(f"{base}/takedown_applied")
     tomb = spark.read.parquet(f"{base}/tombstones")
     tomb_ids = {r[0] for r in tomb.collect()}

@@ -392,10 +392,11 @@ def test_compaction_reduces_file_count(spark):
     ceil(bytes/target) (= 1 at toy scale) and total file count drops
     by an order of magnitude."""
     import os
-    import tempfile
+
+    from engine.registry import scratch_root
 
     engine.QUERIES["sink_compact_small_files"](spark, T2_SF_DIR).count()
-    base = os.path.join(tempfile.gettempdir(), "engine_scratch_sink_compact_small_files")
+    base = os.path.join(scratch_root(), "sink_compact_small_files")
 
     def counts(sub):
         per = {}
@@ -742,14 +743,12 @@ def test_index_compaction_shrinks_files_and_is_bucket_shaped(spark):
     (strictly more sliver files than compacted, at least one sliver
     per generation) rather than a hard-coded shrink ratio."""
     import os
-    import tempfile
 
     from engine.ops.dedup import COMPACT_FILES, N_INC_BATCHES
+    from engine.registry import scratch_root
 
     engine.QUERIES["dedup_index_compact"](spark, T2_SF_DIR).count()
-    base = os.path.join(
-        tempfile.gettempdir(), "engine_scratch_dedup_index_compact"
-    )
+    base = os.path.join(scratch_root(), "dedup_index_compact")
 
     def n_parquet(path):
         return sum(
@@ -824,10 +823,11 @@ def test_lcp_spans_reads_published_suffix_array(spark):
     rebuild (round-7 verdict item 2's done-criterion)."""
     import os
 
-    from engine.ops.suffix import _sa_artifact_dir
+    from engine.ops.suffix import _sa_artifact_key
+    from engine.registry import scratch_root
 
     engine.QUERIES["dedup_suffix_array"](spark, T2_SF_DIR).collect()
-    art = _sa_artifact_dir(spark, T2_SF_DIR)
+    art = os.path.join(scratch_root(), _sa_artifact_key(T2_SF_DIR))
     assert os.path.isdir(os.path.join(art, "array"))
     assert os.path.isdir(os.path.join(art, "anchors"))
     lazy = engine.QUERIES["dedup_lcp_spans"](spark, T2_SF_DIR)
@@ -846,14 +846,12 @@ def test_ivf_compaction_shrinks_files(spark):
     equivalence is enforced inside the op — it raises on any diverging
     row)."""
     import os
-    import tempfile
 
     from engine.ops.similarity import IVF_NLIST
+    from engine.registry import scratch_root
 
     engine.QUERIES["sim_index_compact"](spark, T2_SF_DIR).count()
-    base = os.path.join(
-        tempfile.gettempdir(), "engine_scratch_sim_index_compact"
-    )
+    base = os.path.join(scratch_root(), "sim_index_compact")
 
     def n_parquet(path):
         return sum(
@@ -901,16 +899,14 @@ def test_ivfpq_recluster_moved_layout_prunes_clusters(spark):
     layout must remain the coarse index (round-11 verdict item 1's
     plan-assert)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from engine.ops.pq import _ivfpq_coded_from
+    from engine.registry import scratch_root
 
     engine.QUERIES["sim_index_ivfpq_recluster"](spark, T2_SF_DIR).count()
-    base = os.path.join(
-        tempfile.gettempdir(), "engine_scratch_sim_index_ivfpq_recluster"
-    )
+    base = os.path.join(scratch_root(), "sim_index_ivfpq_recluster")
     assert os.path.exists(f"{base}/reclustered")  # marker published
     df = _ivfpq_coded_from(spark, f"{base}/codes_r", (0, 1)).filter(
         F.col("cluster") == 1

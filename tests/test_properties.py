@@ -266,7 +266,7 @@ def test_lttb_downsample_properties(spark):
     assert set(map(tuple, out.to_numpy())) <= src_keys
 
 
-def test_bloom_filter_bytes_are_written(spark):
+def test_bloom_filter_bytes_are_written(spark, tmp_path):
     """The bloom-enabled write must carry the filter in the file: same
     data written with and without parquet.bloom.filter.enabled differs
     by roughly expected_ndv bits (~1 MB at ndv=1M, far above content
@@ -281,17 +281,18 @@ def test_bloom_filter_bytes_are_written(spark):
     e = table(spark, SMOKE_SF_DIR, "events").select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    e.write.mode("overwrite").parquet("/tmp/engine_test_bloom_off")
+    off, on = str(tmp_path / "bloom_off"), str(tmp_path / "bloom_on")
+    e.write.mode("overwrite").parquet(off)
     (
         e.write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#event_id", "true")
         .option("parquet.bloom.filter.expected.ndv#event_id", "1048576")
-        .parquet("/tmp/engine_test_bloom_on")
+        .parquet(on)
     )
     sz = lambda d: sum(
         os.path.getsize(f) for f in glob.glob(f"{d}/*.parquet")
     )
-    assert sz("/tmp/engine_test_bloom_on") > sz("/tmp/engine_test_bloom_off") + 100_000
+    assert sz(on) > sz(off) + 100_000
 
 
 def test_label_propagation_is_deterministic_component_refinement(spark):

@@ -12,7 +12,7 @@ import time
 
 import pytest
 
-from tests.conftest import SMOKE_SF_DIR
+from tests.conftest import SMOKE_SF_DIR, T2_SF_DIR
 from tests.harness import canon
 
 from engine.registry import table
@@ -600,13 +600,12 @@ def test_rocksdb_state_files_on_disk(spark):
     the default HDFS-backed .delta files — proving the provider conf
     took effect and state lived in RocksDB."""
     import glob
-    import tempfile
+
+    from engine.registry import scratch_root
 
     engine_mod = __import__("engine")
     engine_mod.QUERIES["stream_rocksdb_state"](spark, SMOKE_SF_DIR).count()
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "engine_scratch_stream_rocksdb_state", "ckpt"
-    )
+    ckpt = os.path.join(scratch_root(), "stream_rocksdb_state", "ckpt")
     state_files = glob.glob(os.path.join(ckpt, "state", "**", "*"), recursive=True)
     names = {os.path.basename(p) for p in state_files}
     assert any(n.endswith((".zip", ".sst", ".changelog")) for n in names), names
@@ -2642,19 +2641,16 @@ def test_pq_stream_restart_exactly_once(spark, tmp_path):
 
 def test_delete_rigs_stage_feed_privately(spark, tmp_path):
     """Takedown rigs must never stage their feed through the shared
-    /tmp cache: every arrival copy has to sit inside the purge/audit
+    feed cache: every arrival copy has to sit inside the purge/audit
     perimeter (round-10 review finding). Pins that a delete-mode run
-    creates no new engine_feed_* cache entry while a plain run does."""
+    creates no new feed_* cache entry while a plain run does."""
     import glob
     import shutil
-    import tempfile
 
     from engine.ops.dedup_stream import TD_AFTER, run_inc_lsh_stream
+    from engine.registry import scratch_root
 
-    # the cache lives under tempfile.gettempdir(), which TMPDIR can
-    # move off /tmp — build the pattern from the same root _stage_feed
-    # uses (ADVICE r10)
-    pat = os.path.join(tempfile.gettempdir(), "engine_feed_*")
+    pat = os.path.join(scratch_root(), "feed_*")
     for d in glob.glob(pat):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -2684,25 +2680,127 @@ def test_delete_rigs_stage_feed_privately(spark, tmp_path):
     )
 
 
-def test_shared_artifact_keys_are_application_scoped(spark):
-    """Every keyed shared-artifact cache folds the Spark application
-    id into its key (registry.run_scope): rigs inside ONE invocation
-    share a build, but a fresh bench/verify invocation can never be
-    served a previous run's persisted artifact (optimization-round
-    rule: every invocation computes from the parquet inputs). Pinned
-    white-box on the suffix-array artifact key — a different
-    application id must yield a different artifact directory."""
-    from engine.ops.suffix import _sa_artifact_dir
+def test_shared_artifacts_live_under_the_application_scratch_root(spark):
+    """Every keyed shared artifact is published under scratch_root(),
+    and that root sits inside the per-application ``spark-*/userFiles-*``
+    dir Spark creates for this SparkContext and deletes at stop: a
+    fresh application can never be served a previous run's artifact
+    and two applications never share a path. Pinned on the suffix-array
+    artifact of the corpus the oracle-parity suite already built."""
+    import fnmatch
 
-    class _FakeSC:
-        applicationId = "application-not-this-run"
+    from engine.ops.suffix import _sa_artifact_key, _suffix_array_artifact
+    from engine.registry import scratch_root
 
-    class _FakeSpark:
-        sparkContext = _FakeSC()
+    root = scratch_root()
+    user_files = os.path.dirname(root)
+    assert fnmatch.fnmatch(os.path.basename(user_files), "userFiles-*")
+    assert fnmatch.fnmatch(
+        os.path.basename(os.path.dirname(user_files)), "spark-*"
+    )
+    art = os.path.join(root, _sa_artifact_key(T2_SF_DIR))
+    array, anchors = _suffix_array_artifact(spark, T2_SF_DIR)
+    assert os.path.isdir(art)
+    for f in array.inputFiles() + anchors.inputFiles():
+        assert art in f, f
 
-    here = _sa_artifact_dir(spark, SMOKE_SF_DIR)
-    other = _sa_artifact_dir(_FakeSpark(), SMOKE_SF_DIR)
-    assert here != other, "SA artifact key ignores the application id"
+
+def test_shared_artifact_builds_once_and_cleans_failed_builds(spark):
+    """registry.shared_artifact owns the publish-once protocol: the
+    first call builds into a staging dir and publishes it by rename, a
+    second call serves the published dir without building again, and a
+    build that raises leaves no staging dir behind."""
+    import glob
+    import uuid
+
+    from engine.registry import scratch_root, shared_artifact
+
+    key = f"test_artifact_{uuid.uuid4().hex[:8]}"
+    calls = []
+
+    def build(d):
+        calls.append(d)
+        with open(os.path.join(d, "payload"), "w") as f:
+            f.write("built")
+
+    pub = shared_artifact(key, build)
+    assert pub == os.path.join(scratch_root(), key)
+    with open(os.path.join(pub, "payload")) as f:
+        assert f.read() == "built"
+    assert shared_artifact(key, build) == pub
+    assert len(calls) == 1, "second call rebuilt a published artifact"
+
+    def failing(d):
+        open(os.path.join(d, "partial"), "w").close()
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        shared_artifact(f"{key}_failing", failing)
+    assert not glob.glob(os.path.join(scratch_root(), f"{key}_failing*"))
+    assert not glob.glob(os.path.join(scratch_root(), "*.staging-*"))
+
+
+def test_heavy_feed_publish_releases_its_cache_and_spares_tmp(
+    spark, tmp_path
+):
+    """A drift rig's heavy feed (the re-embedded corpus, staged through
+    the shared feed cache) leaves no persistent RDD behind once its
+    slices are written, and publishing it deletes nothing outside the
+    application's scratch root: dirs named like the artifacts of
+    another engine process, without any marker, survive in the system
+    temp dir."""
+    import shutil
+    import tempfile
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from engine.ops.dedup_stream import _feed_key, _stage_feed
+    from engine.ops.similarity import _drifted_corpus, _ivf_cuts
+
+    planted = [
+        os.path.join(tempfile.gettempdir(), n)
+        for n in (
+            "engine_feed_x",
+            "engine_sa_gen_x",
+            "engine_ivfpq_build_x.staging-1",
+            "engine_scratch_x",
+        )
+    ]
+    for d in planted:
+        os.makedirs(d, exist_ok=True)
+    try:
+        em = table(spark, SMOKE_SF_DIR, "embeddings")
+        mx = em.agg(F.max("vec_id")).collect()[0][0]
+        train_cut, append_cut, _mid = _ivf_cuts(mx)
+        bounds = [(0, train_cut), (train_cut, mx + 1)]
+        persisted = lambda: set(
+            spark.sparkContext._jsc.getPersistentRDDs().keySet()
+        )
+        before = persisted()
+        src = str(tmp_path / "src")
+        _stage_feed(
+            _drifted_corpus(em, append_cut),
+            str(tmp_path),
+            src,
+            [
+                (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+                for b, (lo, hi) in enumerate(bounds)
+            ],
+            # a fresh tag: this call must build, not hit a cached feed
+            feed_key=_feed_key(
+                SMOKE_SF_DIR, f"test-{uuid.uuid4().hex}", "embeddings.parquet"
+            ),
+            heavy=True,
+        )
+        assert sorted(os.listdir(src)) == ["batch_0.parquet", "batch_1.parquet"]
+        assert spark.read.parquet(src).count() == em.count()
+        assert persisted() <= before, "heavy feed left a persistent RDD"
+        for d in planted:
+            assert os.path.isdir(d), f"publish deleted {d}"
+    finally:
+        for d in planted:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_ivfpq_stream_boundary_restart(spark, tmp_path):
