@@ -8,6 +8,9 @@ explode → parse).
 
 Scale notes: gzip decode runs in mapInPandas (Arrow batches, one
 Python worker per core); everything before and after is JVM-side.
+Flow-log lines are rendered after ``registry.fan_out`` spreads the
+single-split events scan (``flowlog_lines``), so the render runs on
+every core instead of in the scan's one task.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .registry import fan_out
 from .schemas import ENVELOPE_SCHEMA, FLOWLOG_DDL
 
 # --- deterministic flow-log line synthesis (shared with the oracles) -------
@@ -61,6 +65,12 @@ def flowlog_line_col():
     )
 
 
+def flowlog_lines(events: DataFrame, *keep: str) -> DataFrame:
+    """The ``keep`` columns of `events` plus its rendered flow-log
+    ``line``, rendered after the scan is fanned out."""
+    return fan_out(events).select(*keep, flowlog_line_col().alias("line"))
+
+
 # DuckDB twin of flowlog_line_col(); '||' so NULL would propagate loudly.
 SQL_K = "CAST(json_extract_string(props, '$.k') AS BIGINT)"
 SQL_EPOCH = "(epoch_ns(ts) // 1000000000)"
@@ -87,14 +97,15 @@ def synthesize_envelopes(events: DataFrame) -> DataFrame:
     """One CloudWatch envelope per user_id, logEvents sorted by id for
     determinism; payload = base64(gzip(envelope JSON))."""
     env_json = (
-        events.select(
+        flowlog_lines(events, "user_id", "event_id", "ts")
+        .select(
             "user_id",
             F.struct(
                 F.col("event_id").cast("string").alias("id"),
                 F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000").alias(
                     "timestamp"
                 ),
-                flowlog_line_col().alias("message"),
+                F.col("line").alias("message"),
             ).alias("ev"),
         )
         .groupBy("user_id")

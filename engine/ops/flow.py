@@ -11,20 +11,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..ingest import SQL_EPOCH, SQL_K, flowlog_line_col, parse_flowlog_lines
+from ..ingest import SQL_EPOCH, SQL_K, flowlog_lines, parse_flowlog_lines
 from ..registry import register, table
 
 
 def _parsed(spark, sf_dir):
-    # events.parquet is one file → one input split, which would funnel
-    # the CPU-heavy from_csv parse through a single task. A round-robin
-    # repartition of the (tiny) raw lines fans the parse across the
-    # cluster — the batch stand-in for the many-shard parallelism a
-    # real Kinesis/multi-file source provides natively.
-    e = table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
-    lines = e.select("event_id", flowlog_line_col().alias("line"))
-    return parse_flowlog_lines(lines.repartition(par))
+    return parse_flowlog_lines(
+        flowlog_lines(table(spark, sf_dir, "events"), "event_id")
+    )
 
 
 @register(
@@ -551,11 +545,7 @@ def flow_cidr_lpm_enrich(spark, sf_dir):
     cascade holds (a handful of prefix lengths × broadcast each);
     no explode of per-address prefix sets is needed on the big
     side beyond substring keys."""
-    e = table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
-    f = parse_flowlog_lines(
-        e.select("event_id", flowlog_line_col().alias("line")).repartition(par)
-    ).select("srcaddr", "bytes")
+    f = _parsed(spark, sf_dir).select("srcaddr", "bytes")
 
     n = table(spark, sf_dir, "nation").select(
         F.concat(F.lit("10.0."), F.col("n_nationkey").cast("string")).alias(
@@ -949,10 +939,11 @@ def flow_analytics_report_e2e(spark, sf_dir):
     dashboard a flow-log pipeline ships first, value-checked end to
     end against the synthesis twins.
 
-    Scale: the parse is map-only (fanned across the cluster by the
-    shared _parsed repartition); the rollup is map-side-combinable to
-    the interface spine (one row per ENI — bounded by fleet size, not
-    traffic), and the ranking window runs on that spine only."""
+    Scale: the render and parse are map-only (fanned across the
+    cluster by the shared _parsed fan-out); the rollup is
+    map-side-combinable to the interface spine (one row per ENI —
+    bounded by fleet size, not traffic), and the ranking window runs
+    on that spine only."""
     p = _parsed(spark, sf_dir)
     g = p.groupBy("interface_id").agg(
         F.count(F.lit(1)).alias("n_flows"),

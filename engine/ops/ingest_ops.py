@@ -14,12 +14,12 @@ from ..ingest import (
     SQL_K,
     SQL_LINE,
     decode_envelopes,
-    flowlog_line_col,
+    flowlog_lines,
     parse_flowlog_lines,
     synthesize_envelopes,
 )
 from ..registry import register, scratch_dir, table
-from ..schemas import EVENTS_STREAM_SCHEMA
+from ..schemas import EVENTS_STREAM_SCHEMA, FLOWLOG_DDL
 
 
 @register(
@@ -69,8 +69,7 @@ def ingest_flowlog_parse(spark, sf_dir):
     with from_csv(sep=' ') — the parse inverts the format exactly, so
     the oracle can state the typed output directly from events."""
     e = table(spark, sf_dir, "events")
-    lines = e.select("event_id", flowlog_line_col().alias("line"))
-    return parse_flowlog_lines(lines)
+    return parse_flowlog_lines(flowlog_lines(e, "event_id"))
 
 
 @register(
@@ -142,7 +141,7 @@ def ingest_flowlog_malformed(spark, sf_dir):
     (dead-letter the invalid rows, load the rest). The oracle states
     exactly which rows must come out valid."""
     e = table(spark, sf_dir, "events")
-    good = e.select("event_id", flowlog_line_col().alias("line"))
+    good = flowlog_lines(e, "event_id")
     bad = e.filter(F.col("event_id") % 50 == 0).select(
         (F.col("event_id") + 1000000000).alias("event_id"),
         F.concat_ws(
@@ -260,7 +259,7 @@ def source_text_lines(spark, sf_dir):
     ingest_flowlog_parse."""
     e = table(spark, sf_dir, "events")
     out = scratch_dir("text_lines")
-    e.select(flowlog_line_col().alias("value")).write.mode("overwrite").text(out)
+    flowlog_lines(e).write.mode("overwrite").text(out)
     lines = spark.read.text(out).withColumnRenamed("value", "line")
     parsed = parse_flowlog_lines(lines)
     return parsed.select(
@@ -311,9 +310,10 @@ def stream_ingest_e2e(spark, sf_dir):
     e = table(spark, sf_dir, "events")
     base = scratch_dir("stream_ingest_e2e")
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
-    # 16 source files → 16 parallel decode tasks in the micro-batch
-    # (one file = one task would serialize the gzip+parse path, and a
-    # real Kinesis source is many-shard-parallel anyway).
+    # 16 small source files, which the micro-batch scan packs into
+    # about defaultParallelism splits (4 decode tasks at 4 cores):
+    # one file = one task would serialize the gzip+parse path, and a
+    # real Kinesis source is many-shard-parallel anyway.
     synthesize_envelopes(e).repartition(16).write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema("payload STRING").parquet(src)
@@ -354,7 +354,9 @@ def stream_ingest_e2e(spark, sf_dir):
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("stream_ingest_e2e: availableNow query exceeded 300s")
-    back = spark.read.parquet(sink)
+    back = spark.read.schema(
+        "event_id BIGINT, " + FLOWLOG_DDL + ", hr INT, dt STRING"
+    ).parquet(sink)
     return back.select(
         "event_id",
         "version",
@@ -371,8 +373,8 @@ def stream_ingest_e2e(spark, sf_dir):
         F.col("end").alias("end"),
         "action",
         "log_status",
-        F.col("dt").cast("string").alias("dt"),
-        F.col("hr").cast("int").alias("hr"),
+        "dt",
+        "hr",
     )
 
 

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import register, table
+from ..registry import fan_out, register, table
 
 
 
@@ -822,8 +822,6 @@ def multimodal_image_ahash(spark, sf_dir):
 def _ahash_df(spark, sf_dir, spread=False):
     """Shared aHash pipeline: encode each doc's deterministic PPM,
     REALLY decode it, emit (doc_id, hash_hi, hash_lo)."""
-    from .similarity import _spread
-
     d = table(spark, sf_dir, "documents")
 
     def encode(batches):
@@ -845,7 +843,7 @@ def _ahash_df(spark, sf_dir, spread=False):
     # best-of-3).
     src = d.select("doc_id")
     if spread:
-        src = _spread(src, key="doc_id")
+        src = fan_out(src, "doc_id")
     assets = src.mapInPandas(encode, "doc_id long, payload binary")
 
     def ahash(batches):

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import register, shared_artifact, table
+from ..registry import fan_out, register, shared_artifact, table
 from .similarity import (
     DRIFT_TRIGGER_PCT,
     EMB_DIM,
@@ -41,7 +41,6 @@ from .similarity import (
     _ivf_build,
     _ivf_build_from,
     _ivf_cuts,
-    _spread,
     dot6,
 )
 
@@ -568,7 +567,7 @@ def _pq_encode(spark, em, books):
     """Distributed map-only PQ encoding against broadcast codebooks:
     one mapInPandas pass argmins each subvector (vectorized int64 L2),
     emitting PQ_M small ints per vector."""
-    em = _spread(em)
+    em = fan_out(em, "vec_id")
     m, sub = PQ_M, EMB_DIM // PQ_M
     bks = spark.sparkContext.broadcast([b.tolist() for b in books])
 
@@ -1100,7 +1099,7 @@ def _ivfpq_lifecycle_layout(spark, em, base, cut=None):
     recluster (the `_pq_persist_layout` discipline)."""
     if cut is None:
         cut = _ivf_append_cut(em)
-    em = _spread(em)
+    em = fan_out(em, "vec_id")
     base_em = em.filter(F.col("vec_id") < cut)
     refined, lists = _ivf_build_from(base_em)
     books = _pq_train(_pq_sample(em, cut=cut))
@@ -1322,7 +1321,7 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     # frozen-model rebuild equivalence: purged serving must equal a
     # clean re-assign + re-encode of the reduced corpus against the
     # same centroids and codebooks
-    reduced = _spread(em.filter(~td))
+    reduced = fan_out(em.filter(~td), "vec_id")
     re_assigned = _ivf_assign(
         reduced.select(
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
@@ -3106,7 +3105,7 @@ def run_pq_recode_stream(
         # spread here, where the codes frame is a fresh parquet read
         # (cheap partition probe): a single-file generation otherwise
         # serializes the ADC gather on one task (guide §2.5)
-        part = _spread(codes.filter(F.col("cb") == g).drop("cb"))
+        part = fan_out(codes.filter(F.col("cb") == g).drop("cb"), "vec_id")
         if part.isEmpty():
             continue
         books_g = _pq_books_from_df(

@@ -23,7 +23,7 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inspectio
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import register, table
+from ..registry import fan_out, register, table
 from .dedup import N_INC_BATCHES
 
 N_PROBES = 20  # probe set: vec_id < 20
@@ -262,23 +262,6 @@ IVF_NPROBE = 8  # clusters probed per query (recall@k >= 0.9 floor:
 # why high recall is expensive here and cheap on real embeddings)
 
 
-def _spread(df, key="vec_id"):
-    """Spread a narrow scan across the core budget before a CPU-bound
-    per-row chain (broadcast-centroid dot folds, PQ encodes): the toy
-    corpus reads as ONE split, which serializes those chains on one
-    task while the other cores idle (measured: the lifecycle build's
-    assign+encode stages ran 2.2-2.7 s single-task at sf0.1 — guide
-    §2.5, input skew from an unsplittable single-row-group file).
-    No-op when the input already has enough partitions — production
-    scans have natural splits, so the extra exchange never fires
-    there."""
-    spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() >= min(8, target):
-        return df
-    return df.repartition(target, key)
-
-
 def _ivf_assign(vectors, centroids, keep_aff=False):
     """Max-dot cluster per vector; ties break to lowest cluster id.
     Broadcast-centroid map-only pass (the NLIST×64 table is tiny at
@@ -305,7 +288,7 @@ def _ivf_build_from(em):
     base of both the full-corpus build (_ivf_build) and the
     append lifecycle's frozen-centroid build over the pre-cut slice
     (sim_index_append)."""
-    em = _spread(em)
+    em = fan_out(em, "vec_id")
     c = em.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
 
     seeds = (
@@ -2036,7 +2019,7 @@ def _drifted_corpus(em, append_cut):
     RECLUSTER_SUB_DIM-dim subspace at norm RECLUSTER_NORM. The
     expression SHAPE (left-associated sum of squares, (0.6*e)/nrm
     double arithmetic) matches _recluster_drift_sql bit-for-bit."""
-    em = _spread(em)  # the re-embed chain is per-row CPU (guide §2.5)
+    em = fan_out(em, "vec_id")  # the re-embed chain is per-row CPU (guide §2.5)
     els = [
         F.element_at("embedding", i).cast("double")
         for i in range(1, RECLUSTER_SUB_DIM + 1)

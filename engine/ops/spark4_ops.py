@@ -49,7 +49,7 @@ def udtf_order_chunks(spark, sf_dir):
     spark.udtf.register("order_chunks", OrderChunks)
     # fan the single-split orders scan so the row-at-a-time Python
     # eval actually runs row-PARALLEL as documented — unspread it was
-    # one 1.9 s task (guide §2.5; the _parsed/_spread discipline)
+    # one 1.9 s task (guide §2.5; see registry.fan_out)
     (
         table(spark, sf_dir, "orders")
         .select("o_orderkey")

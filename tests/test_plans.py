@@ -915,3 +915,56 @@ def test_ivfpq_recluster_moved_layout_prunes_clusters(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cluster" in pf, plan
+
+
+def _render_above_exchange(plan: str) -> bool:
+    """True when every node rendering a flow-log line (the Project
+    holding ``get_json_object(props``) has an Exchange in its subtree,
+    i.e. the render runs after the scan is fanned out instead of fused
+    into the single-split scan's one task."""
+    lines = plan.splitlines()
+    renders = [i for i, ln in enumerate(lines) if "get_json_object(props" in ln]
+    if not renders:
+        return False
+
+    def indent(ln):
+        return len(ln) - len(ln.lstrip(" +-:"))
+
+    for i in renders:
+        depth = indent(lines[i])
+        subtree = []
+        for ln in lines[i + 1:]:
+            if indent(ln) <= depth:
+                break
+            subtree.append(ln)
+        if not any("Exchange " in ln for ln in subtree):
+            return False
+    return True
+
+
+def test_flowlog_render_runs_after_the_fan_out(spark):
+    """events.parquet reads as one split; the flow-log line render
+    (a props JSON lookup and a 14-field concat) must sit above the
+    fan-out Exchange, not fused into the scan's one-task stage."""
+    for name in (
+        "flow_top_talkers",
+        "flow_cidr_lpm_enrich",
+        "ingest_flowlog_parse",
+        "ingest_envelope_decode",
+    ):
+        plan = _plan(spark, name)
+        assert _render_above_exchange(plan), f"{name}: {plan}"
+
+
+def test_fan_out_round_robins_narrow_input_and_spares_wide_input(spark):
+    from engine.registry import fan_out
+
+    narrow = spark.range(0, 100, 1, 1)
+    plan = fan_out(narrow)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan, plan
+
+    wide = spark.range(0, 100, 1, 16)
+    out = fan_out(wide)
+    assert out is wide
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
