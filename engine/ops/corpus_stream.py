@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register, table
+from ..stream import batch_fan, fail_point, run_increments
 from .textops import (
     ROUTER_SQL,
     _dsir_features,
@@ -420,7 +421,6 @@ def run_corpus_prep_stream(
     from .dedup import N_INC_BATCHES, _lsh_band_rows, _shingle_array, _tokens
     from .dedup_stream import (
         _apply_takedown,
-        _batch_fan,
         _compact_index_generations,
         _feed_key,
         _inc_lsh_dedupe_batch,
@@ -449,11 +449,7 @@ def run_corpus_prep_stream(
         else None,
     )
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("doc_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = mn * N_INC_BATCHES // (mx + 1)
+    def process(batch_df, b):
         scored = (
             batch_df.select("doc_id")
             .join(
@@ -484,7 +480,7 @@ def run_corpus_prep_stream(
                 "doc_id",
             )
             doc_sh = (
-                kept_docs.repartition(_batch_fan(batch_df), "doc_id")
+                kept_docs.repartition(batch_fan(batch_df), "doc_id")
                 .select("doc_id", _shingle_array(_tokens()).alias("sh"))
                 .persist()
             )
@@ -509,15 +505,7 @@ def run_corpus_prep_stream(
                     .cast("long")
                     .alias("jaccard_micro"),
                 )
-                if (
-                    fail_at_batch is not None
-                    and b == fail_at_batch
-                    and fail_phase == "pre_sink"
-                ):
-                    raise RuntimeError(
-                        f"injected failure: increment {b} after index"
-                        " write, before sink write"
-                    )
+                fail_point(fail_at_batch, fail_phase, b, "pre_sink")
                 out = (
                     scored.withColumn(
                         "kept", F.col("dsir_weight_micro") >= t0
@@ -551,15 +539,7 @@ def run_corpus_prep_stream(
                         purge_counts=bucket_cap is not None,
                     )
                     _purge_sink(spark, sink, b)
-                    if (
-                        fail_at_batch is not None
-                        and b == fail_at_batch
-                        and fail_phase == "post_takedown"
-                    ):
-                        raise RuntimeError(
-                            f"injected failure: increment {b} after"
-                            " takedown marker, before checkpoint commit"
-                        )
+                    fail_point(fail_at_batch, fail_phase, b, "post_takedown")
             finally:
                 doc_sh.unpersist()
         finally:
@@ -569,26 +549,13 @@ def run_corpus_prep_stream(
     # injected torn state) does not leak the persisted model cache
     # for the session (the ADVICE-r7 leak class)
     try:
-        q = (
-            spark.readStream.schema(
-                "doc_id bigint, lang string, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_increments(
+            spark, src, "doc_id bigint, lang string, text string", ckpt,
+            "doc_id", lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
+            "stream_corpus_prep_e2e", 600,
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "stream_corpus_prep_e2e: availableNow query exceeded 600s"
-            )
     finally:
         lr0.unpersist()
-    import os
-
     paths = [
         f"{sink}/batch_id={b}"
         for b in range(N_INC_BATCHES)

@@ -15,6 +15,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register, shared_artifact, table
+from ..stream import (
+    batch_fan,
+    ensure_gen_dirs,
+    fail_point,
+    publish_marker,
+    read_marker,
+    run_increments,
+)
 from .dedup import (
     COMPACT_FILES,
     JACCARD_THRESHOLD,
@@ -170,54 +178,6 @@ INC_LSH_SQL = f"""
 """
 
 
-
-
-def _batch_fan(df):
-    """Partition fan for a document batch's CPU-bound shingle/minhash
-    chain, derived from the batch's INPUT SIZE instead of a constant
-    (guide §2.2/§2.5: scale-adaptive partitioning — a constant tuned
-    for either local mode or the cluster is wrong at the other scale).
-    One task per ~512 KB of input, clamped to [4, shuffle.partitions]:
-    a toy increment keeps enough fan for the md5-minhash compute
-    without shattering every index generation into 32 tiny files
-    (whose read-back cost recurs in every later batch), while a real
-    increment spreads across the full core budget.
-    ENGINE_STREAM_FAN overrides for experiments."""
-    import os
-
-    spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    override = os.environ.get("ENGINE_STREAM_FAN")
-    if override:
-        return min(int(override), target)
-    try:
-        paths = df.inputFiles()
-        if not paths or any(
-            not p.startswith(("file:", "/")) for p in paths
-        ):
-            # no resolvable local files — stream micro-batch frames
-            # report NO inputFiles (measured: every foreachBatch frame
-            # here), so fall back to the optimized plan's statistics,
-            # which carry the exact source-slice bytes for file-backed
-            # micro-batches. Only a genuinely unknown estimate (the
-            # huge default sentinel) keeps the full fan — returning
-            # the full fan for EVERY micro-batch re-created the
-            # 32-sliver-files-per-generation problem `_batch_fan`
-            # exists to fix (r13 full-suite regression, reverted).
-            n_bytes = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            if n_bytes <= 0 or n_bytes >= (1 << 50):
-                return target
-        else:
-            n_bytes = sum(
-                os.path.getsize(p.removeprefix("file:")) for p in paths
-            )
-    except Exception:
-        return target
-    return max(4, min(target, -(-n_bytes // (512 * 1024))))
-
-
 def _inc_lsh_prepare(docs):
     """Shared cached frames for the incremental run: shingle arrays
     and band rows for the WHOLE corpus, computed and cached once.
@@ -229,7 +189,7 @@ def _inc_lsh_prepare(docs):
     this sharing is a local-bench artifact of replaying all batches
     in one query."""
     doc_sh = (
-        docs.repartition(_batch_fan(docs), "doc_id")
+        docs.repartition(batch_fan(docs), "doc_id")
         .select("doc_id", _shingle_array(_tokens()).alias("sh"))
         .persist()
     )
@@ -322,8 +282,8 @@ def _inc_lsh_dedupe_batch(
         # buckets from the PURGED counts twins for the covered prefix
         # (deleted members no longer count toward caps) plus the
         # untouched newer generations.
-        m_td = _read_marker(f"{base}/takedown_upto")
-        m = _read_compact_marker(base)
+        m_td = read_marker(f"{base}/takedown_upto")
+        m = read_marker(f"{base}/compacted_upto")
         if (
             m_td is not None
             and m_td < b
@@ -439,26 +399,6 @@ def dedup_incremental_lsh(spark, sf_dir):
     return out
 
 
-def _read_marker(path):
-    """Generic write-last marker reader (the file is published LAST
-    via atomic os.replace, so its presence implies the artifacts it
-    covers): the integer it holds, or None if not yet published. One
-    spelling for every marker in the repo — compaction, recluster."""
-    import os
-
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return int(f.read().strip())
-
-
-def _read_compact_marker(idx):
-    """Highest generation covered by the compacted layout, or None.
-    A crash between the compacted-directory writes and the marker
-    leaves readers safely on the per-generation view."""
-    return _read_marker(f"{idx}/compacted_upto")
-
-
 def _marker_gated_reader(idx, read_paths_log=None, mode="compact"):
     """Build the ``read_index`` hook shared by every LSH stream rig
     (the incremental dedup stream and the composed intake): given a
@@ -474,7 +414,7 @@ def _marker_gated_reader(idx, read_paths_log=None, mode="compact"):
 
     def reader(spark_, b):
         if mode == "delete":
-            m = _read_marker(f"{idx}/takedown_upto")
+            m = read_marker(f"{idx}/takedown_upto")
             if m is not None and m < b:
                 pb = [f"{idx}/bands_p/gen={g}" for g in range(m + 1)] + [
                     f"{idx}/bands/gen={g}" for g in range(m + 1, b)
@@ -486,7 +426,7 @@ def _marker_gated_reader(idx, read_paths_log=None, mode="compact"):
                 pb = [f"{idx}/bands/gen={g}" for g in range(b)]
                 ps = [f"{idx}/shingles/gen={g}" for g in range(b)]
         else:
-            m = _read_compact_marker(idx)
+            m = read_marker(f"{idx}/compacted_upto")
             if m is not None and m < b:
                 pb = [f"{idx}/bands_c"] + [
                     f"{idx}/bands/gen={g}" for g in range(m + 1, b)
@@ -563,10 +503,7 @@ def _compact_index_generations(spark, idx, upto):
             .write.mode("overwrite")
             .parquet(f"{idx}/counts_c")
         )
-    tmp = f"{idx}/compacted_upto.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto))
-    os.replace(tmp, f"{idx}/compacted_upto")
+    publish_marker(f"{idx}/compacted_upto", upto)
 
 
 # Takedown cohort for the delete-propagation rig: documents with
@@ -623,22 +560,6 @@ def _reupload_docs(d, mx):
     )
 
 
-def _ensure_gen_dirs(spark, dst_root, upto, builder, start=0):
-    """Structural guard for folded partitionBy("gen") twin writes: a
-    partitioned write SKIPS empty partitions, so a covered generation
-    whose rows are all filtered away would leave ``dst_root/gen=g``
-    missing where the old per-generation loop wrote an empty (but
-    readable) directory. Materialize any missing covered dir from
-    ``builder(g)`` — never fires on the bench fixtures (every
-    generation keeps survivors); replay-determinism safety only."""
-    import os
-
-    for g in range(start, upto + 1):
-        dst = f"{dst_root}/gen={g}"
-        if not os.path.isdir(dst):
-            builder(g).write.mode("overwrite").parquet(dst)
-
-
 def _apply_takedown(
     spark, idx, upto, src=None, band_tombstones=False, purge_counts=False
 ):
@@ -646,7 +567,7 @@ def _apply_takedown(
     per-generation purged twins (bands_p/gen=g, shingles_p/gen=g),
     write the tombstone table (the deleted ids — audits and late-
     arrival filtering read it), then publish the ``takedown_upto``
-    marker LAST (atomic os.replace — the write-last protocol every
+    marker LAST (`publish_marker` — the write-last protocol every
     marker in the repo follows). Original generations are RETAINED
     until GC for the same reason compaction retains them: a
     checkpoint replay of the boundary batch must re-read the exact
@@ -672,8 +593,6 @@ def _apply_takedown(
     can RE-OPEN a bucket the cohort had saturated — correct under
     arrival-prefix semantics, since admission is evaluated at each
     batch's own arrival against the then-current membership."""
-    import os
-
     td = _takedown_pred()
     # ONE pass per family instead of one per generation (optimization
     # round 12, guide §1.2/§2.4): the covered generations are read
@@ -693,7 +612,7 @@ def _apply_takedown(
             .partitionBy("gen")
             .parquet(f"{idx}/{fam}_p")
         )
-        _ensure_gen_dirs(
+        ensure_gen_dirs(
             spark, f"{idx}/{fam}_p", upto,
             lambda g, fam=fam: spark.read.parquet(
                 f"{idx}/{fam}/gen={g}"
@@ -709,7 +628,7 @@ def _apply_takedown(
             .partitionBy("gen")
             .parquet(f"{idx}/counts_p")
         )
-        _ensure_gen_dirs(
+        ensure_gen_dirs(
             spark, f"{idx}/counts_p", upto,
             lambda g: spark.read.parquet(f"{idx}/bands_p/gen={g}")
             .groupBy("band", "band_key")
@@ -758,10 +677,7 @@ def _apply_takedown(
             .write.mode("overwrite")
             .parquet(f"{idx}/tombstones_bands")
         )
-    tmp = f"{idx}/takedown_upto.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto))
-    os.replace(tmp, f"{idx}/takedown_upto")
+    publish_marker(f"{idx}/takedown_upto", upto)
 
 
 # File-size budget for takedown rewrite passes: a rewritten partition
@@ -906,16 +822,10 @@ def run_inc_lsh_stream(
         mode="delete" if delete_after is not None else "compact",
     )
 
-    def process(batch_df, epoch_id):
-        # ONE driver action derives both emptiness and the batch id
-        # (min doc_id): every micro-batch previously paid a separate
-        # isEmpty probe job before the min-collect (guide §1.2 —
-        # collapse per-batch actions; optimization r13). Any member of
-        # the batch yields the same id (batches are id ranges), so the
-        # pre-filter min is valid even when the guard below drops rows.
-        mn0 = batch_df.agg(F.min("doc_id")).collect()[0][0]
-        if mn0 is None:
-            return
+    def process(batch_df, b):
+        # the runner derives b from the pre-filter min(doc_id); any
+        # member of the batch yields the same id (batches are id
+        # ranges), so it stays valid when the guard below drops rows
         if block_reuploads or block_neardups:
             # content-tombstone guard, STRICTLY-PAST like every other
             # marker consumer: only batches past the takedown boundary
@@ -926,9 +836,8 @@ def run_inc_lsh_stream(
             # original run committed. Blocked docs never enter the
             # pipeline: no sink row, no banding, no index membership.
             # Broadcast anti-join on the O(cohort) hash set.
-            m = _read_marker(f"{idx}/takedown_upto")
-            b_pre = mn0 * N_INC_BATCHES // (mx + 1)
-            if m is not None and m < b_pre:
+            m = read_marker(f"{idx}/takedown_upto")
+            if m is not None and m < b:
                 tomb_sha = spark.read.parquet(f"{idx}/tombstones_sha")
                 before = batch_df.count()
                 batch_df = batch_df.join(
@@ -968,7 +877,7 @@ def run_inc_lsh_stream(
                     )
                     if nd_blocked_log is not None:
                         nd_blocked_log.append(
-                            (b_pre, sorted(r[0] for r in nd_ids.collect()))
+                            (b, sorted(r[0] for r in nd_ids.collect()))
                         )
                     batch_df = batch_df.join(
                         nd_ids, "doc_id", "left_anti"
@@ -976,11 +885,10 @@ def run_inc_lsh_stream(
                 if batch_df.isEmpty():
                     return
         doc_sh = (
-            batch_df.repartition(_batch_fan(batch_df), "doc_id")
+            batch_df.repartition(batch_fan(batch_df), "doc_id")
             .select("doc_id", _shingle_array(_tokens()).alias("sh"))
             .persist()
         )
-        b = mn0 * N_INC_BATCHES // (mx + 1)
         try:
             out = _inc_lsh_dedupe_batch(
                 spark, doc_sh, _lsh_band_rows(doc_sh), idx, b,
@@ -990,29 +898,13 @@ def run_inc_lsh_stream(
                 else None,
                 counts_paths_log=counts_paths_log,
             )
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "pre_sink"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after index write,"
-                    " before sink write"
-                )
+            fail_point(fail_at_batch, fail_phase, b, "pre_sink")
             out.drop("batch_id").coalesce(1).write.mode("overwrite").parquet(
                 f"{sink}/batch_id={b}"
             )
             if compact_after is not None and b == compact_after:
                 _compact_index_generations(spark, idx, b)
-                if (
-                    fail_at_batch is not None
-                    and b == fail_at_batch
-                    and fail_phase == "post_compact"
-                ):
-                    raise RuntimeError(
-                        f"injected failure: increment {b} after compaction"
-                        " marker, before checkpoint commit"
-                    )
+                fail_point(fail_at_batch, fail_phase, b, "post_compact")
             if delete_after is not None and b == delete_after:
                 _apply_takedown(
                     spark, idx, b,
@@ -1023,32 +915,15 @@ def run_inc_lsh_stream(
                     purge_counts=bucket_cap is not None,
                 )
                 _purge_sink(spark, sink, b)
-                if (
-                    fail_at_batch is not None
-                    and b == fail_at_batch
-                    and fail_phase == "post_takedown"
-                ):
-                    raise RuntimeError(
-                        f"injected failure: increment {b} after takedown"
-                        " marker, before checkpoint commit"
-                    )
+                fail_point(fail_at_batch, fail_phase, b, "post_takedown")
         finally:
             doc_sh.unpersist()
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "doc_id bigint, text string", ckpt, "doc_id",
+        lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
+        "stream_dedup_incremental_e2e", 600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_dedup_incremental_e2e: availableNow query exceeded 600s"
-        )
     paths = [
         f"{sink}/batch_id={b}"
         for b in range(N_INC_BATCHES)
@@ -1356,7 +1231,7 @@ def _gc_generations(ckpt, idx, families, marker_name="compacted_upto"):
     import os
     import shutil
 
-    m = _read_marker(f"{idx}/{marker_name}")
+    m = read_marker(f"{idx}/{marker_name}")
     if m is None:
         raise ValueError(f"GC refused: no {marker_name} marker published")
     committed = _committed_src_batches(ckpt)
@@ -1552,7 +1427,7 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
 
     td = pred if pred is not None else _takedown_pred()
     idx = f"{base}/index"
-    m = _read_marker(f"{idx}/takedown_upto")
+    m = read_marker(f"{idx}/takedown_upto")
     if m is None or m < upto:
         raise ValueError(
             f"_purge_feed refused: takedown_upto marker is {m},"
@@ -2444,7 +2319,6 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     semi-joined against O(cohort) broadcast tombstones; GC and feed
     purges are fs metadata + atomic replaces. Nothing here adds a
     shuffle class beyond the dedicated ops."""
-    import os
     import shutil
 
     from ..registry import scratch_dir
@@ -2495,10 +2369,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(f"{pq_root}/codes_p/gen={g}")
         )
-    tmp = f"{pq_root}/takedown_applied.tmp"
-    with open(tmp, "w") as f:
-        f.write("1")
-    os.replace(tmp, f"{pq_root}/takedown_applied")
+    publish_marker(f"{pq_root}/takedown_applied", 1)
     # codes are a BATCH artifact — no checkpoint can ever replay
     # them, so the originals go the moment the twins are published
     shutil.rmtree(f"{pq_root}/codes")

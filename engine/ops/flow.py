@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..ingest import SQL_EPOCH, SQL_K, flowlog_lines, parse_flowlog_lines
 from ..registry import register, table
+from ..stream import run_available_now
 
 
 def _parsed(spark, sf_dir):
@@ -235,25 +236,19 @@ def flow_zscore_anomaly(spark, sf_dir):
     Not stddev_samp(): both engines accumulate EXACT integer sums
     (sum, sum-of-squares, count), and variance/z are derived through
     an identical scalar double expression — bit-deterministic where a
-    shuffled double stddev is not. One map-side-combinable shuffle for
-    stats, then a broadcast join back to the flows (per-interface
-    stats are dim-sized at any scale).
-
-    The 3-column parsed projection is persist()ed because BOTH the
-    stats pass and the scoring join consume it — without the cache
-    each consumer re-runs the from_csv parse of every line (the
-    dominant cost); with it the parse happens once and the second
-    consumer reads columnar memory (spills per-partition at scale)."""
-    from pyspark.storagelevel import StorageLevel
-
-    parsed = _parsed(spark, sf_dir)
-    f = parsed.select("event_id", "interface_id", "bytes").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    stats = f.groupBy("interface_id").agg(
-        F.sum("bytes").alias("s"),
-        F.sum(F.col("bytes") * F.col("bytes")).alias("sq"),
-        F.count(F.lit(1)).alias("n"),
+    shuffled double stddev is not. The sums are whole-partition
+    aggregates over a window on interface_id, so the from_csv parse
+    of every line (the dominant cost) runs once in one shuffle and
+    no cache is needed to share it between a stats pass and a
+    scoring join."""
+    w = Window.partitionBy("interface_id")
+    scored = _parsed(spark, sf_dir).select(
+        "event_id",
+        "interface_id",
+        "bytes",
+        F.sum("bytes").over(w).alias("s"),
+        F.sum(F.col("bytes") * F.col("bytes")).over(w).alias("sq"),
+        F.count(F.lit(1)).over(w).alias("n"),
     )
     mean = F.col("s").cast("double") / F.col("n")
     var = (
@@ -262,8 +257,9 @@ def flow_zscore_anomaly(spark, sf_dir):
     ) / (F.col("n") - 1)
     z = (F.col("bytes") - mean) / F.sqrt(var)
     return (
-        f.join(F.broadcast(stats), "interface_id")
-        .filter((F.col("n") >= 2) & (var > 0) & (F.abs(z) > Z_THRESHOLD))
+        scored.filter(
+            (F.col("n") >= 2) & (var > 0) & (F.abs(z) > Z_THRESHOLD)
+        )
         .select(
             "event_id",
             "interface_id",
@@ -1321,18 +1317,13 @@ def stream_netflow_rollup_e2e(spark, sf_dir):
     decoded = stream.mapInPandas(
         _netflow_decode_batches, NETFLOW_DECODE_SCHEMA
     )
-    q = (
+    run_available_now(
         decoded.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_netflow_rollup_e2e",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_netflow_rollup_e2e: availableNow query exceeded 300s"
-        )
     landed = spark.read.schema(NETFLOW_DECODE_SCHEMA).parquet(sink)
     return landed.groupBy("srcaddr", "prot").agg(
         F.count(F.lit(1)).alias("n_flows"),

@@ -20,6 +20,7 @@ from ..ingest import (
 )
 from ..registry import register, scratch_dir, table
 from ..schemas import EVENTS_STREAM_SCHEMA, FLOWLOG_DDL
+from ..stream import run_available_now
 
 
 @register(
@@ -110,16 +111,13 @@ def stream_file_source(spark, sf_dir):
     e.write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(src)
-    q = (
+    run_available_now(
         stream.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_file_source",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_file_source: availableNow query exceeded 300s")
     back = spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(sink)
     return back.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
@@ -343,17 +341,14 @@ def stream_ingest_e2e(spark, sf_dir):
         # (Streaming DataFrames forbid sortWithinPartitions.)
         .repartition("dt")
     )
-    q = (
+    run_available_now(
         staged.writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
-        .partitionBy("dt")
-        .trigger(availableNow=True)
-        .start()
+        .partitionBy("dt"),
+        "stream_ingest_e2e",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_ingest_e2e: availableNow query exceeded 300s")
     back = spark.read.schema(
         "event_id BIGINT, " + FLOWLOG_DDL + ", hr INT, dt STRING"
     ).parquet(sink)
@@ -492,16 +487,13 @@ def stream_backfill_bounded(spark, sf_dir):
         .option("maxFilesPerTrigger", BACKFILL_FILES_PER_TRIGGER)
         .parquet(src)
     )
-    q = (
+    q = run_available_now(
         stream.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_backfill_bounded",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_backfill_bounded: query exceeded 300s")
     progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
     total = sum(p["numInputRows"] for p in progress)
     min_batches = BACKFILL_FILES // BACKFILL_FILES_PER_TRIGGER
@@ -655,17 +647,14 @@ def stream_union_two_sources(spark, sf_dir):
             "n",
         )
     )
-    q = (
+    run_available_now(
         agg.writeStream.format("parquet")
         .outputMode("append")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_union_two_sources",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_union_two_sources: drain exceeded 300s")
     return spark.read.parquet(sink)
 
 
@@ -1318,16 +1307,13 @@ def ingest_avro_stream(spark, sf_dir):
         src
     )
     decoded = stream.mapInPandas(_avro_decode_batches, AVRO_DECODE_SCHEMA)
-    q = (
+    run_available_now(
         decoded.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "ingest_avro_stream",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("ingest_avro_stream: availableNow query exceeded 300s")
     return spark.read.schema(AVRO_DECODE_SCHEMA).parquet(sink)
 
 
@@ -1504,14 +1490,11 @@ def ingest_warc_stream(spark, sf_dir):
         src
     )
     decoded = stream.mapInPandas(_warc_decode_batches, WARC_DECODE_SCHEMA)
-    q = (
+    run_available_now(
         decoded.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "ingest_warc_stream",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("ingest_warc_stream: availableNow query exceeded 300s")
     return spark.read.schema(WARC_DECODE_SCHEMA).parquet(sink)

@@ -20,6 +20,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import fan_out, register, shared_artifact, table
+from ..stream import (
+    ensure_gen_dirs,
+    fail_point,
+    publish_marker,
+    read_marker,
+    run_increments,
+)
 from .similarity import (
     DRIFT_TRIGGER_PCT,
     EMB_DIM,
@@ -40,6 +47,7 @@ from .similarity import (
     _ivf_assign,
     _ivf_build,
     _ivf_build_from,
+    _increment_of,
     _ivf_cuts,
     dot6,
 )
@@ -858,8 +866,6 @@ def sim_index_pq_delete(spark, sf_dir):
     (8 small ints per row — the cheapest index family to rewrite in
     the whole repo), tombstones are O(cohort), post-delete probes cost
     exactly what pre-delete probes cost."""
-    import os
-
     from ..registry import scratch_dir
     from .dedup_stream import _audit_roots_no_tombstoned
 
@@ -882,10 +888,7 @@ def sim_index_pq_delete(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(f"{base}/tombstones")
     )
-    tmp = f"{base}/takedown_applied.tmp"
-    with open(tmp, "w") as f:
-        f.write("1")
-    os.replace(tmp, f"{base}/takedown_applied")
+    publish_marker(f"{base}/takedown_applied", 1)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
     _audit_roots_no_tombstoned(
@@ -931,7 +934,7 @@ def run_pq_stream(spark, sf_dir, base, fail_at_batch=None):
     BEFORE the checkpoint commit (the torn state)."""
     import os
 
-    from .dedup_stream import _feed_key, _read_marker, _stage_feed
+    from .dedup_stream import _feed_key, _stage_feed
 
     em_full = table(spark, sf_dir, "embeddings")
     em = em_full.select("vec_id", "embedding")
@@ -950,21 +953,14 @@ def run_pq_stream(spark, sf_dir, base, fail_at_batch=None):
         feed_key=_feed_key(sf_dir, "sim", "embeddings.parquet"),
     )
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("vec_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = next(i for i, (lo, hi) in enumerate(bounds) if lo <= mn < hi)
+    def process(batch_df, b):
         if b == 0:
             books = _pq_train(_pq_sample(batch_df))
             _pq_books_to_df(spark, books).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(f"{idx}/codebooks")
-            tmp = f"{idx}/codebooks_ready.tmp"
-            with open(tmp, "w") as f:
-                f.write("1")
-            os.replace(tmp, f"{idx}/codebooks_ready")
-        if _read_marker(f"{idx}/codebooks_ready") is None:
+            publish_marker(f"{idx}/codebooks_ready", 1)
+        if read_marker(f"{idx}/codebooks_ready") is None:
             raise RuntimeError(
                 "codes arrived before the codebooks were published"
             )
@@ -974,26 +970,12 @@ def run_pq_stream(spark, sf_dir, base, fail_at_batch=None):
         _pq_encode(spark, batch_df, books).write.mode(
             "overwrite"
         ).parquet(f"{idx}/codes/gen={b}")
-        if fail_at_batch is not None and b == fail_at_batch:
-            raise RuntimeError(
-                f"injected failure: increment {b} after index writes,"
-                " before checkpoint commit"
-            )
+        fail_point(fail_at_batch, "post_index", b, "post_index")
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "vec_id bigint, embedding array<float>", ckpt,
+        "vec_id", _increment_of(bounds), process, "stream_sim_pq_e2e", 600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_sim_pq_e2e: availableNow query exceeded 600s"
-        )
     loaded = _pq_books_from_df(spark.read.parquet(f"{idx}/codebooks"))
     gens = [
         f"{idx}/codes/gen={b}"
@@ -1260,8 +1242,6 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     of the cheapest rows any index family carries (8 small ints +
     cluster per vector); tombstones are O(cohort); post-delete probes
     cost exactly what pre-delete probes cost."""
-    import os
-
     from ..registry import scratch_dir
     from .dedup_stream import _audit_roots_no_tombstoned
 
@@ -1285,9 +1265,7 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     # a partitioned write skips empty partitions: a generation fully
     # removed by the cohort must still leave a readable gen dir for
     # the explicit codes_p/gen=N reads below (ADVICE r12)
-    from .dedup_stream import _ensure_gen_dirs
-
-    _ensure_gen_dirs(
+    ensure_gen_dirs(
         spark, f"{base}/codes_p", 1,
         lambda g: spark.read.parquet(f"{base}/codes/gen={g}").filter(
             ~td
@@ -1300,10 +1278,7 @@ def sim_index_ivfpq_delete(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(f"{base}/tombstones")
     )
-    tmp = f"{base}/takedown_applied.tmp"
-    with open(tmp, "w") as f:
-        f.write("1")
-    os.replace(tmp, f"{base}/takedown_applied")
+    publish_marker(f"{base}/takedown_applied", 1)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
     _audit_roots_no_tombstoned(
@@ -1522,8 +1497,6 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
     the cheapest rows any index carries (8 codes per vector) — no
     re-encode, no codebook touch, probe cost unchanged after the
     swap."""
-    import os
-
     from ..registry import scratch_dir
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1566,10 +1539,7 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
                 .partitionBy("cluster")
                 .parquet(f"{base}/codes_r/gen={g}")
             )
-        tmp = f"{base}/reclustered.tmp"
-        with open(tmp, "w") as f:
-            f.write("1")
-        os.replace(tmp, f"{base}/reclustered")
+        publish_marker(f"{base}/reclustered", 1)
 
         if _aff_drift_fired(
             _ivfpq_cohort_aff_means(ex, cent1, append_cut, train_cut)
@@ -1603,7 +1573,7 @@ def run_ivfpq_stream(
     stream_sim_index_e2e and stream_sim_pq_e2e disciplines COMPOSED:
     batch 0 trains BOTH models from its own slice (the IVF Lloyd step
     and the fixed-size-sample PQ codebooks) and publishes them behind
-    ONE write-last marker (``models_ready`` — one atomic os.replace
+    ONE write-last marker (``models_ready`` — one `publish_marker`
     covering centroids + codebooks, so a reader can never observe one
     model without the other); every batch (including 0 and replays)
     loads the PUBLISHED models and assigns + encodes itself map-only
@@ -1659,9 +1629,7 @@ def run_ivfpq_stream(
     itself published, skips the already-converged retrain, and
     re-encodes to the same bytes). ``monitor_log`` records
     (batch, ratio, baseline, fired) tuples."""
-    import os
-
-    from .dedup_stream import _feed_key, _read_marker, _stage_feed
+    from .dedup_stream import _feed_key, _stage_feed
     from .similarity import (
         N_SIM_BATCHES,
         _apply_cluster_takedown,
@@ -1725,11 +1693,7 @@ def run_ivfpq_stream(
         )
         return int(_micro_aff_mean(a).collect()[0]["mean"])
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("vec_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = next(i for i, (lo, hi) in enumerate(bounds) if lo <= mn < hi)
+    def process(batch_df, b):
         if b == 0:
             train_src = (
                 batch_df.filter(F.col("vec_id") < train_cut)
@@ -1756,18 +1720,15 @@ def run_ivfpq_stream(
                 ).coalesce(1).write.mode("overwrite").parquet(
                     f"{idx}/aff_baseline"
                 )
-            tmp = f"{idx}/models_ready.tmp"
-            with open(tmp, "w") as f:
-                f.write("1")
-            os.replace(tmp, f"{idx}/models_ready")
-        if _read_marker(f"{idx}/models_ready") is None:
+            publish_marker(f"{idx}/models_ready", 1)
+        if read_marker(f"{idx}/models_ready") is None:
             raise RuntimeError(
                 "codes arrived before the models were published"
             )
         if (
             recluster
             and b > 0
-            and _read_marker(f"{idx}/reclustered_upto") is None
+            and read_marker(f"{idx}/reclustered_upto") is None
         ):
             # staleness monitor, only while one centroid generation
             # is live (the run_pq_recode_stream discipline): a
@@ -1827,9 +1788,7 @@ def run_ivfpq_stream(
                 # empty-generation guard for the folded write: the
                 # serving reads walk codes_r/gen=0..b-1 explicitly
                 # (ADVICE r12)
-                from .dedup_stream import _ensure_gen_dirs
-
-                _ensure_gen_dirs(
+                ensure_gen_dirs(
                     spark, f"{idx}/codes_r", b - 1,
                     lambda g: spark.read.parquet(
                         f"{idx}/codes/gen={g}"
@@ -1837,10 +1796,7 @@ def run_ivfpq_stream(
                     .select("vec_id", "code")
                     .join(moved, "vec_id"),
                 )
-                tmp = f"{idx}/reclustered_upto.tmp"
-                with open(tmp, "w") as f:
-                    f.write(str(b - 1))
-                os.replace(tmp, f"{idx}/reclustered_upto")
+                publish_marker(f"{idx}/reclustered_upto", b - 1)
         # the read-back discipline: every batch (batch 0 included)
         # assigns and encodes against the PUBLISHED artifacts —
         # serving must prove the persisted models anyway; in
@@ -1849,7 +1805,7 @@ def run_ivfpq_stream(
         cent_path = (
             f"{idx}/centroids_g1"
             if recluster
-            and _read_marker(f"{idx}/reclustered_upto") is not None
+            and read_marker(f"{idx}/reclustered_upto") is not None
             else f"{idx}/centroids"
         )
         cent = spark.read.parquet(cent_path)
@@ -1869,66 +1825,25 @@ def run_ivfpq_stream(
             .partitionBy("cluster")
             .parquet(f"{idx}/codes/gen={b}")
         )
-        if (
-            fail_at_batch is not None
-            and b == fail_at_batch
-            and fail_phase == "post_index"
-        ):
-            raise RuntimeError(
-                f"injected failure: increment {b} after index writes,"
-                " before checkpoint commit"
-            )
-        if (
-            fail_at_batch is not None
-            and b == fail_at_batch
-            and fail_phase == "post_recluster"
-            and _read_marker(f"{idx}/reclustered_upto") is not None
-        ):
-            raise RuntimeError(
-                f"injected failure: increment {b} after the recluster"
-                " placement republish and its own code write, before"
-                " checkpoint commit"
-            )
+        fail_point(fail_at_batch, fail_phase, b, "post_index")
+        if read_marker(f"{idx}/reclustered_upto") is not None:
+            # after the placement republish and this batch's own codes
+            fail_point(fail_at_batch, fail_phase, b, "post_recluster")
         if compact_after is not None and b == compact_after:
             _compact_cluster_generations(spark, idx, "codes", b)
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "post_compact"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after compaction"
-                    " marker, before checkpoint commit"
-                )
+            fail_point(fail_at_batch, fail_phase, b, "post_compact")
         if delete_after is not None and b == delete_after:
             _apply_cluster_takedown(
                 spark, idx, "codes", b, "vec_id",
                 compact_upto=compact_after,
             )
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "post_takedown"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after takedown"
-                    " marker, before checkpoint commit"
-                )
+            fail_point(fail_at_batch, fail_phase, b, "post_takedown")
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "vec_id bigint, embedding array<float>", ckpt,
+        "vec_id", _increment_of(bounds), process, "stream_sim_ivfpq_e2e",
+        600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_sim_ivfpq_e2e: availableNow query exceeded 600s"
-        )
 
     cent = spark.read.parquet(f"{idx}/centroids")
     loaded = _pq_books_from_df(spark.read.parquet(f"{idx}/codebooks"))
@@ -1936,7 +1851,7 @@ def run_ivfpq_stream(
         # the serving corpus is the drifted one; probes and re-rank
         # must read the re-embedded arrays
         exm = _drifted_corpus(em, cut).localCheckpoint(eager=True)
-        mr = _read_marker(f"{idx}/reclustered_upto")
+        mr = read_marker(f"{idx}/reclustered_upto")
         if mr is not None:
             cent = spark.read.parquet(f"{idx}/centroids_g1")
             paths = [
@@ -1963,7 +1878,7 @@ def run_ivfpq_stream(
             serve_paths_log.append(list(paths))
         return _ivfpq_serve(spark, exm, cent, loaded, coded)
     if delete_after is not None:
-        md = _read_marker(f"{idx}/takedown_upto")
+        md = read_marker(f"{idx}/takedown_upto")
         if md is not None and compact_after is not None:
             paths = [f"{idx}/codes_c_p"] + [
                 f"{idx}/codes_p/gen={g}"
@@ -2016,7 +1931,7 @@ def run_ivfpq_stream(
         if serve_paths_log is not None:
             serve_paths_log.append(list(paths))
         return _ivfpq_serve(spark, em, cent, loaded, coded)
-    m = _read_marker(f"{idx}/compacted_upto")
+    m = read_marker(f"{idx}/compacted_upto")
     if m is not None:
         paths = [f"{idx}/codes_c"] + [
             f"{idx}/codes/gen={g}" for g in range(m + 1, N_SIM_BATCHES)
@@ -2521,8 +2436,6 @@ def _pq_recode_oracle_sql():
 
 
 def _pq_recode_body(spark, ex, train_cut, append_cut):
-    import os
-
     from ..registry import scratch_dir
 
     base = scratch_dir("sim_index_pq_recode")
@@ -2538,10 +2451,7 @@ def _pq_recode_body(spark, ex, train_cut, append_cut):
     ).parquet(f"{base}/codebooks/gen=1")
     # write-last republish marker: a reader can act on gen=1 only
     # once BOTH generations' artifacts are fully on disk
-    tmp = f"{base}/cb_gen.tmp"
-    with open(tmp, "w") as f:
-        f.write("1")
-    os.replace(tmp, f"{base}/cb_gen")
+    publish_marker(f"{base}/cb_gen", 1)
 
     # measurements run against the LOADED generations — the published
     # artifact is what's proven, not the in-memory arrays
@@ -2911,7 +2821,7 @@ def run_pq_recode_stream(
     ``serve_paths_log`` records what the final probe read."""
     import os
 
-    from .dedup_stream import _feed_key, _read_marker, _stage_feed
+    from .dedup_stream import _feed_key, _stage_feed
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
@@ -2937,11 +2847,7 @@ def run_pq_recode_stream(
         row = _pq_ratio_stats(spark, sample_df, books, "m").collect()[0]
         return int(row["mean_ratio_milli"])
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("vec_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = next(i for i, (lo, hi) in enumerate(bounds) if lo <= mn < hi)
+    def process(batch_df, b):
         if b == 0:
             books = _pq_train(_pq_sample(batch_df, cut=train_cut))
             _pq_books_to_df(spark, books).coalesce(1).write.mode(
@@ -2958,15 +2864,12 @@ def run_pq_recode_stream(
             ).coalesce(1).write.mode("overwrite").parquet(
                 f"{idx}/baseline"
             )
-            tmp = f"{idx}/models0_ready.tmp"
-            with open(tmp, "w") as f:
-                f.write("1")
-            os.replace(tmp, f"{idx}/models0_ready")
-        if _read_marker(f"{idx}/models0_ready") is None:
+            publish_marker(f"{idx}/models0_ready", 1)
+        if read_marker(f"{idx}/models0_ready") is None:
             raise RuntimeError(
                 "codes arrived before the gen=0 models were published"
             )
-        cbg = 1 if _read_marker(f"{idx}/cb1_ready") is not None else 0
+        cbg = 1 if read_marker(f"{idx}/cb1_ready") is not None else 0
         if b > 0 and cbg == 0:
             books0 = _pq_books_from_df(
                 spark.read.parquet(f"{idx}/codebooks/gen=0")
@@ -2989,10 +2892,7 @@ def run_pq_recode_stream(
                 _pq_books_to_df(spark, books1).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(f"{idx}/codebooks/gen=1")
-                tmp = f"{idx}/cb1_ready.tmp"
-                with open(tmp, "w") as f:
-                    f.write("1")
-                os.replace(tmp, f"{idx}/cb1_ready")
+                publish_marker(f"{idx}/cb1_ready", 1)
                 cbg = 1
         books = _pq_books_from_df(
             spark.read.parquet(f"{idx}/codebooks/gen={cbg}")
@@ -3003,22 +2903,12 @@ def run_pq_recode_stream(
             .write.mode("overwrite")
             .parquet(f"{idx}/codes/gen={b}")
         )
-        if (
-            fail_at_batch is not None
-            and b == fail_at_batch
-            and fail_phase == "post_publish"
-        ):
-            raise RuntimeError(
-                f"injected failure: increment {b} after publishes and"
-                " code write, before checkpoint commit"
-            )
+        fail_point(fail_at_batch, fail_phase, b, "post_publish")
         if delete_after is not None and b == delete_after:
             # the takedown reaches code generations across BOTH
             # codebook eras; purged twins KEEP the cb column so
             # per-era LUT routing survives the purge
             td = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
-            from .dedup_stream import _ensure_gen_dirs
-
             # ONE filter-rewrite across both codebook eras' covered
             # generations (optimization round 12, guide §1.2); the
             # twins keep their cb column exactly as before — gen is a
@@ -3031,7 +2921,7 @@ def run_pq_recode_stream(
                 .partitionBy("gen")
                 .parquet(f"{idx}/codes_p")
             )
-            _ensure_gen_dirs(
+            ensure_gen_dirs(
                 spark, f"{idx}/codes_p", b,
                 lambda g: spark.read.parquet(
                     f"{idx}/codes/gen={g}"
@@ -3048,37 +2938,17 @@ def run_pq_recode_stream(
                 .write.mode("overwrite")
                 .parquet(f"{idx}/tombstones")
             )
-            tmp = f"{idx}/takedown_upto.tmp"
-            with open(tmp, "w") as f:
-                f.write(str(b))
-            os.replace(tmp, f"{idx}/takedown_upto")
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "post_takedown"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after takedown"
-                    " marker, before checkpoint commit"
-                )
+            publish_marker(f"{idx}/takedown_upto", b)
+            fail_point(fail_at_batch, fail_phase, b, "post_takedown")
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "vec_id bigint, embedding array<float>", ckpt,
+        "vec_id", _increment_of(bounds), process,
+        "stream_sim_pq_recode_e2e", 600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_sim_pq_recode_e2e: availableNow query exceeded 600s"
-        )
 
     md = (
-        _read_marker(f"{idx}/takedown_upto")
+        read_marker(f"{idx}/takedown_upto")
         if delete_after is not None
         else None
     )

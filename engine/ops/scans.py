@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register, scratch_dir, table
+from ..stream import run_available_now
 
 
 @register(
@@ -980,18 +981,13 @@ def sink_python_stream_datasource(spark, sf_dir):
             F.round(F.col("value") * 10000).cast("long").alias("value_e4"),
         )
     )
-    q = (
+    run_available_now(
         stream.writeStream.format("pystreamparts")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "sink_python_stream_datasource",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "sink_python_stream_datasource: availableNow query exceeded 300s"
-        )
     return spark.read.schema(
         "event_id long, user_id long, value_e4 long"
     ).parquet(out)

@@ -24,6 +24,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import fan_out, register, table
+from ..stream import (
+    ensure_gen_dirs,
+    fail_point,
+    publish_marker,
+    read_marker,
+    run_increments,
+)
 from .dedup import N_INC_BATCHES
 
 N_PROBES = 20  # probe set: vec_id < 20
@@ -1673,6 +1680,14 @@ def _ivf_cuts(mx):
     return train_cut, append_cut, mid
 
 
+def _increment_of(bounds):
+    """``batch_of`` for an id-range feed: the index of the ``(lo, hi)``
+    bound holding an increment's min id."""
+    return lambda mn: next(
+        i for i, (lo, hi) in enumerate(bounds) if lo <= mn < hi
+    )
+
+
 def _ivf_append_cut(em):
     mx = em.agg(F.max("vec_id")).collect()[0][0]
     return _ivf_cuts(mx)[1]
@@ -1777,8 +1792,6 @@ def sim_index_delete(spark, sf_dir):
     cluster repartition that keeps one file per serving partition),
     tombstones are O(cohort), and post-delete probes cost exactly what
     pre-delete probes cost."""
-    import os
-
     from ..registry import scratch_dir
 
     em = table(spark, sf_dir, "embeddings")
@@ -1816,10 +1829,7 @@ def sim_index_delete(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(f"{base}/tombstones")
     )
-    tmp = f"{base}/takedown_applied.tmp"
-    with open(tmp, "w") as f:
-        f.write("1")
-    os.replace(tmp, f"{base}/takedown_applied")
+    publish_marker(f"{base}/takedown_applied", 1)
 
     purged = (
         spark.read.option("basePath", f"{base}/lists_p")
@@ -2790,14 +2800,12 @@ def _n_parquet_files(path):
 def _compact_cluster_generations(spark, idx, family, upto):
     """Fold ``{family}/gen=0..upto`` into the ONE cluster-partitioned
     ``{family}_c`` layout, assert the file shrink, publish the
-    ``compacted_upto`` marker write-last (atomic os.replace).
+    ``compacted_upto`` marker write-last (`publish_marker`).
     Generation dirs are RETAINED inside the replay horizon — a
     checkpoint replay of batch ``upto`` must be able to redo this
     compaction from them. One spelling for the IVF list stream and
     the composed-index code stream (round-11 review: the two rigs
     had forked this block verbatim)."""
-    import os
-
     root = f"{idx}/{family}"
     gens = [f"{root}/gen={g}" for g in range(upto + 1)]
     n_before = sum(_n_parquet_files(g) for g in gens)
@@ -2816,10 +2824,7 @@ def _compact_cluster_generations(spark, idx, family, upto):
             f"mid-stream {family} compaction did not shrink:"
             f" {n_before} -> {n_after}"
         )
-    tmp = f"{idx}/compacted_upto.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto))
-    os.replace(tmp, f"{idx}/compacted_upto")
+    publish_marker(f"{idx}/compacted_upto", upto)
 
 
 def _apply_cluster_takedown(spark, idx, family, upto, id_col,
@@ -2841,8 +2846,6 @@ def _apply_cluster_takedown(spark, idx, family, upto, id_col,
     decision. ONE spelling for the IVF list stream, the composed-code
     stream, and its compacted form (round-11 + round-12 reviews —
     the purge/tombstone/marker sequence must not fork)."""
-    import os
-
     root = f"{idx}/{family}"
     td = F.col(id_col) % VEC_TD_MOD == VEC_TD_RES
     first_gen = 0 if compact_upto is None else compact_upto + 1
@@ -2874,9 +2877,7 @@ def _apply_cluster_takedown(spark, idx, family, upto, id_col,
         )
         # empty-generation guard for the folded write: downstream
         # serving walks {root}_p/gen=g explicitly (ADVICE r12)
-        from .dedup_stream import _ensure_gen_dirs
-
-        _ensure_gen_dirs(
+        ensure_gen_dirs(
             spark, f"{root}_p", upto,
             lambda g: spark.read.parquet(f"{root}/gen={g}").filter(
                 ~td
@@ -2892,10 +2893,7 @@ def _apply_cluster_takedown(spark, idx, family, upto, id_col,
         .write.mode("overwrite")
         .parquet(f"{idx}/tombstones")
     )
-    tmp = f"{idx}/takedown_upto.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto))
-    os.replace(tmp, f"{idx}/takedown_upto")
+    publish_marker(f"{idx}/takedown_upto", upto)
 
 
 def run_sim_index_stream(
@@ -2920,7 +2918,8 @@ def run_sim_index_stream(
     overwrites, which the boundary-restart test pins byte-equal.
     ``serve_paths_log`` records the list paths the final probe read."""
     import os
-    from .dedup_stream import _feed_key, _read_compact_marker, _stage_feed
+
+    from .dedup_stream import _feed_key, _stage_feed
 
     em = table(spark, sf_dir, "embeddings")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
@@ -2949,11 +2948,7 @@ def run_sim_index_stream(
     if compact_after is not None and delete_after is not None:
         raise ValueError("rig supports one maintenance mode per stream")
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("vec_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = 0 if mn < cut else (1 if mn < mid else 2)
+    def process(batch_df, b):
         if b == 0:
             refined, _lists = _ivf_build_from(batch_df)
             refined.write.mode("overwrite").parquet(cent_path)
@@ -2978,52 +2973,19 @@ def run_sim_index_stream(
             _ivf_assign(batch, cent).repartition("cluster").write.mode(
                 "overwrite"
             ).partitionBy("cluster").parquet(f"{list_path}/gen={b}")
-        if (
-            fail_at_batch is not None
-            and b == fail_at_batch
-            and fail_phase == "post_index"
-        ):
-            raise RuntimeError(
-                f"injected failure: increment {b} after index write,"
-                " before checkpoint commit"
-            )
+        fail_point(fail_at_batch, fail_phase, b, "post_index")
         if compact_after is not None and b == compact_after:
             _compact_cluster_generations(spark, idx, "lists", b)
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "post_compact"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after compaction"
-                    " marker, before checkpoint commit"
-                )
+            fail_point(fail_at_batch, fail_phase, b, "post_compact")
         if delete_after is not None and b == delete_after:
             _apply_cluster_takedown(spark, idx, "lists", b, "c_id")
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "post_takedown"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after takedown"
-                    " marker, before checkpoint commit"
-                )
+            fail_point(fail_at_batch, fail_phase, b, "post_takedown")
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "vec_id bigint, embedding array<float>", ckpt,
+        "vec_id", _increment_of(bounds), process,
+        "stream_sim_index_e2e", 600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_sim_index_e2e: availableNow query exceeded 600s"
-        )
 
     # marker-gated SERVING read: the compacted layout plus only the
     # generations strictly past the compaction boundary — or, in
@@ -3031,9 +2993,7 @@ def run_sim_index_stream(
     # untouched newer generations
     cent = spark.read.parquet(cent_path)
     if delete_after is not None:
-        from .dedup_stream import _read_marker
-
-        md = _read_marker(f"{idx}/takedown_upto")
+        md = read_marker(f"{idx}/takedown_upto")
         if md is not None:
             paths = [f"{idx}/lists_p/gen={g}" for g in range(md + 1)] + [
                 f"{list_path}/gen={g}"
@@ -3055,7 +3015,7 @@ def run_sim_index_stream(
         if serve_paths_log is not None:
             serve_paths_log.append(list(paths))
         return _ivf_probe(spark, sf_dir, cent, inv)
-    m = _read_compact_marker(idx)
+    m = read_marker(f"{idx}/compacted_upto")
     if m is not None:
         paths = [f"{idx}/lists_c"] + [
             f"{list_path}/gen={g}" for g in range(m + 1, N_SIM_BATCHES)
@@ -3209,15 +3169,6 @@ def _stream_recluster_sql():
 """
 
 
-def _read_gen_marker(path):
-    """The recluster marker uses the repo's one write-last marker
-    protocol — delegate to dedup_stream's generic reader (review
-    finding: this was a byte-identical local copy)."""
-    from .dedup_stream import _read_marker
-
-    return _read_marker(path)
-
-
 def run_sim_recluster_stream(
     spark, sf_dir, base, fail_at_batch=None, fail_phase="post_index",
     codebook_log=None,
@@ -3238,8 +3189,6 @@ def run_sim_recluster_stream(
     writes; ``'post_recluster'`` kills after the marker publish — the
     torn state ACROSS the codebook boundary. ``codebook_log`` records
     (batch, generation) routing decisions."""
-    import os
-
     from .dedup_stream import _feed_key, _stage_feed
 
     em = table(spark, sf_dir, "embeddings")
@@ -3270,11 +3219,7 @@ def run_sim_recluster_stream(
     def mean_of(path):
         return spark.read.parquet(path).collect()[0]
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("vec_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = next(i for i, (lo, hi) in enumerate(bounds) if lo <= mn < hi)
+    def process(batch_df, b):
         if b == 0:
             refined, _lists = _ivf_build_from(batch_df)
             refined.write.mode("overwrite").parquet(f"{idx}/centroids/gen=0")
@@ -3287,7 +3232,7 @@ def run_sim_recluster_stream(
                 f"{idx}/lists/gen=0"
             )
         else:
-            m = _read_gen_marker(marker)
+            m = read_marker(marker)
             gen = 1 if (m is not None and m < b) else 0
             if codebook_log is not None:
                 codebook_log.append((b, gen))
@@ -3306,15 +3251,7 @@ def run_sim_recluster_stream(
                 ).write.mode("overwrite").parquet(f"{idx}/stats/gen={b}")
             finally:
                 assigned.unpersist()
-        if (
-            fail_at_batch is not None
-            and b == fail_at_batch
-            and fail_phase == "post_index"
-        ):
-            raise RuntimeError(
-                f"injected failure: increment {b} after index/stats write,"
-                " before checkpoint commit"
-            )
+        fail_point(fail_at_batch, fail_phase, b, "post_index")
         if b == 2:
             val = mean_of(f"{idx}/stats/gen=1")
             cur = mean_of(f"{idx}/stats/gen=2")
@@ -3334,34 +3271,14 @@ def run_sim_recluster_stream(
             )
             refined, _lists = _ivf_build_from(arrived)
             refined.write.mode("overwrite").parquet(f"{idx}/centroids/gen=1")
-            tmp = f"{marker}.tmp"
-            with open(tmp, "w") as f:
-                f.write(str(b))
-            os.replace(tmp, marker)
-            if (
-                fail_at_batch is not None
-                and b == fail_at_batch
-                and fail_phase == "post_recluster"
-            ):
-                raise RuntimeError(
-                    f"injected failure: increment {b} after re-cluster"
-                    " marker, before checkpoint commit"
-                )
+            publish_marker(marker, b)
+            fail_point(fail_at_batch, fail_phase, b, "post_recluster")
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "vec_id bigint, embedding array<float>", ckpt,
+        "vec_id", _increment_of(bounds), process,
+        "stream_sim_recluster_e2e", 600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_sim_recluster_e2e: availableNow query exceeded 600s"
-        )
 
     # report assembly — from the PUBLISHED artifacts: the fresh-era
     # validation stats come from the loaded gen=1 centroids applied to

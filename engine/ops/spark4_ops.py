@@ -17,7 +17,7 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inspectio
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..registry import register, table
+from ..registry import fan_out, register, table
 
 
 @register(
@@ -49,13 +49,10 @@ def udtf_order_chunks(spark, sf_dir):
     spark.udtf.register("order_chunks", OrderChunks)
     # fan the single-split orders scan so the row-at-a-time Python
     # eval actually runs row-PARALLEL as documented — unspread it was
-    # one 1.9 s task (guide §2.5; see registry.fan_out)
-    (
-        table(spark, sf_dir, "orders")
-        .select("o_orderkey")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .createOrReplaceTempView("v_orders_udtf")
-    )
+    # one 1.9 s task
+    fan_out(
+        table(spark, sf_dir, "orders").select("o_orderkey")
+    ).createOrReplaceTempView("v_orders_udtf")
     return spark.sql(
         """
         SELECT c.o_orderkey, c.chunk_idx, c.chunk_salt

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..dsl import dsum
 from ..registry import register, table
+from ..stream import publish_marker, run_available_now
 
 SQL_VSUM = "sum(CAST(round(value*10000) AS BIGINT))/10000.0"
 
@@ -425,18 +426,13 @@ def stream_dedup_within_watermark(spark, sf_dir):
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
+    run_available_now(
         stream.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_dedup_within_watermark",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_dedup_within_watermark: availableNow query exceeded 300s"
-        )
     return spark.read.parquet(sink).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -468,19 +464,14 @@ def stream_state_store_read(spark, sf_dir):
 
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(src)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    q = (
+    run_available_now(
         agg.writeStream.format("memory")
         .queryName("engine_state_store_read")
         .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_state_store_read",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_state_store_read: availableNow query exceeded 300s"
-        )
     return (
         spark.read.format("statestore")
         .load(ckpt)
@@ -531,19 +522,14 @@ def stream_rocksdb_state(spark, sf_dir):
     ):
         stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(src)
         agg = stateful_counts(stream)
-        q = (
+        run_available_now(
             agg.writeStream.format("memory")
             .queryName("engine_rocksdb_state")
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "stream_rocksdb_state",
+            300,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_rocksdb_state: availableNow query exceeded 300s"
-            )
         # memory sink is session-lived; copy out so the conf restore
         # can't race a lazy re-read
         return spark.table("engine_rocksdb_state").localCheckpoint(eager=True)
@@ -584,17 +570,12 @@ def stream_progress_metrics(spark, sf_dir):
         spark, **{"spark.sql.streaming.numRecentProgressUpdates": "100000"}
     ):
         stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(src)
-        q = (
+        q = run_available_now(
             stream.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "stream_progress_metrics",
+            300,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_progress_metrics: availableNow query exceeded 300s"
-            )
         total = sum(p["numInputRows"] for p in q.recentProgress)
     return spark.createDataFrame([(total,)], "total_input_rows long")
 
@@ -952,19 +933,14 @@ def stream_chained_stateful_e2e(spark, sf_dir):
             .dropDuplicatesWithinWatermark(["event_id"])
         )
         result = enrich_window_agg(stream, table(spark, sf_dir, "customer"))
-        q = (
+        run_available_now(
             result.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "stream_chained_stateful_e2e",
+            300,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_chained_stateful_e2e: availableNow query exceeded 300s"
-            )
     return spark.read.parquet(sink).select(
         F.col("ws").cast("timestamp_ntz").alias("ws"),
         "c_mktsegment",
@@ -1080,19 +1056,14 @@ def stream_join_window_e2e(spark, sf_dir):
     # the two stateful operators at rig scale
     with scoped_confs(spark, **{"spark.sql.shuffle.partitions": "8"}):
         result = join_window_agg(side("click"), side("purchase"))
-        q = (
+        run_available_now(
             result.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "stream_join_window_e2e",
+            300,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_join_window_e2e: availableNow query exceeded 300s"
-            )
     return spark.read.parquet(sink).select(
         F.col("ws").cast("timestamp_ntz").alias("ws"),
         "n_conversions",
@@ -1211,25 +1182,19 @@ def _generation_snapshot_rig(spark, sf_dir, opname, snap_schema, make_changes):
         )
         gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
         merged.write.mode("overwrite").parquet(gen_dir)
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(gen_dir)
-        os.replace(tmp, ptr)  # atomic pointer advance
+        publish_marker(ptr, gen_dir)  # atomic pointer advance
 
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = (
+    run_available_now(
         stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        opname,
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(f"{opname}: availableNow query exceeded 300s")
     return ptr, snaps
 
 
@@ -1440,10 +1405,7 @@ def stream_foreachbatch_incremental_mv(spark, sf_dir):
         )
         gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
         merged.write.mode("overwrite").parquet(gen_dir)
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(gen_dir)
-        os.replace(tmp, ptr)
+        publish_marker(ptr, gen_dir)
         with open(marker, "w") as f:
             f.write("applied")
 
@@ -1452,18 +1414,12 @@ def stream_foreachbatch_incremental_mv(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = (
+    run_available_now(
         stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_foreachbatch_incremental_mv",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_foreachbatch_incremental_mv: availableNow query "
-            "exceeded 300s"
-        )
     with open(ptr) as f:
         return spark.read.schema(MV_STATE_SCHEMA).parquet(f.read().strip())
 
@@ -1559,20 +1515,15 @@ def stream_dead_letter_split(spark, sf_dir):
         ok.write.mode("append").parquet(main_dir)
         dlq.write.mode("append").parquet(dlq_dir)
 
-    q = (
+    run_available_now(
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", "1")
         .load(src)
         .writeStream.foreachBatch(route)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_dead_letter_split",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_dead_letter_split: availableNow query exceeded 300s"
-        )
     main = spark.read.schema(schema).parquet(main_dir)
     dlq = spark.read.schema(schema).parquet(dlq_dir)
     return main.unionByName(dlq)
@@ -1677,27 +1628,19 @@ def stream_kmv_distinct(spark, sf_dir):
         )
         gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
         trimmed.write.mode("overwrite").parquet(gen_dir)
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(gen_dir)
-        os.replace(tmp, ptr)
+        publish_marker(ptr, gen_dir)
 
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = (
+    run_available_now(
         stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_kmv_distinct",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_kmv_distinct: availableNow query exceeded 300s"
-        )
     with open(ptr) as f:
         state = spark.read.schema(KMV_STATE_SCHEMA).parquet(f.read().strip())
     kth = state.groupBy("scope").agg(

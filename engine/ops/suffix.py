@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import register, shared_artifact, table
+from ..stream import fail_point, publish_marker, read_marker, run_increments
 
 SPAN_K = 8  # span length in tokens — the "memorized boilerplate" unit
 
@@ -1004,8 +1005,6 @@ def dedup_sa_takedown(spark, sf_dir):
     of corpus text size (the artifact is (rank, doc, pos) + bounded
     anchors), and post-delete span serving costs what pre-delete
     serving cost."""
-    import os
-
     from ..registry import scratch_dir
     from .dedup import N_INC_BATCHES
     from .dedup_stream import (
@@ -1029,10 +1028,7 @@ def dedup_sa_takedown(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(f"{base}/tombstones")
     )
-    tmp = f"{base}/takedown_applied.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(TD_AFTER))
-    os.replace(tmp, f"{base}/takedown_applied")
+    publish_marker(f"{base}/takedown_applied", TD_AFTER)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
     if tomb.limit(1).count() == 0:
@@ -1279,10 +1275,7 @@ def _compact_span_index(spark, base, upto):
         raise AssertionError(
             f"span-index compaction did not shrink: {n_before} -> {n_after}"
         )
-    tmp = f"{base}/compacted_upto.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto))
-    os.replace(tmp, f"{base}/compacted_upto")
+    publish_marker(f"{base}/compacted_upto", upto)
 
 
 def run_spancov_stream(
@@ -1303,7 +1296,7 @@ def run_spancov_stream(
     import os
 
     from .dedup import N_INC_BATCHES
-    from .dedup_stream import _feed_key, _read_marker, _stage_feed
+    from .dedup_stream import _feed_key, _stage_feed
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
@@ -1316,7 +1309,7 @@ def run_spancov_stream(
     )
 
     def read_spans(spark_, b):
-        m = _read_marker(f"{base}/compacted_upto")
+        m = read_marker(f"{base}/compacted_upto")
         if (
             m is not None
             and m < b
@@ -1343,11 +1336,7 @@ def run_spancov_stream(
             out = out.unionByName(fr)
         return out.distinct()
 
-    def process(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("doc_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = mn * N_INC_BATCHES // (mx + 1)
+    def process(batch_df, b):
         docs = (
             batch_df.select("doc_id", F.split("text", " ").alias("a"))
             .withColumn("n_tokens", F.size("a"))
@@ -1356,31 +1345,18 @@ def run_spancov_stream(
         out = _span_cov_process_batch(
             spark, docs, base, b, read_spans=read_spans
         )
-        if fail_at_batch is not None and b == fail_at_batch:
-            raise RuntimeError(
-                f"injected failure: increment {b} after anchor write,"
-                " before sink write"
-            )
+        fail_point(fail_at_batch, "pre_sink", b, "pre_sink")
         out.drop("batch_id").coalesce(1).write.mode("overwrite").parquet(
             f"{sink}/batch_id={b}"
         )
         if compact_after is not None and b == compact_after:
             _compact_span_index(spark, base, b)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_increments(
+        spark, src, "doc_id bigint, text string", ckpt, "doc_id",
+        lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
+        "stream_dedup_spancov_e2e", 600,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "stream_dedup_spancov_e2e: availableNow query exceeded 600s"
-        )
     paths = [
         f"{sink}/batch_id={b}"
         for b in range(N_INC_BATCHES)

@@ -3329,6 +3329,7 @@ def stream_corpus_router_e2e(spark, sf_dir):
     import os
 
     from ..registry import scratch_dir
+    from ..stream import run_increments
     from .dedup import N_INC_BATCHES
     from .dedup_stream import _stage_feed
 
@@ -3344,11 +3345,7 @@ def stream_corpus_router_e2e(spark, sf_dir):
         [(b, batch_of == b) for b in range(N_INC_BATCHES)],
     )
 
-    def route_batch(batch_df, epoch_id):
-        mn = batch_df.agg(F.min("doc_id")).collect()[0][0]
-        if mn is None:
-            return  # one action derives emptiness AND the batch id
-        b = mn * N_INC_BATCHES // (mx + 1)
+    def route_batch(batch_df, b):
         w = (
             _dsir_features(batch_df)
             .join(F.broadcast(lr0), "bucket")
@@ -3384,22 +3381,11 @@ def stream_corpus_router_e2e(spark, sf_dir):
     # try/finally: a failed stream must not leak the persisted model
     # cache for the session (the ADVICE-r7 leak class)
     try:
-        q = (
-            spark.readStream.schema(
-                "doc_id bigint, lang string, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(route_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_increments(
+            spark, src, "doc_id bigint, lang string, text string", ckpt,
+            "doc_id", lambda mn: mn * N_INC_BATCHES // (mx + 1),
+            route_batch, "stream_corpus_router_e2e", 600,
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "stream_corpus_router_e2e: availableNow query exceeded 600s"
-            )
     finally:
         lr0.unpersist()
     paths = [

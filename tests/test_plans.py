@@ -739,7 +739,7 @@ def test_index_compaction_shrinks_files_and_is_bucket_shaped(spark):
     size-derived fan per write → COMPACT_FILES files) for BOTH index
     table families; equivalence of probe answers is enforced inside
     the op itself (it raises on any diverging row). The pre-compaction
-    fan is scale-adaptive since _batch_fan (r12), so we pin the shape
+    fan is scale-adaptive (stream.batch_fan), so we pin the shape
     (strictly more sliver files than compacted, at least one sliver
     per generation) rather than a hard-coded shrink ratio."""
     import os

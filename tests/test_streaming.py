@@ -1406,11 +1406,9 @@ def test_stream_compact_boundary_restart(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from engine.ops.dedup import N_INC_BATCHES
-    from engine.ops.dedup_stream import (
-        _read_compact_marker,
-        run_inc_lsh_stream,
-    )
+    from engine.ops.dedup_stream import run_inc_lsh_stream
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "inc_lsh_compact")
     boundary = N_INC_BATCHES - 2
@@ -1424,7 +1422,7 @@ def test_stream_compact_boundary_restart(spark, tmp_path):
     # torn state: boundary increment's sink + compaction marker both
     # already published, but the checkpoint never committed the batch
     idx = f"{base}/index"
-    assert _read_compact_marker(idx) == boundary
+    assert read_marker(f"{idx}/compacted_upto") == boundary
     assert os.path.exists(f"{idx}/bands_c")
     assert os.path.exists(f"{base}/sink/batch_id={boundary}")
 
@@ -1480,9 +1478,9 @@ def test_sim_index_stream_boundary_restart(spark, tmp_path):
     the batch append op."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_compact_marker
     from engine.ops.similarity import N_SIM_BATCHES, run_sim_index_stream
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "sim_idx")
     boundary = N_SIM_BATCHES - 2
@@ -1496,7 +1494,7 @@ def test_sim_index_stream_boundary_restart(spark, tmp_path):
     # torn state: boundary generation + compaction marker on disk,
     # checkpoint never committed the batch
     idx = f"{base}/index"
-    assert _read_compact_marker(idx) == boundary
+    assert read_marker(f"{idx}/compacted_upto") == boundary
     assert os.path.exists(f"{idx}/lists_c")
     assert os.path.exists(f"{idx}/lists/gen={boundary}")
 
@@ -1549,11 +1547,9 @@ def test_sim_recluster_boundary_restart(spark, tmp_path):
     against DuckDB)."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.similarity import (
-        _read_gen_marker,
-        run_sim_recluster_stream,
-    )
+    from engine.ops.similarity import run_sim_recluster_stream
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "sim_recluster")
 
@@ -1566,7 +1562,7 @@ def test_sim_recluster_boundary_restart(spark, tmp_path):
     # torn state: gen=1 codebook + marker published, batch 2 never
     # committed to the checkpoint
     idx = f"{base}/index"
-    assert _read_gen_marker(f"{idx}/reclustered_upto") == 2
+    assert read_marker(f"{idx}/reclustered_upto") == 2
     assert os.path.exists(f"{idx}/centroids/gen=1")
 
     log = []
@@ -1656,11 +1652,9 @@ def test_capped_compact_boundary_restart(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from engine.ops.dedup import LSH_BUCKET_CAP, N_INC_BATCHES
-    from engine.ops.dedup_stream import (
-        _read_compact_marker,
-        run_inc_lsh_stream,
-    )
+    from engine.ops.dedup_stream import run_inc_lsh_stream
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "capped_compact")
     boundary = N_INC_BATCHES - 2
@@ -1673,7 +1667,7 @@ def test_capped_compact_boundary_restart(spark, tmp_path):
             fail_phase="post_compact",
         )
 
-    assert _read_compact_marker(idx) == boundary
+    assert read_marker(f"{idx}/compacted_upto") == boundary
     assert os.path.exists(f"{idx}/counts_c")
 
     clog = []
@@ -1791,10 +1785,10 @@ def test_takedown_boundary_restart(spark, tmp_path):
         TD_AFTER,
         TD_MOD,
         TD_RES,
-        _read_marker,
         run_inc_lsh_stream,
     )
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "takedown")
     idx = f"{base}/index"
@@ -1807,7 +1801,7 @@ def test_takedown_boundary_restart(spark, tmp_path):
 
     # torn state: marker + purged twins + purged sink all published,
     # checkpoint commit missing
-    assert _read_marker(f"{idx}/takedown_upto") == TD_AFTER
+    assert read_marker(f"{idx}/takedown_upto") == TD_AFTER
     assert os.path.exists(f"{idx}/bands_p/gen=0")
     assert os.path.exists(f"{idx}/tombstones")
     assert os.path.exists(f"{idx}/bands/gen={TD_AFTER}")  # originals kept
@@ -1970,7 +1964,6 @@ def test_sim_takedown_boundary_restart(spark, tmp_path):
     generations) is byte-equal to the uninterrupted delete pipeline."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.similarity import (
         N_SIM_BATCHES,
         VEC_TD_MOD,
@@ -1978,6 +1971,7 @@ def test_sim_takedown_boundary_restart(spark, tmp_path):
         run_sim_index_stream,
     )
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "sim_takedown")
     boundary = N_SIM_BATCHES - 2
@@ -1991,7 +1985,7 @@ def test_sim_takedown_boundary_restart(spark, tmp_path):
 
     # torn state: marker + purged twins + tombstones published,
     # originals retained, checkpoint commit missing
-    assert _read_marker(f"{idx}/takedown_upto") == boundary
+    assert read_marker(f"{idx}/takedown_upto") == boundary
     assert os.path.exists(f"{idx}/lists_p/gen=0")
     assert os.path.exists(f"{idx}/tombstones")
     assert os.path.exists(f"{idx}/lists/gen={boundary}")
@@ -2131,9 +2125,10 @@ def test_corpus_prep_takedown_restart(spark, tmp_path):
     output equals the uninterrupted delete composite."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import TD_AFTER, TD_MOD, TD_RES, _read_marker
+    from engine.ops.dedup_stream import TD_AFTER, TD_MOD, TD_RES
     from engine.ops.corpus_stream import run_corpus_prep_stream
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "prep_takedown")
     idx = f"{base}/index"
@@ -2144,7 +2139,7 @@ def test_corpus_prep_takedown_restart(spark, tmp_path):
             fail_at_batch=TD_AFTER, fail_phase="post_takedown",
         )
 
-    assert _read_marker(f"{idx}/takedown_upto") == TD_AFTER
+    assert read_marker(f"{idx}/takedown_upto") == TD_AFTER
     assert os.path.exists(f"{idx}/bands_p/gen=0")
     assert os.path.exists(f"{idx}/tombstones")
     assert os.path.exists(f"{idx}/bands/gen={TD_AFTER}")  # originals kept
@@ -2506,10 +2501,10 @@ def test_capped_takedown_boundary_restart(spark, tmp_path):
     from engine.ops.dedup import LSH_BUCKET_CAP
     from engine.ops.dedup_stream import (
         TD_AFTER,
-        _read_marker,
         run_inc_lsh_stream,
     )
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "capdel")
     idx = f"{base}/index"
@@ -2520,7 +2515,7 @@ def test_capped_takedown_boundary_restart(spark, tmp_path):
             delete_after=TD_AFTER,
             fail_at_batch=TD_AFTER, fail_phase="post_takedown",
         )
-    assert _read_marker(f"{idx}/takedown_upto") == TD_AFTER
+    assert read_marker(f"{idx}/takedown_upto") == TD_AFTER
     assert os.path.exists(f"{idx}/counts_p/gen=0")
 
     clog = []
@@ -2816,10 +2811,10 @@ def test_ivfpq_stream_boundary_restart(spark, tmp_path):
     answers must be byte-equal to the batch append lifecycle op."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.pq import run_ivfpq_stream
     from engine.ops.similarity import N_SIM_BATCHES
     from engine.registry import QUERIES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "ivfpq_stream")
     boundary = N_SIM_BATCHES - 2
@@ -2833,7 +2828,7 @@ def test_ivfpq_stream_boundary_restart(spark, tmp_path):
 
     # torn state: boundary generation + compaction marker + both
     # models on disk, checkpoint never committed the batch
-    assert _read_marker(f"{idx}/compacted_upto") == boundary
+    assert read_marker(f"{idx}/compacted_upto") == boundary
     assert os.path.exists(f"{idx}/codes_c")
     assert os.path.exists(f"{idx}/codes/gen={boundary}")
     books_before = {
@@ -2894,8 +2889,8 @@ def test_pq_recode_stream_boundary_restart(spark, tmp_path):
     uninterrupted run's. The monitor must not re-fire on replay."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.pq import run_pq_recode_stream
+    from engine.stream import read_marker
 
     base = str(tmp_path / "pqrecode")
     idx = f"{base}/index"
@@ -2906,7 +2901,7 @@ def test_pq_recode_stream_boundary_restart(spark, tmp_path):
             spark, SMOKE_SF_DIR, base, fail_at_batch=1, monitor_log=log1
         )
     assert [b for (b, _r, _bl, f) in log1 if f] == [1]
-    assert _read_marker(f"{idx}/cb1_ready") is not None
+    assert read_marker(f"{idx}/cb1_ready") is not None
     assert os.path.exists(f"{idx}/codes/gen=1")
     books1_before = {
         (r["j"], r["k"], r["pos"]): r["c_u"]
@@ -2948,8 +2943,8 @@ def test_pq_recode_delete_boundary_restart(spark, tmp_path):
     composed run's."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.pq import run_pq_recode_stream
+    from engine.stream import read_marker
 
     base = str(tmp_path / "pqrecdel")
     idx = f"{base}/index"
@@ -2959,7 +2954,7 @@ def test_pq_recode_delete_boundary_restart(spark, tmp_path):
             spark, SMOKE_SF_DIR, base, delete_after=2,
             fail_at_batch=2, fail_phase="post_takedown",
         )
-    assert _read_marker(f"{idx}/takedown_upto") == 2
+    assert read_marker(f"{idx}/takedown_upto") == 2
     twin_counts = {
         g: spark.read.parquet(f"{idx}/codes_p/gen={g}").count()
         for g in range(3)
@@ -3006,10 +3001,10 @@ def test_ivfpq_takedown_boundary_restart(spark, tmp_path):
     — must be byte-equal to an uninterrupted delete run's."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.pq import run_ivfpq_stream
     from engine.ops.similarity import N_SIM_BATCHES
     from engine.registry import QUERIES  # noqa: F401  (parity import)
+    from engine.stream import read_marker
 
     base = str(tmp_path / "ivfpq_del")
     boundary = N_SIM_BATCHES - 2
@@ -3020,7 +3015,7 @@ def test_ivfpq_takedown_boundary_restart(spark, tmp_path):
             spark, SMOKE_SF_DIR, base, delete_after=boundary,
             fail_at_batch=boundary, fail_phase="post_takedown",
         )
-    assert _read_marker(f"{idx}/takedown_upto") == boundary
+    assert read_marker(f"{idx}/takedown_upto") == boundary
     for g in range(boundary + 1):
         assert os.path.exists(f"{idx}/codes_p/gen={g}")
     twin_counts = {
@@ -3069,8 +3064,8 @@ def test_ivfpq_recluster_stream_boundary_restart(spark, tmp_path):
     recluster run's."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.pq import run_ivfpq_stream
+    from engine.stream import read_marker
 
     base = str(tmp_path / "ivfpq_rec")
     idx = f"{base}/index"
@@ -3082,7 +3077,7 @@ def test_ivfpq_recluster_stream_boundary_restart(spark, tmp_path):
         )
     # torn state: refined model + moved twin + marker + own codes on
     # disk, checkpoint never committed the boundary batch
-    assert _read_marker(f"{idx}/reclustered_upto") == 0
+    assert read_marker(f"{idx}/reclustered_upto") == 0
     assert os.path.exists(f"{idx}/codes_r/gen=0")
     assert os.path.exists(f"{idx}/codes/gen=1")
     def cent_set(path):
@@ -3132,9 +3127,9 @@ def test_ivfpq_compact_delete_boundary_restart(spark, tmp_path):
     uninterrupted composed run's."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.dedup_stream import _read_marker
     from engine.ops.pq import run_ivfpq_stream
     from engine.ops.similarity import N_SIM_BATCHES
+    from engine.stream import read_marker
 
     base = str(tmp_path / "ivfpq_cd")
     idx = f"{base}/index"
@@ -3147,8 +3142,8 @@ def test_ivfpq_compact_delete_boundary_restart(spark, tmp_path):
             compact_after=boundary_c, delete_after=boundary_d,
             fail_at_batch=boundary_d, fail_phase="post_takedown",
         )
-    assert _read_marker(f"{idx}/compacted_upto") == boundary_c
-    assert _read_marker(f"{idx}/takedown_upto") == boundary_d
+    assert read_marker(f"{idx}/compacted_upto") == boundary_c
+    assert read_marker(f"{idx}/takedown_upto") == boundary_d
     assert os.path.exists(f"{idx}/codes_c_p")
     assert os.path.exists(f"{idx}/codes_p/gen={boundary_d}")
     twin_counts = (
