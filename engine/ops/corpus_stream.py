@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..generations import audit_no_tombstoned, gc_generations, gen_paths
 from ..registry import register, table
 from ..stream import batch_fan, fail_point, run_increments
 from .textops import (
@@ -193,7 +194,7 @@ def stream_corpus_prep_lifecycle_e2e(spark, sf_dir):
     counts artifact and deduped against bands_c — never a
     compacted-away generation. Everything here is the discipline the
     dedicated dedup stream proved (`_compact_index_generations`,
-    `_marker_gated_reader`, `_gc_index_generations`), composed into
+    the strictly-past `gen_paths` read, `gc_generations`), composed into
     the intake rig — one mechanism, every pipeline.
 
     Scale: the composite's per-increment cost is unchanged until the
@@ -204,7 +205,6 @@ def stream_corpus_prep_lifecycle_e2e(spark, sf_dir):
 
     from ..registry import scratch_dir
     from .dedup import LSH_BUCKET_CAP, N_INC_BATCHES
-    from .dedup_stream import _gc_index_generations
 
     base = scratch_dir("stream_corpus_prep_lifecycle_e2e")
     boundary = N_INC_BATCHES - 2
@@ -238,7 +238,7 @@ def stream_corpus_prep_lifecycle_e2e(spark, sf_dir):
                 " index"
             )
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_index_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     if len(removed) != 3 * (boundary + 1):
         raise AssertionError(
             f"GC removed {removed}, expected bands+shingles+counts for"
@@ -305,14 +305,8 @@ def stream_corpus_prep_delete_e2e(spark, sf_dir):
     Scale shape: identical to the dedup stream's delete — filter-
     rewrites riding partition-pruned scans, driver-side GC, one
     broadcast-tombstone audit scan; intake throughput unchanged."""
-    import os
-
     from ..registry import scratch_dir
-    from .dedup import N_INC_BATCHES
-    from .dedup_stream import (
-        TD_AFTER,
-        _gc_generations,
-    )
+    from .dedup_stream import TD_AFTER, _index_roots, _purge_feed
 
     base = scratch_dir("stream_corpus_prep_delete_e2e")
     rlog = []
@@ -322,23 +316,14 @@ def stream_corpus_prep_delete_e2e(spark, sf_dir):
     post = [(b, p) for (b, p) in rlog if b > TD_AFTER]
     if not post:
         raise AssertionError("no post-takedown increment was processed")
+    idx, ckpt = f"{base}/index", f"{base}/ckpt"
     for b, paths in post:
-        covered = [p for p in paths if "/bands_p/gen=" in p]
-        stale = [
-            p
-            for p in paths
-            if "/bands/gen=" in p
-            and int(p.rsplit("=", 1)[1]) <= TD_AFTER
-        ]
-        if len(covered) != TD_AFTER + 1 or stale:
+        if paths != gen_paths(f"{idx}/bands", b, purged=TD_AFTER):
             raise AssertionError(
                 f"increment {b} served {paths}; expected purged twins"
                 " for the covered prefix only"
             )
-    idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_generations(
-        ckpt, idx, ("bands", "shingles"), marker_name="takedown_upto"
-    )
+    removed = gc_generations(ckpt, idx)
     if len(removed) != 2 * (TD_AFTER + 1):
         raise AssertionError(
             f"takedown GC removed {removed}, expected bands+shingles"
@@ -348,19 +333,11 @@ def stream_corpus_prep_delete_e2e(spark, sf_dir):
     # arrival copy in the staged feed (`_purge_feed`, safe here
     # because the GC just proved the covered batches can never
     # replay) — holds a tombstoned id
-    from .dedup_stream import (
-        _audit_no_tombstoned,
-        _audit_roots_no_tombstoned,
-        _purge_feed,
-    )
-
     _purge_feed(spark, base, f"{base}/src", TD_AFTER, ckpt=ckpt)
-    _audit_no_tombstoned(
-        spark, idx, ("bands", "shingles", "bands_p", "shingles_p")
-    )
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
-        spark, tomb, (f"{base}/src", f"{base}/sink", f"{base}/stage")
+    audit_no_tombstoned(
+        spark,
+        spark.read.parquet(f"{idx}/tombstones"),
+        _index_roots(idx) + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
     )
     return run_corpus_prep_stream(
         spark, sf_dir, base, delete_after=TD_AFTER
@@ -424,7 +401,6 @@ def run_corpus_prep_stream(
         _compact_index_generations,
         _feed_key,
         _inc_lsh_dedupe_batch,
-        _marker_gated_reader,
         _purge_sink,
         _stage_feed,
     )
@@ -488,15 +464,7 @@ def run_corpus_prep_stream(
                 dups = _inc_lsh_dedupe_batch(
                     spark, doc_sh, _lsh_band_rows(doc_sh), idx, b,
                     materialize=False, bucket_cap=bucket_cap,
-                    read_index=_marker_gated_reader(
-                        idx,
-                        read_paths_log,
-                        mode="delete"
-                        if delete_after is not None
-                        else "compact",
-                    )
-                    if (compact_after is not None or delete_after is not None)
-                    else None,
+                    read_paths_log=read_paths_log,
                     counts_paths_log=counts_paths_log,
                 ).select(
                     "doc_id",
@@ -621,17 +589,9 @@ def stream_corpus_prep_capped_delete_e2e(spark, sf_dir):
     pipeline's; the takedown adds the per-generation filter-rewrites
     and one counts re-aggregate per covered generation — all riding
     partition-pruned scans."""
-    import os
-
     from ..registry import scratch_dir
-    from .dedup import LSH_BUCKET_CAP, N_INC_BATCHES
-    from .dedup_stream import (
-        TD_AFTER,
-        _audit_no_tombstoned,
-        _audit_roots_no_tombstoned,
-        _gc_generations,
-        _purge_feed,
-    )
+    from .dedup import LSH_BUCKET_CAP
+    from .dedup_stream import TD_AFTER, _index_roots, _purge_feed
 
     base = scratch_dir("stream_corpus_prep_capped_delete_e2e")
     clog, rlog = [], []
@@ -644,43 +604,30 @@ def stream_corpus_prep_capped_delete_e2e(spark, sf_dir):
     post_r = [(b, p) for (b, p) in rlog if b > TD_AFTER]
     if not post_c or not post_r:
         raise AssertionError("no post-takedown increment was processed")
+    idx, ckpt = f"{base}/index", f"{base}/ckpt"
     for b, paths in post_c:
-        covered = [p for p in paths if "/counts_p/gen=" in p]
-        stale = [
-            p
-            for p in paths
-            if "/counts/gen=" in p
-            and int(p.rsplit("=", 1)[1]) <= TD_AFTER
-        ]
-        if len(covered) != TD_AFTER + 1 or stale:
+        if paths != gen_paths(f"{idx}/counts", b + 1, purged=TD_AFTER):
             raise AssertionError(
                 f"increment {b} sized buckets from {paths}; expected"
                 " purged counts twins for the covered prefix only"
             )
     for b, paths in post_r:
-        covered = [p for p in paths if "/bands_p/gen=" in p]
-        if len(covered) != TD_AFTER + 1:
+        if paths != gen_paths(f"{idx}/bands", b, purged=TD_AFTER):
             raise AssertionError(
                 f"increment {b} deduped against {paths}; expected"
                 " purged band twins for the covered prefix"
             )
-    idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_generations(
-        ckpt, idx, ("bands", "shingles", "counts"),
-        marker_name="takedown_upto",
-    )
+    removed = gc_generations(ckpt, idx)
     if len(removed) != 3 * (TD_AFTER + 1):
         raise AssertionError(
             f"takedown GC removed {removed}, expected"
             " bands+shingles+counts originals"
         )
     _purge_feed(spark, base, f"{base}/src", TD_AFTER, ckpt=ckpt)
-    _audit_no_tombstoned(
-        spark, idx, ("bands", "shingles", "bands_p", "shingles_p")
-    )
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
-        spark, tomb, (f"{base}/src", f"{base}/sink", f"{base}/stage")
+    audit_no_tombstoned(
+        spark,
+        spark.read.parquet(f"{idx}/tombstones"),
+        _index_roots(idx) + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
     )
     return run_corpus_prep_stream(
         spark, sf_dir, base, bucket_cap=LSH_BUCKET_CAP,

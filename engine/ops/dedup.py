@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..generations import fold, gen_paths
 from ..registry import register, table
 
 JACCARD_THRESHOLD = 0.2
@@ -2699,8 +2700,6 @@ def dedup_index_compact(spark, sf_dir):
     itself at jaccard 1.0), which is exactly what "the index already
     contains the corpus" means. Equivalence pre/post compaction is
     enforced in-op, so the single value hash covers both paths."""
-    import os
-
     from ..registry import scratch_dir
     from .dedup_stream import _inc_lsh_prepare
 
@@ -2719,8 +2718,6 @@ def dedup_index_compact(spark, sf_dir):
 
 
 def _index_compact_body(spark, base, mx, doc_sh_all, bands_all):
-    import os
-
     for b in range(N_INC_BATCHES):
         sel = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}") == b
         bands_all.filter(sel).write.mode("overwrite").parquet(
@@ -2729,39 +2726,24 @@ def _index_compact_body(spark, base, mx, doc_sh_all, bands_all):
         doc_sh_all.filter(sel).select("doc_id", "sh").write.mode(
             "overwrite"
         ).parquet(f"{base}/shingles/gen={b}")
-    gens_b = [f"{base}/bands/gen={g}" for g in range(N_INC_BATCHES)]
-    gens_s = [f"{base}/shingles/gen={g}" for g in range(N_INC_BATCHES)]
+    gens_b = gen_paths(f"{base}/bands", N_INC_BATCHES)
+    gens_s = gen_paths(f"{base}/shingles", N_INC_BATCHES)
 
-    def count_files(paths):
-        return sum(
-            1
-            for p in paths
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
+    def write():
+        for fam, gens, key in (
+            ("bands", gens_b, ("band", "band_key")),
+            ("shingles", gens_s, ("doc_id",)),
+        ):
+            (
+                spark.read.option("basePath", f"{base}/{fam}")
+                .parquet(*gens)
+                .drop("gen")
+                .repartition(COMPACT_FILES, *key)
+                .write.mode("overwrite")
+                .parquet(f"{base}/{fam}_c")
+            )
 
-    n_before = count_files(gens_b)
-    (
-        spark.read.option("basePath", f"{base}/bands")
-        .parquet(*gens_b)
-        .drop("gen")
-        .repartition(COMPACT_FILES, "band", "band_key")
-        .write.mode("overwrite")
-        .parquet(f"{base}/bands_c")
-    )
-    (
-        spark.read.option("basePath", f"{base}/shingles")
-        .parquet(*gens_s)
-        .drop("gen")
-        .repartition(COMPACT_FILES, "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{base}/shingles_c")
-    )
-    n_after = count_files([f"{base}/bands_c"])
-    if n_after >= n_before:
-        raise AssertionError(
-            f"compaction did not shrink the index: {n_before} -> {n_after}"
-        )
+    fold(f"{base}/bands", N_INC_BATCHES - 1, write)
 
     sel = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}") == (
         N_INC_BATCHES - 1

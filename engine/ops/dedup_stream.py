@@ -15,14 +15,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register, shared_artifact, table
-from ..stream import (
-    batch_fan,
-    ensure_gen_dirs,
-    fail_point,
-    publish_marker,
-    read_marker,
-    run_increments,
+from ..generations import (
+    audit_no_tombstoned,
+    committed_src_batches,
+    fold,
+    gc_generations,
+    gen_paths,
+    marker,
+    markers,
+    purge,
+    write_twins,
 )
+from ..stream import batch_fan, fail_point, publish_marker, run_increments
 from .dedup import (
     COMPACT_FILES,
     JACCARD_THRESHOLD,
@@ -213,7 +217,7 @@ def _inc_lsh_process_batch(
 
 def _inc_lsh_dedupe_batch(
     spark, doc_sh, bands, base, b, materialize=True, bucket_cap=None,
-    read_index=None, counts_paths_log=None,
+    read_paths_log=None, counts_paths_log=None,
 ):
     """Process ONE ingest increment against the accumulated LSH index.
 
@@ -246,10 +250,11 @@ def _inc_lsh_dedupe_batch(
     fan-out a boilerplate megabucket would cause (C(1M,2) pairs)
     never materializes.
 
-    ``read_index``: optional ``(spark, b) -> (idx_bands, idx_sh)``
-    override for how generations 0..b-1 are loaded — the mid-stream
-    compaction rig serves reads from the compacted layout through
-    this hook; default reads the per-generation directories."""
+    Generations 0..b-1 are read under the strictly-past markers
+    (`generations.markers`): past a mid-stream compaction from the
+    compacted layout, past a takedown from the purged twins.
+    ``read_paths_log`` / ``counts_paths_log`` record the band and
+    counts paths each batch read."""
     # append this increment to the index first, then READ IT BACK:
     # every downstream consumer (counts aggregate, cap semi-join,
     # within-batch pair emission, index cross-join) reads the
@@ -261,47 +266,19 @@ def _inc_lsh_dedupe_batch(
         f"{base}/shingles/gen={b}"
     )
     bands = spark.read.parquet(f"{base}/bands/gen={b}")
+    m = markers(base, b)
     if bucket_cap is not None:
-        import os
-
         bands.groupBy("band", "band_key").agg(
             F.count(F.lit(1)).alias("n_new")
         ).write.mode("overwrite").parquet(f"{base}/counts/gen={b}")
         # arrival-prefix cumulative size from the PERSISTED counts
         # (gens 0..b): total ≤ cap ⟺ prior + this increment ≤ cap;
         # keys absent from this batch are harmless in the semi-join.
-        # Marker-aware (round-8 verdict item 3): once a compaction has
-        # folded gens 0..m into ONE cumulative counts_c table, batches
-        # strictly past the boundary read that single artifact plus
-        # only the newer generations — O(1) dirs instead of O(b) per
-        # micro-batch (O(b²) cumulative over a long-running stream).
-        # A replayed boundary batch (m == b) stays on the per-gen view,
-        # the same strictly-past rule the band reader enforces.
-        # Takedown-marker gating mirrors the band reader's delete
-        # mode: batches strictly past a published takedown size their
-        # buckets from the PURGED counts twins for the covered prefix
-        # (deleted members no longer count toward caps) plus the
-        # untouched newer generations.
-        m_td = read_marker(f"{base}/takedown_upto")
-        m = read_marker(f"{base}/compacted_upto")
-        if (
-            m_td is not None
-            and m_td < b
-            and os.path.exists(f"{base}/counts_p/gen=0")
-        ):
-            cpaths = [
-                f"{base}/counts_p/gen={g}" for g in range(m_td + 1)
-            ] + [f"{base}/counts/gen={g}" for g in range(m_td + 1, b + 1)]
-        elif (
-            m is not None
-            and m < b
-            and os.path.exists(f"{base}/counts_c")
-        ):
-            cpaths = [f"{base}/counts_c"] + [
-                f"{base}/counts/gen={g}" for g in range(m + 1, b + 1)
-            ]
-        else:
-            cpaths = [f"{base}/counts/gen={g}" for g in range(b + 1)]
+        # Strictly past a compaction the ONE cumulative counts_c
+        # serves the folded prefix (O(1) dirs per micro-batch, not
+        # O(b)); strictly past a takedown the purged counts twins do,
+        # so deleted members no longer count toward caps.
+        cpaths = gen_paths(f"{base}/counts", b + 1, **m)
         if counts_paths_log is not None:
             counts_paths_log.append((b, list(cpaths)))
         allowed = (
@@ -318,15 +295,11 @@ def _inc_lsh_dedupe_batch(
         )
     )
     if b > 0:
-        if read_index is not None:
-            idx_bands, idx_sh = read_index(spark, b)
-        else:
-            idx_bands = spark.read.parquet(
-                *[f"{base}/bands/gen={g}" for g in range(b)]
-            )
-            idx_sh = spark.read.parquet(
-                *[f"{base}/shingles/gen={g}" for g in range(b)]
-            )
+        pb = gen_paths(f"{base}/bands", b, **m)
+        if read_paths_log is not None:
+            read_paths_log.append((b, list(pb)))
+        idx_bands = spark.read.parquet(*pb)
+        idx_sh = spark.read.parquet(*gen_paths(f"{base}/shingles", b, **m))
         cross = idx_bands.select(
             F.col("doc_id").alias("doc_a"), "band", "band_key"
         ).join(
@@ -399,111 +372,43 @@ def dedup_incremental_lsh(spark, sf_dir):
     return out
 
 
-def _marker_gated_reader(idx, read_paths_log=None, mode="compact"):
-    """Build the ``read_index`` hook shared by every LSH stream rig
-    (the incremental dedup stream and the composed intake): given a
-    batch id, return (bands, shingles) frames for generations 0..b-1
-    under the STRICTLY-PAST marker rule — the replacement layout
-    (compacted tables, or the takedown's purged twins) serves only
-    batches strictly past the published boundary, so a replayed
-    boundary batch re-reads the exact per-generation layout it first
-    ran against. ``mode='compact'`` gates on ``compacted_upto`` and
-    serves bands_c/shingles_c; ``mode='delete'`` gates on
-    ``takedown_upto`` and serves the per-generation purged twins plus
-    untouched newer generations."""
-
-    def reader(spark_, b):
-        if mode == "delete":
-            m = read_marker(f"{idx}/takedown_upto")
-            if m is not None and m < b:
-                pb = [f"{idx}/bands_p/gen={g}" for g in range(m + 1)] + [
-                    f"{idx}/bands/gen={g}" for g in range(m + 1, b)
-                ]
-                ps = [
-                    f"{idx}/shingles_p/gen={g}" for g in range(m + 1)
-                ] + [f"{idx}/shingles/gen={g}" for g in range(m + 1, b)]
-            else:
-                pb = [f"{idx}/bands/gen={g}" for g in range(b)]
-                ps = [f"{idx}/shingles/gen={g}" for g in range(b)]
-        else:
-            m = read_marker(f"{idx}/compacted_upto")
-            if m is not None and m < b:
-                pb = [f"{idx}/bands_c"] + [
-                    f"{idx}/bands/gen={g}" for g in range(m + 1, b)
-                ]
-                ps = [f"{idx}/shingles_c"] + [
-                    f"{idx}/shingles/gen={g}" for g in range(m + 1, b)
-                ]
-            else:
-                pb = [f"{idx}/bands/gen={g}" for g in range(b)]
-                ps = [f"{idx}/shingles/gen={g}" for g in range(b)]
-        if read_paths_log is not None:
-            read_paths_log.append((b, list(pb)))
-        return spark_.read.parquet(*pb), spark_.read.parquet(*ps)
-
-    return reader
-
-
 def _compact_index_generations(spark, idx, upto):
-    """Rewrite index generations 0..upto into ONE bucket-shaped
-    compacted layout (bands_c hashed on the probe key (band,
-    band_key), shingles_c on doc_id — dedup_index_compact's shape),
-    assert the file-count shrink, then publish the ``compacted_upto``
-    marker atomically. Old generation directories are RETAINED: they
-    are still inside the stream's replay horizon (a checkpoint replay
-    of batch ``upto`` must re-read gens 0..upto-1); production GC
-    deletes them only once the offsets log's commit watermark has
-    passed the compaction boundary — deleting earlier would make the
-    torn-state replay impossible, which is exactly the bug the
-    boundary-restart test would catch."""
+    """`generations.fold` of index generations 0..upto into ONE
+    bucket-shaped compacted layout: bands_c hashed on the probe key
+    (band, band_key), shingles_c on doc_id (dedup_index_compact's
+    shape), and on the capped path the cumulative counts_c. The
+    generations stay until `gc_generations` proves the commit
+    watermark has passed the boundary — the boundary-restart test
+    replays batch ``upto`` against them."""
     import os
 
-    gens_b = [f"{idx}/bands/gen={g}" for g in range(upto + 1)]
-    gens_s = [f"{idx}/shingles/gen={g}" for g in range(upto + 1)]
-    n_before = sum(
-        1 for p in gens_b for f in os.listdir(p) if f.endswith(".parquet")
-    )
-    (
-        spark.read.parquet(*gens_b)
-        .repartition(COMPACT_FILES, "band", "band_key")
-        .write.mode("overwrite")
-        .parquet(f"{idx}/bands_c")
-    )
-    (
-        spark.read.parquet(*gens_s)
-        .repartition(COMPACT_FILES, "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{idx}/shingles_c")
-    )
-    n_after = sum(
-        1
-        for f in os.listdir(f"{idx}/bands_c")
-        if f.endswith(".parquet")
-    )
-    if n_after >= n_before:
-        raise AssertionError(
-            f"mid-stream compaction did not shrink: {n_before} -> {n_after}"
-        )
-    # capped path only: fold the per-generation stop-bucket counts
-    # into ONE cumulative table behind the SAME marker (round-8
-    # verdict item 3 — the counts family previously never compacted,
-    # so the capped core read O(b) directories per micro-batch). The
-    # column keeps the per-gen name `n_new` so the reader's sum is
-    # one expression over either layout. Repartitioned on the lookup
-    # key like bands_c — the table is O(distinct keys), which at
-    # 100 TB is far too large for a single-task coalesce(1) write.
-    if os.path.exists(f"{idx}/counts/gen=0"):
-        (
-            spark.read.parquet(
-                *[f"{idx}/counts/gen={g}" for g in range(upto + 1)]
+    def write():
+        for fam, key in (
+            ("bands", ("band", "band_key")), ("shingles", ("doc_id",))
+        ):
+            (
+                spark.read.parquet(*gen_paths(f"{idx}/{fam}", upto + 1))
+                .repartition(COMPACT_FILES, *key)
+                .write.mode("overwrite")
+                .parquet(f"{idx}/{fam}_c")
             )
-            .groupBy("band", "band_key")
-            .agg(F.sum("n_new").cast("long").alias("n_new"))
-            .repartition(COMPACT_FILES, "band", "band_key")
-            .write.mode("overwrite")
-            .parquet(f"{idx}/counts_c")
-        )
-    publish_marker(f"{idx}/compacted_upto", upto)
+        # capped path only: fold the per-generation stop-bucket counts
+        # into ONE cumulative table behind the SAME marker. The column
+        # keeps the per-gen name `n_new` so the reader's sum is one
+        # expression over either layout. Repartitioned on the lookup
+        # key like bands_c — the table is O(distinct keys), which at
+        # 100 TB is far too large for a single-task coalesce(1) write.
+        if os.path.exists(f"{idx}/counts/gen=0"):
+            (
+                spark.read.parquet(*gen_paths(f"{idx}/counts", upto + 1))
+                .groupBy("band", "band_key")
+                .agg(F.sum("n_new").cast("long").alias("n_new"))
+                .repartition(COMPACT_FILES, "band", "band_key")
+                .write.mode("overwrite")
+                .parquet(f"{idx}/counts_c")
+            )
+
+    fold(f"{idx}/bands", upto, write, idx=idx)
 
 
 # Takedown cohort for the delete-propagation rig: documents with
@@ -563,17 +468,13 @@ def _reupload_docs(d, mx):
 def _apply_takedown(
     spark, idx, upto, src=None, band_tombstones=False, purge_counts=False
 ):
-    """Rewrite index generations 0..upto WITHOUT the takedown docs as
-    per-generation purged twins (bands_p/gen=g, shingles_p/gen=g),
-    write the tombstone table (the deleted ids — audits and late-
-    arrival filtering read it), then publish the ``takedown_upto``
-    marker LAST (`publish_marker` — the write-last protocol every
-    marker in the repo follows). Original generations are RETAINED
-    until GC for the same reason compaction retains them: a
-    checkpoint replay of the boundary batch must re-read the exact
-    pre-takedown layout it first ran against. Each rewrite is a
-    deterministic overwrite, so the takedown redo on replay converges
-    to the same bytes.
+    """`generations.purge` of the band and shingle index generations
+    0..upto: purged twins without the takedown docs, the tombstone
+    table (the deleted ids — audits and late-arrival filtering read
+    it), then the ``takedown_upto`` marker LAST. Originals stay until
+    GC: a replay of the boundary batch re-reads the pre-takedown
+    layout it first ran against, and redoes this as deterministic
+    overwrites.
 
     ``band_tombstones=True`` additionally publishes the cohort's
     (band, band_key) set (``tombstones_bands``) read from the arrived
@@ -584,80 +485,33 @@ def _apply_takedown(
     minhashes (no raw text is retained).
 
     ``purge_counts=True`` (the capped path) rewrites the stop-bucket
-    counts for the covered generations as purged twins
-    (``counts_p/gen=g``, recomputed from the purged bands — exactly
-    the original counts minus the cohort's contributions, so the
-    rewrite is deterministic): post-takedown batches must size
-    buckets WITHOUT deleted members, or taken-down documents would
-    keep counting toward caps forever (the ADVICE-r9 gap). A purge
-    can RE-OPEN a bucket the cohort had saturated — correct under
-    arrival-prefix semantics, since admission is evaluated at each
-    batch's own arrival against the then-current membership."""
+    counts for the covered generations as purged twins, recounted
+    from the bands without the cohort — exactly the original counts
+    minus the cohort's contributions, so the rewrite is deterministic:
+    post-takedown batches must size buckets WITHOUT deleted members,
+    or taken-down documents would keep counting toward caps forever.
+    A purge can RE-OPEN a bucket the cohort had saturated — correct
+    under arrival-prefix semantics, since admission is evaluated at
+    each batch's own arrival against the then-current membership."""
     td = _takedown_pred()
-    # ONE pass per family instead of one per generation (optimization
-    # round 12, guide §1.2/§2.4): the covered generations are read
-    # with basePath so ``gen`` rides along as a partition column, and
-    # one partitionBy("gen") write lands the per-generation twin dirs
-    # byte-compatible with the old per-gen loop — same directories,
-    # same rows, upto+1 fewer Spark jobs per family. The redo on
-    # replay is still a deterministic overwrite of the whole covered
-    # prefix (the loop also rewrote every covered generation).
-    gens = [f"gen={g}" for g in range(upto + 1)]
-    for fam in ("bands", "shingles"):
-        (
-            spark.read.option("basePath", f"{idx}/{fam}")
-            .parquet(*[f"{idx}/{fam}/{g}" for g in gens])
-            .filter(~td)
-            .write.mode("overwrite")
-            .partitionBy("gen")
-            .parquet(f"{idx}/{fam}_p")
-        )
-        ensure_gen_dirs(
-            spark, f"{idx}/{fam}_p", upto,
-            lambda g, fam=fam: spark.read.parquet(
-                f"{idx}/{fam}/gen={g}"
-            ).filter(~td),
-        )
+    covered = range(upto + 1)
+    # the derived artifacts first: `purge` publishes the marker last
     if purge_counts:
-        (
-            spark.read.option("basePath", f"{idx}/bands_p")
-            .parquet(*[f"{idx}/bands_p/{g}" for g in gens])
+        write_twins(
+            spark, f"{idx}/counts", covered,
+            lambda df: df.filter(~td)
             .groupBy("gen", "band", "band_key")
-            .agg(F.count(F.lit(1)).alias("n_new"))
-            .write.mode("overwrite")
-            .partitionBy("gen")
-            .parquet(f"{idx}/counts_p")
-        )
-        ensure_gen_dirs(
-            spark, f"{idx}/counts_p", upto,
-            lambda g: spark.read.parquet(f"{idx}/bands_p/gen={g}")
-            .groupBy("band", "band_key")
             .agg(F.count(F.lit(1)).alias("n_new")),
+            src=f"{idx}/bands",
         )
-    (
-        spark.read.parquet(
-            *[f"{idx}/shingles/gen={g}" for g in range(upto + 1)]
-        )
-        .filter(td)
-        .select("doc_id")
-        .distinct()
-        # one file is fine here: tombstone sets are O(cohort), orders
-        # of magnitude below the corpus; shard this write if a single
-        # takedown ever exceeds ~100M ids
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{idx}/tombstones")
-    )
     if src is not None:
-        # CONTENT tombstones (sha2 of the deleted docs' text, read
-        # from the arrived source files): takedown must also block a
-        # RE-UPLOAD of the same content under a new id — deleting by
-        # id alone lets the document walk straight back in. O(cohort)
+        # CONTENT tombstones (sha2 of the deleted docs' text, read from
+        # the arrived source files): takedown must also block a
+        # RE-UPLOAD of the same content under a new id — deleting by id
+        # alone lets the document walk straight back in. O(cohort)
         # rows, broadcastable at any corpus size.
         (
-            spark.read.parquet(
-                *[f"{src}/batch_{g}.parquet" for g in range(upto + 1)]
-            )
+            spark.read.parquet(*[f"{src}/batch_{g}.parquet" for g in covered])
             .filter(td)
             .select(F.sha2(F.col("text"), 256).alias("text_sha"))
             .distinct()
@@ -667,9 +521,7 @@ def _apply_takedown(
         )
     if band_tombstones:
         (
-            spark.read.parquet(
-                *[f"{idx}/bands/gen={g}" for g in range(upto + 1)]
-            )
+            spark.read.parquet(*gen_paths(f"{idx}/bands", upto + 1))
             .filter(td)
             .select("band", "band_key")
             .distinct()
@@ -677,7 +529,7 @@ def _apply_takedown(
             .write.mode("overwrite")
             .parquet(f"{idx}/tombstones_bands")
         )
-    publish_marker(f"{idx}/takedown_upto", upto)
+    purge(spark, idx, ("shingles", "bands"), upto, td, "doc_id")
 
 
 # File-size budget for takedown rewrite passes: a rewritten partition
@@ -760,7 +612,7 @@ def run_inc_lsh_stream(
     ``compact_after=k`` compacts generations 0..k at the end of
     increment k's processing (`_compact_index_generations`); later
     increments read the compacted layout + any newer generations
-    through the ``read_index`` hook. The marker-gated reader never
+    (`generations.gen_paths`). The strictly-past read never
     double-counts: a replayed batch k sees marker k but reads gens
     0..k-1 (the compacted layout only serves batches STRICTLY past
     the boundary), and the compaction redo on replay is a
@@ -816,11 +668,6 @@ def run_inc_lsh_stream(
 
     if compact_after is not None and delete_after is not None:
         raise ValueError("rig supports one maintenance mode per stream")
-    reader = _marker_gated_reader(
-        idx,
-        read_paths_log=read_paths_log,
-        mode="delete" if delete_after is not None else "compact",
-    )
 
     def process(batch_df, b):
         # the runner derives b from the pre-filter min(doc_id); any
@@ -836,8 +683,7 @@ def run_inc_lsh_stream(
             # original run committed. Blocked docs never enter the
             # pipeline: no sink row, no banding, no index membership.
             # Broadcast anti-join on the O(cohort) hash set.
-            m = read_marker(f"{idx}/takedown_upto")
-            if m is not None and m < b:
+            if marker(idx, "purged", b) is not None:
                 tomb_sha = spark.read.parquet(f"{idx}/tombstones_sha")
                 before = batch_df.count()
                 batch_df = batch_df.join(
@@ -893,9 +739,7 @@ def run_inc_lsh_stream(
             out = _inc_lsh_dedupe_batch(
                 spark, doc_sh, _lsh_band_rows(doc_sh), idx, b,
                 materialize=False, bucket_cap=bucket_cap,
-                read_index=reader
-                if (compact_after is not None or delete_after is not None)
-                else None,
+                read_paths_log=read_paths_log,
                 counts_paths_log=counts_paths_log,
             )
             fail_point(fail_at_batch, fail_phase, b, "pre_sink")
@@ -1166,226 +1010,6 @@ def stream_dedup_compact_e2e(spark, sf_dir):
     return out
 
 
-def _committed_src_batches(ckpt):
-    """Data-batch ids whose source files the checkpoint has fully
-    COMMITTED — admitted in the offsets log AND covered by a commit
-    file. This is the replay horizon's complement: any batch NOT in
-    this set may be re-run on restart and therefore still needs its
-    per-generation index inputs. Parses the file-source metadata log
-    (ckpt/sources/0/<epoch>: a v1 header plus one JSON entry per
-    admitted file) against the commit log directory — the same two
-    logs Spark's own recovery reads, so the GC decision uses the
-    engine's actual ground truth, not a shadow bookkeeping table."""
-    import json
-    import os
-
-    commits = {
-        int(f)
-        for f in os.listdir(f"{ckpt}/commits")
-        if not f.startswith(".")
-    }
-    out = set()
-    for epoch in commits:
-        # FileStreamSourceLog COMPACTS its metadata every
-        # spark.sql.streaming.fileSource.log.compactInterval batches
-        # (default 10): the compacted epoch is written as
-        # "<epoch>.compact" (carrying every retained entry) and the
-        # plain file never exists — checking only the plain name
-        # would mark that batch forever-uncommitted and the GC guard
-        # would refuse for the stream's whole life past 10 batches
-        # (review finding, round 8).
-        for p in (
-            f"{ckpt}/sources/0/{epoch}",
-            f"{ckpt}/sources/0/{epoch}.compact",
-        ):
-            if not os.path.exists(p):
-                continue
-            with open(p) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue
-                    name = os.path.basename(json.loads(line)["path"])
-                    if name.startswith("batch_") and name.endswith(
-                        ".parquet"
-                    ):
-                        out.add(
-                            int(name[len("batch_"):-len(".parquet")])
-                        )
-    return out
-
-
-def _gc_generations(ckpt, idx, families, marker_name="compacted_upto"):
-    """Shared watermark-gated generation GC (review finding: the
-    dedup and ANN GCs forked this verbatim): delete each family's
-    generation directories covered by BOTH safety conditions — (a)
-    a replacement layout serves them (generation ≤ the ``marker_name``
-    marker: the compacted layout, or the takedown's purged twins) and
-    (b) the checkpoint's commit watermark has passed them (every
-    covered batch is in `_committed_src_batches`, so no restart can
-    ever replay one). REFUSES with ValueError when any covered batch
-    is still inside the replay horizon — deleting then would make the
-    torn-state replay the compaction tests perform impossible, which
-    is exactly the production incident this guard prevents. Returns
-    the removed paths."""
-    import os
-    import shutil
-
-    m = read_marker(f"{idx}/{marker_name}")
-    if m is None:
-        raise ValueError(f"GC refused: no {marker_name} marker published")
-    committed = _committed_src_batches(ckpt)
-    pending = [b for b in range(m + 1) if b not in committed]
-    if pending:
-        raise ValueError(
-            f"GC refused: batches {pending} are inside the replay"
-            " horizon (offsets admitted but commit log not written)"
-        )
-    removed = []
-    for g in range(m + 1):
-        for fam in families:
-            p = f"{idx}/{fam}/gen={g}"
-            if os.path.exists(p):
-                shutil.rmtree(p)
-                removed.append(p)
-    return removed
-
-
-def _gc_index_generations(ckpt, idx):
-    """LSH-index GC: bands + shingles + counts via the shared
-    watermark-gated core. The counts family (capped path) is covered
-    since round 9: compaction folds gens 0..m into the cumulative
-    ``counts_c`` behind the same ``compacted_upto`` marker, so the
-    marker-AND-commit-watermark rule that makes band/shingle
-    generations dead makes counts generations dead too. On uncapped
-    streams no counts directories exist and the family is a no-op."""
-    return _gc_generations(ckpt, idx, ("bands", "shingles", "counts"))
-
-
-def _audit_no_tombstoned(spark, idx, families, id_col="doc_id"):
-    """Takedown COMPLETENESS audit, shared by every delete op: read
-    every surviving generation shard of the given families under
-    ``idx``, semi-join the ids against the tombstone table, and raise
-    if anything comes back — the filesystem-level proof that no
-    serving artifact still holds a deleted id. Each generation root is
-    read separately (mixed family roots can't share one
-    partition-discovery basePath). One union scan + one broadcast
-    semi-join: the audit query a compliance officer actually runs."""
-    import os
-
-    tomb = spark.read.parquet(f"{idx}/tombstones").select(id_col)
-    surviving = None
-    for fam in families:
-        root = f"{idx}/{fam}"
-        if not os.path.isdir(root):
-            continue
-        for g in sorted(os.listdir(root)):
-            if not g.startswith("gen="):
-                continue
-            ids = spark.read.parquet(f"{root}/{g}").select(id_col)
-            surviving = (
-                ids if surviving is None else surviving.unionByName(ids)
-            )
-    if surviving is None:
-        # no generation directory exists in ANY audited family (e.g. a
-        # fully GC'd index): refuse rather than silently pass — an
-        # audit that finds nothing to audit usually means the caller
-        # passed the wrong roots (ADVICE r9)
-        raise AssertionError(
-            "takedown audit found no generation shards under"
-            f" {idx} for families {families} — nothing to audit"
-        )
-    leaked = surviving.join(F.broadcast(tomb), id_col, "left_semi")
-    if leaked.limit(1).count() > 0:
-        raise AssertionError(
-            "takedown incomplete: a surviving index shard still holds"
-            f" a tombstoned {id_col}"
-        )
-
-
-def _audit_roots_no_tombstoned(spark, tomb, roots, id_col="doc_id"):
-    """Takedown completeness audit over ARBITRARY parquet roots — the
-    content-bearing artifacts OUTSIDE the generation-managed index
-    families (the staged feed, suffix-array artifacts, scratch
-    copies): every parquet row reachable under each root whose table
-    carries ``id_col`` is semi-joined against the tombstone frame and
-    anything that comes back raises. Roots that don't exist are
-    skipped (a rig variant may not create them); a root that exists
-    but yields no readable parquet is an error — an audit that can't
-    see what it was asked to check must not pass (the
-    empty-families rule). ``tomb``: a DataFrame with column
-    ``id_col``."""
-    import os
-
-    checked = 0
-    for root in roots:
-        if not os.path.exists(root):
-            continue
-        paths = []
-        if os.path.isfile(root):
-            paths = [root]
-        else:
-            for r, _d, files in os.walk(root):
-                paths.extend(
-                    os.path.join(r, f)
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-        if not paths:
-            raise AssertionError(
-                f"takedown audit: root {root} exists but holds no"
-                " parquet to audit"
-            )
-        df = spark.read.parquet(*paths)
-        if id_col not in df.columns:
-            raise AssertionError(
-                f"takedown audit: root {root} has no {id_col} column"
-            )
-        # label each root's ids and fold every root into ONE audit
-        # action below (optimization round 12, guide §1.2: one union
-        # scan + one semi-join instead of one job per root) — the
-        # raised error still names a violating root. Cast the id to
-        # the tombstone frame's dtype so roots with differing id
-        # widths still union (ADVICE r12).
-        ids = df.select(
-            F.lit(root).alias("_audit_root"),
-            F.col(id_col).cast(tomb.schema[id_col].dataType),
-        )
-        surviving = (
-            ids if checked == 0 else surviving.unionByName(ids)  # noqa: F821
-        )
-        checked += 1
-    if checked == 0:
-        raise AssertionError(
-            f"takedown audit: none of the roots exist: {roots}"
-        )
-    leaked = surviving.join(
-        F.broadcast(tomb.select(id_col)), id_col, "left_semi"
-    )
-    hit = leaked.limit(1).collect()
-    if hit:
-        raise AssertionError(
-            f"takedown incomplete: {hit[0]['_audit_root']} still holds"
-            f" a tombstoned {id_col}"
-        )
-
-
-def _audit_stores_no_tombstoned(spark, stores):
-    """Completeness audit across HETEROGENEOUS stores — the
-    cross-store takedown capstone's final gate: ``stores`` is a list
-    of (tombstone frame, id column, roots) triples — one per
-    content-bearing store family (the text store keys on doc_id, the
-    vector stores on vec_id/c_id) — each walked by the shared root
-    auditor. One call site = one place a reviewer checks the audited
-    root list; completeness of that LIST is still the caller's
-    responsibility (nothing here can know which roots exist), exactly
-    as with `_audit_roots_no_tombstoned` — what the wrapper adds is
-    that a partial run can't happen by accident once the capstone
-    assembles all stores in one literal."""
-    for tomb, id_col, roots in stores:
-        _audit_roots_no_tombstoned(spark, tomb, roots, id_col=id_col)
-
-
 def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     """Rewrite the STAGED FEED FILES without the takedown docs — the
     step ADVICE r9 flagged: the index takedown purged every serving
@@ -1398,7 +1022,7 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     is ENFORCED HERE, not by caller convention (ADVICE r10): the
     function refuses unless the ``takedown_upto`` marker covers
     ``upto`` AND the checkpoint's commit log shows every batch
-    0..upto committed (the same ground truth `_gc_generations`
+    0..upto committed (the same ground truth `gc_generations`
     reads), so a mis-ordered caller fails loudly instead of silently
     corrupting replayable input. Each rewrite is an atomic
     os.replace of a deterministically filtered copy; mtimes are
@@ -1427,14 +1051,14 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
 
     td = pred if pred is not None else _takedown_pred()
     idx = f"{base}/index"
-    m = read_marker(f"{idx}/takedown_upto")
+    m = marker(idx, "purged")
     if m is None or m < upto:
         raise ValueError(
-            f"_purge_feed refused: takedown_upto marker is {m},"
+            f"_purge_feed refused: the takedown marker is {m},"
             f" does not cover batches 0..{upto} — run the takedown"
             " (and its GC) before purging the feed"
         )
-    committed = _committed_src_batches(ckpt)
+    committed = committed_src_batches(ckpt)
     pending = [b for b in range(upto + 1) if b not in committed]
     if pending:
         raise ValueError(
@@ -1473,23 +1097,11 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     shutil.rmtree(f"{base}/stage_purge", ignore_errors=True)
 
 
-def _gc_takedown_originals(ckpt, idx):
-    """Delete the PRE-takedown ORIGINAL generations once the commit
-    watermark has passed the takedown boundary — the step that makes
-    a delete COMPLETE: the purged twins serve every read, but the
-    originals still hold the deleted documents' content-derived state
-    (shingle arrays, band keys); retaining them past the replay
-    horizon would fail the compliance obligation the takedown exists
-    for. Same marker-AND-watermark rule as the compaction GC, keyed
-    on ``takedown_upto``. The counts family (capped streams — the
-    per-bucket sizes still reflect deleted members; the purged
-    ``counts_p`` twins serve every post-boundary cap lookup) is
-    covered too; on uncapped streams no counts directory exists and
-    the family is a no-op."""
-    return _gc_generations(
-        ckpt, idx, ("bands", "shingles", "counts"),
-        marker_name="takedown_upto",
-    )
+def _index_roots(idx):
+    """The LSH index's content-bearing families a takedown audit walks:
+    the original generations and their purged twins."""
+    fams = ("bands", "shingles", "bands_p", "shingles_p")
+    return [f"{idx}/{fam}" for fam in fams]
 
 
 @register("stream_dedup_gc_e2e", oracle=INC_LSH_SQL)
@@ -1527,7 +1139,7 @@ def stream_dedup_gc_e2e(spark, sf_dir):
     run_inc_lsh_stream(spark, sf_dir, base, compact_after=boundary)
 
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_index_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     if len(removed) != 2 * (boundary + 1):
         raise AssertionError(
             f"GC removed {removed}, expected bands+shingles for"
@@ -1711,7 +1323,7 @@ def stream_dedup_capped_lifecycle_e2e(spark, sf_dir):
                 " [counts_c] + newer gens"
             )
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_index_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     if len(removed) != 3 * (boundary + 1):
         raise AssertionError(
             f"GC removed {removed}, expected bands+shingles+counts for"
@@ -1868,14 +1480,12 @@ def stream_dedup_delete_gc_e2e(spark, sf_dir):
     audit is one union-scan of the surviving index shards semi-joined
     against the O(cohort) broadcast tombstone set — the audit query a
     compliance officer actually runs."""
-    import os
-
     from ..registry import scratch_dir
 
     base = scratch_dir("stream_dedup_delete_gc_e2e")
     run_inc_lsh_stream(spark, sf_dir, base, delete_after=TD_AFTER)
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_takedown_originals(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     if len(removed) != 2 * (TD_AFTER + 1):
         raise AssertionError(
             f"takedown GC removed {removed}, expected bands+shingles"
@@ -1888,12 +1498,10 @@ def stream_dedup_delete_gc_e2e(spark, sf_dir):
     # missed), and a takedown that leaves source text on disk is not
     # compliance-complete
     _purge_feed(spark, base, f"{base}/src", TD_AFTER, ckpt=ckpt)
-    _audit_no_tombstoned(
-        spark, idx, ("bands", "shingles", "bands_p", "shingles_p")
-    )
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
-        spark, tomb, (f"{base}/src", f"{base}/sink", f"{base}/stage")
+    audit_no_tombstoned(
+        spark,
+        spark.read.parquet(f"{idx}/tombstones"),
+        _index_roots(idx) + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
     )
     # restart on the gutted index: recovery finds every source file
     # committed (the purged feed keeps the same paths and mtimes),
@@ -2123,9 +1731,9 @@ def stream_takedown_unified_e2e(spark, sf_dir):
     projection of the corpus artifact (array_p/anchors_p — an
     unpurged copy never exists under this store's root) and spans are
     served off it through the shared re-rank + LCP machinery; and ONE
-    unified completeness audit walks all of it — index families via
-    `_audit_no_tombstoned`, feed/sink/SA roots via
-    `_audit_roots_no_tombstoned` — proving from the filesystem that
+    unified completeness audit (`audit_no_tombstoned`) walks all of
+    it — index families, feed, sink and SA roots — proving from the
+    filesystem that
     the store forgot the documents EVERYWHERE. Finally the stream
     restarts on the gutted store as a committed no-op and the sink
     still value-hashes against the two-regime delete statement: the
@@ -2142,8 +1750,6 @@ def stream_takedown_unified_e2e(spark, sf_dir):
     dedicated op documents; the audit is one union scan semi-joined
     against the O(cohort) broadcast tombstones; GC is fs metadata.
     Nothing here adds a shuffle class beyond the dedicated ops."""
-    import os
-
     from ..registry import scratch_dir
     from .suffix import _purged_sa_spans
 
@@ -2155,7 +1761,7 @@ def stream_takedown_unified_e2e(spark, sf_dir):
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
 
     # 1. LSH originals GC (marker + commit watermark proven inside)
-    _gc_takedown_originals(ckpt, idx)
+    gc_generations(ckpt, idx)
     # 2. feed purge (safe: the GC just proved replay is impossible)
     _purge_feed(spark, base, f"{base}/src", TD_AFTER, ckpt=ckpt)
     # 3. SA family: publish the purged projection and serve spans
@@ -2166,20 +1772,17 @@ def stream_takedown_unified_e2e(spark, sf_dir):
         raise AssertionError("purged SA artifact serves no spans")
 
     # 4. the unified audit: every family, one tombstone set
-    _audit_no_tombstoned(
-        spark, idx, ("bands", "shingles", "bands_p", "shingles_p")
-    )
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
+    audit_no_tombstoned(
         spark,
-        tomb,
-        (
+        spark.read.parquet(f"{idx}/tombstones"),
+        _index_roots(idx)
+        + [
             f"{base}/src",
             f"{base}/sink",
             f"{base}/stage",
             f"{base}/sa/array_p",
             f"{base}/sa/anchors_p",
-        ),
+        ],
     )
 
     # 5. restart on the gutted store: a committed no-op, serving
@@ -2258,14 +1861,8 @@ def stream_dedup_capped_delete_e2e(spark, sf_dir):
     if not post:
         raise AssertionError("no post-takedown increment was processed")
     for b, paths in post:
-        covered = [p for p in paths if "/counts_p/gen=" in p]
-        stale = [
-            p
-            for p in paths
-            if "/counts/gen=" in p
-            and int(p.rsplit("=", 1)[1]) <= TD_AFTER
-        ]
-        if len(covered) != TD_AFTER + 1 or stale:
+        expected = gen_paths(f"{base}/index/counts", b + 1, purged=TD_AFTER)
+        if paths != expected:
             raise AssertionError(
                 f"increment {b} sized buckets from {paths}; expected"
                 " purged counts twins for the covered prefix only"
@@ -2296,16 +1893,16 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     twins before its originals are removed — codes are a batch
     artifact no checkpoint can replay, so removal needs no watermark).
 
-    Then the one audit: `_audit_stores_no_tombstoned` walks BOTH
-    stores' content-bearing roots — text feed/sink/staging/index
-    families/SA twins against the doc tombstones, vector feed + list
-    twins + code twins against the vec tombstones — in a single call,
-    so completeness is one result. Finally BOTH streams restart on
-    the gutted stores as committed no-ops: the vector probe must
-    serve purged twins only (asserted from recorded paths) and answer
-    with no tombstoned id (list path AND ADC path), and the text sink
-    must still value-hash against the two-regime delete statement —
-    the forgetting happened exactly once, everywhere.
+    Then the one audit: `audit_no_tombstoned` walks BOTH stores'
+    content-bearing roots — text feed/sink/staging/index families/SA
+    twins against the doc tombstones, vector feed + list twins + code
+    twins against the vec tombstones — in one loop over the stores.
+    Finally BOTH streams restart on the gutted stores as committed
+    no-ops: the vector probe must serve purged twins only (asserted from
+    recorded paths) and answer with no tombstoned id (list path AND
+    ADC path), and the text sink must still value-hash against the
+    two-regime delete statement — the forgetting happened exactly
+    once, everywhere.
 
     Division of proof labor (unchanged): rebuild-equivalence per
     family is the dedicated delete ops' job
@@ -2339,7 +1936,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     # ---- TEXT STORE: the unified-takedown machinery ----
     run_inc_lsh_stream(spark, sf_dir, tbase, delete_after=TD_AFTER)
     t_idx, t_ckpt = f"{tbase}/index", f"{tbase}/ckpt"
-    _gc_takedown_originals(t_ckpt, t_idx)
+    gc_generations(t_ckpt, t_idx)
     _purge_feed(spark, tbase, f"{tbase}/src", TD_AFTER, ckpt=t_ckpt)
     batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
     td_doc = _takedown_pred() & (batch_of <= TD_AFTER)
@@ -2351,9 +1948,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     v_last = N_SIM_BATCHES - 1
     run_sim_index_stream(spark, sf_dir, vbase, delete_after=v_last)
     v_idx, v_ckpt = f"{vbase}/index", f"{vbase}/ckpt"
-    _gc_generations(
-        v_ckpt, v_idx, ("lists",), marker_name="takedown_upto"
-    )
+    gc_generations(v_ckpt, v_idx)
     td_vec = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
     _purge_feed(
         spark, vbase, f"{vbase}/src", v_last, ckpt=v_ckpt,
@@ -2362,66 +1957,49 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pq_root = f"{vbase}/pq"
     loaded = _pq_persist_layout(spark, em, pq_root)
-    for g in (0, 1):
-        (
-            spark.read.parquet(f"{pq_root}/codes/gen={g}")
-            .filter(~td_vec)
-            .write.mode("overwrite")
-            .parquet(f"{pq_root}/codes_p/gen={g}")
-        )
+    write_twins(
+        spark, f"{pq_root}/codes", (0, 1), lambda df: df.filter(~td_vec)
+    )
     publish_marker(f"{pq_root}/takedown_applied", 1)
     # codes are a BATCH artifact — no checkpoint can ever replay
     # them, so the originals go the moment the twins are published
     shutil.rmtree(f"{pq_root}/codes")
 
     # ---- ONE audit across both stores' roots ----
-    tomb_doc = spark.read.parquet(f"{t_idx}/tombstones")
     tomb_vec = spark.read.parquet(f"{v_idx}/tombstones")
-    _audit_stores_no_tombstoned(
-        spark,
-        [
-            (
-                tomb_doc,
-                "doc_id",
-                (
-                    f"{tbase}/src",
-                    f"{tbase}/sink",
-                    f"{tbase}/stage",
-                    f"{t_idx}/bands",
-                    f"{t_idx}/shingles",
-                    f"{t_idx}/bands_p",
-                    f"{t_idx}/shingles_p",
-                    f"{tbase}/sa/array_p",
-                    f"{tbase}/sa/anchors_p",
-                ),
-            ),
-            (tomb_vec, "c_id", (f"{v_idx}/lists_p",)),
-            (
-                tomb_vec.select(F.col("c_id").alias("vec_id")),
-                "vec_id",
-                (f"{vbase}/src", f"{pq_root}/codes_p"),
-            ),
-        ],
-    )
+    for tomb, id_col, roots in (
+        (
+            spark.read.parquet(f"{t_idx}/tombstones"),
+            "doc_id",
+            [f"{tbase}/src", f"{tbase}/sink", f"{tbase}/stage"]
+            + _index_roots(t_idx)
+            + [f"{tbase}/sa/array_p", f"{tbase}/sa/anchors_p"],
+        ),
+        (tomb_vec, "c_id", [f"{v_idx}/lists_p"]),
+        (
+            tomb_vec.select(F.col("c_id").alias("vec_id")),
+            "vec_id",
+            [f"{vbase}/src", f"{pq_root}/codes_p"],
+        ),
+    ):
+        audit_no_tombstoned(spark, tomb, roots, id_col=id_col)
 
     # ---- restart BOTH streams on the gutted stores ----
     vlog = []
     v_out = run_sim_index_stream(
         spark, sf_dir, vbase, delete_after=v_last, serve_paths_log=vlog
     )
-    bad = [p for p in vlog[-1] if "/lists_p/gen=" not in p]
-    if bad:
+    purged = gen_paths(f"{v_idx}/lists", N_SIM_BATCHES, purged=v_last)
+    if vlog[-1] != purged:
         raise AssertionError(
-            f"post-takedown vector probe served {bad}; expected purged"
-            " twins only"
+            f"post-takedown vector probe served {vlog[-1]}; expected"
+            " purged twins only"
         )
     pq_out = _pq_adc_probe(
         spark,
         em,
         loaded,
-        spark.read.parquet(
-            f"{pq_root}/codes_p/gen=0", f"{pq_root}/codes_p/gen=1"
-        ),
+        spark.read.parquet(*gen_paths(f"{pq_root}/codes", 2, purged=1)),
     )
     vc = F.col("c_id") % VEC_TD_MOD == VEC_TD_RES
     if (

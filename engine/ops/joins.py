@@ -283,10 +283,6 @@ def join_bucketed_colocated(spark, sf_dir):
     on the next query.
     """
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # the demonstrated shape is the SORT-merge over pre-sorted buckets;
-    # the session default now allows shuffled-hash (round-12), which
-    # would trade the free merge for a needless hash build here
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
     base = scratch_dir("bucketed")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
@@ -377,9 +373,6 @@ def join_skew_aqe(spark, sf_dir):
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # keep the demo on the sort-merge path the skew-split assertion
-    # pins (session default now prefers shuffled-hash, round-12)
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
     # repartition first: AQE splits a skewed reduce partition by MAPPER
     # block ranges, and the toy input is one parquet file = one map
     # task = nothing to split. 16 mappers simulates the thousands a

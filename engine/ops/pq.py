@@ -19,14 +19,19 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import fan_out, register, shared_artifact, table
-from ..stream import (
-    ensure_gen_dirs,
-    fail_point,
-    publish_marker,
-    read_marker,
-    run_increments,
+from ..generations import (
+    audit_no_tombstoned,
+    gc_generations,
+    gen_paths,
+    marker,
+    markers,
+    publish,
+    purge,
+    read_gens,
+    write_twins,
 )
+from ..registry import fan_out, register, shared_artifact, table
+from ..stream import fail_point, publish_marker, read_marker, run_increments
 from .similarity import (
     DRIFT_TRIGGER_PCT,
     EMB_DIM,
@@ -845,8 +850,8 @@ def sim_index_pq_delete(spark, sf_dir):
     PQ twin of sim_index_delete, porting the purged-twin protocol to
     the codes layout (codes are per-vector rows, so the machinery
     ports directly): every code generation is rewritten WITHOUT the
-    takedown cohort into ``codes_p/gen=N`` twins (filter-rewrites
-    riding the scan), a tombstone table records the deleted ids, the
+    takedown cohort into purged twins (filter-rewrites riding the
+    scan), a tombstone table records the deleted ids, the
     write-last ``takedown_applied`` marker publishes the swap, and
     serving probes the purged layout — a deleted vector can never
     appear in any ADC pool or re-ranked answer. PQ adds one
@@ -867,20 +872,14 @@ def sim_index_pq_delete(spark, sf_dir):
     the whole repo), tombstones are O(cohort), post-delete probes cost
     exactly what pre-delete probes cost."""
     from ..registry import scratch_dir
-    from .dedup_stream import _audit_roots_no_tombstoned
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = scratch_dir("sim_index_pq_delete")
     loaded = _pq_persist_layout(spark, em, base)
 
     td = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
-    for g in (0, 1):
-        (
-            spark.read.parquet(f"{base}/codes/gen={g}")
-            .filter(~td)
-            .write.mode("overwrite")
-            .parquet(f"{base}/codes_p/gen={g}")
-        )
+    write_twins(spark, f"{base}/codes", (0, 1), lambda df: df.filter(~td))
+    purged_paths = gen_paths(f"{base}/codes", 2, purged=1)
     (
         em.filter(td)
         .select("vec_id")
@@ -891,16 +890,9 @@ def sim_index_pq_delete(spark, sf_dir):
     publish_marker(f"{base}/takedown_applied", 1)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
-    _audit_roots_no_tombstoned(
-        spark,
-        tomb,
-        (f"{base}/codes_p/gen=0", f"{base}/codes_p/gen=1"),
-        id_col="vec_id",
-    )
+    audit_no_tombstoned(spark, tomb, purged_paths, id_col="vec_id")
 
-    purged = spark.read.parquet(
-        f"{base}/codes_p/gen=0", f"{base}/codes_p/gen=1"
-    )
+    purged = spark.read.parquet(*purged_paths)
     post = _pq_adc_probe(spark, em, loaded, purged).localCheckpoint(
         eager=True
     )
@@ -1126,14 +1118,20 @@ def _ivfpq_lifecycle_layout(spark, em, base, cut=None):
     return cent, loaded
 
 
+def _ivfpq_coded(df):
+    """The serving codes frame (cluster, c_id, code)."""
+    return df.select("cluster", F.col("vec_id").alias("c_id"), "code")
+
+
 def _ivfpq_coded_from(spark, root, gens):
     """The serving codes frame off a generation'd cluster-partitioned
     layout: basePath keeps BOTH partition columns discovered so the
     probe join can prune cluster directories across generations."""
-    df = spark.read.option("basePath", root).parquet(
-        *[f"{root}/gen={g}" for g in gens]
+    return _ivfpq_coded(
+        spark.read.option("basePath", root).parquet(
+            *[f"{root}/gen={g}" for g in gens]
+        )
     )
-    return df.select("cluster", F.col("vec_id").alias("c_id"), "code")
 
 
 def _ivfpq_lifecycle_build_dir(spark, sf_dir, kind):
@@ -1219,8 +1217,8 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     """Vector DELETE propagation through the COMPOSED persisted index
     — the lifecycle row that makes IVF+PQ governable (round-10 verdict
     item 1's second half): every cluster-partitioned code generation
-    is rewritten WITHOUT the takedown cohort into ``codes_p/gen=N``
-    twins (the filter rides the partition-pruned scan; the repartition
+    is rewritten WITHOUT the takedown cohort into purged twins (the
+    filter rides the partition-pruned scan; the repartition
     keeps one file per serving partition), a tombstone table records
     the deleted ids, the write-last ``takedown_applied`` marker
     publishes the swap, the completeness audit walks the purged twin
@@ -1243,34 +1241,17 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     cluster per vector); tombstones are O(cohort); post-delete probes
     cost exactly what pre-delete probes cost."""
     from ..registry import scratch_dir
-    from .dedup_stream import _audit_roots_no_tombstoned
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = scratch_dir("sim_index_ivfpq_delete")
     cent, loaded = _ivfpq_lifecycle_layout(spark, em, base)
 
     td = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
-    # ONE filter-rewrite over both generations (optimization round 12,
-    # guide §1.2): basePath carries gen; partitionBy("gen", "cluster")
-    # lands the identical per-generation cluster-partitioned twins.
-    (
-        spark.read.option("basePath", f"{base}/codes")
-        .parquet(f"{base}/codes/gen=0", f"{base}/codes/gen=1")
-        .filter(~td)
-        .repartition("gen", "cluster")
-        .write.mode("overwrite")
-        .partitionBy("gen", "cluster")
-        .parquet(f"{base}/codes_p")
+    write_twins(
+        spark, f"{base}/codes", (0, 1), lambda df: df.filter(~td),
+        by=("cluster",),
     )
-    # a partitioned write skips empty partitions: a generation fully
-    # removed by the cohort must still leave a readable gen dir for
-    # the explicit codes_p/gen=N reads below (ADVICE r12)
-    ensure_gen_dirs(
-        spark, f"{base}/codes_p", 1,
-        lambda g: spark.read.parquet(f"{base}/codes/gen={g}").filter(
-            ~td
-        ),
-    )
+    purged_paths = gen_paths(f"{base}/codes", 2, purged=1)
     (
         em.filter(td)
         .select("vec_id")
@@ -1281,14 +1262,9 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     publish_marker(f"{base}/takedown_applied", 1)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
-    _audit_roots_no_tombstoned(
-        spark,
-        tomb,
-        (f"{base}/codes_p/gen=0", f"{base}/codes_p/gen=1"),
-        id_col="vec_id",
-    )
+    audit_no_tombstoned(spark, tomb, purged_paths, id_col="vec_id")
 
-    purged = _ivfpq_coded_from(spark, f"{base}/codes_p", (0, 1))
+    purged = read_gens(spark, purged_paths, _ivfpq_coded)
     post = _ivfpq_serve(spark, em, cent, loaded, purged).localCheckpoint(
         eager=True
     )
@@ -1473,8 +1449,8 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
     refined centroids retrain over the accumulated corpus and publish
     as ``centroids/gen=1`` beside the retained gen=0; every code
     generation REWRITES ITS PLACEMENT — (vec_id, code) joined to the
-    fresh broadcast assignment, landed as ``codes_r/gen=N`` twins in
-    the NEW cluster partitions (rows move directories; code bytes are
+    fresh broadcast assignment, landed as recoded twins in the NEW
+    cluster partitions (rows move directories; code bytes are
     byte-identical) — behind the write-last ``reclustered`` marker;
     and the monitor re-reads CLEAR against the loaded gen=1 centroids
     (the op raises if fire or clear reads wrong). Routing stays
@@ -1529,16 +1505,13 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
             ),
             cent1,
         ).select(F.col("c_id").alias("vec_id"), "cluster")
-        for g in (0, 1):
-            (
-                spark.read.parquet(f"{pub}/codes/gen={g}")
-                .select("vec_id", "code")
-                .join(assigned1, "vec_id")
-                .repartition("cluster")
-                .write.mode("overwrite")
-                .partitionBy("cluster")
-                .parquet(f"{base}/codes_r/gen={g}")
-            )
+        write_twins(
+            spark, f"{base}/codes", (0, 1),
+            lambda df: df.select("gen", "vec_id", "code").join(
+                assigned1, "vec_id"
+            ),
+            by=("cluster",), suffix="_r", src=f"{pub}/codes",
+        )
         publish_marker(f"{base}/reclustered", 1)
 
         if _aff_drift_fired(
@@ -1725,11 +1698,7 @@ def run_ivfpq_stream(
             raise RuntimeError(
                 "codes arrived before the models were published"
             )
-        if (
-            recluster
-            and b > 0
-            and read_marker(f"{idx}/reclustered_upto") is None
-        ):
+        if recluster and b > 0 and marker(idx, "recoded") is None:
             # staleness monitor, only while one centroid generation
             # is live (the run_pq_recode_stream discipline): a
             # replayed boundary batch sees the marker it itself
@@ -1771,32 +1740,15 @@ def run_ivfpq_stream(
                     cent1,
                 ).select(F.col("c_id").alias("vec_id"), "cluster")
                 # ONE placement rewrite across all prior generations
-                # (optimization round 12, guide §1.2): same per-gen
-                # cluster-partitioned codes_r twins, one job.
-                (
-                    spark.read.option("basePath", f"{idx}/codes")
-                    .parquet(
-                        *[f"{idx}/codes/gen={g}" for g in range(b)]
-                    )
-                    .select("gen", "vec_id", "code")
-                    .join(moved, "vec_id")
-                    .repartition("gen", "cluster")
-                    .write.mode("overwrite")
-                    .partitionBy("gen", "cluster")
-                    .parquet(f"{idx}/codes_r")
+                # into recoded twins, then the marker
+                write_twins(
+                    spark, f"{idx}/codes", range(b),
+                    lambda df: df.select("gen", "vec_id", "code").join(
+                        moved, "vec_id"
+                    ),
+                    by=("cluster",), suffix="_r",
                 )
-                # empty-generation guard for the folded write: the
-                # serving reads walk codes_r/gen=0..b-1 explicitly
-                # (ADVICE r12)
-                ensure_gen_dirs(
-                    spark, f"{idx}/codes_r", b - 1,
-                    lambda g: spark.read.parquet(
-                        f"{idx}/codes/gen={g}"
-                    )
-                    .select("vec_id", "code")
-                    .join(moved, "vec_id"),
-                )
-                publish_marker(f"{idx}/reclustered_upto", b - 1)
+                publish(idx, "recoded", b - 1)
         # the read-back discipline: every batch (batch 0 included)
         # assigns and encodes against the PUBLISHED artifacts —
         # serving must prove the persisted models anyway; in
@@ -1804,8 +1756,7 @@ def run_ivfpq_stream(
         # routes every batch past the republish boundary
         cent_path = (
             f"{idx}/centroids_g1"
-            if recluster
-            and read_marker(f"{idx}/reclustered_upto") is not None
+            if recluster and marker(idx, "recoded") is not None
             else f"{idx}/centroids"
         )
         cent = spark.read.parquet(cent_path)
@@ -1826,7 +1777,7 @@ def run_ivfpq_stream(
             .parquet(f"{idx}/codes/gen={b}")
         )
         fail_point(fail_at_batch, fail_phase, b, "post_index")
-        if read_marker(f"{idx}/reclustered_upto") is not None:
+        if marker(idx, "recoded") is not None:
             # after the placement republish and this batch's own codes
             fail_point(fail_at_batch, fail_phase, b, "post_recluster")
         if compact_after is not None and b == compact_after:
@@ -1847,111 +1798,21 @@ def run_ivfpq_stream(
 
     cent = spark.read.parquet(f"{idx}/centroids")
     loaded = _pq_books_from_df(spark.read.parquet(f"{idx}/codebooks"))
+    # marker-gated SERVING read: the compacted layout (or its purged
+    # twin), purged or recoded twins for the covered prefix, then the
+    # untouched newer generations
+    m = markers(idx)
+    paths = gen_paths(f"{idx}/codes", N_SIM_BATCHES, **m)
+    if serve_paths_log is not None:
+        serve_paths_log.append(list(paths))
+    coded = read_gens(spark, paths, _ivfpq_coded)
     if recluster:
         # the serving corpus is the drifted one; probes and re-rank
         # must read the re-embedded arrays
         exm = _drifted_corpus(em, cut).localCheckpoint(eager=True)
-        mr = read_marker(f"{idx}/reclustered_upto")
-        if mr is not None:
+        if m["recoded"] is not None:
             cent = spark.read.parquet(f"{idx}/centroids_g1")
-            paths = [
-                f"{idx}/codes_r/gen={g}" for g in range(mr + 1)
-            ] + [
-                f"{idx}/codes/gen={g}"
-                for g in range(mr + 1, N_SIM_BATCHES)
-            ]
-            coded = _ivfpq_coded_from(
-                spark, f"{idx}/codes_r", range(mr + 1)
-            ).unionByName(
-                _ivfpq_coded_from(
-                    spark, f"{idx}/codes", range(mr + 1, N_SIM_BATCHES)
-                )
-            )
-        else:
-            paths = [
-                f"{idx}/codes/gen={g}" for g in range(N_SIM_BATCHES)
-            ]
-            coded = _ivfpq_coded_from(
-                spark, f"{idx}/codes", range(N_SIM_BATCHES)
-            )
-        if serve_paths_log is not None:
-            serve_paths_log.append(list(paths))
         return _ivfpq_serve(spark, exm, cent, loaded, coded)
-    if delete_after is not None:
-        md = read_marker(f"{idx}/takedown_upto")
-        if md is not None and compact_after is not None:
-            paths = [f"{idx}/codes_c_p"] + [
-                f"{idx}/codes_p/gen={g}"
-                for g in range(compact_after + 1, md + 1)
-            ] + [
-                f"{idx}/codes/gen={g}"
-                for g in range(md + 1, N_SIM_BATCHES)
-            ]
-            coded = spark.read.parquet(f"{idx}/codes_c_p").select(
-                "cluster", F.col("vec_id").alias("c_id"), "code"
-            )
-            if compact_after + 1 <= md:
-                coded = coded.unionByName(
-                    _ivfpq_coded_from(
-                        spark, f"{idx}/codes_p",
-                        range(compact_after + 1, md + 1),
-                    )
-                )
-            if md + 1 < N_SIM_BATCHES:
-                coded = coded.unionByName(
-                    _ivfpq_coded_from(
-                        spark, f"{idx}/codes",
-                        range(md + 1, N_SIM_BATCHES),
-                    )
-                )
-        elif md is not None:
-            paths = [
-                f"{idx}/codes_p/gen={g}" for g in range(md + 1)
-            ] + [
-                f"{idx}/codes/gen={g}"
-                for g in range(md + 1, N_SIM_BATCHES)
-            ]
-            coded = _ivfpq_coded_from(
-                spark, f"{idx}/codes_p", range(md + 1)
-            )
-            if md + 1 < N_SIM_BATCHES:
-                coded = coded.unionByName(
-                    _ivfpq_coded_from(
-                        spark, f"{idx}/codes",
-                        range(md + 1, N_SIM_BATCHES),
-                    )
-                )
-        else:
-            paths = [
-                f"{idx}/codes/gen={g}" for g in range(N_SIM_BATCHES)
-            ]
-            coded = _ivfpq_coded_from(
-                spark, f"{idx}/codes", range(N_SIM_BATCHES)
-            )
-        if serve_paths_log is not None:
-            serve_paths_log.append(list(paths))
-        return _ivfpq_serve(spark, em, cent, loaded, coded)
-    m = read_marker(f"{idx}/compacted_upto")
-    if m is not None:
-        paths = [f"{idx}/codes_c"] + [
-            f"{idx}/codes/gen={g}" for g in range(m + 1, N_SIM_BATCHES)
-        ]
-        coded = spark.read.parquet(f"{idx}/codes_c").select(
-            "cluster", F.col("vec_id").alias("c_id"), "code"
-        )
-        if m + 1 < N_SIM_BATCHES:
-            coded = coded.unionByName(
-                _ivfpq_coded_from(
-                    spark, f"{idx}/codes", range(m + 1, N_SIM_BATCHES)
-                )
-            )
-    else:
-        paths = [f"{idx}/codes/gen={g}" for g in range(N_SIM_BATCHES)]
-        coded = _ivfpq_coded_from(
-            spark, f"{idx}/codes", range(N_SIM_BATCHES)
-        )
-    if serve_paths_log is not None:
-        serve_paths_log.append(list(paths))
     return _ivfpq_serve(spark, em, cent, loaded, coded)
 
 
@@ -2075,6 +1936,7 @@ def stream_sim_ivfpq_recluster_e2e(spark, sf_dir):
     covered generation of 8-byte code rows — no re-encode ever; the
     marker swap costs one rename."""
     from ..registry import scratch_dir
+    from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_recluster_e2e")
     log, mon = [], []
@@ -2088,15 +1950,10 @@ def stream_sim_ivfpq_recluster_e2e(spark, sf_dir):
             f" log: {mon}"
         )
     paths = log[-1]
-    moved = [p for p in paths if "/codes_r/gen=" in p]
-    if len(moved) != 1 or not moved[0].endswith("/codes_r/gen=0"):
+    if paths != gen_paths(f"{base}/index/codes", N_SIM_BATCHES, recoded=0):
         raise AssertionError(
             f"post-recluster probe served {paths}; expected the moved"
-            " twin for generation 0 exactly"
-        )
-    if any("/codes/gen=0" in p for p in paths):
-        raise AssertionError(
-            f"probe served the stale placement past the marker: {paths}"
+            " twin for generation 0 exactly, never its stale placement"
         )
     return out
 
@@ -2137,7 +1994,6 @@ def stream_sim_ivfpq_compact_delete_e2e(spark, sf_dir):
     uncovered generation; the audit is one union scan semi-joined
     against O(cohort) broadcast tombstones."""
     from ..registry import scratch_dir
-    from .dedup_stream import _audit_roots_no_tombstoned
     from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_compact_delete_e2e")
@@ -2151,28 +2007,19 @@ def stream_sim_ivfpq_compact_delete_e2e(spark, sf_dir):
     )
     idx = f"{base}/index"
     served = log[-1]
-    if not any(p.endswith("/codes_c_p") for p in served):
-        raise AssertionError(
-            f"takedown did not reach the compacted layout: {served}"
-        )
-    if any(p.endswith("/codes_c") for p in served) or any(
-        "/codes/gen=" in p for p in served
+    # the purged twin of the compacted layout plus the purged
+    # post-compaction generation, and nothing un-purged
+    if served != gen_paths(
+        f"{idx}/codes", N_SIM_BATCHES,
+        compacted=boundary_c, purged=boundary_d,
     ):
         raise AssertionError(
-            f"probe served un-purged artifacts past the marker: {served}"
+            f"takedown did not reach every served artifact: {served}"
         )
-    purged_gens = [p for p in served if "/codes_p/gen=" in p]
-    if purged_gens != [f"{idx}/codes_p/gen={boundary_d}"]:
-        raise AssertionError(
-            f"expected exactly the purged post-compaction generation;"
-            f" served {served}"
-        )
-
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
+    audit_no_tombstoned(
         spark,
-        tomb,
-        (f"{idx}/codes_c_p", f"{idx}/codes_p/gen={boundary_d}"),
+        spark.read.parquet(f"{idx}/tombstones"),
+        served,
         id_col="vec_id",
     )
     return out
@@ -2908,37 +2755,10 @@ def run_pq_recode_stream(
             # the takedown reaches code generations across BOTH
             # codebook eras; purged twins KEEP the cb column so
             # per-era LUT routing survives the purge
-            td = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
-            # ONE filter-rewrite across both codebook eras' covered
-            # generations (optimization round 12, guide §1.2); the
-            # twins keep their cb column exactly as before — gen is a
-            # partition directory in both layouts.
-            (
-                spark.read.option("basePath", f"{idx}/codes")
-                .parquet(*[f"{idx}/codes/gen={g}" for g in range(b + 1)])
-                .filter(~td)
-                .write.mode("overwrite")
-                .partitionBy("gen")
-                .parquet(f"{idx}/codes_p")
+            purge(
+                spark, idx, ("codes",), b,
+                F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES, "vec_id",
             )
-            ensure_gen_dirs(
-                spark, f"{idx}/codes_p", b,
-                lambda g: spark.read.parquet(
-                    f"{idx}/codes/gen={g}"
-                ).filter(~td),
-            )
-            covered = spark.read.parquet(
-                *[f"{idx}/codes/gen={g}" for g in range(b + 1)]
-            )
-            (
-                covered.filter(td)
-                .select("vec_id")
-                .distinct()
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{idx}/tombstones")
-            )
-            publish_marker(f"{idx}/takedown_upto", b)
             fail_point(fail_at_batch, fail_phase, b, "post_takedown")
 
     run_increments(
@@ -2947,25 +2767,11 @@ def run_pq_recode_stream(
         "stream_sim_pq_recode_e2e", 600,
     )
 
-    md = (
-        read_marker(f"{idx}/takedown_upto")
-        if delete_after is not None
-        else None
-    )
-    if md is not None:
-        gens = [
-            f"{idx}/codes_p/gen={b}" for b in range(md + 1)
-        ] + [
-            f"{idx}/codes/gen={b}"
-            for b in range(md + 1, len(bounds))
-            if os.path.exists(f"{idx}/codes/gen={b}")
-        ]
-    else:
-        gens = [
-            f"{idx}/codes/gen={b}"
-            for b in range(len(bounds))
-            if os.path.exists(f"{idx}/codes/gen={b}")
-        ]
+    gens = [
+        p
+        for p in gen_paths(f"{idx}/codes", len(bounds), **markers(idx))
+        if os.path.exists(p)
+    ]
     if serve_paths_log is not None:
         serve_paths_log.append(list(gens))
     codes = spark.read.parquet(*gens)
@@ -3158,7 +2964,6 @@ def stream_sim_pq_recode_delete_e2e(spark, sf_dir):
     import os
 
     from ..registry import scratch_dir
-    from .dedup_stream import _audit_roots_no_tombstoned
 
     base = scratch_dir("stream_sim_pq_recode_delete_e2e")
     log, mon = [], []
@@ -3173,15 +2978,14 @@ def stream_sim_pq_recode_delete_e2e(spark, sf_dir):
         )
     idx = f"{base}/index"
     served = log[-1]
-    if served != [f"{idx}/codes_p/gen={g}" for g in range(3)]:
+    if served != gen_paths(f"{idx}/codes", 3, purged=2):
         raise AssertionError(
             f"post-takedown probe served {served}; expected the purged"
             " twins for every covered generation"
         )
     # era routing survives the purge: the cb-era roots hold exactly
     # the codebook id the strictly-past routing rule assigned
-    for b in range(3):
-        p = f"{idx}/codes_p/gen={b}"
+    for b, p in enumerate(served):
         if not os.path.exists(p):
             raise AssertionError(f"purged twin missing: {p}")
         cbs = {
@@ -3194,11 +2998,10 @@ def stream_sim_pq_recode_delete_e2e(spark, sf_dir):
                 f"purged generation {b} carries codebook ids {cbs};"
                 f" routing demands {want}"
             )
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
+    audit_no_tombstoned(
         spark,
-        tomb,
-        tuple(f"{idx}/codes_p/gen={g}" for g in range(3)),
+        spark.read.parquet(f"{idx}/tombstones"),
+        served,
         id_col="vec_id",
     )
     return out
@@ -3252,10 +3055,6 @@ def stream_sim_ivfpq_delete_e2e(spark, sf_dir):
     import os
 
     from ..registry import scratch_dir
-    from .dedup_stream import (
-        _audit_roots_no_tombstoned,
-        _gc_generations,
-    )
     from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_delete_e2e")
@@ -3263,9 +3062,7 @@ def stream_sim_ivfpq_delete_e2e(spark, sf_dir):
     run_ivfpq_stream(spark, sf_dir, base, delete_after=boundary)
 
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_generations(
-        ckpt, idx, ("codes",), marker_name="takedown_upto"
-    )
+    removed = gc_generations(ckpt, idx)
     if len(removed) != boundary + 1:
         raise AssertionError(
             f"takedown GC removed {removed}, expected original code"
@@ -3280,17 +3077,13 @@ def stream_sim_ivfpq_delete_e2e(spark, sf_dir):
         if not os.path.exists(f"{idx}/{model}"):
             raise AssertionError(f"GC must never touch the {model}")
 
-    tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
+    # completeness: every surviving code shard (purged prefix +
+    # untouched newer generations) is free of tombstoned ids
+    expected = gen_paths(f"{idx}/codes", N_SIM_BATCHES, purged=boundary)
+    audit_no_tombstoned(
         spark,
-        tomb,
-        tuple(
-            f"{idx}/codes_p/gen={g}" for g in range(boundary + 1)
-        )
-        + tuple(
-            f"{idx}/codes/gen={g}"
-            for g in range(boundary + 1, N_SIM_BATCHES)
-        ),
+        spark.read.parquet(f"{idx}/tombstones"),
+        expected,
         id_col="vec_id",
     )
 
@@ -3299,11 +3092,7 @@ def stream_sim_ivfpq_delete_e2e(spark, sf_dir):
         spark, sf_dir, base, delete_after=boundary, serve_paths_log=log
     )
     served = log[-1]
-    covered = [p for p in served if "/codes_p/gen=" in p]
-    if len(covered) != boundary + 1 or any(
-        "/codes/gen=" in p and int(p.rsplit("=", 1)[1]) <= boundary
-        for p in served
-    ):
+    if served != expected:
         raise AssertionError(
             f"post-delete probe served {served}; expected purged twins"
             " for the covered prefix only"

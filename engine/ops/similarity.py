@@ -23,14 +23,20 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inspectio
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import fan_out, register, table
-from ..stream import (
-    ensure_gen_dirs,
-    fail_point,
-    publish_marker,
-    read_marker,
-    run_increments,
+from ..generations import (
+    audit_no_tombstoned,
+    fold,
+    gc_generations,
+    gen_paths,
+    marker,
+    markers,
+    publish,
+    purge,
+    read_gens,
+    write_twins,
 )
+from ..registry import fan_out, register, table
+from ..stream import fail_point, publish_marker, run_increments
 from .dedup import N_INC_BATCHES
 
 N_PROBES = 20  # probe set: vec_id < 20
@@ -1769,7 +1775,7 @@ def sim_index_delete(spark, sf_dir):
     of stream_dedup_delete_e2e (round-8 verdict item 4 named BOTH
     generation indexes): given a takedown cohort, every inverted-list
     generation is rewritten WITHOUT those vectors into purged twins
-    (lists_p/gen=N, cluster-partitioned like the serving layout), a
+    (cluster-partitioned like the serving layout), a
     tombstone table records the deleted ids, and the write-last
     ``takedown_applied`` marker publishes the swap atomically —
     serving probes the purged layout and a deleted vector can never
@@ -1813,15 +1819,9 @@ def sim_index_delete(spark, sf_dir):
 
     # the takedown: purged per-generation twins, tombstones, marker
     td = F.col("c_id") % VEC_TD_MOD == VEC_TD_RES
-    for g in (0, 1):
-        (
-            spark.read.parquet(f"{list_path}/gen={g}")
-            .filter(~td)
-            .repartition("cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(f"{base}/lists_p/gen={g}")
-        )
+    write_twins(
+        spark, list_path, (0, 1), lambda df: df.filter(~td), by=("cluster",)
+    )
     (
         em.filter(F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES)
         .select(F.col("vec_id").alias("c_id"))
@@ -1831,11 +1831,7 @@ def sim_index_delete(spark, sf_dir):
     )
     publish_marker(f"{base}/takedown_applied", 1)
 
-    purged = (
-        spark.read.option("basePath", f"{base}/lists_p")
-        .parquet(f"{base}/lists_p/gen=0", f"{base}/lists_p/gen=1")
-        .drop("gen")
-    )
+    purged = read_gens(spark, gen_paths(list_path, 2, purged=1))
     post = _ivf_probe(spark, sf_dir, cent, purged).localCheckpoint(
         eager=True
     )
@@ -1879,8 +1875,6 @@ def sim_index_compact(spark, sf_dir):
     against DuckDB, not just against the pre-compaction self. File
     shrink is asserted in-op and magnitude-checked in
     tests/test_plans.py."""
-    import os
-
     from ..registry import scratch_dir
 
     em = table(spark, sf_dir, "embeddings")
@@ -1900,30 +1894,17 @@ def sim_index_compact(spark, sf_dir):
         "overwrite"
     ).partitionBy("cluster").parquet(f"{list_path}/gen=1")
 
-    def n_files(path):
-        return sum(
-            1
-            for _r, _d, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    gens = [f"{list_path}/gen=0", f"{list_path}/gen=1"]
-    n_before = n_files(list_path)
-    (
-        spark.read.option("basePath", list_path)
+    gens = gen_paths(list_path, 2)
+    fold(
+        list_path, 1,
+        lambda: spark.read.option("basePath", list_path)
         .parquet(*gens)
         .drop("gen")
         .repartition("cluster")
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(f"{base}/lists_c")
+        .parquet(f"{base}/lists_c"),
     )
-    n_after = n_files(f"{base}/lists_c")
-    if n_after >= n_before:
-        raise AssertionError(
-            f"compaction did not shrink the index: {n_before} -> {n_after}"
-        )
     pre = _ivf_probe(
         spark,
         sf_dir,
@@ -2786,114 +2767,39 @@ def dedup_incremental_semantic(spark, sf_dir):
 N_SIM_BATCHES = 3  # batch 0 = the 80% base build; 1..2 = appended halves
 
 
-def _n_parquet_files(path):
-    import os
-
-    return sum(
-        1
-        for _r, _d, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-
-
 def _compact_cluster_generations(spark, idx, family, upto):
-    """Fold ``{family}/gen=0..upto`` into the ONE cluster-partitioned
-    ``{family}_c`` layout, assert the file shrink, publish the
-    ``compacted_upto`` marker write-last (`publish_marker`).
-    Generation dirs are RETAINED inside the replay horizon — a
-    checkpoint replay of batch ``upto`` must be able to redo this
-    compaction from them. One spelling for the IVF list stream and
-    the composed-index code stream (round-11 review: the two rigs
-    had forked this block verbatim)."""
+    """`generations.fold` of ``{family}/gen=0..upto`` into the ONE
+    cluster-partitioned ``{family}_c`` layout — one spelling for the
+    IVF list stream and the composed-index code stream."""
     root = f"{idx}/{family}"
-    gens = [f"{root}/gen={g}" for g in range(upto + 1)]
-    n_before = sum(_n_parquet_files(g) for g in gens)
-    (
-        spark.read.option("basePath", root)
-        .parquet(*gens)
+    fold(
+        root, upto,
+        lambda: spark.read.option("basePath", root)
+        .parquet(*gen_paths(root, upto + 1))
         .drop("gen")
         .repartition("cluster")
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(f"{root}_c")
+        .parquet(f"{root}_c"),
+        idx=idx,
     )
-    n_after = _n_parquet_files(f"{root}_c")
-    if n_after >= n_before:
-        raise AssertionError(
-            f"mid-stream {family} compaction did not shrink:"
-            f" {n_before} -> {n_after}"
-        )
-    publish_marker(f"{idx}/compacted_upto", upto)
 
 
 def _apply_cluster_takedown(spark, idx, family, upto, id_col,
                             compact_upto=None):
-    """Rewrite every covered source WITHOUT the takedown cohort as
-    cluster-partitioned purged twins, write tombstones (the
-    ``id_col`` ids), publish the ``takedown_upto`` marker LAST
-    (atomic). With ``compact_upto=None`` the covered sources are
-    ``{family}/gen=0..upto`` (twins land in ``{family}_p/gen=g``);
-    with ``compact_upto=k`` generations 0..k have already folded into
-    the ONE compacted layout ``{family}_c``, so the takedown must
-    reach the COMPACTED artifact — it rewrites ``{family}_c`` into
-    its purged twin ``{family}_c_p`` plus each post-compaction
-    generation into ``{family}_p/gen=g``. All rewrites are
-    filter-rewrites riding the partition-pruned scans. Originals stay
-    inside the replay horizon — a replayed boundary batch redoes this
-    as deterministic overwrites; the ANN streams' read side is
-    serving-only, so the swap is purely a marker-gated serving
-    decision. ONE spelling for the IVF list stream, the composed-code
-    stream, and its compacted form (round-11 + round-12 reviews —
-    the purge/tombstone/marker sequence must not fork)."""
-    root = f"{idx}/{family}"
-    td = F.col(id_col) % VEC_TD_MOD == VEC_TD_RES
-    first_gen = 0 if compact_upto is None else compact_upto + 1
-    covered = None
-    if compact_upto is not None:
-        dfc = spark.read.parquet(f"{root}_c")
-        (
-            dfc.filter(~td)
-            .repartition("cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(f"{root}_c_p")
-        )
-        covered = dfc.select(id_col)
-    gen_paths = [f"{root}/gen={g}" for g in range(first_gen, upto + 1)]
-    if gen_paths:
-        # ONE filter-rewrite over all covered generations instead of
-        # one per generation (optimization round 12, guide §1.2): the
-        # basePath read carries gen as a partition column and the
-        # partitionBy("gen", "cluster") write lands the same per-
-        # generation cluster-partitioned twin dirs the loop produced.
-        dfg = spark.read.option("basePath", root).parquet(*gen_paths)
-        (
-            dfg.filter(~td)
-            .repartition("gen", "cluster")
-            .write.mode("overwrite")
-            .partitionBy("gen", "cluster")
-            .parquet(f"{root}_p")
-        )
-        # empty-generation guard for the folded write: downstream
-        # serving walks {root}_p/gen=g explicitly (ADVICE r12)
-        ensure_gen_dirs(
-            spark, f"{root}_p", upto,
-            lambda g: spark.read.parquet(f"{root}/gen={g}").filter(
-                ~td
-            ),
-            start=first_gen,
-        )
-        ids = dfg.select(id_col)
-        covered = ids if covered is None else covered.unionByName(ids)
-    (
-        covered.filter(td)
-        .distinct()
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{idx}/tombstones")
+    """`generations.purge` of a cluster-partitioned family: every
+    covered generation (and, with ``compact_upto``, the compacted
+    layout) is rewritten WITHOUT the vector takedown cohort into
+    cluster-partitioned purged twins, tombstones record the
+    ``id_col`` ids, and ``takedown_upto`` publishes LAST. The ANN
+    streams' read side is serving-only, so the swap is purely a
+    marker-gated serving decision. One spelling for the IVF list
+    stream, the composed-code stream and its compacted form."""
+    purge(
+        spark, idx, (family,), upto,
+        F.col(id_col) % VEC_TD_MOD == VEC_TD_RES, id_col,
+        by=("cluster",), compact_upto=compact_upto,
     )
-    publish_marker(f"{idx}/takedown_upto", upto)
 
 
 def run_sim_index_stream(
@@ -2917,8 +2823,6 @@ def run_sim_index_stream(
     its generation and redoes the compaction as deterministic
     overwrites, which the boundary-restart test pins byte-equal.
     ``serve_paths_log`` records the list paths the final probe read."""
-    import os
-
     from .dedup_stream import _feed_key, _stage_feed
 
     em = table(spark, sf_dir, "embeddings")
@@ -2987,54 +2891,14 @@ def run_sim_index_stream(
         "stream_sim_index_e2e", 600,
     )
 
-    # marker-gated SERVING read: the compacted layout plus only the
-    # generations strictly past the compaction boundary — or, in
-    # delete mode, the purged twins for the covered prefix plus the
-    # untouched newer generations
+    # marker-gated SERVING read: the compacted layout, or in delete
+    # mode the purged twins, for the covered prefix plus the untouched
+    # newer generations
     cent = spark.read.parquet(cent_path)
-    if delete_after is not None:
-        md = read_marker(f"{idx}/takedown_upto")
-        if md is not None:
-            paths = [f"{idx}/lists_p/gen={g}" for g in range(md + 1)] + [
-                f"{list_path}/gen={g}"
-                for g in range(md + 1, N_SIM_BATCHES)
-            ]
-            inv = None
-            for p in paths:
-                part = spark.read.parquet(p)
-                inv = part if inv is None else inv.unionByName(part)
-        else:
-            paths = [
-                f"{list_path}/gen={g}" for g in range(N_SIM_BATCHES)
-            ]
-            inv = (
-                spark.read.option("basePath", list_path)
-                .parquet(*paths)
-                .drop("gen")
-            )
-        if serve_paths_log is not None:
-            serve_paths_log.append(list(paths))
-        return _ivf_probe(spark, sf_dir, cent, inv)
-    m = read_marker(f"{idx}/compacted_upto")
-    if m is not None:
-        paths = [f"{idx}/lists_c"] + [
-            f"{list_path}/gen={g}" for g in range(m + 1, N_SIM_BATCHES)
-        ]
-        inv = spark.read.parquet(f"{idx}/lists_c")
-        for g in range(m + 1, N_SIM_BATCHES):
-            inv = inv.unionByName(
-                spark.read.parquet(f"{list_path}/gen={g}")
-            )
-    else:
-        paths = [f"{list_path}/gen={g}" for g in range(N_SIM_BATCHES)]
-        inv = (
-            spark.read.option("basePath", list_path)
-            .parquet(*paths)
-            .drop("gen")
-        )
+    paths = gen_paths(list_path, N_SIM_BATCHES, **markers(idx))
     if serve_paths_log is not None:
         serve_paths_log.append(list(paths))
-    return _ivf_probe(spark, sf_dir, cent, inv)
+    return _ivf_probe(spark, sf_dir, cent, read_gens(spark, paths))
 
 
 @register("stream_sim_index_e2e", oracle=IVF_APPEND_SQL)
@@ -3199,7 +3063,6 @@ def run_sim_recluster_stream(
     ex = _drifted_corpus(em, append_cut)
 
     src, ckpt, idx = f"{base}/src", f"{base}/ckpt", f"{base}/index"
-    marker = f"{idx}/reclustered_upto"
     phase_of = {1: "0_stale_validation", 2: "0_stale_append",
                 3: "1_fresh_post"}
 
@@ -3232,8 +3095,7 @@ def run_sim_recluster_stream(
                 f"{idx}/lists/gen=0"
             )
         else:
-            m = read_marker(marker)
-            gen = 1 if (m is not None and m < b) else 0
+            gen = 0 if marker(idx, "recoded", b) is None else 1
             if codebook_log is not None:
                 codebook_log.append((b, gen))
             cent = spark.read.parquet(f"{idx}/centroids/gen={gen}")
@@ -3271,7 +3133,7 @@ def run_sim_recluster_stream(
             )
             refined, _lists = _ivf_build_from(arrived)
             refined.write.mode("overwrite").parquet(f"{idx}/centroids/gen=1")
-            publish_marker(marker, b)
+            publish(idx, "recoded", b)
             fail_point(fail_at_batch, fail_phase, b, "post_recluster")
 
     run_increments(
@@ -3386,17 +3248,6 @@ def stream_sim_recluster_e2e(spark, sf_dir):
     return out
 
 
-def _gc_list_generations(ckpt, idx):
-    """The ANN twin of dedup_stream's generation GC — the marker +
-    commit-watermark safety rule lives ONCE in `_gc_generations`
-    (review finding: this was a verbatim fork); only the family
-    differs. Centroids are never GC'd: the codebook is generation
-    state in its own right, not a rewrite of the lists."""
-    from .dedup_stream import _gc_generations
-
-    return _gc_generations(ckpt, idx, ("lists",))
-
-
 @register("stream_sim_gc_e2e", oracle=IVF_APPEND_SQL)
 def stream_sim_gc_e2e(spark, sf_dir):
     """Generation GC for the ANN index, gated on the checkpoint
@@ -3423,7 +3274,7 @@ def stream_sim_gc_e2e(spark, sf_dir):
     run_sim_index_stream(spark, sf_dir, base, compact_after=boundary)
 
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_list_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     if len(removed) != boundary + 1:
         raise AssertionError(
             f"GC removed {removed}, expected list generations"
@@ -3491,16 +3342,13 @@ def stream_sim_delete_e2e(spark, sf_dir):
     import os
 
     from ..registry import scratch_dir
-    from .dedup_stream import _gc_generations
 
     base = scratch_dir("stream_sim_delete_e2e")
     boundary = N_SIM_BATCHES - 2
     run_sim_index_stream(spark, sf_dir, base, delete_after=boundary)
 
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    removed = _gc_generations(
-        ckpt, idx, ("lists",), marker_name="takedown_upto"
-    )
+    removed = gc_generations(ckpt, idx)
     if len(removed) != boundary + 1:
         raise AssertionError(
             f"takedown GC removed {removed}, expected original list"
@@ -3515,9 +3363,12 @@ def stream_sim_delete_e2e(spark, sf_dir):
         raise AssertionError("GC must never touch the codebook")
 
     # completeness: no surviving list shard holds a tombstoned id
-    from .dedup_stream import _audit_no_tombstoned
-
-    _audit_no_tombstoned(spark, idx, ("lists", "lists_p"), id_col="c_id")
+    audit_no_tombstoned(
+        spark,
+        spark.read.parquet(f"{idx}/tombstones"),
+        (f"{idx}/lists", f"{idx}/lists_p"),
+        id_col="c_id",
+    )
 
     # restart on the gutted index: committed no-op; serving reads the
     # purged prefix + untouched newer generations (asserted from the
@@ -3527,12 +3378,7 @@ def stream_sim_delete_e2e(spark, sf_dir):
         spark, sf_dir, base, delete_after=boundary, serve_paths_log=log
     )
     served = log[-1]
-    assert_covered = [p for p in served if "/lists_p/gen=" in p]
-    if len(assert_covered) != boundary + 1 or any(
-        "/lists/gen=" in p
-        and int(p.rsplit("=", 1)[1]) <= boundary
-        for p in served
-    ):
+    if served != gen_paths(f"{idx}/lists", N_SIM_BATCHES, purged=boundary):
         raise AssertionError(
             f"post-delete probe served {served}; expected purged twins"
             " for the covered prefix only"

@@ -17,7 +17,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import register, shared_artifact, table
-from ..stream import fail_point, publish_marker, read_marker, run_increments
+from ..generations import (
+    audit_no_tombstoned,
+    fold,
+    gen_paths,
+    markers,
+    read_gens,
+)
+from ..stream import fail_point, publish_marker, run_increments
 
 SPAN_K = 8  # span length in tokens — the "memorized boilerplate" unit
 
@@ -976,7 +983,7 @@ def dedup_sa_takedown(spark, sf_dir):
     ``anchors_p`` twins (one filter-rewrite each — the filter rides
     the scan, no shuffle), a tombstone table, and the write-last
     ``takedown_applied`` marker; the completeness audit
-    (`_audit_roots_no_tombstoned`) walks the published twin roots, and
+    (`audit_no_tombstoned`) walks the published twin roots, and
     span serving runs EXCLUSIVELY off the twins. Scope note (the
     round-9 ADVICE discipline): the original full-corpus artifact
     remains the serving copy for the full corpus, whose other
@@ -1009,7 +1016,6 @@ def dedup_sa_takedown(spark, sf_dir):
     from .dedup import N_INC_BATCHES
     from .dedup_stream import (
         TD_AFTER,
-        _audit_roots_no_tombstoned,
         _takedown_pred,
     )
 
@@ -1033,7 +1039,7 @@ def dedup_sa_takedown(spark, sf_dir):
     tomb = spark.read.parquet(f"{base}/tombstones")
     if tomb.limit(1).count() == 0:
         raise AssertionError("takedown cohort is empty — fixture degenerate")
-    _audit_roots_no_tombstoned(
+    audit_no_tombstoned(
         spark, tomb, (f"{base}/array_p", f"{base}/anchors_p")
     )
     return spans
@@ -1108,9 +1114,7 @@ def _spancov_inc_sql():
     """
 
 
-def _span_cov_process_batch(
-    spark, batch_docs, base, b, read_spans=None, read_log=None
-):
+def _span_cov_process_batch(spark, batch_docs, base, b, read_log=None):
     """Process ONE ingest increment of the incremental span-coverage
     pipeline: write the batch's anchor rows as generation ``b``
     (deterministic overwrite = the replay unit, exactly the LSH-index
@@ -1120,11 +1124,10 @@ def _span_cov_process_batch(
     persisted distinct-span index, never a corpus rerun. Island-merge
     and coverage are the shared dedup_span_coverage machinery.
     ``batch_docs``: (doc_id, a, n_tokens, batch_id) for this batch.
-    ``read_spans``: optional ``(spark, b) -> DataFrame[span]`` hook
-    overriding how generations 0..b-1's distinct spans load — the
-    streaming form serves reads from the compacted layout through it
-    (marker-gated); default reads the per-generation directories.
-    ``read_log`` records the span paths the default reader touched."""
+    Generations 0..b-1's distinct spans are read under the
+    strictly-past markers (`generations.markers`): past a mid-stream
+    compaction from ``spans_c`` plus the newer generations.
+    ``read_log`` records the span paths each batch read."""
     sp = (
         batch_docs.filter(F.col("n_tokens") >= SPAN_K)
         .select(
@@ -1150,14 +1153,14 @@ def _span_cov_process_batch(
         .select("span")
     )
     if b > 0:
-        if read_spans is not None:
-            idx = read_spans(spark, b)
-        else:
-            paths = [f"{base}/anchors/gen={g}" for g in range(b)]
-            if read_log is not None:
-                read_log.append((b, list(paths)))
-            idx = spark.read.parquet(*paths).select("span").distinct()
-        dupset = within.unionByName(idx).distinct()
+        paths = gen_paths(
+            f"{base}/anchors", b, folded=f"{base}/spans_c",
+            **markers(base, b),
+        )
+        if read_log is not None:
+            read_log.append((b, paths))
+        idx = read_gens(spark, paths, lambda df: df.select("span"))
+        dupset = within.unionByName(idx.distinct()).distinct()
     else:
         dupset = within
     hits = sp.join(dupset.hint("shuffle_hash"), "span", "left_semi").select(
@@ -1249,14 +1252,9 @@ def _compact_span_index(spark, base, upto):
     long-running stream. Old generations are retained for the replay
     horizon (the compaction-GC rule); the file-count shrink is
     asserted."""
-    import os
-
-    gens = [f"{base}/anchors/gen={g}" for g in range(upto + 1)]
-    n_before = sum(
-        1 for p in gens for f in os.listdir(p) if f.endswith(".parquet")
-    )
-    (
-        spark.read.parquet(*gens)
+    fold(
+        f"{base}/anchors", upto,
+        lambda: spark.read.parquet(*gen_paths(f"{base}/anchors", upto + 1))
         .select("span")
         .distinct()
         # one file here: the distinct-span table is a fraction of the
@@ -1264,18 +1262,10 @@ def _compact_span_index(spark, base, upto):
         # on span (the _purge_sink sharding rule)
         .repartition(1, "span")
         .write.mode("overwrite")
-        .parquet(f"{base}/spans_c")
+        .parquet(f"{base}/spans_c"),
+        idx=base,
+        folded=f"{base}/spans_c",
     )
-    n_after = sum(
-        1
-        for f in os.listdir(f"{base}/spans_c")
-        if f.endswith(".parquet")
-    )
-    if n_after >= n_before:
-        raise AssertionError(
-            f"span-index compaction did not shrink: {n_before} -> {n_after}"
-        )
-    publish_marker(f"{base}/compacted_upto", upto)
 
 
 def run_spancov_stream(
@@ -1289,10 +1279,10 @@ def run_spancov_stream(
     state, a per-generation idempotent parquet sink.
     ``compact_after=k`` folds generations 0..k's distinct spans into
     ``spans_c`` at the end of increment k; later increments read the
-    compacted table + strictly-newer generations through the
-    marker-gated hook (a replayed boundary batch stays on the
-    per-generation view). ``fail_at_batch`` raises AFTER the anchor
-    generation write, BEFORE the sink write — the torn state."""
+    compacted table + strictly-newer generations (a replayed
+    boundary batch stays on the per-generation view).
+    ``fail_at_batch`` raises AFTER the anchor generation write, BEFORE
+    the sink write — the torn state."""
     import os
 
     from .dedup import N_INC_BATCHES
@@ -1308,34 +1298,6 @@ def run_spancov_stream(
         feed_key=_feed_key(sf_dir, "lsh"),
     )
 
-    def read_spans(spark_, b):
-        m = read_marker(f"{base}/compacted_upto")
-        if (
-            m is not None
-            and m < b
-            and os.path.exists(f"{base}/spans_c")
-        ):
-            paths = [f"{base}/spans_c"] + [
-                f"{base}/anchors/gen={g}" for g in range(m + 1, b)
-            ]
-            frames = [spark_.read.parquet(f"{base}/spans_c")] + [
-                spark_.read.parquet(f"{base}/anchors/gen={g}").select(
-                    "span"
-                )
-                for g in range(m + 1, b)
-            ]
-        else:
-            paths = [f"{base}/anchors/gen={g}" for g in range(b)]
-            frames = [
-                spark_.read.parquet(*paths).select("span")
-            ] if paths else []
-        if read_log is not None:
-            read_log.append((b, paths))
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out.distinct()
-
     def process(batch_df, b):
         docs = (
             batch_df.select("doc_id", F.split("text", " ").alias("a"))
@@ -1343,7 +1305,7 @@ def run_spancov_stream(
             .withColumn("batch_id", F.lit(b).cast("long"))
         )
         out = _span_cov_process_batch(
-            spark, docs, base, b, read_spans=read_spans
+            spark, docs, base, b, read_log=read_log
         )
         fail_point(fail_at_batch, "pre_sink", b, "pre_sink")
         out.drop("batch_id").coalesce(1).write.mode("overwrite").parquet(

@@ -15,17 +15,8 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
-def _shuffle_partitions() -> str:
-    """Default shuffle-partition count, derived from the core budget
-    (scale-adaptive posture: AQE re-sizes real workloads at runtime;
-    this is only the upper bound / state-store partition count for the
-    toy scale factors). Overridable via ENGINE_SHUFFLE_PARTITIONS for
-    cluster deployments where cores-per-host is the wrong basis."""
-    override = os.environ.get("ENGINE_SHUFFLE_PARTITIONS")
-    if override:
-        return override
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
-    return str(min(32, cpus * 2))
+# The core budget: SPARK_GRAFT_CPUS, else every core of the host.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
 
 
 # Runtime confs every query relies on; applied defensively to
@@ -34,7 +25,10 @@ def _shuffle_partitions() -> str:
 # stateful stream op with the 200-partition default).
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.shuffle.partitions": _shuffle_partitions(),
+    # derived from the core budget (scale-adaptive posture: AQE
+    # re-sizes real workloads at runtime; this is only the upper bound
+    # / state-store partition count for the toy scale factors)
+    "spark.sql.shuffle.partitions": str(min(32, CPUS * 2)),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -93,13 +87,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_session(app_name: str = "engine", cpus: int | None = None) -> SparkSession:
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
+def get_session(app_name: str = "engine") -> SparkSession:
     b = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(min(32, cpus * 2)))
+        .master(f"local[{CPUS}]")
         .config("spark.driver.memory", os.environ.get("ENGINE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")

@@ -12,8 +12,11 @@ spelled once for every checkpointed rig in ``engine/ops``.
   covers, so its presence implies them.
 - `fail_point` is the test hook that kills a rig in a torn state
   (artifacts written, checkpoint not yet committed).
-- `batch_fan` and `ensure_gen_dirs` size a micro-batch's compute and
-  keep per-generation twin layouts readable.
+- `batch_fan` sizes a micro-batch's compute.
+
+The generation layout those writes build (``gen=g`` dirs, compacted
+and purged or recoded twins, the strictly-past read and the GC) lives
+in ``engine/generations.py``.
 """
 
 from __future__ import annotations
@@ -132,52 +135,3 @@ def batch_fan(df):
         return target
     return max(4, min(target, -(-n_bytes // (512 * 1024))))
 
-
-def _gen_nesting(root):
-    """The partition directories below the first ``gen=*`` dir of
-    ``root`` as ``[(column, first value), …]``; empty for a flat
-    layout or a root with no generation yet."""
-    if not os.path.isdir(root):
-        return []
-    gens = sorted(d for d in os.listdir(root) if d.startswith("gen="))
-    if not gens:
-        return []
-    nest, d = [], os.path.join(root, gens[0])
-    while True:
-        subs = sorted(
-            s for s in os.listdir(d)
-            if "=" in s and os.path.isdir(os.path.join(d, s))
-        )
-        if not subs:
-            return nest
-        col, val = subs[0].split("=", 1)
-        nest.append((col, val))
-        d = os.path.join(d, subs[0])
-
-
-def ensure_gen_dirs(spark, dst_root, upto, builder, start=0):
-    """Structural guard for folded partitionBy("gen", …) twin writes: a
-    partitioned write SKIPS empty partitions, so a covered generation
-    whose rows are all filtered away would leave ``dst_root/gen=g``
-    missing where the old per-generation loop wrote an empty (but
-    readable) directory. Materialize each missing covered dir from
-    ``builder(g)`` — which is empty, since the write skipped it — at
-    the nesting of its sibling generations: under a root partitioned
-    by ("gen", "cluster") the twin is one empty ``cluster=<v>`` leaf,
-    because a flat ``gen=g`` beside nested siblings makes Spark's
-    partition discovery fail on the mixed leaf depths. Never fires on
-    the bench fixtures (every generation keeps survivors)."""
-    missing = [
-        g for g in range(start, upto + 1)
-        if not os.path.isdir(f"{dst_root}/gen={g}")
-    ]
-    if not missing:
-        return
-    nest = _gen_nesting(dst_root)
-    for g in missing:
-        leaf = "/".join(
-            [f"{dst_root}/gen={g}"] + [f"{c}={v}" for c, v in nest]
-        )
-        builder(g).drop(*(c for c, _ in nest)).write.mode(
-            "overwrite"
-        ).parquet(leaf)

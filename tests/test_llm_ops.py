@@ -1235,11 +1235,8 @@ def test_sa_takedown_purges_artifact_and_audit_catches_plants(spark):
 
     import pytest
 
-    from engine.ops.dedup_stream import (
-        TD_MOD,
-        TD_RES,
-        _audit_roots_no_tombstoned,
-    )
+    from engine.generations import audit_no_tombstoned
+    from engine.ops.dedup_stream import TD_MOD, TD_RES
     from engine.registry import scratch_root
 
     out = engine.QUERIES["dedup_sa_takedown"](spark, T2_SF_DIR)
@@ -1264,7 +1261,7 @@ def test_sa_takedown_purges_artifact_and_audit_catches_plants(spark):
         "doc_id bigint, pos int, anchor string",
     ).write.mode("append").parquet(f"{base}/anchors_p")
     with pytest.raises(AssertionError, match="still holds a tombstoned"):
-        _audit_roots_no_tombstoned(
+        audit_no_tombstoned(
             spark, tomb, (f"{base}/array_p", f"{base}/anchors_p")
         )
 

@@ -1,6 +1,7 @@
 """engine/stream.py: the one stream runner every checkpointed rig in
 engine/ops uses (availableNow drain, data-derived batch id, write-last
-marker, fault points, empty-generation twins)."""
+marker, fault points), plus the empty-generation twins its rigs'
+folded writes rely on (engine/generations.ensure_gen_dirs)."""
 
 from __future__ import annotations
 
@@ -100,7 +101,7 @@ def test_ensure_gen_dirs_matches_a_cluster_nested_layout(spark, tmp_path):
     read) still discovers one consistent partition layout."""
     from pyspark.sql import functions as F
 
-    from engine.stream import ensure_gen_dirs
+    from engine.generations import ensure_gen_dirs
 
     orig = str(tmp_path / "codes")
     twin = str(tmp_path / "codes_p")
@@ -141,7 +142,7 @@ def test_ensure_gen_dirs_matches_a_cluster_nested_layout(spark, tmp_path):
 def test_ensure_gen_dirs_keeps_a_flat_layout_flat(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from engine.stream import ensure_gen_dirs
+    from engine.generations import ensure_gen_dirs
 
     twin = str(tmp_path / "bands_p")
     spark.range(0, 10).select(

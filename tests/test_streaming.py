@@ -1594,11 +1594,9 @@ def test_gc_refuses_inside_replay_horizon(spark, tmp_path):
     second restart on the gutted index is a committed no-op."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    from engine.generations import gc_generations
     from engine.ops.dedup import N_INC_BATCHES
-    from engine.ops.dedup_stream import (
-        _gc_index_generations,
-        run_inc_lsh_stream,
-    )
+    from engine.ops.dedup_stream import run_inc_lsh_stream
     from engine.registry import QUERIES
 
     base = str(tmp_path / "gc")
@@ -1614,13 +1612,13 @@ def test_gc_refuses_inside_replay_horizon(spark, tmp_path):
     # torn state: marker on disk, boundary batch uncommitted → refuse,
     # naming the replayable batch
     with pytest.raises(ValueError, match=rf"\[{boundary}\].*replay"):
-        _gc_index_generations(ckpt, idx)
+        gc_generations(ckpt, idx)
     assert os.path.exists(f"{idx}/bands/gen={boundary}")
 
     out = run_inc_lsh_stream(
         spark, SMOKE_SF_DIR, base, compact_after=boundary
     )
-    removed = _gc_index_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     assert len(removed) == 2 * (boundary + 1)
     assert not os.path.exists(f"{idx}/bands/gen={boundary}")
 
@@ -1723,11 +1721,9 @@ def test_gc_partial_delete_recovery(spark, tmp_path):
     watermark rule, so nothing ever reads them."""
     import shutil
 
+    from engine.generations import gc_generations
     from engine.ops.dedup import LSH_BUCKET_CAP, N_INC_BATCHES
-    from engine.ops.dedup_stream import (
-        _gc_index_generations,
-        run_inc_lsh_stream,
-    )
+    from engine.ops.dedup_stream import run_inc_lsh_stream
     from engine.registry import QUERIES
 
     base = str(tmp_path / "gc_partial")
@@ -1745,7 +1741,7 @@ def test_gc_partial_delete_recovery(spark, tmp_path):
     for fam in ("bands", "shingles", "counts"):
         shutil.rmtree(f"{idx}/{fam}/gen=0")
 
-    removed = _gc_index_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     assert len(removed) == 3 * boundary  # gens 1..boundary, 3 families
     for g in range(boundary + 1):
         assert not os.path.exists(f"{idx}/bands/gen={g}")
@@ -1807,10 +1803,10 @@ def test_takedown_boundary_restart(spark, tmp_path):
     assert os.path.exists(f"{idx}/bands/gen={TD_AFTER}")  # originals kept
     # the takedown-completion GC must REFUSE in this torn state: the
     # boundary batch is still replayable and needs the originals
-    from engine.ops.dedup_stream import _gc_takedown_originals
+    from engine.generations import gc_generations
 
     with pytest.raises(ValueError, match=rf"\[{TD_AFTER}\].*replay"):
-        _gc_takedown_originals(f"{base}/ckpt", idx)
+        gc_generations(f"{base}/ckpt", idx)
     assert os.path.exists(f"{idx}/bands/gen={TD_AFTER}")
 
     log = []
@@ -1916,11 +1912,8 @@ def test_sim_gc_refuses_inside_replay_horizon(spark, tmp_path):
     survives, and the probe still matches the batch append op."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from engine.ops.similarity import (
-        N_SIM_BATCHES,
-        _gc_list_generations,
-        run_sim_index_stream,
-    )
+    from engine.generations import gc_generations
+    from engine.ops.similarity import N_SIM_BATCHES, run_sim_index_stream
     from engine.registry import QUERIES
 
     base = str(tmp_path / "sim_gc")
@@ -1934,13 +1927,13 @@ def test_sim_gc_refuses_inside_replay_horizon(spark, tmp_path):
         )
 
     with pytest.raises(ValueError, match=rf"\[{boundary}\].*replay"):
-        _gc_list_generations(ckpt, idx)
+        gc_generations(ckpt, idx)
     assert os.path.exists(f"{idx}/lists/gen={boundary}")
 
     out = run_sim_index_stream(
         spark, SMOKE_SF_DIR, base, compact_after=boundary
     )
-    removed = _gc_list_generations(ckpt, idx)
+    removed = gc_generations(ckpt, idx)
     assert len(removed) == boundary + 1
     assert os.path.exists(f"{idx}/centroids")
 
@@ -2215,7 +2208,7 @@ def test_committed_src_batches_reads_compacted_metadata(tmp_path):
     stream past the compact interval (review finding, round 8)."""
     import json
 
-    from engine.ops.dedup_stream import _committed_src_batches
+    from engine.generations import committed_src_batches
 
     ckpt = tmp_path / "ckpt"
     (ckpt / "commits").mkdir(parents=True)
@@ -2241,7 +2234,7 @@ def test_committed_src_batches_reads_compacted_metadata(tmp_path):
     # epoch 11 admitted (offsets) but never committed: no commit file
     (ckpt / "sources" / "0" / "11").write_text("v1\n" + entry(11))
 
-    got = _committed_src_batches(str(ckpt))
+    got = committed_src_batches(str(ckpt))
     assert got == set(range(11)), got  # 0..10 committed, 11 excluded
 
 
@@ -2292,10 +2285,10 @@ def test_capped_delete_purges_counts_in_both_rigs(spark, tmp_path):
 
 
 def test_takedown_audit_refuses_empty_families(spark, tmp_path):
-    """_audit_no_tombstoned with zero surviving generation shards
+    """audit_no_tombstoned with zero surviving generation shards
     (e.g. every family GC'd, or a mistyped family list) must refuse
     with a meaningful error, not die on NoneType (ADVICE r9)."""
-    from engine.ops.dedup_stream import _audit_no_tombstoned
+    from engine.generations import audit_no_tombstoned
 
     idx = tmp_path / "idx"
     idx.mkdir()
@@ -2303,7 +2296,11 @@ def test_takedown_audit_refuses_empty_families(spark, tmp_path):
         str(idx / "tombstones")
     )
     with pytest.raises(AssertionError, match="nothing to audit"):
-        _audit_no_tombstoned(spark, str(idx), ("bands", "no_such_family"))
+        audit_no_tombstoned(
+            spark,
+            spark.read.parquet(str(idx / "tombstones")),
+            (str(idx / "bands"), str(idx / "no_such_family")),
+        )
 
 
 def test_purge_sink_shards_oversized_partition(spark, tmp_path):
@@ -2377,12 +2374,11 @@ def test_feed_purge_and_content_roots_audit(spark, tmp_path):
     roots. A planted file holding a taken-down doc under an audited
     root must make the audit raise; the purged feed must not disturb a
     checkpoint restart (same paths, same mtimes, nothing replayed)."""
+    from engine.generations import audit_no_tombstoned, gc_generations
     from engine.ops.dedup_stream import (
         TD_AFTER,
         TD_MOD,
         TD_RES,
-        _audit_roots_no_tombstoned,
-        _gc_takedown_originals,
         _purge_feed,
         run_inc_lsh_stream,
     )
@@ -2393,7 +2389,7 @@ def test_feed_purge_and_content_roots_audit(spark, tmp_path):
     )
     rows1 = {tuple(r) for r in out1.collect()}
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
-    _gc_takedown_originals(ckpt, idx)
+    gc_generations(ckpt, idx)
     mtimes = {
         g: os.stat(f"{base}/src/batch_{g}.parquet").st_mtime
         for g in range(TD_AFTER + 1)
@@ -2411,7 +2407,7 @@ def test_feed_purge_and_content_roots_audit(spark, tmp_path):
     assert not os.path.exists(f"{base}/stage")
 
     tomb = spark.read.parquet(f"{idx}/tombstones")
-    _audit_roots_no_tombstoned(
+    audit_no_tombstoned(
         spark, tomb, (f"{base}/src", f"{base}/sink")
     )
 
@@ -2428,14 +2424,14 @@ def test_feed_purge_and_content_roots_audit(spark, tmp_path):
         "doc_id bigint, text string",
     ).write.parquet(f"{base}/src/planted.parquet")
     with pytest.raises(AssertionError, match="still holds a tombstoned"):
-        _audit_roots_no_tombstoned(
+        audit_no_tombstoned(
             spark, tomb, (f"{base}/src", f"{base}/sink")
         )
     # a root that exists but holds nothing readable must refuse too
     empty = tmp_path / "empty_root"
     empty.mkdir()
     with pytest.raises(AssertionError, match="no parquet"):
-        _audit_roots_no_tombstoned(spark, tomb, (str(empty),))
+        audit_no_tombstoned(spark, tomb, (str(empty),))
 
 
 def test_neardup_guard_boundary_restart(spark, tmp_path):
