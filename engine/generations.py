@@ -62,6 +62,12 @@ def publish(idx, kind, upto):
     publish_marker(f"{idx}/{MARKERS[kind][0]}", upto)
 
 
+def twin(root, kind):
+    """The replacement root of ``root`` for marker ``kind``:
+    ``<root>_c``, ``<root>_p`` or ``<root>_r``."""
+    return root + MARKERS[kind][1]
+
+
 def gen_paths(root, n, compacted=None, purged=None, recoded=None,
               folded=None):
     """The ordered read of ``root``'s generations ``0..n-1``: the
@@ -70,14 +76,45 @@ def gen_paths(root, n, compacted=None, purged=None, recoded=None,
     purged or recoded twins, then the raw generations."""
     paths, g = [], 0
     if compacted is not None:
-        c = folded or f"{root}_c"
-        paths.append(f"{c}_p" if purged is not None else c)
+        c = folded or twin(root, "compacted")
+        paths.append(twin(c, "purged") if purged is not None else c)
         g = compacted + 1
-    for suffix, m in (("_p", purged), ("_r", recoded)):
+    for kind, m in (("purged", purged), ("recoded", recoded)):
         if m is not None:
-            paths += [f"{root}{suffix}/gen={i}" for i in range(g, m + 1)]
+            paths += [f"{twin(root, kind)}/gen={i}" for i in range(g, m + 1)]
             g = max(g, m + 1)
     return paths + [f"{root}/gen={i}" for i in range(g, n)]
+
+
+def stale_reads(paths, root, upto):
+    """The raw generations ``<root>/gen=g`` with ``g <= upto`` among
+    ``paths``: reads a published replacement must have displaced. It
+    parses the recorded paths alone, so a check built on it does not
+    lean on `gen_paths`."""
+    pre = f"{root}/gen="
+    return [
+        p for p in paths
+        if p.startswith(pre) and int(p[len(pre):].split("/")[0]) <= upto
+    ]
+
+
+def content_roots(idx, *families):
+    """The roots holding ``families``' content under ``idx``, for a
+    takedown audit: each original that still holds a generation, then
+    every replacement present (``_c``, ``_p``, ``_c_p``, ``_r``)."""
+    roots = []
+    for fam in families:
+        root = f"{idx}/{fam}"
+        if os.path.isdir(root) and any(
+            d.startswith("gen=") for d in os.listdir(root)
+        ):
+            roots.append(root)
+        c = twin(root, "compacted")
+        for t in (c, twin(root, "purged"), twin(c, "purged"),
+                  twin(root, "recoded")):
+            if os.path.isdir(t):
+                roots.append(t)
+    return roots
 
 
 def read_gens(spark, paths, prep=lambda df: df):
@@ -125,7 +162,7 @@ def fold(root, upto, write, idx=None, folded=None):
     them, and only `gc_generations` may remove them."""
     before = n_parquet_files(*gen_paths(root, upto + 1))
     write()
-    after = n_parquet_files(folded or f"{root}_c")
+    after = n_parquet_files(folded or twin(root, "compacted"))
     if after >= before:
         raise AssertionError(
             f"compaction of {root} did not shrink: {before} -> {after}"
@@ -134,17 +171,17 @@ def fold(root, upto, write, idx=None, folded=None):
         publish(idx, "compacted", upto)
 
 
-def write_twins(spark, root, gens, keep, by=(), suffix="_p", src=None):
+def write_twins(spark, root, gens, keep, by=(), kind="purged", src=None):
     """Rewrite generations ``gens`` of ``src`` (default ``root``)
     through ``keep`` (given a frame carrying ``gen``) into the
-    per-generation twins ``<root><suffix>/gen=g``: ONE basePath read
+    per-generation ``kind`` twins (`twin`): ONE basePath read
     and ONE ``partitionBy("gen", *by)`` write, repartitioned on the
     same columns when ``by`` nests the layout (one file per leaf). A
     partitioned write skips empty partitions, so every generation
     ``keep`` emptied gets its `ensure_gen_dirs` twin. Returns the
     source frame."""
     src = src or root
-    dst = f"{root}{suffix}"
+    dst = twin(root, kind)
     df = spark.read.option("basePath", src).parquet(
         *[f"{src}/gen={g}" for g in gens]
     )
@@ -181,10 +218,11 @@ def purge(spark, idx, families, upto, td, id_col, by=(),
         srcs = []
         if compact_upto is not None:
             # folded layouts are partition-nested (``by``)
-            dfc = spark.read.parquet(f"{root}_c")
+            c = twin(root, "compacted")
+            dfc = spark.read.parquet(c)
             dfc.filter(~td).repartition(*by).write.mode(
                 "overwrite"
-            ).partitionBy(*by).parquet(f"{root}_c_p")
+            ).partitionBy(*by).parquet(twin(c, "purged"))
             srcs.append(dfc)
         if first <= upto:
             srcs.append(
@@ -308,23 +346,33 @@ def gc_generations(ckpt, idx):
     """Watermark-gated generation GC: delete every generation
     ``<family>/gen=g`` under ``idx`` that BOTH (a) a published
     replacement serves — ``g`` is at or below a marker whose
-    replacement ``<family>_c``, ``<family>_p`` or ``<family>_r``
-    exists — and (b) the checkpoint's commit watermark has passed
-    (every covered batch is in `committed_src_batches`, so no restart
-    can replay one). REFUSES with ValueError when no marker is
-    published or any covered batch is still inside the replay horizon
-    — deleting then would make the torn-state replay impossible.
-    Models (centroids, codebooks) have no replacement and are never
-    touched. Returns the removed paths."""
+    replacement (`twin`) of the family exists — and (b) the
+    checkpoint's commit watermark has passed (every covered batch is
+    in `committed_src_batches`, so no restart can replay one).
+    REFUSES with ValueError when no marker is published, when a
+    published marker has no family with its replacement (a fold into
+    a dir of another name, a marker without twins: deleting nothing
+    would pass silently), or when any covered batch is still inside
+    the replay horizon — deleting then would make the torn-state
+    replay impossible. Models (centroids, codebooks) have no
+    replacement and are never touched. Returns the removed paths."""
     upto, published = {}, []
-    for kind, (name, suffix) in MARKERS.items():
+    for kind, (name, _suffix) in MARKERS.items():
         m = marker(idx, kind)
         if m is None:
             continue
         published.append(m)
-        for fam in sorted(os.listdir(idx)):
-            if os.path.isdir(f"{idx}/{fam}{suffix}"):
-                upto[fam] = max(upto.get(fam, -1), m)
+        fams = [
+            fam for fam in sorted(os.listdir(idx))
+            if os.path.isdir(twin(f"{idx}/{fam}", kind))
+        ]
+        if not fams:
+            raise ValueError(
+                f"GC refused: {name} = {m} is published under {idx} but"
+                f" no family has its {twin('', kind)} replacement"
+            )
+        for fam in fams:
+            upto[fam] = max(upto.get(fam, -1), m)
     if not published:
         raise ValueError(f"GC refused: no generation marker under {idx}")
     committed = committed_src_batches(ckpt)

@@ -14,7 +14,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..generations import audit_no_tombstoned, gc_generations, gen_paths
+from ..generations import (
+    audit_no_tombstoned,
+    content_roots,
+    gc_generations,
+    gen_paths,
+    stale_reads,
+)
 from ..registry import register, table
 from ..stream import batch_fan, fail_point, run_increments
 from .textops import (
@@ -306,7 +312,7 @@ def stream_corpus_prep_delete_e2e(spark, sf_dir):
     rewrites riding partition-pruned scans, driver-side GC, one
     broadcast-tombstone audit scan; intake throughput unchanged."""
     from ..registry import scratch_dir
-    from .dedup_stream import TD_AFTER, _index_roots, _purge_feed
+    from .dedup_stream import TD_AFTER, _purge_feed
 
     base = scratch_dir("stream_corpus_prep_delete_e2e")
     rlog = []
@@ -318,7 +324,9 @@ def stream_corpus_prep_delete_e2e(spark, sf_dir):
         raise AssertionError("no post-takedown increment was processed")
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
     for b, paths in post:
-        if paths != gen_paths(f"{idx}/bands", b, purged=TD_AFTER):
+        if paths != gen_paths(
+            f"{idx}/bands", b, purged=TD_AFTER
+        ) or stale_reads(paths, f"{idx}/bands", TD_AFTER):
             raise AssertionError(
                 f"increment {b} served {paths}; expected purged twins"
                 " for the covered prefix only"
@@ -337,7 +345,8 @@ def stream_corpus_prep_delete_e2e(spark, sf_dir):
     audit_no_tombstoned(
         spark,
         spark.read.parquet(f"{idx}/tombstones"),
-        _index_roots(idx) + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
+        content_roots(idx, "bands", "shingles")
+        + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
     )
     return run_corpus_prep_stream(
         spark, sf_dir, base, delete_after=TD_AFTER
@@ -591,7 +600,7 @@ def stream_corpus_prep_capped_delete_e2e(spark, sf_dir):
     partition-pruned scans."""
     from ..registry import scratch_dir
     from .dedup import LSH_BUCKET_CAP
-    from .dedup_stream import TD_AFTER, _index_roots, _purge_feed
+    from .dedup_stream import TD_AFTER, _purge_feed
 
     base = scratch_dir("stream_corpus_prep_capped_delete_e2e")
     clog, rlog = [], []
@@ -606,13 +615,17 @@ def stream_corpus_prep_capped_delete_e2e(spark, sf_dir):
         raise AssertionError("no post-takedown increment was processed")
     idx, ckpt = f"{base}/index", f"{base}/ckpt"
     for b, paths in post_c:
-        if paths != gen_paths(f"{idx}/counts", b + 1, purged=TD_AFTER):
+        if paths != gen_paths(
+            f"{idx}/counts", b + 1, purged=TD_AFTER
+        ) or stale_reads(paths, f"{idx}/counts", TD_AFTER):
             raise AssertionError(
                 f"increment {b} sized buckets from {paths}; expected"
                 " purged counts twins for the covered prefix only"
             )
     for b, paths in post_r:
-        if paths != gen_paths(f"{idx}/bands", b, purged=TD_AFTER):
+        if paths != gen_paths(
+            f"{idx}/bands", b, purged=TD_AFTER
+        ) or stale_reads(paths, f"{idx}/bands", TD_AFTER):
             raise AssertionError(
                 f"increment {b} deduped against {paths}; expected"
                 " purged band twins for the covered prefix"
@@ -627,7 +640,8 @@ def stream_corpus_prep_capped_delete_e2e(spark, sf_dir):
     audit_no_tombstoned(
         spark,
         spark.read.parquet(f"{idx}/tombstones"),
-        _index_roots(idx) + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
+        content_roots(idx, "bands", "shingles")
+        + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
     )
     return run_corpus_prep_stream(
         spark, sf_dir, base, bucket_cap=LSH_BUCKET_CAP,

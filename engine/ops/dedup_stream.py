@@ -18,12 +18,14 @@ from ..registry import register, shared_artifact, table
 from ..generations import (
     audit_no_tombstoned,
     committed_src_batches,
+    content_roots,
     fold,
     gc_generations,
     gen_paths,
     marker,
     markers,
     purge,
+    stale_reads,
     write_twins,
 )
 from ..stream import batch_fan, fail_point, publish_marker, run_increments
@@ -1097,13 +1099,6 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     shutil.rmtree(f"{base}/stage_purge", ignore_errors=True)
 
 
-def _index_roots(idx):
-    """The LSH index's content-bearing families a takedown audit walks:
-    the original generations and their purged twins."""
-    fams = ("bands", "shingles", "bands_p", "shingles_p")
-    return [f"{idx}/{fam}" for fam in fams]
-
-
 @register("stream_dedup_gc_e2e", oracle=INC_LSH_SQL)
 def stream_dedup_gc_e2e(spark, sf_dir):
     """Generation GC driven by the CHECKPOINT COMMIT WATERMARK — the
@@ -1501,7 +1496,8 @@ def stream_dedup_delete_gc_e2e(spark, sf_dir):
     audit_no_tombstoned(
         spark,
         spark.read.parquet(f"{idx}/tombstones"),
-        _index_roots(idx) + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
+        content_roots(idx, "bands", "shingles")
+        + [f"{base}/src", f"{base}/sink", f"{base}/stage"],
     )
     # restart on the gutted index: recovery finds every source file
     # committed (the purged feed keeps the same paths and mtimes),
@@ -1751,7 +1747,7 @@ def stream_takedown_unified_e2e(spark, sf_dir):
     against the O(cohort) broadcast tombstones; GC is fs metadata.
     Nothing here adds a shuffle class beyond the dedicated ops."""
     from ..registry import scratch_dir
-    from .suffix import _purged_sa_spans
+    from .suffix import _purged_sa_spans, _sa_twins
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
@@ -1775,14 +1771,9 @@ def stream_takedown_unified_e2e(spark, sf_dir):
     audit_no_tombstoned(
         spark,
         spark.read.parquet(f"{idx}/tombstones"),
-        _index_roots(idx)
-        + [
-            f"{base}/src",
-            f"{base}/sink",
-            f"{base}/stage",
-            f"{base}/sa/array_p",
-            f"{base}/sa/anchors_p",
-        ],
+        content_roots(idx, "bands", "shingles")
+        + [f"{base}/src", f"{base}/sink", f"{base}/stage"]
+        + _sa_twins(f"{base}/sa"),
     )
 
     # 5. restart on the gutted store: a committed no-op, serving
@@ -1861,8 +1852,9 @@ def stream_dedup_capped_delete_e2e(spark, sf_dir):
     if not post:
         raise AssertionError("no post-takedown increment was processed")
     for b, paths in post:
-        expected = gen_paths(f"{base}/index/counts", b + 1, purged=TD_AFTER)
-        if paths != expected:
+        counts = f"{base}/index/counts"
+        expected = gen_paths(counts, b + 1, purged=TD_AFTER)
+        if paths != expected or stale_reads(paths, counts, TD_AFTER):
             raise AssertionError(
                 f"increment {b} sized buckets from {paths}; expected"
                 " purged counts twins for the covered prefix only"
@@ -1926,7 +1918,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
         VEC_TD_RES,
         run_sim_index_stream,
     )
-    from .suffix import _purged_sa_spans
+    from .suffix import _purged_sa_spans, _sa_twins
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
@@ -1972,14 +1964,14 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
             spark.read.parquet(f"{t_idx}/tombstones"),
             "doc_id",
             [f"{tbase}/src", f"{tbase}/sink", f"{tbase}/stage"]
-            + _index_roots(t_idx)
-            + [f"{tbase}/sa/array_p", f"{tbase}/sa/anchors_p"],
+            + content_roots(t_idx, "bands", "shingles")
+            + _sa_twins(f"{tbase}/sa"),
         ),
-        (tomb_vec, "c_id", [f"{v_idx}/lists_p"]),
+        (tomb_vec, "c_id", content_roots(v_idx, "lists")),
         (
             tomb_vec.select(F.col("c_id").alias("vec_id")),
             "vec_id",
-            [f"{vbase}/src", f"{pq_root}/codes_p"],
+            [f"{vbase}/src"] + content_roots(pq_root, "codes"),
         ),
     ):
         audit_no_tombstoned(spark, tomb, roots, id_col=id_col)
@@ -1990,7 +1982,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
         spark, sf_dir, vbase, delete_after=v_last, serve_paths_log=vlog
     )
     purged = gen_paths(f"{v_idx}/lists", N_SIM_BATCHES, purged=v_last)
-    if vlog[-1] != purged:
+    if vlog[-1] != purged or stale_reads(vlog[-1], f"{v_idx}/lists", v_last):
         raise AssertionError(
             f"post-takedown vector probe served {vlog[-1]}; expected"
             " purged twins only"

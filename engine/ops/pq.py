@@ -28,6 +28,7 @@ from ..generations import (
     publish,
     purge,
     read_gens,
+    stale_reads,
     write_twins,
 )
 from ..registry import fan_out, register, shared_artifact, table
@@ -1123,17 +1124,6 @@ def _ivfpq_coded(df):
     return df.select("cluster", F.col("vec_id").alias("c_id"), "code")
 
 
-def _ivfpq_coded_from(spark, root, gens):
-    """The serving codes frame off a generation'd cluster-partitioned
-    layout: basePath keeps BOTH partition columns discovered so the
-    probe join can prune cluster directories across generations."""
-    return _ivfpq_coded(
-        spark.read.option("basePath", root).parquet(
-            *[f"{root}/gen={g}" for g in gens]
-        )
-    )
-
-
 def _ivfpq_lifecycle_build_dir(spark, sf_dir, kind):
     """Keyed shared build for the composed index's LIFECYCLE layouts
     — the `_ivfpq_full_build_dir` discipline extended to the
@@ -1208,7 +1198,7 @@ def sim_index_ivfpq_append(spark, sf_dir):
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pub = _ivfpq_lifecycle_build_dir(spark, sf_dir, "append")
     cent, loaded = _ivfpq_lifecycle_load(spark, pub)
-    coded = _ivfpq_coded_from(spark, f"{pub}/codes", (0, 1))
+    coded = read_gens(spark, gen_paths(f"{pub}/codes", 2), _ivfpq_coded)
     return _ivfpq_serve(spark, em, cent, loaded, coded)
 
 
@@ -1510,7 +1500,7 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
             lambda df: df.select("gen", "vec_id", "code").join(
                 assigned1, "vec_id"
             ),
-            by=("cluster",), suffix="_r", src=f"{pub}/codes",
+            by=("cluster",), kind="recoded", src=f"{pub}/codes",
         )
         publish_marker(f"{base}/reclustered", 1)
 
@@ -1523,11 +1513,14 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
 
         stale = _ivfpq_serve(
             spark, ex, cent0, books,
-            _ivfpq_coded_from(spark, f"{pub}/codes", (0, 1)),
+            read_gens(spark, gen_paths(f"{pub}/codes", 2), _ivfpq_coded),
         ).withColumn("regime", F.lit("0_stale"))
         fresh = _ivfpq_serve(
             spark, ex, cent1, books,
-            _ivfpq_coded_from(spark, f"{base}/codes_r", (0, 1)),
+            read_gens(
+                spark, gen_paths(f"{base}/codes", 2, recoded=1),
+                _ivfpq_coded,
+            ),
         ).withColumn("regime", F.lit("1_fresh"))
         out = stale.unionByName(fresh).select(
             "regime", "q_id", "c_id", "score", "rank"
@@ -1746,7 +1739,7 @@ def run_ivfpq_stream(
                     lambda df: df.select("gen", "vec_id", "code").join(
                         moved, "vec_id"
                     ),
-                    by=("cluster",), suffix="_r",
+                    by=("cluster",), kind="recoded",
                 )
                 publish(idx, "recoded", b - 1)
         # the read-back discipline: every batch (batch 0 included)
@@ -1950,7 +1943,10 @@ def stream_sim_ivfpq_recluster_e2e(spark, sf_dir):
             f" log: {mon}"
         )
     paths = log[-1]
-    if paths != gen_paths(f"{base}/index/codes", N_SIM_BATCHES, recoded=0):
+    codes = f"{base}/index/codes"
+    if paths != gen_paths(
+        codes, N_SIM_BATCHES, recoded=0
+    ) or stale_reads(paths, codes, 0):
         raise AssertionError(
             f"post-recluster probe served {paths}; expected the moved"
             " twin for generation 0 exactly, never its stale placement"
@@ -2009,9 +2005,13 @@ def stream_sim_ivfpq_compact_delete_e2e(spark, sf_dir):
     served = log[-1]
     # the purged twin of the compacted layout plus the purged
     # post-compaction generation, and nothing un-purged
-    if served != gen_paths(
-        f"{idx}/codes", N_SIM_BATCHES,
-        compacted=boundary_c, purged=boundary_d,
+    if (
+        served != gen_paths(
+            f"{idx}/codes", N_SIM_BATCHES,
+            compacted=boundary_c, purged=boundary_d,
+        )
+        or stale_reads(served, f"{idx}/codes", boundary_d)
+        or f"{idx}/codes_c" in served
     ):
         raise AssertionError(
             f"takedown did not reach every served artifact: {served}"
@@ -2978,7 +2978,9 @@ def stream_sim_pq_recode_delete_e2e(spark, sf_dir):
         )
     idx = f"{base}/index"
     served = log[-1]
-    if served != gen_paths(f"{idx}/codes", 3, purged=2):
+    if served != gen_paths(f"{idx}/codes", 3, purged=2) or stale_reads(
+        served, f"{idx}/codes", 2
+    ):
         raise AssertionError(
             f"post-takedown probe served {served}; expected the purged"
             " twins for every covered generation"
@@ -3092,7 +3094,7 @@ def stream_sim_ivfpq_delete_e2e(spark, sf_dir):
         spark, sf_dir, base, delete_after=boundary, serve_paths_log=log
     )
     served = log[-1]
-    if served != expected:
+    if served != expected or stale_reads(served, f"{idx}/codes", boundary):
         raise AssertionError(
             f"post-delete probe served {served}; expected purged twins"
             " for the covered prefix only"

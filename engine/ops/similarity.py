@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..generations import (
     audit_no_tombstoned,
+    content_roots,
     fold,
     gc_generations,
     gen_paths,
@@ -33,6 +34,7 @@ from ..generations import (
     publish,
     purge,
     read_gens,
+    stale_reads,
     write_twins,
 )
 from ..registry import fan_out, register, table
@@ -3366,7 +3368,7 @@ def stream_sim_delete_e2e(spark, sf_dir):
     audit_no_tombstoned(
         spark,
         spark.read.parquet(f"{idx}/tombstones"),
-        (f"{idx}/lists", f"{idx}/lists_p"),
+        content_roots(idx, "lists"),
         id_col="c_id",
     )
 
@@ -3378,7 +3380,9 @@ def stream_sim_delete_e2e(spark, sf_dir):
         spark, sf_dir, base, delete_after=boundary, serve_paths_log=log
     )
     served = log[-1]
-    if served != gen_paths(f"{idx}/lists", N_SIM_BATCHES, purged=boundary):
+    if served != gen_paths(
+        f"{idx}/lists", N_SIM_BATCHES, purged=boundary
+    ) or stale_reads(served, f"{idx}/lists", boundary):
         raise AssertionError(
             f"post-delete probe served {served}; expected purged twins"
             " for the covered prefix only"

@@ -23,6 +23,7 @@ from ..generations import (
     gen_paths,
     markers,
     read_gens,
+    twin,
 )
 from ..stream import fail_point, publish_marker, run_increments
 
@@ -946,6 +947,11 @@ def _sa_takedown_sql():
     )
 
 
+def _sa_twins(root):
+    """The purged suffix-array twins under ``root``: (array, anchors)."""
+    return [twin(f"{root}/{a}", "purged") for a in ("array", "anchors")]
+
+
 def _purged_sa_spans(spark, sf_dir, td, root):
     """Publish the PURGED suffix-array twins under ``root``
     (filter-rewrites of the published corpus artifact, riding the
@@ -956,10 +962,11 @@ def _purged_sa_spans(spark, sf_dir, td, root):
     dedup_sa_takedown and the unified takedown capstone (round-10
     review: the block was forked verbatim)."""
     final, sfx = _suffix_array_artifact(spark, sf_dir)
-    final.filter(~td).write.mode("overwrite").parquet(f"{root}/array_p")
-    sfx.filter(~td).write.mode("overwrite").parquet(f"{root}/anchors_p")
-    arr_p = spark.read.parquet(f"{root}/array_p")
-    sfx_p = spark.read.parquet(f"{root}/anchors_p")
+    array_p, anchors_p = _sa_twins(root)
+    final.filter(~td).write.mode("overwrite").parquet(array_p)
+    sfx.filter(~td).write.mode("overwrite").parquet(anchors_p)
+    arr_p = spark.read.parquet(array_p)
+    sfx_p = spark.read.parquet(anchors_p)
     old = arr_p.select(F.col("_rank").alias("old_rank"), "doc_id", "pos")
     # old_rank is unique per surviving suffix, so the integer
     # re-ranking attaches directly to the rows — no distinct pass, no
@@ -1039,9 +1046,7 @@ def dedup_sa_takedown(spark, sf_dir):
     tomb = spark.read.parquet(f"{base}/tombstones")
     if tomb.limit(1).count() == 0:
         raise AssertionError("takedown cohort is empty — fixture degenerate")
-    audit_no_tombstoned(
-        spark, tomb, (f"{base}/array_p", f"{base}/anchors_p")
-    )
+    audit_no_tombstoned(spark, tomb, _sa_twins(base))
     return spans
 
 

@@ -14,6 +14,7 @@ import pytest
 
 from engine.generations import (
     audit_no_tombstoned,
+    content_roots,
     fold,
     gc_generations,
     gen_paths,
@@ -21,6 +22,7 @@ from engine.generations import (
     markers,
     publish,
     purge,
+    stale_reads,
 )
 
 OPS_DIR = os.path.join(
@@ -63,6 +65,20 @@ def test_gen_paths_recoded_twins():
     assert gen_paths("/i/codes", 3, recoded=0) == [
         "/i/codes_r/gen=0", "/i/codes/gen=1", "/i/codes/gen=2"
     ]
+
+
+def test_stale_reads_finds_raw_generations_at_or_below_the_marker():
+    served = [
+        "/i/codes_r/gen=0", "/i/codes/gen=1", "/i/codes/gen=2",
+        "/i/codes_c", "/i/codes/gen=10",
+    ]
+    assert stale_reads(served, "/i/codes", 0) == []
+    assert stale_reads(served, "/i/codes", 1) == ["/i/codes/gen=1"]
+    assert stale_reads(served, "/i/codes", 2) == [
+        "/i/codes/gen=1", "/i/codes/gen=2"
+    ]
+    # another family's generations are not this root's
+    assert stale_reads(["/i/codes_x/gen=0"], "/i/codes", 5) == []
 
 
 def test_replayed_boundary_batch_stays_on_the_per_generation_view(tmp_path):
@@ -158,6 +174,37 @@ def test_gc_removes_served_generations_past_the_watermark(tmp_path):
     assert all(os.path.exists(f"{idx}/centroids/gen={g}") for g in range(3))
 
 
+def test_gc_refuses_a_marker_no_family_replaces(tmp_path):
+    """A fold into a dir of another name (``spans_c`` for the anchors
+    generations) leaves GC no family to act on: it refuses rather than
+    pass while deleting nothing."""
+    idx, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
+    for g in range(2):
+        _touch_files(f"{idx}/anchors/gen={g}", 1)
+    _touch_files(f"{idx}/spans_c", 1)
+    publish(idx, "compacted", 0)
+    _commit(ckpt, [0])
+    with pytest.raises(ValueError, match="compacted_upto = 0.*_c"):
+        gc_generations(ckpt, idx)
+    assert os.path.exists(f"{idx}/anchors/gen=0")
+
+
+def test_content_roots_walks_originals_and_every_twin_present(tmp_path):
+    idx = str(tmp_path)
+    _touch_files(f"{idx}/lists/gen=2", 1)
+    _touch_files(f"{idx}/lists_p/gen=0", 1)
+    _touch_files(f"{idx}/codes_p/gen=0", 1)
+    _touch_files(f"{idx}/codes_c", 1)
+    _touch_files(f"{idx}/codes_c_p", 1)
+    _touch_files(f"{idx}/codes_r/gen=0", 1)
+    os.makedirs(f"{idx}/codes")  # every generation collected
+    assert content_roots(idx, "lists") == [f"{idx}/lists", f"{idx}/lists_p"]
+    assert content_roots(idx, "codes", "bands") == [
+        f"{idx}/codes_c", f"{idx}/codes_p", f"{idx}/codes_c_p",
+        f"{idx}/codes_r",
+    ]
+
+
 def test_purge_of_a_cluster_nested_family_and_audit_catches_a_plant(
     spark, tmp_path
 ):
@@ -227,23 +274,39 @@ def _code_strings(path):
 
 
 def test_generation_layout_lives_only_in_generations():
-    """No module in engine/ops spells a twin path, a shrink check or a
-    layout marker by hand, and none wraps the GC: the layout decision
-    is made once, in engine/generations.py."""
+    """No module in engine/ops spells a twin path or root, a shrink
+    check or a layout marker by hand, and none wraps the GC: the
+    layout decision is made once, in engine/generations.py. A twin
+    root is caught as a path piece (``/lists_p``), a bare suffix
+    (``"_r"``) or the bare name of a generation family (``bands_p``,
+    families being the names the ops address as ``/<name>/gen=``)."""
     patterns = {
         "purged-twin path": r"_p/gen=",
         "recoded-twin path": r"_r/gen=",
         "compacted-purged twin": r"_c_p",
+        "twin root": r"/\w+_[pr](/|$)|^_[pr](/|$)",
         "shrink check": r"did not shrink",
         "layout marker": r"compacted_upto|takedown_upto|reclustered_upto",
     }
+    paths = sorted(glob.glob(os.path.join(OPS_DIR, "*.py")))
+    strings = {p: list(_code_strings(p)) for p in paths}
+    families = {
+        m.group(1)
+        for found in strings.values()
+        for _lineno, s in found
+        for m in re.finditer(r"/(\w+)/gen=", s)
+    }
+    assert {"bands", "lists", "codes"} <= families
     hits = []
-    for path in sorted(glob.glob(os.path.join(OPS_DIR, "*.py"))):
+    for path in paths:
         name = os.path.basename(path)
-        for lineno, s in _code_strings(path):
+        for lineno, s in strings[path]:
             for what, pat in patterns.items():
                 if re.search(pat, s):
                     hits.append(f"{name}:{lineno}: {what}: {s!r}")
+            bare = re.fullmatch(r"(\w+?)_[pr]", s)
+            if bare and bare.group(1) in families:
+                hits.append(f"{name}:{lineno}: twin root: {s!r}")
         tree = ast.parse(open(path).read())
         hits += [
             f"{name}:{node.lineno}: GC wrapper: {node.name}"

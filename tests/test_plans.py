@@ -874,7 +874,8 @@ def test_ivfpq_lifecycle_codes_scan_prunes_clusters(spark, tmp_path):
     index, and an append must not degrade probe pruning."""
     from pyspark.sql import functions as F
 
-    from engine.ops.pq import _ivfpq_coded_from, _ivfpq_lifecycle_layout
+    from engine.generations import read_gens
+    from engine.ops.pq import _ivfpq_coded, _ivfpq_lifecycle_layout
     from engine.registry import table
 
     em = table(spark, T2_SF_DIR, "embeddings").select(
@@ -882,9 +883,9 @@ def test_ivfpq_lifecycle_codes_scan_prunes_clusters(spark, tmp_path):
     )
     base = str(tmp_path / "ivfpq")
     _ivfpq_lifecycle_layout(spark, em, base)
-    df = _ivfpq_coded_from(spark, f"{base}/codes", (0, 1)).filter(
-        F.col("cluster") == 1
-    )
+    df = read_gens(
+        spark, [f"{base}/codes/gen=0", f"{base}/codes/gen=1"], _ivfpq_coded
+    ).filter(F.col("cluster") == 1)
     assert df.count() > 0  # both generations contribute members
     plan = df._jdf.queryExecution().executedPlan().toString()
     pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -902,15 +903,17 @@ def test_ivfpq_recluster_moved_layout_prunes_clusters(spark):
 
     from pyspark.sql import functions as F
 
-    from engine.ops.pq import _ivfpq_coded_from
+    from engine.generations import read_gens
+    from engine.ops.pq import _ivfpq_coded
     from engine.registry import scratch_root
 
     engine.QUERIES["sim_index_ivfpq_recluster"](spark, T2_SF_DIR).count()
     base = os.path.join(scratch_root(), "sim_index_ivfpq_recluster")
     assert os.path.exists(f"{base}/reclustered")  # marker published
-    df = _ivfpq_coded_from(spark, f"{base}/codes_r", (0, 1)).filter(
-        F.col("cluster") == 1
-    )
+    df = read_gens(
+        spark, [f"{base}/codes_r/gen=0", f"{base}/codes_r/gen=1"],
+        _ivfpq_coded,
+    ).filter(F.col("cluster") == 1)
     assert df.count() > 0  # both moved generations contribute members
     plan = df._jdf.queryExecution().executedPlan().toString()
     pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
