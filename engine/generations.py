@@ -206,11 +206,11 @@ def purge(spark, idx, families, upto, td, id_col, by=(),
     ``td`` as purged twins (`write_twins`; with ``compact_upto=k``
     the folded ``<root>_c`` holds gens ``0..k`` and is rewritten as
     ``<root>_c_p``, and only gens ``k+1..upto`` get per-generation
-    twins), write the tombstones (the cohort's distinct ``id_col``
-    among the first family's covered rows), then publish
-    ``takedown_upto`` LAST. Originals stay inside the replay horizon;
-    a replayed boundary batch redoes every step as a deterministic
-    overwrite."""
+    twins), write the tombstones (`write_tombstones`: the cohort's
+    distinct ``id_col`` among the first family's covered rows), then
+    publish ``takedown_upto`` LAST. Originals stay inside the replay
+    horizon; a replayed boundary batch redoes every step as a
+    deterministic overwrite."""
     first = 0 if compact_upto is None else compact_upto + 1
     tomb = None
     for fam in families:
@@ -235,16 +235,25 @@ def purge(spark, idx, families, upto, td, id_col, by=(),
             tomb = srcs[0].select(id_col)
             for df in srcs[1:]:
                 tomb = tomb.unionByName(df.select(id_col))
+    write_tombstones(idx, tomb, td, id_col)
+    publish(idx, "purged", upto)
+
+
+def write_tombstones(idx, rows, td, *cols, name="tombstones"):
+    """The takedown record under ``idx``: the distinct ``cols`` of the
+    ``rows`` the cohort ``td`` selects, as ``<idx>/<name>`` (the id
+    tombstones by default; content or band tombstones under their own
+    name)."""
     (
-        tomb.filter(td)
+        rows.filter(td)
+        .select(*cols)
         .distinct()
         # one file: tombstone sets are O(cohort), orders of magnitude
         # below the corpus
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{idx}/tombstones")
+        .parquet(f"{idx}/{name}")
     )
-    publish(idx, "purged", upto)
 
 
 def _gen_nesting(root):
@@ -348,14 +357,17 @@ def gc_generations(ckpt, idx):
     replacement serves — ``g`` is at or below a marker whose
     replacement (`twin`) of the family exists — and (b) the
     checkpoint's commit watermark has passed (every covered batch is
-    in `committed_src_batches`, so no restart can replay one).
-    REFUSES with ValueError when no marker is published, when a
-    published marker has no family with its replacement (a fold into
-    a dir of another name, a marker without twins: deleting nothing
-    would pass silently), or when any covered batch is still inside
-    the replay horizon — deleting then would make the torn-state
-    replay impossible. Models (centroids, codebooks) have no
-    replacement and are never touched. Returns the removed paths."""
+    in `committed_src_batches`, so no restart can replay one). A
+    folded ``<root>_c`` goes too once its purged twin ``<root>_c_p``
+    serves in its place (``takedown_upto`` covers the fold): it still
+    holds the taken-down rows. REFUSES with ValueError when no marker
+    is published, when a published marker has no family with its
+    replacement (a fold into a dir of another name, a marker without
+    twins: deleting nothing would pass silently), or when any covered
+    batch is still inside the replay horizon — deleting then would
+    make the torn-state replay impossible. Models (centroids,
+    codebooks) have no replacement and are never touched. Returns the
+    removed paths."""
     upto, published = {}, []
     for kind, (name, _suffix) in MARKERS.items():
         m = marker(idx, kind)
@@ -365,6 +377,9 @@ def gc_generations(ckpt, idx):
         fams = [
             fam for fam in sorted(os.listdir(idx))
             if os.path.isdir(twin(f"{idx}/{fam}", kind))
+            # a fold the GC swapped for its purged twin still serves
+            or kind == "compacted"
+            and os.path.isdir(twin(twin(f"{idx}/{fam}", kind), "purged"))
         ]
         if not fams:
             raise ValueError(
@@ -389,6 +404,13 @@ def gc_generations(ckpt, idx):
             if g <= m and os.path.exists(p):
                 shutil.rmtree(p)
                 removed.append(p)
+    folded, purged = marker(idx, "compacted"), marker(idx, "purged")
+    if folded is not None and purged is not None and purged >= folded:
+        for fam in upto:
+            c = twin(f"{idx}/{fam}", "compacted")
+            if os.path.isdir(c) and os.path.isdir(twin(c, "purged")):
+                shutil.rmtree(c)
+                removed.append(c)
     return removed
 
 

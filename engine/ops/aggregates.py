@@ -1000,9 +1000,6 @@ def agg_linreg_trend(spark, sf_dir):
         .orderBy("event_type")
     )
 
-EWMA_NUM = 1  # alpha = 1/4: s = (x + 3 s) / 4, exact double both engines
-
-EWMA_DEN = 4
 
 @register(
     "agg_approx_top_k",

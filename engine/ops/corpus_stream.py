@@ -20,9 +20,10 @@ from ..generations import (
     gc_generations,
     gen_paths,
     stale_reads,
+    twin,
 )
 from ..registry import register, table
-from ..stream import batch_fan, fail_point, run_increments
+from ..stream import batch_fan, fail_point, read_batch_sink, run_increments
 from .textops import (
     ROUTER_SQL,
     _dsir_features,
@@ -224,8 +225,9 @@ def stream_corpus_prep_lifecycle_e2e(spark, sf_dir):
     post_r = [(b, p) for (b, p) in rlog if b > boundary]
     if not post_c or not post_r:
         raise AssertionError("no post-compaction increment was processed")
+    counts_c = twin(f"{base}/index/counts", "compacted")
     for b, paths in post_c:
-        n_art = sum(1 for p in paths if p.endswith("/counts_c"))
+        n_art = paths.count(counts_c)
         stale = [
             p
             for p in paths
@@ -237,8 +239,9 @@ def stream_corpus_prep_lifecycle_e2e(spark, sf_dir):
                 f"increment {b} read {n_art} counts artifacts plus"
                 f" compacted-away generations {stale}"
             )
+    bands_c = twin(f"{base}/index/bands", "compacted")
     for b, paths in post_r:
-        if not any(p.endswith("/bands_c") for p in paths):
+        if bands_c not in paths:
             raise AssertionError(
                 f"increment {b} did not dedupe against the compacted"
                 " index"
@@ -402,8 +405,6 @@ def run_corpus_prep_stream(
     `_compact_index_generations` + marker-gated-reader discipline the
     dedup stream uses; later increments serve from the compacted
     layout."""
-    import os
-
     from .dedup import N_INC_BATCHES, _lsh_band_rows, _shingle_array, _tokens
     from .dedup_stream import (
         _apply_takedown,
@@ -533,14 +534,9 @@ def run_corpus_prep_stream(
         )
     finally:
         lr0.unpersist()
-    paths = [
-        f"{sink}/batch_id={b}"
-        for b in range(N_INC_BATCHES)
-        if os.path.exists(f"{sink}/batch_id={b}")
-    ]
-    return spark.read.option("basePath", sink).parquet(*paths).select(
+    return read_batch_sink(spark, sink, N_INC_BATCHES).select(
         "doc_id",
-        F.col("batch_id").cast("long").alias("batch_id"),
+        "batch_id",
         "dsir_weight_micro",
         "route",
         "dup_of",

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..generations import fold, gen_paths
+from ..generations import fold, gen_paths, twin
 from ..registry import register, table
 
 JACCARD_THRESHOLD = 0.2
@@ -2740,7 +2740,7 @@ def _index_compact_body(spark, base, mx, doc_sh_all, bands_all):
                 .drop("gen")
                 .repartition(COMPACT_FILES, *key)
                 .write.mode("overwrite")
-                .parquet(f"{base}/{fam}_c")
+                .parquet(twin(f"{base}/{fam}", "compacted"))
             )
 
     fold(f"{base}/bands", N_INC_BATCHES - 1, write)
@@ -2776,8 +2776,8 @@ def _index_compact_body(spark, base, mx, doc_sh_all, bands_all):
         .drop("gen"),
     ).localCheckpoint(eager=True)
     post = probe(
-        spark.read.parquet(f"{base}/bands_c"),
-        spark.read.parquet(f"{base}/shingles_c"),
+        spark.read.parquet(twin(f"{base}/bands", "compacted")),
+        spark.read.parquet(twin(f"{base}/shingles", "compacted")),
     ).localCheckpoint(eager=True)
     diff = pre.exceptAll(post).unionByName(post.exceptAll(pre))
     if diff.limit(1).count() > 0:

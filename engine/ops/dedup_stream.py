@@ -26,9 +26,11 @@ from ..generations import (
     markers,
     purge,
     stale_reads,
+    twin,
+    write_tombstones,
     write_twins,
 )
-from ..stream import batch_fan, fail_point, publish_marker, run_increments
+from ..stream import batch_fan, fail_point, read_batch_sink, run_increments
 from .dedup import (
     COMPACT_FILES,
     JACCARD_THRESHOLD,
@@ -392,7 +394,7 @@ def _compact_index_generations(spark, idx, upto):
                 spark.read.parquet(*gen_paths(f"{idx}/{fam}", upto + 1))
                 .repartition(COMPACT_FILES, *key)
                 .write.mode("overwrite")
-                .parquet(f"{idx}/{fam}_c")
+                .parquet(twin(f"{idx}/{fam}", "compacted"))
             )
         # capped path only: fold the per-generation stop-bucket counts
         # into ONE cumulative table behind the SAME marker. The column
@@ -407,7 +409,7 @@ def _compact_index_generations(spark, idx, upto):
                 .agg(F.sum("n_new").cast("long").alias("n_new"))
                 .repartition(COMPACT_FILES, "band", "band_key")
                 .write.mode("overwrite")
-                .parquet(f"{idx}/counts_c")
+                .parquet(twin(f"{idx}/counts", "compacted"))
             )
 
     fold(f"{idx}/bands", upto, write, idx=idx)
@@ -512,24 +514,21 @@ def _apply_takedown(
         # RE-UPLOAD of the same content under a new id — deleting by id
         # alone lets the document walk straight back in. O(cohort)
         # rows, broadcastable at any corpus size.
-        (
-            spark.read.parquet(*[f"{src}/batch_{g}.parquet" for g in covered])
-            .filter(td)
-            .select(F.sha2(F.col("text"), 256).alias("text_sha"))
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{idx}/tombstones_sha")
+        write_tombstones(
+            idx,
+            spark.read.parquet(*[f"{src}/batch_{g}.parquet" for g in covered]),
+            td,
+            F.sha2(F.col("text"), 256).alias("text_sha"),
+            name="tombstones_sha",
         )
     if band_tombstones:
-        (
-            spark.read.parquet(*gen_paths(f"{idx}/bands", upto + 1))
-            .filter(td)
-            .select("band", "band_key")
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{idx}/tombstones_bands")
+        write_tombstones(
+            idx,
+            spark.read.parquet(*gen_paths(f"{idx}/bands", upto + 1)),
+            td,
+            "band",
+            "band_key",
+            name="tombstones_bands",
         )
     purge(spark, idx, ("shingles", "bands"), upto, td, "doc_id")
 
@@ -633,8 +632,6 @@ def run_inc_lsh_stream(
     write is a deterministic per-generation directory overwrite, so
     an at-least-once replay of a torn batch converges to the same
     bytes (idempotent sink = the foreachBatch exactly-once recipe)."""
-    import os
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
     if docs_override is not None:
@@ -770,14 +767,9 @@ def run_inc_lsh_stream(
         lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
         "stream_dedup_incremental_e2e", 600,
     )
-    paths = [
-        f"{sink}/batch_id={b}"
-        for b in range(N_INC_BATCHES)
-        if os.path.exists(f"{sink}/batch_id={b}")
-    ]
-    return spark.read.option("basePath", sink).parquet(*paths).select(
+    return read_batch_sink(spark, sink, N_INC_BATCHES).select(
         "doc_id",
-        F.col("batch_id").cast("long").alias("batch_id"),
+        "batch_id",
         "dup_of",
         "jaccard_first",
     )
@@ -994,8 +986,9 @@ def stream_dedup_compact_e2e(spark, sf_dir):
     ]
     if not post:
         raise AssertionError("no post-compaction increment was processed")
+    bands_c = twin(f"{base}/index/bands", "compacted")
     for b, paths in post:
-        if not any(p.endswith("/bands_c") for p in paths):
+        if bands_c not in paths:
             raise AssertionError(
                 f"increment {b} did not serve from the compacted index"
             )
@@ -1227,8 +1220,6 @@ def stream_dedup_reupload_block_e2e(spark, sf_dir):
     batch against the O(cohort) hash set — the cheapest enforcement
     point there is; everything downstream is the unchanged delete
     pipeline."""
-    import os
-
     from ..registry import scratch_dir
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1303,8 +1294,9 @@ def stream_dedup_capped_lifecycle_e2e(spark, sf_dir):
     post = [(b, paths) for (b, paths) in clog if b > boundary]
     if not post:
         raise AssertionError("no post-compaction increment was processed")
+    counts_c = twin(f"{base}/index/counts", "compacted")
     for b, paths in post:
-        n_art = sum(1 for p in paths if p.endswith("/counts_c"))
+        n_art = paths.count(counts_c)
         stale = [
             p
             for p in paths
@@ -1660,8 +1652,6 @@ def stream_dedup_neardup_block_e2e(spark, sf_dir):
     post-takedown batch (production fuses the banding with the core's
     own); the tombstone band set is O(cohort), everything downstream
     is the unchanged delete pipeline."""
-    import os
-
     from ..registry import scratch_dir
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1949,10 +1939,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pq_root = f"{vbase}/pq"
     loaded = _pq_persist_layout(spark, em, pq_root)
-    write_twins(
-        spark, f"{pq_root}/codes", (0, 1), lambda df: df.filter(~td_vec)
-    )
-    publish_marker(f"{pq_root}/takedown_applied", 1)
+    purge(spark, pq_root, ("codes",), 1, td_vec, "vec_id")
     # codes are a BATCH artifact — no checkpoint can ever replay
     # them, so the originals go the moment the twins are published
     shutil.rmtree(f"{pq_root}/codes")

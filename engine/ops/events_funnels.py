@@ -5,7 +5,6 @@ round 6; shared helpers import from .aggregates."""
 from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from ..dsl import davg, dsum, sql_davg, sql_dsum
 from ..registry import register, table
 
 from .aggregates import (  # noqa: F401 — shared helpers

@@ -540,7 +540,6 @@ def stream_source_rate_micro_batch(spark, sf_dir):
     Scale note: rate sources fan out numPartitions-wide per batch;
     the wall-clock-dependent `timestamp` column is deliberately
     dropped so results stay value-checkable."""
-    import os
     import time
 
     out = scratch_dir("rate_mb")

@@ -26,18 +26,6 @@ from ..registry import fan_out, register, table
 
 
 
-def _fake_features(payload: bytes, dim: int = 4) -> list[float]:
-    """Deterministic stand-in for a real decode→feature-extract step.
-
-    Raise NotImplementedError here if strict behavior is preferred;
-    the fake keeps the pipeline testable end to end.
-    """
-    h = hashlib.sha256(payload).digest()
-    return [
-        int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)
-    ]
-
-
 def _paeth(a: int, b: int, c: int) -> int:
     """The PNG Paeth predictor (spec §9, filter type 4): pick whichever
     of left/up/up-left is closest to a+b−c, ties left-then-up."""

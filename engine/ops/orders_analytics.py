@@ -5,7 +5,7 @@ helpers import from .aggregates."""
 from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from ..dsl import davg, dsum, sql_davg, sql_dsum
+from ..dsl import dsum
 from ..registry import register, table
 
 

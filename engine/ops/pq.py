@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..generations import (
     audit_no_tombstoned,
+    content_roots,
     gc_generations,
     gen_paths,
     marker,
@@ -29,6 +30,7 @@ from ..generations import (
     purge,
     read_gens,
     stale_reads,
+    twin,
     write_twins,
 )
 from ..registry import fan_out, register, shared_artifact, table
@@ -853,7 +855,8 @@ def sim_index_pq_delete(spark, sf_dir):
     ports directly): every code generation is rewritten WITHOUT the
     takedown cohort into purged twins (filter-rewrites riding the
     scan), a tombstone table records the deleted ids, the
-    write-last ``takedown_applied`` marker publishes the swap, and
+    write-last ``takedown_upto`` marker publishes the swap (one
+    `generations.purge`), and
     serving probes the purged layout — a deleted vector can never
     appear in any ADC pool or re-ranked answer. PQ adds one
     governance subtlety the docstring owes: codes are CONTENT-DERIVED
@@ -879,16 +882,8 @@ def sim_index_pq_delete(spark, sf_dir):
     loaded = _pq_persist_layout(spark, em, base)
 
     td = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
-    write_twins(spark, f"{base}/codes", (0, 1), lambda df: df.filter(~td))
+    purge(spark, base, ("codes",), 1, td, "vec_id")
     purged_paths = gen_paths(f"{base}/codes", 2, purged=1)
-    (
-        em.filter(td)
-        .select("vec_id")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{base}/tombstones")
-    )
-    publish_marker(f"{base}/takedown_applied", 1)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
     audit_no_tombstoned(spark, tomb, purged_paths, id_col="vec_id")
@@ -1210,14 +1205,14 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     is rewritten WITHOUT the takedown cohort into purged twins (the
     filter rides the partition-pruned scan; the repartition
     keeps one file per serving partition), a tombstone table records
-    the deleted ids, the write-last ``takedown_applied`` marker
-    publishes the swap, the completeness audit walks the purged twin
-    roots, and serving probes the purged layout — a deleted vector can
-    never appear in any ADC pool or re-ranked answer. BOTH models are
-    retained: centroids and codebooks are statistical aggregates of
-    the training pass, not retrievable member data (the argument each
-    standalone delete op documents); the purge rewrites membership,
-    not geometry.
+    the deleted ids, the write-last ``takedown_upto`` marker
+    publishes the swap (one `generations.purge`), the completeness
+    audit walks the purged twin roots, and serving probes the purged
+    layout — a deleted vector can never appear in any ADC pool or
+    re-ranked answer. BOTH models are retained: centroids and
+    codebooks are statistical aggregates of the training pass, not
+    retrievable member data (the argument each standalone delete op
+    documents); the purge rewrites membership, not geometry.
 
     In-op proof: the purged layout's probe answers must equal a
     frozen-model re-assign + re-encode of the reduced corpus
@@ -1237,19 +1232,8 @@ def sim_index_ivfpq_delete(spark, sf_dir):
     cent, loaded = _ivfpq_lifecycle_layout(spark, em, base)
 
     td = F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES
-    write_twins(
-        spark, f"{base}/codes", (0, 1), lambda df: df.filter(~td),
-        by=("cluster",),
-    )
+    purge(spark, base, ("codes",), 1, td, "vec_id", by=("cluster",))
     purged_paths = gen_paths(f"{base}/codes", 2, purged=1)
-    (
-        em.filter(td)
-        .select("vec_id")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{base}/tombstones")
-    )
-    publish_marker(f"{base}/takedown_applied", 1)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
     audit_no_tombstoned(spark, tomb, purged_paths, id_col="vec_id")
@@ -1441,12 +1425,13 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
     generation REWRITES ITS PLACEMENT — (vec_id, code) joined to the
     fresh broadcast assignment, landed as recoded twins in the NEW
     cluster partitions (rows move directories; code bytes are
-    byte-identical) — behind the write-last ``reclustered`` marker;
-    and the monitor re-reads CLEAR against the loaded gen=1 centroids
-    (the op raises if fire or clear reads wrong). Routing stays
-    strictly-past: gen=0 centroids and the original codes layout are
-    retained, so pre-boundary readers (and the streamed form's
-    checkpoint replays) still see the layout they first served.
+    byte-identical) — behind the write-last ``reclustered_upto``
+    marker; and the monitor re-reads CLEAR against the loaded gen=1
+    centroids (the op raises if fire or clear reads wrong). Routing
+    stays strictly-past: gen=0 centroids and the original codes
+    layout are retained, so pre-boundary readers (and the streamed
+    form's checkpoint replays) still see the layout they first
+    served.
 
     The value-hashed output is the composed SERVING statement in BOTH
     regimes — `0_stale` through the original layout + gen=0
@@ -1502,7 +1487,7 @@ def sim_index_ivfpq_recluster(spark, sf_dir):
             ),
             by=("cluster",), kind="recoded", src=f"{pub}/codes",
         )
-        publish_marker(f"{base}/reclustered", 1)
+        publish(base, "recoded", 1)
 
         if _aff_drift_fired(
             _ivfpq_cohort_aff_means(ex, cent1, append_cut, train_cut)
@@ -1853,7 +1838,7 @@ def stream_sim_ivfpq_e2e(spark, sf_dir):
     )
     assert log, "serving read did not record its paths"
     paths = log[-1]
-    if not any(p.endswith("/codes_c") for p in paths):
+    if twin(f"{base}/index/codes", "compacted") not in paths:
         raise AssertionError(
             "probe did not serve from the compacted codes layout"
         )
@@ -1971,15 +1956,15 @@ def stream_sim_ivfpq_compact_delete_e2e(spark, sf_dir):
     post-compaction generation rewrites into ``codes_p/gen=2``, both
     behind ONE write-last ``takedown_upto`` marker with tombstones
     drawn from every covered source; serving reads ONLY the purged
-    twins (asserted from the recorded paths), the completeness audit
-    walks both purged roots, and the output value-hashes against the
-    composed lifecycle statement with the cohort excluded from code
-    membership (the takedown covers everything arrived, so the
+    twins (asserted from the recorded paths); past the commit
+    watermark `gc_generations` removes the covered generations and
+    the un-purged ``codes_c``, the completeness audit walks every
+    content root the family still has (`content_roots`), and the
+    output value-hashes against the composed lifecycle statement
+    with the cohort excluded from code membership (the takedown covers everything arrived, so the
     cohort is unscoped — the batch delete op's oracle verbatim). The
     post-takedown torn-state restart proof runs in
     tests/test_streaming.py::test_ivfpq_compact_delete_boundary_restart;
-    original-layout GC under the marker+watermark rule is
-    stream_sim_ivfpq_delete_e2e's proven machinery, unchanged here —
     this op pins the purge's REACH across the folded layout. The feed
     stages privately inside the purge perimeter like every delete
     rig.
@@ -2011,15 +1996,18 @@ def stream_sim_ivfpq_compact_delete_e2e(spark, sf_dir):
             compacted=boundary_c, purged=boundary_d,
         )
         or stale_reads(served, f"{idx}/codes", boundary_d)
-        or f"{idx}/codes_c" in served
+        or twin(f"{idx}/codes", "compacted") in served
     ):
         raise AssertionError(
             f"takedown did not reach every served artifact: {served}"
         )
+    # past the watermark the GC removes the covered generations and
+    # the un-purged fold: no root of the family still holds the cohort
+    gc_generations(f"{base}/ckpt", idx)
     audit_no_tombstoned(
         spark,
         spark.read.parquet(f"{idx}/tombstones"),
-        served,
+        content_roots(idx, "codes"),
         id_col="vec_id",
     )
     return out

@@ -1347,8 +1347,6 @@ def scan_ignore_corrupt_files(spark, sf_dir):
     over the directory, no driver-side listing beyond normal planning;
     a 100 TB lake with a handful of torn files loses those splits
     only."""
-    import os
-
     out = scratch_dir("ignore_corrupt")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",

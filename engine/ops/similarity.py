@@ -16,8 +16,6 @@ crossJoin anywhere.
 
 from __future__ import annotations
 
-import random
-
 import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inspection
 
 from pyspark.sql import Window
@@ -35,10 +33,10 @@ from ..generations import (
     purge,
     read_gens,
     stale_reads,
-    write_twins,
+    twin,
 )
 from ..registry import fan_out, register, table
-from ..stream import fail_point, publish_marker, run_increments
+from ..stream import fail_point, run_increments
 from .dedup import N_INC_BATCHES
 
 N_PROBES = 20  # probe set: vec_id < 20
@@ -1318,8 +1316,6 @@ def ml_logreg_train(spark, sf_dir):
     corpus labels are independent of the embeddings (the same
     structureless-fixture caveat as langid/ANN), so calibration to
     the base rate, not accuracy, is the correct learnable target."""
-    import numpy as np
-
     w, _losses = _logreg_fit(spark, sf_dir)
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     wlit = F.array(*[F.lit(float(v)) for v in w[:-1]])
@@ -1701,6 +1697,31 @@ def _ivf_append_cut(em):
     return _ivf_cuts(mx)[1]
 
 
+def _ivf_lifecycle_layout(spark, em, base):
+    """Build + persist the IVF LIFECYCLE layout under ``base``:
+    centroids and ``lists/gen=0`` from the base slice (vec_id < the
+    80% append cut), ``lists/gen=1`` = the later-arriving slice
+    assigned against the frozen LOADED centroids — one broadcast
+    map-only pass — both cluster-partitioned (one file per serving
+    partition). Returns the loaded centroids. One spelling for
+    sim_index_append, sim_index_delete and sim_index_compact (the
+    `pq._ivfpq_lifecycle_layout` discipline)."""
+    cut = _ivf_append_cut(em)
+    refined, lists = _ivf_build_from(em.filter(F.col("vec_id") < cut))
+    refined.write.mode("overwrite").parquet(f"{base}/centroids")
+    lists.repartition("cluster").write.mode("overwrite").partitionBy(
+        "cluster"
+    ).parquet(f"{base}/lists/gen=0")
+    cent = spark.read.parquet(f"{base}/centroids")
+    batch = em.filter(F.col("vec_id") >= cut).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
+    )
+    _ivf_assign(batch, cent).repartition("cluster").write.mode(
+        "overwrite"
+    ).partitionBy("cluster").parquet(f"{base}/lists/gen=1")
+    return cent
+
+
 @register("sim_index_append", oracle=IVF_APPEND_SQL)
 def sim_index_append(spark, sf_dir):
     """ANN index MAINTENANCE: append new vectors to a persisted IVF
@@ -1724,29 +1745,15 @@ def sim_index_append(spark, sf_dir):
     (sim_index_persist_probe's trick)."""
     from ..registry import scratch_dir
 
-    em = table(spark, sf_dir, "embeddings")
-    cut = _ivf_append_cut(em)
-    refined, lists = _ivf_build_from(em.filter(F.col("vec_id") < cut))
-
     base = scratch_dir("sim_index_append")
-    cent_path, list_path = f"{base}/centroids", f"{base}/lists"
-    refined.write.mode("overwrite").parquet(cent_path)
-    lists.repartition("cluster").write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(f"{list_path}/gen=0")
-
-    cent = spark.read.parquet(cent_path)
-    batch = em.filter(F.col("vec_id") >= cut).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
+    cent = _ivf_lifecycle_layout(
+        spark, table(spark, sf_dir, "embeddings"), base
     )
-    _ivf_assign(batch, cent).repartition("cluster").write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(f"{list_path}/gen=1")
-
     # basePath makes gen a discovered partition column alongside
     # cluster, so the serving scan stays partition-prunable by BOTH
+    list_path = f"{base}/lists"
     inv = spark.read.option("basePath", list_path).parquet(
-        f"{list_path}/gen=0", f"{list_path}/gen=1"
+        *gen_paths(list_path, 2)
     )
     return _ivf_probe(spark, sf_dir, cent, inv)
 
@@ -1777,9 +1784,9 @@ def sim_index_delete(spark, sf_dir):
     of stream_dedup_delete_e2e (round-8 verdict item 4 named BOTH
     generation indexes): given a takedown cohort, every inverted-list
     generation is rewritten WITHOUT those vectors into purged twins
-    (cluster-partitioned like the serving layout), a
-    tombstone table records the deleted ids, and the write-last
-    ``takedown_applied`` marker publishes the swap atomically —
+    (cluster-partitioned like the serving layout), a tombstone table
+    records the deleted ids, and the write-last ``takedown_upto``
+    marker publishes the swap atomically (one `generations.purge`) —
     serving probes the purged layout and a deleted vector can never
     again appear in any answer.
 
@@ -1803,37 +1810,13 @@ def sim_index_delete(spark, sf_dir):
     from ..registry import scratch_dir
 
     em = table(spark, sf_dir, "embeddings")
-    cut = _ivf_append_cut(em)
-    refined, lists = _ivf_build_from(em.filter(F.col("vec_id") < cut))
     base = scratch_dir("sim_index_delete")
-    cent_path, list_path = f"{base}/centroids", f"{base}/lists"
-    refined.write.mode("overwrite").parquet(cent_path)
-    lists.repartition("cluster").write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(f"{list_path}/gen=0")
-    cent = spark.read.parquet(cent_path)
-    batch = em.filter(F.col("vec_id") >= cut).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    _ivf_assign(batch, cent).repartition("cluster").write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(f"{list_path}/gen=1")
+    cent = _ivf_lifecycle_layout(spark, em, base)
 
     # the takedown: purged per-generation twins, tombstones, marker
-    td = F.col("c_id") % VEC_TD_MOD == VEC_TD_RES
-    write_twins(
-        spark, list_path, (0, 1), lambda df: df.filter(~td), by=("cluster",)
-    )
-    (
-        em.filter(F.col("vec_id") % VEC_TD_MOD == VEC_TD_RES)
-        .select(F.col("vec_id").alias("c_id"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{base}/tombstones")
-    )
-    publish_marker(f"{base}/takedown_applied", 1)
+    _apply_cluster_takedown(spark, base, "lists", 1, "c_id")
 
-    purged = read_gens(spark, gen_paths(list_path, 2, purged=1))
+    purged = read_gens(spark, gen_paths(f"{base}/lists", 2, purged=1))
     post = _ivf_probe(spark, sf_dir, cent, purged).localCheckpoint(
         eager=True
     )
@@ -1879,23 +1862,12 @@ def sim_index_compact(spark, sf_dir):
     tests/test_plans.py."""
     from ..registry import scratch_dir
 
-    em = table(spark, sf_dir, "embeddings")
-    cut = _ivf_append_cut(em)
-    refined, lists = _ivf_build_from(em.filter(F.col("vec_id") < cut))
     base = scratch_dir("sim_index_compact")
-    cent_path, list_path = f"{base}/centroids", f"{base}/lists"
-    refined.write.mode("overwrite").parquet(cent_path)
-    lists.repartition("cluster").write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(f"{list_path}/gen=0")
-    cent = spark.read.parquet(cent_path)
-    batch = em.filter(F.col("vec_id") >= cut).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
+    cent = _ivf_lifecycle_layout(
+        spark, table(spark, sf_dir, "embeddings"), base
     )
-    _ivf_assign(batch, cent).repartition("cluster").write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(f"{list_path}/gen=1")
-
+    list_path = f"{base}/lists"
+    lists_c = twin(list_path, "compacted")
     gens = gen_paths(list_path, 2)
     fold(
         list_path, 1,
@@ -1905,7 +1877,7 @@ def sim_index_compact(spark, sf_dir):
         .repartition("cluster")
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(f"{base}/lists_c"),
+        .parquet(lists_c),
     )
     pre = _ivf_probe(
         spark,
@@ -1914,7 +1886,7 @@ def sim_index_compact(spark, sf_dir):
         spark.read.option("basePath", list_path).parquet(*gens),
     ).localCheckpoint(eager=True)
     post = _ivf_probe(
-        spark, sf_dir, cent, spark.read.parquet(f"{base}/lists_c")
+        spark, sf_dir, cent, spark.read.parquet(lists_c)
     ).localCheckpoint(eager=True)
     diff = pre.exceptAll(post).unionByName(post.exceptAll(pre))
     if diff.limit(1).count() > 0:
@@ -2183,8 +2155,6 @@ def sim_index_recluster(spark, sf_dir):
     Scale: two codebook builds (broadcast-centroid map passes + one
     (cluster,dim) shuffle each) and two held-out assignment scans —
     O(corpus), no pairwise anything."""
-    from ..registry import scratch_dir
-
     em = table(spark, sf_dir, "embeddings")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
     train_cut, append_cut, _ = _ivf_cuts(mx)
@@ -2260,9 +2230,6 @@ def _recluster_body(spark, ex, train_cut, append_cut):
         "mean_aff_micro",
         flag.alias("recluster_due"),
     ).localCheckpoint(eager=True)
-
-
-RECALL_REPORT_SQL = None  # assembled below once the method oracles exist
 
 
 def _filtered_topk_sql():
@@ -2523,9 +2490,6 @@ def semantic_close_pairs(spark, sf_dir, k=KMEANS_K):
     rank-1 accumulation + half-up rounding, factored for the dedup
     cascade (dedup_cascade_report) which needs survivor-filterable
     PAIRS rather than per-vector verdicts."""
-    import numpy as np
-    import pandas as pd
-
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids, assign = _kmeans_fit(em, k, KMEANS_ITERS)
     assigned = assign(centroids).select(
@@ -2782,7 +2746,7 @@ def _compact_cluster_generations(spark, idx, family, upto):
         .repartition("cluster")
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(f"{root}_c"),
+        .parquet(twin(root, "compacted")),
         idx=idx,
     )
 
@@ -2944,7 +2908,7 @@ def stream_sim_index_e2e(spark, sf_dir):
     )
     assert log, "serving read did not record its paths"
     paths = log[-1]
-    if not any(p.endswith("/lists_c") for p in paths):
+    if twin(f"{base}/index/lists", "compacted") not in paths:
         raise AssertionError("probe did not serve from the compacted index")
     stale = [
         p
@@ -2971,7 +2935,6 @@ RECLUSTER_MID_SQL = (
     "(SELECT (4 * (max(vec_id) + 1) // 5 + max(vec_id) + 1) // 2"
     " FROM embeddings)"
 )
-N_RECLUSTER_BATCHES = 4  # build | validation | drift-fire | post
 
 
 def _stream_recluster_sql():
@@ -3294,7 +3257,7 @@ def stream_sim_gc_e2e(spark, sf_dir):
     out = run_sim_index_stream(
         spark, sf_dir, base, compact_after=boundary, serve_paths_log=log
     )
-    if not any(p.endswith("/lists_c") for p in log[-1]):
+    if twin(f"{idx}/lists", "compacted") not in log[-1]:
         raise AssertionError("post-GC probe did not serve from lists_c")
     return out
 

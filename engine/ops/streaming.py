@@ -10,6 +10,8 @@ streaming form; the batch equivalents are exact by construction
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1106,8 +1108,7 @@ def sink_stream_upsert_scd1(spark, sf_dir):
     demands partition-targeted rewrites (then: partitionBy(bucket) and
     rewrite only touched buckets, same pointer protocol)."""
     ptr, _snaps = _scd1_rig(spark, sf_dir, "sink_stream_upsert_scd1")
-    with open(ptr) as f:
-        return spark.read.schema(SCD1_SNAP_SCHEMA).parquet(f.read().strip())
+    return _current(spark, ptr, SCD1_SNAP_SCHEMA)
 
 
 SCD1_SNAP_SCHEMA = (
@@ -1143,18 +1144,49 @@ def _chunked_stream_feed(spark, sf_dir, src, n_chunks=3):
         os.utime(p, (now - (n_chunks - i) * 10,) * 2)
 
 
-def _generation_snapshot_rig(spark, sf_dir, opname, snap_schema, make_changes):
+def _pointed(ptr):
+    """The generation dir the pointer file ``ptr`` names (None before
+    the first generation is published)."""
+    if not os.path.exists(ptr):
+        return None
+    with open(ptr) as f:
+        return f.read().strip()
+
+
+def _current(spark, ptr, schema):
+    """The state the pointer ``ptr`` publishes, read with ``schema``."""
+    return spark.read.schema(schema).parquet(_pointed(ptr))
+
+
+def _snapshot_step(spark, snaps, ptr, schema, merge):
+    """The per-batch step of `_generation_snapshot_rig`: read the
+    current state through the pointer, ``merge(cur, batch_df)`` (``cur``
+    is None for the first batch), write the result to the immutable
+    ``gen-{batch}`` dir and atomically advance the pointer. The
+    pointer is the replay ledger: a batch whose ``gen-{batch}`` it
+    already names was applied, so a re-delivery is skipped — which
+    makes even a non-idempotent (additive) merge exactly-once."""
+
+    def step(batch_df, batch_id):
+        gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
+        cur = _pointed(ptr)
+        if cur == gen_dir:
+            return
+        if cur is not None:
+            cur = spark.read.schema(schema).parquet(cur)
+        merge(cur, batch_df).write.mode("overwrite").parquet(gen_dir)
+        publish_marker(ptr, gen_dir)  # atomic pointer advance
+
+    return step
+
+
+def _generation_snapshot_rig(spark, sf_dir, opname, snap_schema, merge):
     """Generation-snapshot foreachBatch rig shared by the SCD1 upsert,
-    the CDC apply, and time travel: chunked feed → per micro-batch,
-    ``make_changes`` projects the batch into the snapshot schema, the
-    result unions with the current snapshot, the newest
-    (last_ts, last_event_id) row per user wins, the new generation is
-    written to an immutable ``gen-{batch}`` dir, and a pointer file is
-    atomically advanced. Returns (pointer path, generations dir)."""
-    import os
-
-    from pyspark.sql import Window
-
+    the CDC apply, time travel, the incremental MV and the streaming
+    KMV: chunked feed → per micro-batch, `_snapshot_step` merges the
+    batch into the state the pointer names, writes the new generation
+    to an immutable ``gen-{batch}`` dir, and atomically advances the
+    pointer. Returns (pointer path, generations dir)."""
     from ..registry import scratch_dir
     from ..schemas import EVENTS_STREAM_SCHEMA
 
@@ -1165,37 +1197,43 @@ def _generation_snapshot_rig(spark, sf_dir, opname, snap_schema, make_changes):
     os.makedirs(snaps)
     _chunked_stream_feed(spark, sf_dir, src)
 
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("last_ts"), F.desc("last_event_id")
-    )
-
-    def upsert(batch_df, batch_id):
-        changes = make_changes(batch_df)
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                cur = spark.read.schema(snap_schema).parquet(f.read().strip())
-            changes = cur.unionByName(changes)
-        merged = (
-            changes.withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .drop("rn")
-        )
-        gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
-        merged.write.mode("overwrite").parquet(gen_dir)
-        publish_marker(ptr, gen_dir)  # atomic pointer advance
-
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
     run_available_now(
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt),
+        stream.writeStream.foreachBatch(
+            _snapshot_step(spark, snaps, ptr, snap_schema, merge)
+        ).option("checkpointLocation", ckpt),
         opname,
         300,
     )
     return ptr, snaps
+
+
+def _latest_wins(make_changes):
+    """The latest-wins merge of the upsert rigs: ``make_changes``
+    projects the batch into the snapshot schema, the result unions
+    with the current snapshot, and the newest (last_ts,
+    last_event_id) row per user wins."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("last_ts"), F.desc("last_event_id")
+    )
+
+    def merge(cur, batch_df):
+        changes = make_changes(batch_df)
+        if cur is not None:
+            changes = cur.unionByName(changes)
+        return (
+            changes.withColumn("rn", F.row_number().over(w))
+            .filter("rn = 1")
+            .drop("rn")
+        )
+
+    return merge
 
 
 def _scd1_rig(spark, sf_dir, opname):
@@ -1211,7 +1249,7 @@ def _scd1_rig(spark, sf_dir, opname):
         )
 
     return _generation_snapshot_rig(
-        spark, sf_dir, opname, SCD1_SNAP_SCHEMA, latest_cols
+        spark, sf_dir, opname, SCD1_SNAP_SCHEMA, _latest_wins(latest_cols)
     )
 
 
@@ -1272,10 +1310,10 @@ def sink_stream_cdc_apply(spark, sf_dir):
         )
 
     ptr, _snaps = _generation_snapshot_rig(
-        spark, sf_dir, "sink_stream_cdc_apply", snap_schema, cdc_changes
+        spark, sf_dir, "sink_stream_cdc_apply", snap_schema,
+        _latest_wins(cdc_changes),
     )
-    with open(ptr) as f:
-        snap = spark.read.schema(snap_schema).parquet(f.read().strip())
+    snap = _current(spark, ptr, snap_schema)
     # serving view: tombstoned keys are invisible
     return snap.filter(F.col("op") == "U").select(
         "user_id", "last_event_id", "last_value"
@@ -1319,8 +1357,6 @@ def scan_snapshot_time_travel(spark, sf_dir):
     chunk boundary, is a value-hash failure. Retention/GC of old
     generations is the same policy knob as snapshot expiry in real
     table formats."""
-    import os
-
     _ptr, snaps = _scd1_rig(spark, sf_dir, "scan_snapshot_time_travel")
     gen1 = os.path.join(snaps, "gen-00001")
     return spark.read.schema(SCD1_SNAP_SCHEMA).parquet(gen1).select(
@@ -1329,6 +1365,25 @@ def scan_snapshot_time_travel(spark, sf_dir):
 
 
 MV_STATE_SCHEMA = "event_type string, day string, n_events long, sum_cents long"
+
+
+def _mv_merge(cur, batch_df):
+    """The incremental MV's additive merge: the batch reduced to
+    re-aggregatable partials (count + exact cent sum per
+    (event_type, day)), summed with the current state."""
+    p = batch_df.groupBy(
+        "event_type",
+        F.col("ts").cast("date").cast("string").alias("day"),
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+    )
+    if cur is not None:
+        p = cur.unionByName(p)
+    return p.groupBy("event_type", "day").agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("sum_cents").alias("sum_cents"),
+    )
 
 
 @register(
@@ -1348,80 +1403,25 @@ def stream_foreachbatch_incremental_mv(spark, sf_dir):
     reduced to re-aggregatable partials (count + exact cent sum per
     (event_type, day)) and ADDITIVELY merged into the accumulated MV
     state with one sum-of-partials groupBy, written as a new
-    generation + atomic pointer advance (same reader-isolation
-    protocol as the SCD1 sink). Additive merges are NOT naturally
-    idempotent, so — unlike latest-wins upserts — replay safety needs
-    an explicit applied-batch ledger: a marker file per batchId,
-    checked before merging, makes a re-delivered batch a no-op. The
-    oracle is the full recompute over all of events, so a dropped
-    batch, a double-applied batch, or a stale-generation read all
-    break the value hash.
+    generation + atomic pointer advance (`_generation_snapshot_rig`,
+    the SCD1 sink's reader-isolation protocol). Additive merges are
+    NOT naturally idempotent, so — unlike latest-wins upserts — replay
+    safety rests on the rig's ledger: the pointer already naming a
+    batch's generation makes its re-delivery a no-op, and since the
+    pointer advance IS the commit of the merge, no kill can land
+    between applying a batch and recording it. The oracle is the full
+    recompute over all of events, so a dropped batch, a double-applied
+    batch, or a stale-generation read all break the value hash.
 
     Scale: per batch one map-side-combinable partial agg + a merge
     shuffle of |MV| keys (150 here) — O(batch) + O(|MV|), never
-    O(history); the ledger is one empty marker per batch. This is the
-    production shape for streaming rollups when no ACID table format
-    is available."""
-    import os
-
-    from ..registry import scratch_dir
-    from ..schemas import EVENTS_STREAM_SCHEMA
-
-    base = scratch_dir("stream_foreachbatch_incremental_mv")
-    src = os.path.join(base, "src")
-    snaps = os.path.join(base, "snaps")
-    ckpt = os.path.join(base, "ckpt")
-    applied = os.path.join(base, "applied")
-    for d in (src, snaps, applied):
-        os.makedirs(d, exist_ok=True)
-    ptr = os.path.join(base, "POINTER")
-    _chunked_stream_feed(spark, sf_dir, src)
-
-    def partial(df):
-        return df.groupBy(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "sum_cents"
-            ),
-        )
-
-    def merge_batch(batch_df, batch_id):
-        marker = os.path.join(applied, f"batch-{batch_id:05d}")
-        if os.path.exists(marker):
-            return  # replayed batch: additive merge must be a no-op
-        p = partial(batch_df)
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                cur = spark.read.schema(MV_STATE_SCHEMA).parquet(
-                    f.read().strip()
-                )
-            p = cur.unionByName(p)
-        merged = p.groupBy("event_type", "day").agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
-        gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
-        merged.write.mode("overwrite").parquet(gen_dir)
-        publish_marker(ptr, gen_dir)
-        with open(marker, "w") as f:
-            f.write("applied")
-
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    O(history). This is the production shape for streaming rollups
+    when no ACID table format is available."""
+    ptr, _snaps = _generation_snapshot_rig(
+        spark, sf_dir, "stream_foreachbatch_incremental_mv",
+        MV_STATE_SCHEMA, _mv_merge,
     )
-    run_available_now(
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt),
-        "stream_foreachbatch_incremental_mv",
-        300,
-    )
-    with open(ptr) as f:
-        return spark.read.schema(MV_STATE_SCHEMA).parquet(f.read().strip())
+    return _current(spark, ptr, MV_STATE_SCHEMA)
 
 
 @register(
@@ -1564,13 +1564,13 @@ def stream_kmv_distinct(spark, sf_dir):
     twin of agg_kmv_distinct: each micro-batch's distinct (scope,
     md5-hash) pairs union into the accumulated bottom-K state, which
     is re-trimmed to K per scope and written as a new generation +
-    atomic pointer advance. Because bottom-K-of-distinct-union is
-    IDEMPOTENT (re-merging a delivered batch changes nothing), replay
-    safety needs NO applied-batch ledger — the structural contrast
-    with stream_foreachbatch_incremental_mv's additive merge, whose
-    ledger exists precisely because addition is not idempotent. The
-    oracle is the batch KMV over all of events: sketch mergeability
-    (bottom-K of a union = bottom-K of bottom-Ks) makes
+    atomic pointer advance (`_generation_snapshot_rig`). Because
+    bottom-K-of-distinct-union is IDEMPOTENT (re-merging a delivered
+    batch changes nothing), replay safety would hold even without the
+    rig's pointer ledger — the structural contrast with
+    stream_foreachbatch_incremental_mv's additive merge, which needs
+    it. The oracle is the batch KMV over all of events: sketch
+    mergeability (bottom-K of a union = bottom-K of bottom-Ks) makes
     incremental ≡ batch exactly, so a dropped batch or stale
     generation breaks the value hash.
 
@@ -1578,20 +1578,9 @@ def stream_kmv_distinct(spark, sf_dir):
     that makes streaming distinct-count viable at 100 TB where exact
     per-key state grows unboundedly); per batch one distinct + one
     windowed trim over |state| + |batch-distinct| rows."""
-    import os
+    from pyspark.sql import Window
 
-    from ..registry import scratch_dir
-    from ..schemas import EVENTS_STREAM_SCHEMA
     from .aggregates import KMV_K
-
-    base = scratch_dir("stream_kmv_distinct")
-    src = os.path.join(base, "src")
-    snaps = os.path.join(base, "snaps")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (src, snaps):
-        os.makedirs(d, exist_ok=True)
-    ptr = os.path.join(base, "POINTER")
-    _chunked_stream_feed(spark, sf_dir, src)
 
     def scoped_hashes(df):
         h = df.select(
@@ -1610,39 +1599,22 @@ def stream_kmv_distinct(spark, sf_dir):
             )
         )
 
-    def merge_batch(batch_df, batch_id):
-        from pyspark.sql import Window
+    w = Window.partitionBy("scope").orderBy("hv")
 
+    def merge(cur, batch_df):
         p = scoped_hashes(batch_df)
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                cur = spark.read.schema(KMV_STATE_SCHEMA).parquet(
-                    f.read().strip()
-                )
+        if cur is not None:
             p = cur.unionByName(p).distinct()
-        w = Window.partitionBy("scope").orderBy("hv")
-        trimmed = (
+        return (
             p.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= KMV_K)
             .select("scope", "hv")
         )
-        gen_dir = os.path.join(snaps, f"gen-{batch_id:05d}")
-        trimmed.write.mode("overwrite").parquet(gen_dir)
-        publish_marker(ptr, gen_dir)
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    ptr, _snaps = _generation_snapshot_rig(
+        spark, sf_dir, "stream_kmv_distinct", KMV_STATE_SCHEMA, merge
     )
-    run_available_now(
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt),
-        "stream_kmv_distinct",
-        300,
-    )
-    with open(ptr) as f:
-        state = spark.read.schema(KMV_STATE_SCHEMA).parquet(f.read().strip())
+    state = _current(spark, ptr, KMV_STATE_SCHEMA)
     kth = state.groupBy("scope").agg(
         F.max("hv").alias("hk"), F.count(F.lit(1)).alias("n_kept")
     )

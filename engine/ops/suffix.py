@@ -22,10 +22,12 @@ from ..generations import (
     fold,
     gen_paths,
     markers,
+    publish,
     read_gens,
     twin,
+    write_tombstones,
 )
-from ..stream import fail_point, publish_marker, run_increments
+from ..stream import fail_point, read_batch_sink, run_increments
 
 SPAN_K = 8  # span length in tokens — the "memorized boilerplate" unit
 
@@ -989,7 +991,7 @@ def dedup_sa_takedown(spark, sf_dir):
     disk. This op publishes the PURGED generation: ``array_p`` /
     ``anchors_p`` twins (one filter-rewrite each — the filter rides
     the scan, no shuffle), a tombstone table, and the write-last
-    ``takedown_applied`` marker; the completeness audit
+    ``takedown_upto`` marker; the completeness audit
     (`audit_no_tombstoned`) walks the published twin roots, and
     span serving runs EXCLUSIVELY off the twins. Scope note (the
     round-9 ADVICE discipline): the original full-corpus artifact
@@ -1033,15 +1035,8 @@ def dedup_sa_takedown(spark, sf_dir):
 
     base = scratch_dir("dedup_sa_takedown")
     spans = _purged_sa_spans(spark, sf_dir, td, base)
-    (
-        d.filter(td)
-        .select("doc_id")
-        .distinct()
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{base}/tombstones")
-    )
-    publish_marker(f"{base}/takedown_applied", TD_AFTER)
+    write_tombstones(base, d, td, "doc_id")
+    publish(base, "purged", TD_AFTER)
 
     tomb = spark.read.parquet(f"{base}/tombstones")
     if tomb.limit(1).count() == 0:
@@ -1159,7 +1154,7 @@ def _span_cov_process_batch(spark, batch_docs, base, b, read_log=None):
     )
     if b > 0:
         paths = gen_paths(
-            f"{base}/anchors", b, folded=f"{base}/spans_c",
+            f"{base}/anchors", b, folded=_spans_c(base),
             **markers(base, b),
         )
         if read_log is not None:
@@ -1248,6 +1243,12 @@ def dedup_span_coverage_incremental(spark, sf_dir):
     return out
 
 
+def _spans_c(base):
+    """The fold target of the anchor generations: the compacted
+    distinct-span table, ``spans_c``."""
+    return twin(f"{base}/spans", "compacted")
+
+
 def _compact_span_index(spark, base, upto):
     """Fold anchor generations 0..upto's DISTINCT spans into ONE
     compacted table (``spans_c``) behind the write-last
@@ -1267,9 +1268,9 @@ def _compact_span_index(spark, base, upto):
         # on span (the _purge_sink sharding rule)
         .repartition(1, "span")
         .write.mode("overwrite")
-        .parquet(f"{base}/spans_c"),
+        .parquet(_spans_c(base)),
         idx=base,
-        folded=f"{base}/spans_c",
+        folded=_spans_c(base),
     )
 
 
@@ -1288,8 +1289,6 @@ def run_spancov_stream(
     boundary batch stays on the per-generation view).
     ``fail_at_batch`` raises AFTER the anchor generation write, BEFORE
     the sink write — the torn state."""
-    import os
-
     from .dedup import N_INC_BATCHES
     from .dedup_stream import _feed_key, _stage_feed
 
@@ -1324,14 +1323,9 @@ def run_spancov_stream(
         lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
         "stream_dedup_spancov_e2e", 600,
     )
-    paths = [
-        f"{sink}/batch_id={b}"
-        for b in range(N_INC_BATCHES)
-        if os.path.exists(f"{sink}/batch_id={b}")
-    ]
-    return spark.read.option("basePath", sink).parquet(*paths).select(
+    return read_batch_sink(spark, sink, N_INC_BATCHES).select(
         "doc_id",
-        F.col("batch_id").cast("long").alias("batch_id"),
+        "batch_id",
         "n_tokens",
         "dup_tokens",
         "dup_ratio",
@@ -1381,7 +1375,7 @@ def stream_dedup_spancov_e2e(spark, sf_dir):
     if not post:
         raise AssertionError("no post-compaction increment was processed")
     for b, paths in post:
-        n_art = sum(1 for p in paths if p.endswith("/spans_c"))
+        n_art = paths.count(_spans_c(base))
         stale = [
             p
             for p in paths

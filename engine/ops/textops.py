@@ -3326,10 +3326,8 @@ def stream_corpus_router_e2e(spark, sf_dir):
     one broadcast join + one combinable sum — O(batch)·1, no state
     beyond the O(buckets) model; exactly how quality gates sit on a
     bus in front of a 100 TB corpus store."""
-    import os
-
     from ..registry import scratch_dir
-    from ..stream import run_increments
+    from ..stream import read_batch_sink, run_increments
     from .dedup import N_INC_BATCHES
     from .dedup_stream import _stage_feed
 
@@ -3388,14 +3386,9 @@ def stream_corpus_router_e2e(spark, sf_dir):
         )
     finally:
         lr0.unpersist()
-    paths = [
-        f"{sink}/batch_id={b}"
-        for b in range(N_INC_BATCHES)
-        if os.path.exists(f"{sink}/batch_id={b}")
-    ]
-    return spark.read.option("basePath", sink).parquet(*paths).select(
+    return read_batch_sink(spark, sink, N_INC_BATCHES).select(
         "doc_id",
-        F.col("batch_id").cast("long").alias("batch_id"),
+        "batch_id",
         "n_scored",
         "dsir_weight_micro",
         "route",

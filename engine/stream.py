@@ -12,6 +12,7 @@ spelled once for every checkpointed rig in ``engine/ops``.
   covers, so its presence implies them.
 - `fail_point` is the test hook that kills a rig in a torn state
   (artifacts written, checkpoint not yet committed).
+- `read_batch_sink` reads back a rig's per-batch sink.
 - `batch_fan` sizes a micro-batch's compute.
 
 The generation layout those writes build (``gen=g`` dirs, compacted
@@ -85,6 +86,23 @@ def read_marker(path):
         return None
     with open(path) as f:
         return int(f.read().strip())
+
+
+def read_batch_sink(spark, sink, n):
+    """The per-batch sink ``<sink>/batch_id=b`` of batches ``0..n-1``:
+    ONE basePath scan of the batch dirs that exist (a batch whose
+    output was purged or never written has none), with ``batch_id``
+    cast to long."""
+    paths = [
+        f"{sink}/batch_id={b}"
+        for b in range(n)
+        if os.path.exists(f"{sink}/batch_id={b}")
+    ]
+    return (
+        spark.read.option("basePath", sink)
+        .parquet(*paths)
+        .withColumn("batch_id", F.col("batch_id").cast("long"))
+    )
 
 
 def fail_point(fail_at_batch, fail_phase, b, phase):

@@ -189,6 +189,77 @@ def test_gc_refuses_a_marker_no_family_replaces(tmp_path):
     assert os.path.exists(f"{idx}/anchors/gen=0")
 
 
+def test_gc_removes_a_purged_fold_past_the_watermark(tmp_path):
+    """After a compact-then-purge the folded ``codes_c`` still holds
+    the taken-down rows: once its ``codes_c_p`` twin serves and the
+    watermark has passed, the GC removes it with the generations; a
+    second GC (no ``_c`` left) still finds the family."""
+    idx, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
+    for g in range(3):
+        _touch_files(f"{idx}/codes/gen={g}", 1)
+    _touch_files(f"{idx}/codes_c", 1)
+    publish(idx, "compacted", 1)
+    _touch_files(f"{idx}/codes_c_p", 1)
+    _touch_files(f"{idx}/codes_p/gen=2", 1)
+    publish(idx, "purged", 2)
+    _commit(ckpt, [0, 1])
+    with pytest.raises(ValueError, match=r"\[2\].*replay"):
+        gc_generations(ckpt, idx)
+    assert os.path.exists(f"{idx}/codes_c")
+    _commit(ckpt, [2])
+    removed = gc_generations(ckpt, idx)
+    assert sorted(removed) == sorted(
+        [f"{idx}/codes/gen={g}" for g in range(3)] + [f"{idx}/codes_c"]
+    )
+    assert content_roots(idx, "codes") == [
+        f"{idx}/codes_p", f"{idx}/codes_c_p"
+    ]
+    assert gc_generations(ckpt, idx) == []
+
+
+def test_gc_keeps_a_fold_its_purge_does_not_cover(tmp_path):
+    """A fold published after the purge (``compacted_upto`` above
+    ``takedown_upto``) is the serving copy of gens the purge never
+    saw: the GC keeps it."""
+    idx, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
+    for g in range(3):
+        _touch_files(f"{idx}/codes/gen={g}", 1)
+    _touch_files(f"{idx}/codes_p/gen=0", 1)
+    _touch_files(f"{idx}/codes_c", 1)
+    _touch_files(f"{idx}/codes_c_p", 1)
+    publish(idx, "purged", 0)
+    publish(idx, "compacted", 1)
+    _commit(ckpt, [0, 1])
+    gc_generations(ckpt, idx)
+    assert os.path.exists(f"{idx}/codes_c")
+
+
+def test_ivfpq_compact_then_purge_gc_leaves_no_tombstoned_row(spark):
+    """The composed vector stream compacts at batch N-2 and takes down
+    at N-1; after the GC no root of the codes family holds a
+    tombstoned id and the un-purged ``codes_c`` is gone."""
+    from engine.ops.pq import run_ivfpq_stream
+    from engine.ops.similarity import N_SIM_BATCHES
+    from engine.registry import scratch_dir
+    from tests.conftest import SMOKE_SF_DIR
+
+    base = scratch_dir("test_ivfpq_compact_purge_gc")
+    run_ivfpq_stream(
+        spark, SMOKE_SF_DIR, base,
+        compact_after=N_SIM_BATCHES - 2, delete_after=N_SIM_BATCHES - 1,
+    )
+    idx = f"{base}/index"
+    assert os.path.isdir(f"{idx}/codes_c")
+    gc_generations(f"{base}/ckpt", idx)
+    assert not os.path.exists(f"{idx}/codes_c")
+    audit_no_tombstoned(
+        spark,
+        spark.read.parquet(f"{idx}/tombstones"),
+        content_roots(idx, "codes"),
+        id_col="vec_id",
+    )
+
+
 def test_content_roots_walks_originals_and_every_twin_present(tmp_path):
     idx = str(tmp_path)
     _touch_files(f"{idx}/lists/gen=2", 1)
@@ -275,19 +346,27 @@ def _code_strings(path):
 
 def test_generation_layout_lives_only_in_generations():
     """No module in engine/ops spells a twin path or root, a shrink
-    check or a layout marker by hand, and none wraps the GC: the
-    layout decision is made once, in engine/generations.py. A twin
-    root is caught as a path piece (``/lists_p``), a bare suffix
-    (``"_r"``) or the bare name of a generation family (``bands_p``,
-    families being the names the ops address as ``/<name>/gen=``)."""
+    check, a layout marker or a tombstone write by hand, and none
+    wraps the GC: the layout decision is made once, in
+    engine/generations.py. A twin root — compacted (``_c``, the
+    ``spans_c`` fold target included), purged or recoded — is caught
+    as a path piece (``/lists_c``), a bare suffix (``"_r"``) or the
+    bare name of a generation family (``bands_p``, families being the
+    names the ops address as ``/<name>/gen=``)."""
     patterns = {
         "purged-twin path": r"_p/gen=",
         "recoded-twin path": r"_r/gen=",
         "compacted-purged twin": r"_c_p",
-        "twin root": r"/\w+_[pr](/|$)|^_[pr](/|$)",
+        "twin root": r"/\w+_[cpr](/|$)|^_[cpr](/|$)",
         "shrink check": r"did not shrink",
         "layout marker": r"compacted_upto|takedown_upto|reclustered_upto",
+        "forked marker": r"takedown_applied|(^|/)reclustered(/|$)",
     }
+    for sample in (
+        "/spans_c", "/lists_c/", "_c", "/codes_p/gen=", "/reclustered",
+        "takedown_applied",
+    ):
+        assert any(re.search(p, sample) for p in patterns.values()), sample
     paths = sorted(glob.glob(os.path.join(OPS_DIR, "*.py")))
     strings = {p: list(_code_strings(p)) for p in paths}
     families = {
@@ -304,7 +383,7 @@ def test_generation_layout_lives_only_in_generations():
             for what, pat in patterns.items():
                 if re.search(pat, s):
                     hits.append(f"{name}:{lineno}: {what}: {s!r}")
-            bare = re.fullmatch(r"(\w+?)_[pr]", s)
+            bare = re.fullmatch(r"(\w+?)_[cpr]", s)
             if bare and bare.group(1) in families:
                 hits.append(f"{name}:{lineno}: twin root: {s!r}")
         tree = ast.parse(open(path).read())
@@ -313,5 +392,14 @@ def test_generation_layout_lives_only_in_generations():
             for node in ast.walk(tree)
             if isinstance(node, ast.FunctionDef)
             and node.name.startswith("_gc_")
+        ]
+        hits += [
+            f"{name}:{node.lineno}: tombstone write"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and ".write" in ast.unparse(node.func.value)
+            and any("tombstones" in ast.unparse(a) for a in node.args)
         ]
     assert hits == [], "\n".join(hits)

@@ -1236,15 +1236,16 @@ def test_sa_takedown_purges_artifact_and_audit_catches_plants(spark):
     import pytest
 
     from engine.generations import audit_no_tombstoned
-    from engine.ops.dedup_stream import TD_MOD, TD_RES
+    from engine.ops.dedup_stream import TD_AFTER, TD_MOD, TD_RES
     from engine.registry import scratch_root
+    from engine.stream import read_marker
 
     out = engine.QUERIES["dedup_sa_takedown"](spark, T2_SF_DIR)
     spans = out.collect()
     assert spans, "purged artifact served no spans — fixture degenerate"
 
     base = os.path.join(scratch_root(), "dedup_sa_takedown")
-    assert os.path.exists(f"{base}/takedown_applied")
+    assert read_marker(f"{base}/takedown_upto") == TD_AFTER
     tomb = spark.read.parquet(f"{base}/tombstones")
     tomb_ids = {r[0] for r in tomb.collect()}
     assert tomb_ids and all(t % TD_MOD == TD_RES for t in tomb_ids)

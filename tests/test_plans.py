@@ -906,10 +906,11 @@ def test_ivfpq_recluster_moved_layout_prunes_clusters(spark):
     from engine.generations import read_gens
     from engine.ops.pq import _ivfpq_coded
     from engine.registry import scratch_root
+    from engine.stream import read_marker
 
     engine.QUERIES["sim_index_ivfpq_recluster"](spark, T2_SF_DIR).count()
     base = os.path.join(scratch_root(), "sim_index_ivfpq_recluster")
-    assert os.path.exists(f"{base}/reclustered")  # marker published
+    assert read_marker(f"{base}/reclustered_upto") == 1  # marker published
     df = read_gens(
         spark, [f"{base}/codes_r/gen=0", f"{base}/codes_r/gen=1"],
         _ivfpq_coded,

@@ -3171,3 +3171,40 @@ def test_ivfpq_compact_delete_boundary_restart(spark, tmp_path):
     assert got == {tuple(r) for r in fresh.collect()}, (
         "restart across the compact×delete boundary diverged"
     )
+
+
+def test_snapshot_step_applies_a_redelivered_batch_once(spark, tmp_path):
+    """The generation-snapshot rig's pointer is its replay ledger: a
+    batch delivered twice (the replay after a kill past the pointer
+    advance) is merged once, even through the incremental MV's
+    additive merge; the next batch still merges."""
+    import datetime
+
+    from engine.ops.streaming import (
+        MV_STATE_SCHEMA,
+        _current,
+        _mv_merge,
+        _snapshot_step,
+    )
+
+    snaps, ptr = str(tmp_path / "snaps"), str(tmp_path / "CURRENT")
+    batch = spark.createDataFrame(
+        [
+            ("view", datetime.datetime(2024, 1, 1, 3), 1.25),
+            ("view", datetime.datetime(2024, 1, 1, 5), 2.5),
+        ],
+        "event_type string, ts timestamp, value double",
+    )
+    step = _snapshot_step(spark, snaps, ptr, MV_STATE_SCHEMA, _mv_merge)
+
+    def state():
+        return [
+            tuple(r)
+            for r in _current(spark, ptr, MV_STATE_SCHEMA).collect()
+        ]
+
+    step(batch, 0)
+    step(batch, 0)
+    assert state() == [("view", "2024-01-01", 2, 375)]
+    step(batch, 1)
+    assert state() == [("view", "2024-01-01", 4, 750)]
