@@ -25,13 +25,12 @@ can never replay.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import functions as F
 
-from .stream import publish_marker, read_marker
+from .stream import committed_src_batches, publish_marker, read_marker
 
 # marker kind -> (marker file under the index dir, replacement suffix)
 MARKERS = {
@@ -306,56 +305,12 @@ def ensure_gen_dirs(spark, dst_root, upto, builder, start=0):
         ).parquet(leaf)
 
 
-def committed_src_batches(ckpt):
-    """Data-batch ids whose source files the checkpoint has fully
-    COMMITTED — admitted in the offsets log AND covered by a commit
-    file. This is the replay horizon's complement: any batch NOT in
-    this set may be re-run on restart and therefore still needs its
-    per-generation index inputs. Parses the file-source metadata log
-    (ckpt/sources/0/<epoch>: a v1 header plus one JSON entry per
-    admitted file) against the commit log directory — the same two
-    logs Spark's own recovery reads, so the GC decision uses the
-    engine's actual ground truth, not a shadow bookkeeping table."""
-    commits = {
-        int(f)
-        for f in os.listdir(f"{ckpt}/commits")
-        if not f.startswith(".")
-    }
-    out = set()
-    for epoch in commits:
-        # FileStreamSourceLog COMPACTS its metadata every
-        # spark.sql.streaming.fileSource.log.compactInterval batches
-        # (default 10): the compacted epoch is written as
-        # "<epoch>.compact" (carrying every retained entry) and the
-        # plain file never exists — checking only the plain name
-        # would mark that batch forever-uncommitted and the GC guard
-        # would refuse for the stream's whole life past 10 batches.
-        for p in (
-            f"{ckpt}/sources/0/{epoch}",
-            f"{ckpt}/sources/0/{epoch}.compact",
-        ):
-            if not os.path.exists(p):
-                continue
-            with open(p) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue
-                    name = os.path.basename(json.loads(line)["path"])
-                    if name.startswith("batch_") and name.endswith(
-                        ".parquet"
-                    ):
-                        out.add(
-                            int(name[len("batch_"):-len(".parquet")])
-                        )
-    return out
-
-
 def gc_generations(ckpt, idx):
     """Watermark-gated generation GC: delete every generation
     ``<family>/gen=g`` under ``idx`` that BOTH (a) a published
     replacement serves — ``g`` is at or below a marker whose
-    replacement (`twin`) of the family exists — and (b) the
+    replacement of the family exists (`_replaced`; families are the
+    roots that hold ``gen=`` dirs) — and (b) the
     checkpoint's commit watermark has passed (every covered batch is
     in `committed_src_batches`, so no restart can replay one). A
     folded ``<root>_c`` goes too once its purged twin ``<root>_c_p``
@@ -368,25 +323,33 @@ def gc_generations(ckpt, idx):
     make the torn-state replay impossible. Models (centroids,
     codebooks) have no replacement and are never touched. Returns the
     removed paths."""
+    folded = marker(idx, "compacted")
+    # families: the roots that hold generations — or held them: a root
+    # the GC emptied still serves through its per-generation twins
+    fams = [
+        fam for fam in sorted(os.listdir(idx))
+        if any(
+            _holds_gens(r)
+            for r in (f"{idx}/{fam}", twin(f"{idx}/{fam}", "purged"),
+                      twin(f"{idx}/{fam}", "recoded"))
+        )
+    ]
     upto, published = {}, []
     for kind, (name, _suffix) in MARKERS.items():
         m = marker(idx, kind)
         if m is None:
             continue
         published.append(m)
-        fams = [
-            fam for fam in sorted(os.listdir(idx))
-            if os.path.isdir(twin(f"{idx}/{fam}", kind))
-            # a fold the GC swapped for its purged twin still serves
-            or kind == "compacted"
-            and os.path.isdir(twin(twin(f"{idx}/{fam}", kind), "purged"))
+        served = [
+            fam for fam in fams
+            if _replaced(f"{idx}/{fam}", kind, m, folded)
         ]
-        if not fams:
+        if not served:
             raise ValueError(
                 f"GC refused: {name} = {m} is published under {idx} but"
                 f" no family has its {twin('', kind)} replacement"
             )
-        for fam in fams:
+        for fam in served:
             upto[fam] = max(upto.get(fam, -1), m)
     if not published:
         raise ValueError(f"GC refused: no generation marker under {idx}")
@@ -404,7 +367,7 @@ def gc_generations(ckpt, idx):
             if g <= m and os.path.exists(p):
                 shutil.rmtree(p)
                 removed.append(p)
-    folded, purged = marker(idx, "compacted"), marker(idx, "purged")
+    purged = marker(idx, "purged")
     if folded is not None and purged is not None and purged >= folded:
         for fam in upto:
             c = twin(f"{idx}/{fam}", "compacted")
@@ -412,6 +375,30 @@ def gc_generations(ckpt, idx):
                 shutil.rmtree(c)
                 removed.append(c)
     return removed
+
+
+def _holds_gens(root):
+    """Whether ``root`` holds ``gen=`` dirs."""
+    return os.path.isdir(root) and any(
+        d.startswith("gen=") for d in os.listdir(root)
+    )
+
+
+def _replaced(root, kind, m, folded):
+    """Whether the family ``root`` has the replacement the ``kind``
+    marker at ``m`` promises: its `twin`; for a fold also the purged
+    twin the GC swapped it for; for a purge also the purged fold
+    ``<root>_c_p`` when the fold covers every purged generation
+    (``folded >= m``, so no per-generation twin was written)."""
+    c = twin(root, "compacted")
+    if kind == "compacted":
+        return os.path.isdir(c) or os.path.isdir(twin(c, "purged"))
+    return os.path.isdir(twin(root, kind)) or (
+        kind == "purged"
+        and folded is not None
+        and folded >= m
+        and os.path.isdir(twin(c, "purged"))
+    )
 
 
 def audit_no_tombstoned(spark, tomb, roots, id_col="doc_id"):

@@ -22,8 +22,15 @@ from ..generations import (
     stale_reads,
     twin,
 )
-from ..registry import register, table
-from ..stream import batch_fan, fail_point, read_batch_sink, run_increments
+from ..registry import corpus_key, register, table
+from ..stream import (
+    batch_fan,
+    fail_point,
+    read_batch_sink,
+    run_increments,
+    stage_feed,
+    write_batch_sink,
+)
 from .textops import (
     ROUTER_SQL,
     _dsir_features,
@@ -368,10 +375,8 @@ _GATE_CACHE: dict = {}
 
 
 def _frozen_gate_cached(spark, sf_dir, d, batch_of):
-    from .dedup_stream import _feed_key
-
     # app-scoped like _EDGE_CACHE: within-invocation sharing only
-    key = (spark.sparkContext.applicationId, _feed_key(sf_dir, "gate"))
+    key = (spark.sparkContext.applicationId, corpus_key(sf_dir, "gate"))
     if key not in _GATE_CACHE:
         lr0, t0 = _dsir_frozen_gate(d.filter(batch_of == 0))
         rows = [(r["bucket"], r["lr_micro"]) for r in lr0.collect()]
@@ -405,14 +410,18 @@ def run_corpus_prep_stream(
     `_compact_index_generations` + marker-gated-reader discipline the
     dedup stream uses; later increments serve from the compacted
     layout."""
-    from .dedup import N_INC_BATCHES, _lsh_band_rows, _shingle_array, _tokens
+    from .dedup import (
+        N_INC_BATCHES,
+        _lsh_band_rows,
+        _shingle_array,
+        _tokens,
+        doc_batch_of,
+    )
     from .dedup_stream import (
         _apply_takedown,
         _compact_index_generations,
-        _feed_key,
         _inc_lsh_dedupe_batch,
         _purge_sink,
-        _stage_feed,
     )
 
     if compact_after is not None and delete_after is not None:
@@ -420,17 +429,16 @@ def run_corpus_prep_stream(
 
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     lr0, t0 = _frozen_gate_cached(spark, sf_dir, d, batch_of)
 
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
     idx = f"{base}/index"
-    _stage_feed(
-        d, base, src,
-        [(b, batch_of == b) for b in range(N_INC_BATCHES)],
+    stage_feed(
+        d, base, src, batch_of, N_INC_BATCHES,
         # takedown rigs stage privately: arrival copies must sit
         # inside the purge/audit perimeter (round-10 review finding)
-        feed_key=_feed_key(sf_dir, "prep")
+        feed_key=corpus_key(sf_dir, "prep")
         if delete_after is None
         else None,
     )
@@ -506,9 +514,7 @@ def run_corpus_prep_stream(
                         .alias("jaccard_micro"),
                     )
                 )
-                out.coalesce(1).write.mode("overwrite").parquet(
-                    f"{sink}/batch_id={b}"
-                )
+                write_batch_sink(out, sink, b)
                 if compact_after is not None and b == compact_after:
                     _compact_index_generations(spark, idx, b)
                 if delete_after is not None and b == delete_after:
@@ -529,8 +535,7 @@ def run_corpus_prep_stream(
     try:
         run_increments(
             spark, src, "doc_id bigint, lang string, text string", ckpt,
-            "doc_id", lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
-            "stream_corpus_prep_e2e", 600,
+            batch_of, process, "stream_corpus_prep_e2e", 600,
         )
     finally:
         lr0.unpersist()

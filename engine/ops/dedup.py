@@ -29,6 +29,13 @@ N_INC_BATCHES = 3  # ingest increments (id-range slices of the corpus);
 # module is still initializing (decoration-time cross-import)
 
 
+def doc_batch_of(mx):
+    """A document's increment: ``doc_id`` cut into N_INC_BATCHES equal
+    id ranges over ``0..mx``, monotone in the id (the oracles spell it
+    ``(N * doc_id) // (mx + 1)``)."""
+    return F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+
+
 def _tokens():
     return F.split("text", " ")
 
@@ -2561,7 +2568,7 @@ def dedup_incremental_cascade(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     sem = frozen_semantic_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    batch_col = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_col = doc_batch_of(mx)
 
     def drops(pairs, a_col, b_col, tier_surv, surv):
         """b-side rows of `pairs` whose b endpoint is a tier survivor
@@ -2719,7 +2726,7 @@ def dedup_index_compact(spark, sf_dir):
 
 def _index_compact_body(spark, base, mx, doc_sh_all, bands_all):
     for b in range(N_INC_BATCHES):
-        sel = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}") == b
+        sel = doc_batch_of(mx) == b
         bands_all.filter(sel).write.mode("overwrite").parquet(
             f"{base}/bands/gen={b}"
         )
@@ -2745,9 +2752,7 @@ def _index_compact_body(spark, base, mx, doc_sh_all, bands_all):
 
     fold(f"{base}/bands", N_INC_BATCHES - 1, write)
 
-    sel = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}") == (
-        N_INC_BATCHES - 1
-    )
+    sel = doc_batch_of(mx) == N_INC_BATCHES - 1
     probe_sh = doc_sh_all.filter(sel)
     probe_bands = bands_all.filter(sel)
 

@@ -14,10 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..registry import register, shared_artifact, table
+from ..registry import corpus_key, register, table
 from ..generations import (
     audit_no_tombstoned,
-    committed_src_batches,
     content_roots,
     fold,
     gc_generations,
@@ -30,7 +29,17 @@ from ..generations import (
     write_tombstones,
     write_twins,
 )
-from ..stream import batch_fan, fail_point, read_batch_sink, run_increments
+from ..stream import (
+    batch_fan,
+    committed_src_batches,
+    fail_point,
+    feed_file,
+    put_file,
+    read_batch_sink,
+    run_increments,
+    stage_feed,
+    write_batch_sink,
+)
 from .dedup import (
     COMPACT_FILES,
     JACCARD_THRESHOLD,
@@ -47,128 +56,8 @@ from .dedup import (
     _lsh_verify_first_partner,
     _shingle_array,
     _tokens,
+    doc_batch_of,
 )
-
-
-def _feed_key(sf_dir, tag, table_file="documents.parquet"):
-    """Cache key for a shareable staged feed: the sliced table's file
-    listing (size, mtime) plus a rig-family tag (plain corpus vs the
-    engineered re-upload/paraphrase/drift transforms vs the intake
-    schema) — the `_sa_artifact_key` fingerprint discipline, so a
-    changed corpus can never serve a stale feed."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, table_file)
-    parts = [tag]
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                parts.append(
-                    f"{os.path.relpath(p, src)}:{st.st_size}:{st.st_mtime_ns}"
-                )
-    else:
-        st = os.stat(src)
-        parts.append(f"documents.parquet:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
-
-
-def _stage_feed(df, base, src, conds, step=20, feed_key=None, heavy=False):
-    """Stage a stream rig's feed: slice ``df`` by each (batch_id,
-    predicate) in ``conds`` into ONE parquet file
-    ``src/batch_<b>.parquet`` with strictly increasing mtimes, so the
-    file source admits them oldest-first and ``maxFilesPerTrigger=1``
-    maps one ingest increment to one micro-batch. Skips when the last
-    file already exists — a restart must see the same offsets log the
-    first run checkpointed. One spelling for every stream rig
-    (round-8 review: this block was forked verbatim four times).
-
-    ``feed_key``: when given, the sliced files are built ONCE per
-    (application, corpus, rig family) into a `registry.shared_artifact`
-    dir and each rig COPIES them into its own src — every stream op
-    previously re-ran the same N slice-write jobs per rig (round-9
-    verdict item 5). Copies,
-    not hardlinks: a rig may rewrite its feed in place and must never
-    mutate the shared cache. The published key additionally folds in
-    the feed's CONTENT signature — the df schema and every slicing
-    predicate's expression string — so two rigs that slice the same
-    corpus differently never share a cache. DELETE rigs must
-    NOT pass a feed_key at all: a takedown purges every arrival copy
-    the application owns, and a shared cache outside the purge/audit
-    perimeter would hold the deleted text — the rigs enforce this by
-    forcing private staging whenever delete_after is set. The cache
-    is a bench-rig artifact — production feeds arrive once, from the
-    bus."""
-    import hashlib
-    import os
-    import shutil
-    import time
-
-    last = conds[-1][0]
-    if os.path.exists(f"{src}/batch_{last}.parquet"):
-        return
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-
-    def build(dst_dir, stage_root):
-        # heavy=True: materialize the expensive feed transform ONCE,
-        # distributed — each slice's single-file write otherwise pulls
-        # the WHOLE upstream chain into its one task via coalesce(1)
-        # (the drifted-corpus feeds measured 5.5 s single-task per
-        # slice — guide §2.5/§5); repartition(1), unlike coalesce(1),
-        # keeps the filter parallel and only the final exchange is one
-        # task. For plain table feeds (heavy=False) the upstream is a
-        # single-split scan — coalesce(1) costs nothing there and the
-        # cache would be pure overhead (measured +26% on the delete
-        # rigs when applied unconditionally). persist, not
-        # localCheckpoint: only a cache can be freed once the slices
-        # are written.
-        src_df = df.persist() if heavy else df
-        one_file = (
-            (lambda d: d.repartition(1)) if heavy else (lambda d: d.coalesce(1))
-        )
-        try:
-            for b, cond in conds:
-                stage = f"{stage_root}/b{b}"
-                one_file(src_df.filter(cond)).write.mode(
-                    "overwrite"
-                ).parquet(stage)
-                part = next(
-                    f for f in os.listdir(stage) if f.startswith("part-")
-                )
-                os.replace(
-                    os.path.join(stage, part), f"{dst_dir}/batch_{b}.parquet"
-                )
-        finally:
-            if heavy:
-                src_df.unpersist(blocking=True)
-
-    if feed_key is None:
-        build(src, f"{base}/stage")
-        for b, _cond in conds:
-            ts = now - 60 + step * b
-            os.utime(f"{src}/batch_{b}.parquet", (ts, ts))
-        return
-
-    sig = "|".join(
-        [feed_key, df.schema.simpleString()]
-        + [f"{b}:{cond}" for b, cond in conds]
-    )
-
-    def build_shared(tmp):
-        build(tmp, f"{tmp}/stage")
-        shutil.rmtree(f"{tmp}/stage", ignore_errors=True)
-
-    shared = shared_artifact(
-        f"feed_{hashlib.md5(sig.encode()).hexdigest()[:16]}", build_shared
-    )
-    for b, _cond in conds:
-        dst = f"{src}/batch_{b}.parquet"
-        shutil.copy(f"{shared}/batch_{b}.parquet", dst)
-        ts = now - 60 + step * b
-        os.utime(dst, (ts, ts))
 
 
 INC_LSH_SQL = f"""
@@ -212,7 +101,7 @@ def _inc_lsh_process_batch(
     — the replayed-loop form; the streaming form
     (stream_dedup_incremental_e2e) drives the SAME core from
     foreachBatch over arriving files."""
-    sel = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}") == b
+    sel = doc_batch_of(mx) == b
     return _inc_lsh_dedupe_batch(
         spark, doc_sh_all.filter(sel), bands_all.filter(sel), base, b,
         bucket_cap=bucket_cap,
@@ -443,7 +332,7 @@ def _reupload_docs(d, mx):
     """The transformed corpus (docs_x): closed-form content re-uploads
     spliced into the post-boundary batches. NULL-safe like the oracle:
     a missing source doc leaves the text unchanged."""
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     src_map = d.select(
         F.col("doc_id").alias("s_id"), F.col("text").alias("s_text")
     )
@@ -516,7 +405,7 @@ def _apply_takedown(
         # rows, broadcastable at any corpus size.
         write_tombstones(
             idx,
-            spark.read.parquet(*[f"{src}/batch_{g}.parquet" for g in covered]),
+            spark.read.parquet(*[feed_file(src, g) for g in covered]),
             td,
             F.sha2(F.col("text"), 256).alias("text_sha"),
             name="tombstones_sha",
@@ -620,14 +509,13 @@ def run_inc_lsh_stream(
     deterministic overwrite. ``read_paths_log`` (test/proof hook)
     records the band paths each increment actually read.
 
-    Feed: the corpus's {N} id-range increments land as one parquet
-    FILE each under src/ with strictly increasing mtimes, so the file
-    source admits them oldest-first and ``maxFilesPerTrigger=1`` maps
-    one ingest batch to one micro-batch. The feed is skipped when the
-    files already exist (a restart must see the same offsets log the
-    first run checkpointed). Per micro-batch, foreachBatch derives the
-    batch id from the data itself (min doc_id — NEVER the epoch id,
-    which shifts across restarts), bands the docs, and runs the exact
+    Feed: the corpus's {N} id-range increments (`doc_batch_of`) are
+    staged by `stream.stage_feed`, one file per increment and one
+    increment per micro-batch; a restart finds the feed staged and
+    sees the same offsets log the first run checkpointed. Per
+    micro-batch, the runner derives the batch id from the data itself
+    (``min(batch_of)`` — NEVER the epoch id, which shifts across
+    restarts), and ``process`` bands the docs and runs the exact
     `_inc_lsh_dedupe_batch` core the replayed-loop op uses; the sink
     write is a deterministic per-generation directory overwrite, so
     an at-least-once replay of a torn batch converges to the same
@@ -654,22 +542,17 @@ def run_inc_lsh_stream(
             )
     elif feed_tag is None and docs_override is None:
         feed_tag = "lsh"  # the untransformed corpus feed is shareable
-    _stage_feed(
-        d,
-        base,
-        src,
-        [
-            (b, F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}") == b)
-            for b in range(N_INC_BATCHES)
-        ],
-        feed_key=_feed_key(sf_dir, feed_tag) if feed_tag else None,
+    batch_of = doc_batch_of(mx)
+    stage_feed(
+        d, base, src, batch_of, N_INC_BATCHES,
+        feed_key=corpus_key(sf_dir, feed_tag) if feed_tag else None,
     )
 
     if compact_after is not None and delete_after is not None:
         raise ValueError("rig supports one maintenance mode per stream")
 
     def process(batch_df, b):
-        # the runner derives b from the pre-filter min(doc_id); any
+        # the runner derives b from the pre-filter min(batch_of); any
         # member of the batch yields the same id (batches are id
         # ranges), so it stays valid when the guard below drops rows
         if block_reuploads or block_neardups:
@@ -742,9 +625,7 @@ def run_inc_lsh_stream(
                 counts_paths_log=counts_paths_log,
             )
             fail_point(fail_at_batch, fail_phase, b, "pre_sink")
-            out.drop("batch_id").coalesce(1).write.mode("overwrite").parquet(
-                f"{sink}/batch_id={b}"
-            )
+            write_batch_sink(out.drop("batch_id"), sink, b)
             if compact_after is not None and b == compact_after:
                 _compact_index_generations(spark, idx, b)
                 fail_point(fail_at_batch, fail_phase, b, "post_compact")
@@ -763,8 +644,7 @@ def run_inc_lsh_stream(
             doc_sh.unpersist()
 
     run_increments(
-        spark, src, "doc_id bigint, text string", ckpt, "doc_id",
-        lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
+        spark, src, "doc_id bigint, text string", ckpt, batch_of, process,
         "stream_dedup_incremental_e2e", 600,
     )
     return read_batch_sink(spark, sink, N_INC_BATCHES).select(
@@ -1008,7 +888,7 @@ def stream_dedup_compact_e2e(spark, sf_dir):
 def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     """Rewrite the STAGED FEED FILES without the takedown docs — the
     step ADVICE r9 flagged: the index takedown purged every serving
-    and index artifact while ``src/batch_*.parquet`` (the arrival
+    and index artifact while the staged feed files (the arrival
     copies the file source replays from) still held the deleted
     documents' full text. Must run only after the takedown GC has
     proven the covered batches are outside the replay horizon —
@@ -1019,10 +899,10 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     ``upto`` AND the checkpoint's commit log shows every batch
     0..upto committed (the same ground truth `gc_generations`
     reads), so a mis-ordered caller fails loudly instead of silently
-    corrupting replayable input. Each rewrite is an atomic
-    os.replace of a deterministically filtered copy; mtimes are
-    preserved so the source listing order never changes (the
-    restarted stream sees the same, already-committed paths). When
+    corrupting replayable input. Each rewrite is a `stream.put_file`
+    of a deterministically filtered copy: atomic, and the mtime is
+    kept so the source listing order never changes (the restarted
+    stream sees the same, already-committed paths). When
     content tombstones exist (``tombstones_sha``), batches strictly
     past the boundary additionally drop rows carrying tombstoned
     CONTENT — the feed-side mirror of the re-upload guard; those
@@ -1066,7 +946,7 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
     if os.path.exists(f"{idx}/tombstones_sha"):
         sha = spark.read.parquet(f"{idx}/tombstones_sha")
     for g in range(n_batches if n_batches is not None else N_INC_BATCHES):
-        p = f"{src}/batch_{g}.parquet"
+        p = feed_file(src, g)
         if not os.path.exists(p):
             continue
         kept = spark.read.parquet(p)
@@ -1080,14 +960,7 @@ def _purge_feed(spark, base, src, upto, ckpt, pred=None, n_batches=None):
                 "left_anti",
             )
         if g <= upto or sha_rewrite:
-            st = os.stat(p)
-            stage = f"{base}/stage_purge/b{g}"
-            kept.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in os.listdir(stage) if f.startswith("part-")
-            )
-            os.replace(os.path.join(stage, part), p)
-            os.utime(p, (st.st_atime, st.st_mtime))
+            put_file(kept.coalesce(1), f"{base}/stage_purge/b{g}", p)
     shutil.rmtree(f"{base}/stage", ignore_errors=True)
     shutil.rmtree(f"{base}/stage_purge", ignore_errors=True)
 
@@ -1407,7 +1280,7 @@ def stream_dedup_delete_e2e(spark, sf_dir):
 
     # from-scratch rebuild equivalence: a fresh index on the reduced
     # corpus must serve the post-boundary increments identically
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     reduced = d.filter(
         ~((F.col("doc_id") % TD_MOD == TD_RES) & (batch_of <= TD_AFTER))
     )
@@ -1512,7 +1385,7 @@ def _paraphrase_docs(d, mx):
     the engineered re-upload that evades the exact-content guard but
     not the band tombstones. NULL-safe like the oracle: a missing
     source doc leaves the text unchanged."""
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     src_map = d.select(
         F.col("doc_id").alias("s_id"), F.col("text").alias("s_text")
     )
@@ -1751,7 +1624,7 @@ def stream_takedown_unified_e2e(spark, sf_dir):
     # 2. feed purge (safe: the GC just proved replay is impossible)
     _purge_feed(spark, base, f"{base}/src", TD_AFTER, ckpt=ckpt)
     # 3. SA family: publish the purged projection and serve spans
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     td = _takedown_pred() & (batch_of <= TD_AFTER)
     spans = _purged_sa_spans(spark, sf_dir, td, f"{base}/sa")
     if spans.limit(1).count() == 0:
@@ -1920,7 +1793,7 @@ def stream_takedown_text_vector_e2e(spark, sf_dir):
     t_idx, t_ckpt = f"{tbase}/index", f"{tbase}/ckpt"
     gc_generations(t_ckpt, t_idx)
     _purge_feed(spark, tbase, f"{tbase}/src", TD_AFTER, ckpt=t_ckpt)
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     td_doc = _takedown_pred() & (batch_of <= TD_AFTER)
     spans = _purged_sa_spans(spark, sf_dir, td_doc, f"{tbase}/sa")
     if spans.limit(1).count() == 0:

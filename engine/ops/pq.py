@@ -33,8 +33,15 @@ from ..generations import (
     twin,
     write_twins,
 )
-from ..registry import fan_out, register, shared_artifact, table
-from ..stream import fail_point, publish_marker, read_marker, run_increments
+from ..registry import corpus_key, fan_out, register, shared_artifact, table
+from ..stream import (
+    fail_point,
+    feed_file,
+    publish_marker,
+    read_marker,
+    run_increments,
+    stage_feed,
+)
 from .similarity import (
     DRIFT_TRIGGER_PCT,
     EMB_DIM,
@@ -44,6 +51,7 @@ from .similarity import (
     IVF_NPROBE,
     IVF_TRAIN_CUT_SQL,
     N_PROBES,
+    N_SIM_BATCHES,
     SQL_DOT,
     TOP_K,
     VEC_TD_MOD,
@@ -55,8 +63,8 @@ from .similarity import (
     _ivf_assign,
     _ivf_build,
     _ivf_build_from,
-    _increment_of,
     _ivf_cuts,
+    _vec_increments,
     dot6,
 )
 
@@ -331,7 +339,7 @@ def sim_search_ivfpq(spark, sf_dir):
 def _ivfpq_full_build_dir(spark, sf_dir):
     """Build the FULL-CORPUS composed-index artifacts (centroids,
     codebooks, cluster-carrying codes) ONCE per corpus fingerprint
-    into a `registry.shared_artifact` dir — the `_stage_feed` cache
+    into a `registry.shared_artifact` dir — the staged-feed cache
     discipline applied to the build that
     sim_search_ivfpq, sim_index_ivfpq_persist, and
     sim_search_ivfpq_filtered each re-ran identically (round-10
@@ -340,7 +348,6 @@ def _ivfpq_full_build_dir(spark, sf_dir):
     ops must not use this cache: their models are base-slice-trained
     (different artifacts), and delete rigs keep every content-derived
     artifact inside their own purge/audit perimeter."""
-    from .dedup_stream import _feed_key
 
     def build(tmp):
         em_full = table(spark, sf_dir, "embeddings")
@@ -367,7 +374,7 @@ def _ivfpq_full_build_dir(spark, sf_dir):
             .parquet(f"{tmp}/codes")
         )
 
-    key = _feed_key(sf_dir, "ivfpq-build", "embeddings.parquet")
+    key = corpus_key(sf_dir, "ivfpq-build", "embeddings")
     return shared_artifact(f"ivfpq_build_{key}", build)
 
 
@@ -922,23 +929,16 @@ def run_pq_stream(spark, sf_dir, base, fail_at_batch=None):
     BEFORE the checkpoint commit (the torn state)."""
     import os
 
-    from .dedup_stream import _feed_key, _stage_feed
-
     em_full = table(spark, sf_dir, "embeddings")
     em = em_full.select("vec_id", "embedding")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
-    _, cut, mid = _ivf_cuts(mx)
-    bounds = [(0, cut), (cut, mid), (mid, mx + 1)]
+    _firsts, batch_of = _vec_increments(mx)
     src, ckpt, idx = f"{base}/src", f"{base}/ckpt", f"{base}/index"
     # stage the FULL table so the shared "sim" cache holds identical
     # bytes no matter which rig builds it first
-    _stage_feed(
-        em_full, base, src,
-        [
-            (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            for b, (lo, hi) in enumerate(bounds)
-        ],
-        feed_key=_feed_key(sf_dir, "sim", "embeddings.parquet"),
+    stage_feed(
+        em_full, base, src, batch_of, N_SIM_BATCHES,
+        feed_key=corpus_key(sf_dir, "sim", "embeddings"),
     )
 
     def process(batch_df, b):
@@ -962,12 +962,12 @@ def run_pq_stream(spark, sf_dir, base, fail_at_batch=None):
 
     run_increments(
         spark, src, "vec_id bigint, embedding array<float>", ckpt,
-        "vec_id", _increment_of(bounds), process, "stream_sim_pq_e2e", 600,
+        batch_of, process, "stream_sim_pq_e2e", 600,
     )
     loaded = _pq_books_from_df(spark.read.parquet(f"{idx}/codebooks"))
     gens = [
         f"{idx}/codes/gen={b}"
-        for b in range(len(bounds))
+        for b in range(N_SIM_BATCHES)
         if os.path.exists(f"{idx}/codes/gen={b}")
     ]
     return _pq_adc_probe(spark, em, loaded, spark.read.parquet(*gens))
@@ -1138,7 +1138,6 @@ def _ivfpq_lifecycle_build_dir(spark, sf_dir, kind):
     The key folds the corpus file listing and ``kind``, so a changed
     corpus can never serve stale artifacts; `registry.shared_artifact`
     owns the publish."""
-    from .dedup_stream import _feed_key
 
     def build(tmp):
         em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1151,7 +1150,7 @@ def _ivfpq_lifecycle_build_dir(spark, sf_dir, kind):
         else:
             _ivfpq_lifecycle_layout(spark, em, tmp)
 
-    key = _feed_key(sf_dir, f"ivfpq-lifecycle-{kind}", "embeddings.parquet")
+    key = corpus_key(sf_dir, f"ivfpq-lifecycle-{kind}", "embeddings")
     return shared_artifact(f"ivfpq_lc_{key}", build)
 
 
@@ -1580,9 +1579,7 @@ def run_ivfpq_stream(
     itself published, skips the already-converged retrain, and
     re-encodes to the same bytes). ``monitor_log`` records
     (batch, ratio, baseline, fired) tuples."""
-    from .dedup_stream import _feed_key, _stage_feed
     from .similarity import (
-        N_SIM_BATCHES,
         _apply_cluster_takedown,
         _compact_cluster_generations,
     )
@@ -1603,8 +1600,8 @@ def run_ivfpq_stream(
     em_full = table(spark, sf_dir, "embeddings")
     em = em_full.select("vec_id", "embedding")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
-    train_cut, cut, mid = _ivf_cuts(mx)
-    bounds = [(0, cut), (cut, mid), (mid, mx + 1)]
+    train_cut, cut, _mid = _ivf_cuts(mx)
+    firsts, batch_of = _vec_increments(mx)
     src, ckpt, idx = f"{base}/src", f"{base}/ckpt", f"{base}/index"
     # same slices, schema, and key family as the other sim rigs, so
     # the staged feed is one shared cache entry across ALL of them —
@@ -1612,18 +1609,12 @@ def run_ivfpq_stream(
     # recluster mode streams the drifted corpus and shares the
     # "pqdrift" feed with the PQ recode rig (identical slices/schema)
     feed_df = _drifted_corpus(em, cut) if recluster else em_full
-    _stage_feed(
-        feed_df, base, src,
-        [
-            (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            for b, (lo, hi) in enumerate(bounds)
-        ],
+    stage_feed(
+        feed_df, base, src, batch_of, N_SIM_BATCHES,
         feed_key=None
         if delete_after is not None
-        else _feed_key(
-            sf_dir,
-            "pqdrift" if recluster else "sim",
-            "embeddings.parquet",
+        else corpus_key(
+            sf_dir, "pqdrift" if recluster else "sim", "embeddings"
         ),
         heavy=recluster,  # the drift re-embed chain is per-row CPU
     )
@@ -1683,7 +1674,7 @@ def run_ivfpq_stream(
             # published and skips the already-converged retrain
             cent0 = spark.read.parquet(f"{idx}/centroids")
             rat = _aff_mean(
-                _pq_cohort_sample(batch_df, bounds[b][0]), cent0
+                _pq_cohort_sample(batch_df, firsts[b]), cent0
             )
             # the baseline scalar is immutable once published with the
             # models — read it once per run, not once per monitored
@@ -1703,7 +1694,7 @@ def run_ivfpq_stream(
                 # staged feed is the raw vector store a production
                 # recluster scans (deterministic on replay)
                 arrived = spark.read.parquet(
-                    *[f"{src}/batch_{g}.parquet" for g in range(b + 1)]
+                    *[feed_file(src, g) for g in range(b + 1)]
                 ).select("vec_id", "embedding")
                 c_new, _ = _ivf_build_from(arrived)
                 c_new.write.mode("overwrite").parquet(
@@ -1770,8 +1761,7 @@ def run_ivfpq_stream(
 
     run_increments(
         spark, src, "vec_id bigint, embedding array<float>", ckpt,
-        "vec_id", _increment_of(bounds), process, "stream_sim_ivfpq_e2e",
-        600,
+        batch_of, process, "stream_sim_ivfpq_e2e", 600,
     )
 
     cent = spark.read.parquet(f"{idx}/centroids")
@@ -1828,7 +1818,6 @@ def stream_sim_ivfpq_e2e(spark, sf_dir):
     file per probed cluster — the cheapest serving layout any 100 TB
     vector store can maintain online."""
     from ..registry import scratch_dir
-    from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_e2e")
     boundary = N_SIM_BATCHES - 2
@@ -1914,7 +1903,6 @@ def stream_sim_ivfpq_recluster_e2e(spark, sf_dir):
     covered generation of 8-byte code rows — no re-encode ever; the
     marker swap costs one rename."""
     from ..registry import scratch_dir
-    from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_recluster_e2e")
     log, mon = [], []
@@ -1975,7 +1963,6 @@ def stream_sim_ivfpq_compact_delete_e2e(spark, sf_dir):
     uncovered generation; the audit is one union scan semi-joined
     against O(cohort) broadcast tombstones."""
     from ..registry import scratch_dir
-    from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_compact_delete_e2e")
     boundary_c = N_SIM_BATCHES - 2
@@ -2656,23 +2643,17 @@ def run_pq_recode_stream(
     ``serve_paths_log`` records what the final probe read."""
     import os
 
-    from .dedup_stream import _feed_key, _stage_feed
-
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
-    train_cut, cut, mid = _ivf_cuts(mx)
+    train_cut, cut, _mid = _ivf_cuts(mx)
     ex = _drifted_corpus(em, cut)
-    bounds = [(0, cut), (cut, mid), (mid, mx + 1)]
+    firsts, batch_of = _vec_increments(mx)
     src, ckpt, idx = f"{base}/src", f"{base}/ckpt", f"{base}/index"
-    _stage_feed(
-        ex, base, src,
-        [
-            (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            for b, (lo, hi) in enumerate(bounds)
-        ],
+    stage_feed(
+        ex, base, src, batch_of, N_SIM_BATCHES,
         feed_key=None
         if delete_after is not None
-        else _feed_key(sf_dir, "pqdrift", "embeddings.parquet"),
+        else corpus_key(sf_dir, "pqdrift", "embeddings"),
         heavy=True,  # the drift re-embed chain is per-row CPU
     )
 
@@ -2710,7 +2691,7 @@ def run_pq_recode_stream(
                 spark.read.parquet(f"{idx}/codebooks/gen=0")
             )
             rat = _ratio_scalar(
-                _pq_cohort_sample(batch_df, bounds[b][0]), books0
+                _pq_cohort_sample(batch_df, firsts[b]), books0
             )
             # immutable once published with the gen=0 models — one
             # collect per run, not one per monitored batch
@@ -2751,13 +2732,12 @@ def run_pq_recode_stream(
 
     run_increments(
         spark, src, "vec_id bigint, embedding array<float>", ckpt,
-        "vec_id", _increment_of(bounds), process,
-        "stream_sim_pq_recode_e2e", 600,
+        batch_of, process, "stream_sim_pq_recode_e2e", 600,
     )
 
     gens = [
         p
-        for p in gen_paths(f"{idx}/codes", len(bounds), **markers(idx))
+        for p in gen_paths(f"{idx}/codes", N_SIM_BATCHES, **markers(idx))
         if os.path.exists(p)
     ]
     if serve_paths_log is not None:
@@ -3045,7 +3025,6 @@ def stream_sim_ivfpq_delete_e2e(spark, sf_dir):
     import os
 
     from ..registry import scratch_dir
-    from .similarity import N_SIM_BATCHES
 
     base = scratch_dir("stream_sim_ivfpq_delete_e2e")
     boundary = N_SIM_BATCHES - 2

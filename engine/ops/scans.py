@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register, scratch_dir, table
-from ..stream import run_available_now
+from ..stream import read_feed, run_available_now
 
 
 @register(
@@ -972,9 +972,7 @@ def sink_python_stream_datasource(spark, sf_dir):
 
     spark.dataSource.register(make_pystream_sink())
     stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        read_feed(spark, src, EVENTS_STREAM_SCHEMA)
         .select(
             "event_id",
             "user_id",
@@ -1347,6 +1345,8 @@ def scan_ignore_corrupt_files(spark, sf_dir):
     over the directory, no driver-side listing beyond normal planning;
     a 100 TB lake with a handful of torn files loses those splits
     only."""
+    from ..session import scoped_confs
+
     out = scratch_dir("ignore_corrupt")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1356,15 +1356,12 @@ def scan_ignore_corrupt_files(spark, sf_dir):
     o.write.mode("overwrite").parquet(f"{out}/t")
     with open(f"{out}/t/part-corrupt-00099.parquet", "wb") as fh:
         fh.write(b"PAR1 this is not a real parquet footer either")
-    prev = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
-    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-    try:
-        back = spark.read.parquet(f"{out}/t")
+    with scoped_confs(
+        spark, **{"spark.sql.files.ignoreCorruptFiles": "true"}
+    ):
         # materialize under the conf; the returned frame re-reads lazily,
         # so keep the conf scoped to the op via a localCheckpoint
-        return back.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)
+        return spark.read.parquet(f"{out}/t").localCheckpoint()
 
 
 @register(

@@ -35,8 +35,8 @@ from ..generations import (
     stale_reads,
     twin,
 )
-from ..registry import fan_out, register, table
-from ..stream import fail_point, run_increments
+from ..registry import corpus_key, fan_out, register, table
+from ..stream import fail_point, run_increments, stage_feed
 from .dedup import N_INC_BATCHES
 
 N_PROBES = 20  # probe set: vec_id < 20
@@ -1672,6 +1672,9 @@ IVF_DRIFT_SQL = f"""
 """
 
 
+N_SIM_BATCHES = 3  # batch 0 = the 80% base build; 1..2 = appended halves
+
+
 def _ivf_cuts(mx):
     """The id-range cut points every IVF rig and oracle shares, from
     the corpus's max vec_id: (train_cut, append_cut, mid) = 60% / 80% /
@@ -1684,12 +1687,16 @@ def _ivf_cuts(mx):
     return train_cut, append_cut, mid
 
 
-def _increment_of(bounds):
-    """``batch_of`` for an id-range feed: the index of the ``(lo, hi)``
-    bound holding an increment's min id."""
-    return lambda mn: next(
-        i for i, (lo, hi) in enumerate(bounds) if lo <= mn < hi
-    )
+def _vec_increments(mx, split_train=False):
+    """The vector rigs' id-range increments, cut at the append cut and
+    the appended tail's midpoint (N_SIM_BATCHES increments; also at
+    the train cut with ``split_train``): ``(firsts, batch_of)``, the
+    first vec_id of each increment and the Column counting the cuts at
+    or below an id (monotone in the id)."""
+    train_cut, append_cut, mid = _ivf_cuts(mx)
+    cuts = (train_cut, append_cut, mid) if split_train else (append_cut, mid)
+    batch_of = sum((F.col("vec_id") >= c).cast("int") for c in cuts)
+    return (0, *cuts), batch_of
 
 
 def _ivf_append_cut(em):
@@ -2730,7 +2737,6 @@ def dedup_incremental_semantic(spark, sf_dir):
 # marker. Every write is a deterministic overwrite keyed by a batch
 # id derived from the DATA (id range, never the epoch counter), so
 # offsets-log replay after a crash converges to the same bytes.
-N_SIM_BATCHES = 3  # batch 0 = the 80% base build; 1..2 = appended halves
 
 
 def _compact_cluster_generations(spark, idx, family, upto):
@@ -2789,30 +2795,22 @@ def run_sim_index_stream(
     its generation and redoes the compaction as deterministic
     overwrites, which the boundary-restart test pins byte-equal.
     ``serve_paths_log`` records the list paths the final probe read."""
-    from .dedup_stream import _feed_key, _stage_feed
-
     em = table(spark, sf_dir, "embeddings")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
-    _, cut, mid = _ivf_cuts(mx)  # slices must match IVF_APPEND_SQL
+    # slices must match IVF_APPEND_SQL
+    _firsts, batch_of = _vec_increments(mx)
     src, ckpt, idx = f"{base}/src", f"{base}/ckpt", f"{base}/index"
     cent_path, list_path = f"{idx}/centroids", f"{idx}/lists"
-    bounds = [(0, cut), (cut, mid), (mid, mx + 1)]
 
-    _stage_feed(
-        em,
-        base,
-        src,
-        [
-            (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            for b, (lo, hi) in enumerate(bounds)
-        ],
+    stage_feed(
+        em, base, src, batch_of, N_SIM_BATCHES,
         # takedown rigs stage PRIVATELY: every arrival copy must sit
         # inside the purge/audit perimeter — the same rule
         # run_inc_lsh_stream enforces (round-10 review finding,
         # extended to the vector rigs in round 11)
         feed_key=None
         if delete_after is not None
-        else _feed_key(sf_dir, "sim", "embeddings.parquet"),
+        else corpus_key(sf_dir, "sim", "embeddings"),
     )
 
     if compact_after is not None and delete_after is not None:
@@ -2853,8 +2851,7 @@ def run_sim_index_stream(
 
     run_increments(
         spark, src, "vec_id bigint, embedding array<float>", ckpt,
-        "vec_id", _increment_of(bounds), process,
-        "stream_sim_index_e2e", 600,
+        batch_of, process, "stream_sim_index_e2e", 600,
     )
 
     # marker-gated SERVING read: the compacted layout, or in delete
@@ -3018,29 +3015,18 @@ def run_sim_recluster_stream(
     writes; ``'post_recluster'`` kills after the marker publish — the
     torn state ACROSS the codebook boundary. ``codebook_log`` records
     (batch, generation) routing decisions."""
-    from .dedup_stream import _feed_key, _stage_feed
-
     em = table(spark, sf_dir, "embeddings")
     mx = em.agg(F.max("vec_id")).collect()[0][0]
-    train_cut, append_cut, mid = _ivf_cuts(mx)
-    bounds = [(0, train_cut), (train_cut, append_cut),
-              (append_cut, mid), (mid, mx + 1)]
-    ex = _drifted_corpus(em, append_cut)
+    firsts, batch_of = _vec_increments(mx, split_train=True)
+    ex = _drifted_corpus(em, _ivf_cuts(mx)[1])
 
     src, ckpt, idx = f"{base}/src", f"{base}/ckpt", f"{base}/index"
     phase_of = {1: "0_stale_validation", 2: "0_stale_append",
                 3: "1_fresh_post"}
 
-    _stage_feed(
-        ex,
-        base,
-        src,
-        [
-            (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            for b, (lo, hi) in enumerate(bounds)
-        ],
-        step=15,
-        feed_key=_feed_key(sf_dir, "simdrift", "embeddings.parquet"),
+    stage_feed(
+        ex, base, src, batch_of, len(firsts),
+        feed_key=corpus_key(sf_dir, "simdrift", "embeddings"),
         heavy=True,  # the drift re-embed chain is per-row CPU
     )
 
@@ -3103,8 +3089,7 @@ def run_sim_recluster_stream(
 
     run_increments(
         spark, src, "vec_id bigint, embedding array<float>", ckpt,
-        "vec_id", _increment_of(bounds), process,
-        "stream_sim_recluster_e2e", 600,
+        batch_of, process, "stream_sim_recluster_e2e", 600,
     )
 
     # report assembly — from the PUBLISHED artifacts: the fresh-era

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..dsl import dsum
 from ..registry import register, table
-from ..stream import publish_marker, run_available_now
+from ..stream import order_feed, publish_marker, read_feed, run_available_now
 
 SQL_VSUM = "sum(CAST(round(value*10000) AS BIGINT))/10000.0"
 
@@ -857,7 +857,7 @@ def stream_chained_stateful_e2e(spark, sf_dir):
     against the dedup-delayed watermark, not the raw source watermark.
 
     Feed: the events table written as THREE files processed one per
-    micro-batch (mtime-ordered, maxFilesPerTrigger=1) — originals,
+    micro-batch (`stream.order_feed`, `stream.read_feed`) — originals,
     then an EXACT DUPLICATE copy (cross-batch dedup state must
     suppress all of it), then two far-future sentinel rows whose
     watermark advance flushes every real window out of the append agg
@@ -875,9 +875,6 @@ def stream_chained_stateful_e2e(spark, sf_dir):
     watermark delay; agg state is one row per (window, segment);
     enrich is a broadcast — no shuffle of the stream beyond the two
     stateful exchanges."""
-    import os
-    import time as _time
-
     import pandas as pd
 
     from ..registry import scratch_dir
@@ -907,11 +904,10 @@ def stream_chained_stateful_e2e(spark, sf_dir):
         )
         s["ts"] = s["ts"].astype("datetime64[us]")
         feeds.append((f"c_sentinel_{i}", s))
-    now = _time.time()
-    for i, (nm, f) in enumerate(feeds):
-        p = f"{src}/{nm}.parquet"
+    paths = [f"{src}/{nm}.parquet" for nm, _f in feeds]
+    for p, (_nm, f) in zip(paths, feeds):
         f.to_parquet(p, index=False)
-        os.utime(p, (now - (len(feeds) - i) * 10,) * 2)
+    order_feed(paths)
 
     from ..session import scoped_confs
 
@@ -923,9 +919,7 @@ def stream_chained_stateful_e2e(spark, sf_dir):
     # to its cluster before first start, exactly as here.
     with scoped_confs(spark, **{"spark.sql.shuffle.partitions": "8"}):
         stream = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            read_feed(spark, src, EVENTS_STREAM_SCHEMA)
             # watermark needs an instant; NTZ→LTZ is a wall-clock no-op
             # under the UTC session timezone
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -999,9 +993,6 @@ def stream_join_window_e2e(spark, sf_dir):
     the lagged watermark apply and flush every real window). Oracle =
     composed batch twin; a pair double-joined across batches or a
     window emitted early/late/twice is a value-hash failure."""
-    import os
-    import time as _time
-
     import pandas as pd
 
     from ..registry import scratch_dir
@@ -1035,17 +1026,14 @@ def stream_join_window_e2e(spark, sf_dir):
         )
         s["ts"] = s["ts"].astype("datetime64[us]")
         feeds.append((f"c_sentinel_{i}", s))
-    now = _time.time()
-    for i, (nm, f) in enumerate(feeds):
-        p = f"{src}/{nm}.parquet"
+    paths = [f"{src}/{nm}.parquet" for nm, _f in feeds]
+    for p, (_nm, f) in zip(paths, feeds):
         f.to_parquet(p, index=False)
-        os.utime(p, (now - (len(feeds) - i) * 10,) * 2)
+    order_feed(paths)
 
     def side(kind):
         return (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            read_feed(spark, src, EVENTS_STREAM_SCHEMA)
             .withColumn("ts", F.col("ts").cast("timestamp"))
             .filter(F.col("event_type") == kind)
             .withWatermark("ts", "35 days")
@@ -1120,14 +1108,11 @@ SCD1_SNAP_SCHEMA = (
 def _chunked_stream_feed(spark, sf_dir, src, n_chunks=3):
     """Shared mtime-ordered stream feed: the events table in global
     (ts, event_id) order, split into ceil(n/n_chunks)-row chunk files
-    processed one per micro-batch (maxFilesPerTrigger=1 on the
-    reader). The chunk arithmetic is LOAD-BEARING for
-    scan_snapshot_time_travel's oracle (generation k ≡ latest-per-key
-    over the first k·ceil(n/3) rows) — single-sourced here instead of
-    copied per op (round-5 second-review finding)."""
-    import os
-    import time as _time
-
+    processed one per micro-batch (`stream.read_feed`). The chunk
+    arithmetic is LOAD-BEARING for scan_snapshot_time_travel's oracle
+    (generation k ≡ latest-per-key over the first k·ceil(n/3) rows) —
+    single-sourced here instead of copied per op (round-5
+    second-review finding)."""
     e = table(spark, sf_dir, "events")
     pdf = (
         e.select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -1137,11 +1122,10 @@ def _chunked_stream_feed(spark, sf_dir, src, n_chunks=3):
     )
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     step = (len(pdf) + n_chunks - 1) // n_chunks
-    now = _time.time()
-    for i in range(n_chunks):
-        p = f"{src}/chunk_{i}.parquet"
+    paths = [f"{src}/chunk_{i}.parquet" for i in range(n_chunks)]
+    for i, p in enumerate(paths):
         pdf.iloc[i * step : (i + 1) * step].to_parquet(p, index=False)
-        os.utime(p, (now - (n_chunks - i) * 10,) * 2)
+    order_feed(paths)
 
 
 def _pointed(ptr):
@@ -1197,13 +1181,8 @@ def _generation_snapshot_rig(spark, sf_dir, opname, snap_schema, merge):
     os.makedirs(snaps)
     _chunked_stream_feed(spark, sf_dir, src)
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     run_available_now(
-        stream.writeStream.foreachBatch(
+        read_feed(spark, src, EVENTS_STREAM_SCHEMA).writeStream.foreachBatch(
             _snapshot_step(spark, snaps, ptr, snap_schema, merge)
         ).option("checkpointLocation", ckpt),
         opname,
@@ -1516,9 +1495,7 @@ def stream_dead_letter_split(spark, sf_dir):
         dlq.write.mode("append").parquet(dlq_dir)
 
     run_available_now(
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
+        read_feed(spark, src, fmt="text")
         .writeStream.foreachBatch(route)
         .option("checkpointLocation", ckpt),
         "stream_dead_letter_split",

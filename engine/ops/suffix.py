@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..registry import register, shared_artifact, table
+from ..registry import corpus_key, register, shared_artifact, table
 from ..generations import (
     audit_no_tombstoned,
     fold,
@@ -27,7 +27,13 @@ from ..generations import (
     twin,
     write_tombstones,
 )
-from ..stream import fail_point, read_batch_sink, run_increments
+from ..stream import (
+    fail_point,
+    read_batch_sink,
+    run_increments,
+    stage_feed,
+    write_batch_sink,
+)
 
 SPAN_K = 8  # span length in tokens — the "memorized boilerplate" unit
 
@@ -560,9 +566,7 @@ def _sa_artifact_key(sf_dir):
     """`registry.shared_artifact` key of a corpus's suffix array: the
     documents table's file listing, so a changed corpus gets a fresh
     build."""
-    from .dedup_stream import _feed_key
-
-    return f"sa_gen_{_feed_key(sf_dir, 'suffix-array')}"
+    return f"sa_gen_{corpus_key(sf_dir, 'suffix-array')}"
 
 
 def _suffix_array_artifact(spark, sf_dir):
@@ -1022,7 +1026,7 @@ def dedup_sa_takedown(spark, sf_dir):
     anchors), and post-delete span serving costs what pre-delete
     serving cost."""
     from ..registry import scratch_dir
-    from .dedup import N_INC_BATCHES
+    from .dedup import doc_batch_of
     from .dedup_stream import (
         TD_AFTER,
         _takedown_pred,
@@ -1030,7 +1034,7 @@ def dedup_sa_takedown(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     td = _takedown_pred() & (batch_of <= TD_AFTER)
 
     base = scratch_dir("dedup_sa_takedown")
@@ -1220,7 +1224,7 @@ def dedup_span_coverage_incremental(spark, sf_dir):
     increment — the same seam the LSH counts family closed with
     compaction behind a marker, and the same fix applies when a
     stream outlives its generation budget."""
-    from .dedup import N_INC_BATCHES
+    from .dedup import N_INC_BATCHES, doc_batch_of
     from ..registry import scratch_dir
 
     d = table(spark, sf_dir, "documents")
@@ -1229,10 +1233,7 @@ def dedup_span_coverage_incremental(spark, sf_dir):
     docs = (
         d.select("doc_id", F.split("text", " ").alias("a"))
         .withColumn("n_tokens", F.size("a"))
-        .withColumn(
-            "batch_id",
-            F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}").cast("long"),
-        )
+        .withColumn("batch_id", doc_batch_of(mx).cast("long"))
     )
     out = None
     for b in range(N_INC_BATCHES):
@@ -1289,17 +1290,15 @@ def run_spancov_stream(
     boundary batch stays on the per-generation view).
     ``fail_at_batch`` raises AFTER the anchor generation write, BEFORE
     the sink write — the torn state."""
-    from .dedup import N_INC_BATCHES
-    from .dedup_stream import _feed_key, _stage_feed
+    from .dedup import N_INC_BATCHES, doc_batch_of
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
-    _stage_feed(
-        d, base, src,
-        [(b, batch_of == b) for b in range(N_INC_BATCHES)],
-        feed_key=_feed_key(sf_dir, "lsh"),
+    batch_of = doc_batch_of(mx)
+    stage_feed(
+        d, base, src, batch_of, N_INC_BATCHES,
+        feed_key=corpus_key(sf_dir, "lsh"),
     )
 
     def process(batch_df, b):
@@ -1312,15 +1311,12 @@ def run_spancov_stream(
             spark, docs, base, b, read_log=read_log
         )
         fail_point(fail_at_batch, "pre_sink", b, "pre_sink")
-        out.drop("batch_id").coalesce(1).write.mode("overwrite").parquet(
-            f"{sink}/batch_id={b}"
-        )
+        write_batch_sink(out.drop("batch_id"), sink, b)
         if compact_after is not None and b == compact_after:
             _compact_span_index(spark, base, b)
 
     run_increments(
-        spark, src, "doc_id bigint, text string", ckpt, "doc_id",
-        lambda mn: mn * N_INC_BATCHES // (mx + 1), process,
+        spark, src, "doc_id bigint, text string", ckpt, batch_of, process,
         "stream_dedup_spancov_e2e", 600,
     )
     return read_batch_sink(spark, sink, N_INC_BATCHES).select(

@@ -3326,22 +3326,22 @@ def stream_corpus_router_e2e(spark, sf_dir):
     one broadcast join + one combinable sum — O(batch)·1, no state
     beyond the O(buckets) model; exactly how quality gates sit on a
     bus in front of a 100 TB corpus store."""
-    from ..registry import scratch_dir
-    from ..stream import read_batch_sink, run_increments
-    from .dedup import N_INC_BATCHES
-    from .dedup_stream import _stage_feed
+    from ..stream import (
+        read_batch_sink,
+        run_increments,
+        stage_feed,
+        write_batch_sink,
+    )
+    from .dedup import N_INC_BATCHES, doc_batch_of
 
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     mx = d.agg(F.max("doc_id")).collect()[0][0]
-    batch_of = F.expr(f"({N_INC_BATCHES} * doc_id) div {mx + 1}")
+    batch_of = doc_batch_of(mx)
     lr0, t0 = _dsir_frozen_gate(d.filter(batch_of == 0))
 
     base = scratch_dir("stream_corpus_router_e2e")
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
-    _stage_feed(
-        d, base, src,
-        [(b, batch_of == b) for b in range(N_INC_BATCHES)],
-    )
+    stage_feed(d, base, src, batch_of, N_INC_BATCHES)
 
     def route_batch(batch_df, b):
         w = (
@@ -3372,17 +3372,14 @@ def stream_corpus_router_e2e(spark, sf_dir):
                 ).otherwise(F.lit("rejected")),
             )
         )
-        out.coalesce(1).write.mode("overwrite").parquet(
-            f"{sink}/batch_id={b}"
-        )
+        write_batch_sink(out, sink, b)
 
     # try/finally: a failed stream must not leak the persisted model
     # cache for the session (the ADVICE-r7 leak class)
     try:
         run_increments(
             spark, src, "doc_id bigint, lang string, text string", ckpt,
-            "doc_id", lambda mn: mn * N_INC_BATCHES // (mx + 1),
-            route_batch, "stream_corpus_router_e2e", 600,
+            batch_of, route_batch, "stream_corpus_router_e2e", 600,
         )
     finally:
         lr0.unpersist()

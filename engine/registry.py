@@ -109,6 +109,26 @@ def shared_artifact(key: str, build: Callable[[str], None]) -> str:
     return pub
 
 
+def corpus_key(sf_dir: str, tag: str, name: str = "documents") -> str:
+    """`shared_artifact` key part for what ``tag`` builds from table
+    ``name``: its file listing (path, size, mtime), so a changed
+    corpus never serves a stale artifact."""
+    import hashlib
+    import os
+
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    files = (
+        sorted(os.path.join(r, f) for r, _d, fs in os.walk(src) for f in fs)
+        if os.path.isdir(src)
+        else [src]
+    )
+    parts = [tag]
+    for p in files:
+        st, rel = os.stat(p), os.path.relpath(p, sf_dir)
+        parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver-generated parquet table (TESTDATA.md).
 

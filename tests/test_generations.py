@@ -217,6 +217,30 @@ def test_gc_removes_a_purged_fold_past_the_watermark(tmp_path):
     assert gc_generations(ckpt, idx) == []
 
 
+def test_gc_refuses_a_purge_whose_generation_twins_are_missing(tmp_path):
+    """A purge past the fold (``takedown_upto`` 2 above
+    ``compacted_upto`` 0) is served by ``codes_c_p`` AND
+    ``codes_p/gen=1..2``. With no ``codes_p`` on disk the purged
+    marker has no replacement, and the fold dir ``codes_c`` (whose
+    own ``_p`` twin exists) is not a family: the GC refuses and
+    deletes nothing."""
+    idx, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
+    for g in range(3):
+        _touch_files(f"{idx}/codes/gen={g}", 1)
+    _touch_files(f"{idx}/codes_c", 1)
+    _touch_files(f"{idx}/codes_c_p", 1)
+    publish(idx, "compacted", 0)
+    publish(idx, "purged", 2)
+    _commit(ckpt, [0, 1, 2, 3])
+    assert gen_paths(f"{idx}/codes", 3, **markers(idx)) == [
+        f"{idx}/codes_c_p", f"{idx}/codes_p/gen=1", f"{idx}/codes_p/gen=2"
+    ]
+    with pytest.raises(ValueError, match="takedown_upto = 2.*_p"):
+        gc_generations(ckpt, idx)
+    assert os.path.isdir(f"{idx}/codes_c")
+    assert all(os.path.isdir(f"{idx}/codes/gen={g}") for g in range(3))
+
+
 def test_gc_keeps_a_fold_its_purge_does_not_cover(tmp_path):
     """A fold published after the purge (``compacted_upto`` above
     ``takedown_upto``) is the serving copy of gens the purge never

@@ -1,7 +1,8 @@
 """engine/stream.py: the one stream runner every checkpointed rig in
-engine/ops uses (availableNow drain, data-derived batch id, write-last
-marker, fault points), plus the empty-generation twins its rigs'
-folded writes rely on (engine/generations.ensure_gen_dirs)."""
+engine/ops uses (ordered file feed, availableNow drain, data-derived
+batch id, write-last marker, fault points), plus the empty-generation
+twins its rigs' folded writes rely on
+(engine/generations.ensure_gen_dirs)."""
 
 from __future__ import annotations
 
@@ -42,34 +43,53 @@ def test_run_available_now_times_out_and_stops_the_query(spark, tmp_path):
 
 
 def test_run_increments_keys_batches_on_the_data(spark, tmp_path):
-    """Each staged file is one micro-batch; ``process`` receives the
-    batch id derived from the batch's min id, and a restart on the same
-    checkpoint replays nothing that was committed."""
-    from engine.stream import run_increments
+    """``stage_feed`` slices one file per increment in admission order;
+    each is one micro-batch and ``process`` receives its
+    ``min(batch_of)``, for a div mapping and for an id-range mapping
+    over cut points. A restart on the same checkpoint replays only
+    the torn batch and then nothing that was committed."""
+    from pyspark.sql import functions as F
 
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for b in range(3):
-        stage = str(tmp_path / f"stage{b}")
-        spark.range(100 * b, 100 * b + 100, 1, 1).write.parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.startswith("part-"))
-        dst = f"{src}/batch_{b}.parquet"
-        os.replace(os.path.join(stage, part), dst)
-        os.utime(dst, (1_000_000 + 10 * b,) * 2)
-    seen = []
+    from engine.stream import run_increments, stage_feed
 
-    def run():
-        run_increments(
-            spark, src, "id long", str(tmp_path / "ckpt"), "id",
-            lambda mn: mn // 100,
-            lambda df, b: seen.append((b, df.count())),
-            "test_increments", 300,
+    df = spark.range(0, 300, 1, 1)
+    mappings = {
+        "div": (F.expr("id div 100"), [100, 100, 100]),
+        "cuts": (
+            sum((F.col("id") >= c).cast("int") for c in (50, 250)),
+            [50, 200, 50],
+        ),
+    }
+    for name, (batch_of, sizes) in mappings.items():
+        base = str(tmp_path / name)
+        src = f"{base}/src"
+        stage_feed(df, base, src, batch_of, 3)
+        files = sorted(
+            os.listdir(src), key=lambda f: os.stat(f"{src}/{f}").st_mtime
         )
+        assert files == [f"batch_{b}.parquet" for b in range(3)]
+        seen, torn = [], {1} if name == "cuts" else set()
 
-    run()
-    assert sorted(seen) == [(0, 100), (1, 100), (2, 100)]
-    run()
-    assert len(seen) == 3
+        def process(batch_df, b):
+            if b in torn:
+                torn.discard(b)
+                raise RuntimeError("torn batch")
+            seen.append((b, batch_df.count()))
+
+        def run():
+            run_increments(
+                spark, src, "id long", f"{base}/ckpt", batch_of, process,
+                "test_increments", 300,
+            )
+
+        if torn:
+            with pytest.raises(Exception, match="torn batch"):
+                run()
+            assert seen == [(0, sizes[0])]
+        run()
+        assert seen == list(enumerate(sizes))
+        run()
+        assert len(seen) == 3
 
 
 def test_publish_marker_is_read_back_and_leaves_no_tmp(tmp_path):
@@ -159,28 +179,61 @@ def test_ensure_gen_dirs_keeps_a_flat_layout_flat(spark, tmp_path):
     assert served.count() == 10
 
 
+def _exempt_lines(path, fn_name):
+    """The line numbers of the top-level function ``fn_name`` in
+    ``path`` (empty if it has none)."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    return {
+        n
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name == fn_name
+        for n in range(node.lineno, node.end_lineno + 1)
+    }
+
+
 def test_stream_protocols_live_only_in_the_runner():
-    """The availableNow drain, the min-id probe, the write-last marker
-    and the fault points are spelled once, in engine/stream.py. The one
-    exception is the Python data source's lease file
-    (stream_source.py), written from inside the pickled reader."""
+    """The availableNow drain, the batch-id probe, the write-last
+    marker, the fault points and the ordered file feed (its file
+    name, admission order, reader and stager) are spelled once, in
+    engine/stream.py; the document increment mapping is spelled once
+    on the Spark side of engine/ops (``dedup.doc_batch_of``). The
+    exceptions: the Python data source's lease file
+    (stream_source.py), written from inside the pickled reader, and
+    ``stream_backfill_bounded``, whose subject is a multi-file
+    ``maxFilesPerTrigger``."""
     patterns = {
         "availableNow drain": r"awaitTermination\(|trigger\(availableNow",
         "min-id probe": r"batch_df\.agg\(F\.min\(",
         "marker write": r'\.tmp"',
         "fault point": r"injected failure",
         "tmp replace": r"os\.replace\(tmp\b",
+        "feed file name": r'batch_\{|"batch_"',
+        "admission order": r"os\.utime\(",
+        "feed reader": r'\.option\("maxFilesPerTrigger"',
+        "feed helper copy": r"\b(_stage_feed|_feed_key|_increment_of)\b",
     }
-    hits = []
+    hits, doc_maps = [], []
     for path in sorted(glob.glob(os.path.join(OPS_DIR, "*.py"))):
         name = os.path.basename(path)
+        backfill = _exempt_lines(path, "stream_backfill_bounded")
         with open(path) as f:
             for lineno, line in enumerate(f, 1):
+                where = f"{name}:{lineno}: {line.strip()}"
+                if re.search(r"doc_id\) div", line):
+                    doc_maps.append(where)
                 for what, pat in patterns.items():
-                    if re.search(pat, line) and not (
-                        name == "stream_source.py" and what == "tmp replace"
-                    ):
-                        hits.append(f"{name}:{lineno}: {what}: {line.strip()}")
+                    if not re.search(pat, line):
+                        continue
+                    if name == "stream_source.py" and what == "tmp replace":
+                        continue
+                    if what == "feed reader" and lineno in backfill:
+                        continue
+                    hits.append(f"{what}: {where}")
+    if len(doc_maps) > 1:
+        hits += [f"doc increment mapping: {w}" for w in doc_maps]
     assert hits == [], "\n".join(hits)
 
 

@@ -2208,7 +2208,7 @@ def test_committed_src_batches_reads_compacted_metadata(tmp_path):
     stream past the compact interval (review finding, round 8)."""
     import json
 
-    from engine.generations import committed_src_batches
+    from engine.stream import committed_src_batches
 
     ckpt = tmp_path / "ckpt"
     (ckpt / "commits").mkdir(parents=True)
@@ -2746,8 +2746,9 @@ def test_heavy_feed_publish_releases_its_cache_and_spares_tmp(
 
     from pyspark.sql import functions as F
 
-    from engine.ops.dedup_stream import _feed_key, _stage_feed
     from engine.ops.similarity import _drifted_corpus, _ivf_cuts
+    from engine.registry import corpus_key
+    from engine.stream import stage_feed
 
     planted = [
         os.path.join(tempfile.gettempdir(), n)
@@ -2764,23 +2765,20 @@ def test_heavy_feed_publish_releases_its_cache_and_spares_tmp(
         em = table(spark, SMOKE_SF_DIR, "embeddings")
         mx = em.agg(F.max("vec_id")).collect()[0][0]
         train_cut, append_cut, _mid = _ivf_cuts(mx)
-        bounds = [(0, train_cut), (train_cut, mx + 1)]
         persisted = lambda: set(
             spark.sparkContext._jsc.getPersistentRDDs().keySet()
         )
         before = persisted()
         src = str(tmp_path / "src")
-        _stage_feed(
+        stage_feed(
             _drifted_corpus(em, append_cut),
             str(tmp_path),
             src,
-            [
-                (b, (F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-                for b, (lo, hi) in enumerate(bounds)
-            ],
+            (F.col("vec_id") >= train_cut).cast("int"),
+            2,
             # a fresh tag: this call must build, not hit a cached feed
-            feed_key=_feed_key(
-                SMOKE_SF_DIR, f"test-{uuid.uuid4().hex}", "embeddings.parquet"
+            feed_key=corpus_key(
+                SMOKE_SF_DIR, f"test-{uuid.uuid4().hex}", "embeddings"
             ),
             heavy=True,
         )
